@@ -236,17 +236,15 @@ def basket_brand_lift(spark, sf_dir):
             "BIGINT mask — widen to an array-of-longs mask first"
         )
     bit_of = {b: 1 << i for i, b in enumerate(names)}
-    brand_bits = spark.createDataFrame(
-        [(b, v) for b, v in bit_of.items()], "p_brand string, bit long"
+    # literal brand→bit lookup (the `_inline_nations` pattern): `p` stays
+    # a plain projection of `part`, so Spark sizes the join itself
+    bit_map = F.create_map(*[F.lit(x) for kv in bit_of.items() for x in kv])
+    p = part.select(
+        "p_partkey",
+        F.element_at(bit_map, F.col("p_brand")).cast("bigint").alias("bit"),
     )
-    p = part.select("p_partkey", "p_brand").join(
-        F.broadcast(brand_bits), "p_brand"
-    ).select("p_partkey", "bit")
-    from .tpch import _bcast_if_small
-
     masks = (
-        # part is data-scaled → size-gated hint (r13, the q8 fix class)
-        li.join(_bcast_if_small(p, sf_dir, "part"), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .groupBy("l_orderkey")
         .agg(F.expr("bit_or(bit)").alias("mask"))
         .groupBy("mask")
@@ -532,11 +530,11 @@ def orders_cohort_ltv(spark, sf_dir):
     # r14: SHUFFLE_HASH build on the per-customer cohort frame — both
     # sides shuffle on custkey either way, but hashing `first`
     # (1 row/customer, two narrow columns) skips SORTING both it and
-    # the 10×-larger orders probe side; the per-partition build is
-    # bounded at any SF because shuffle partitions scale with the
-    # cluster (the `_bcast_if_small` SHJ-tier argument; broadcasting
-    # was measured and REJECTED r10 — 22 s GC spikes rebuilding a
-    # 1.5M-row broadcast per action). Measured sf10 interleaved
+    # the 10×-larger orders probe side. The hint is bounded by shape,
+    # not by a size probe: the build holds one narrow row per customer,
+    # split across shuffle partitions that scale with the cluster
+    # (broadcasting was measured and REJECTED r10 — 22 s GC spikes
+    # rebuilding a 1.5M-row broadcast per action). Measured sf10 interleaved
     # min-of-10: SMJ 3.961 s → SHJ 3.159 s (−20%), SHJ faster in 8/10
     # adjacent pairs, paired-median delta −0.87 s.
     j = o.join(first.hint("SHUFFLE_HASH"), "o_custkey").select(

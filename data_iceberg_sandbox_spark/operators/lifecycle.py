@@ -610,9 +610,9 @@ def d_scd2_asof_lookup(spark, sf_dir):
     Scale shape: the validity predicate is a RESIDUAL on a key-equi
     join — Spark keeps the hash join on (id = custkey) and applies
     valid_from ≤ t < valid_to as a filter, so the temporal condition
-    never degrades the join to a range/theta join; the SCD2 history is
-    dimension-sized and broadcasts. Exactly one version matches per
-    (order, client) by the SCD2 invariant (half-open windows)."""
+    never degrades the join to a range/theta join. Exactly one version
+    matches per (order, client) by the SCD2 invariant (half-open
+    windows)."""
     hist = d_scd2_history(spark, sf_dir)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -626,14 +626,12 @@ def d_scd2_asof_lookup(spark, sf_dir):
         )
         .alias("as_of"),
     )
-    # Size-gated hint (r13 review, the q8 fix class): the SCD2 history
-    # is CUSTOMER-scaled (~1.33x |customer| rows), not dimension-sized —
-    # past the cap the join runs unhinted (key equi-join with residual
-    # temporal filters) so AQE can pick a shuffle join at SF100+.
-    from .tpch import _bcast_if_small
-
+    # No hint: the SCD2 history is CUSTOMER-scaled (~1.33x |customer|
+    # rows), not dimension-sized, so Spark picks the strategy — a
+    # broadcast while it is small, and AQE re-plans the key equi-join
+    # (residual temporal filters) from runtime sizes past that.
     j = o.join(
-        _bcast_if_small(hist, sf_dir, "customer"),
+        hist,
         (o.o_custkey == hist.id)
         & (F.col("as_of") >= F.col("valid_from"))
         & (F.col("valid_to").isNull() | (F.col("as_of") < F.col("valid_to"))),

@@ -18,8 +18,11 @@ BIGINT and combines the 54 per-class sums in DECIMAL — unbounded
 headroom, negligible cost.
 
 Scale notes: q1 is a 6-group hash agg → pure map-side combine; q3/q5/q10
-join filtered fact partitions against dims (nation/region broadcast,
-customer/orders shuffled on the join key with AQE); top-k uses
+join filtered fact partitions against dims. The reference-fixed
+nation/region dims fold into literals (`_inline_nations`); every
+data-scaled join carries no hint, so Spark picks its strategy — a
+static broadcast under ``autoBroadcastJoinThreshold``, and above it AQE
+re-plans from the shuffle sizes it observes at runtime. Top-k uses
 TakeOrderedAndProject, never a full sort.
 """
 
@@ -33,89 +36,6 @@ from .spec import QuerySpec
 
 PRICE = "decimal(12,2)"
 RATE = "decimal(4,3)"
-
-# Data-scaled broadcast hints (customer/supplier/part subsets, which
-# GROW with SF — unlike the reference-fixed nation/region folds) are
-# valid only while the dim fits comfortably under driver/broadcast
-# capacity. Shared probe + cap: functions/sizing.py (fail-closed).
-from ..functions.sizing import BROADCAST_DIM_CAP_BYTES, path_bytes
-
-
-def _dir_bytes(sf_dir, name):
-    """On-disk size of a testdata table (file or directory parquet) —
-    cheap driver-side stat used to gate data-scaled broadcast hints.
-    Fails CLOSED via functions/sizing.path_bytes: a path the probe
-    can't stat or walk (layout drift from sources/registry's
-    `{name}.parquet` convention) reports +inf, so the size gate
-    declines the broadcast in exactly the unknown-size case it exists
-    to guard (r12 review — returning 0 force-applied the hint on a
-    mis-stat)."""
-    import os
-
-    return path_bytes(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _bcast_if_small(df, sf_dir, table, cap_bytes=BROADCAST_DIM_CAP_BYTES):
-    """Size-LADDERED join hint for a data-scaled dim subset (r13 gate,
-    r14 middle tier):
-
-    - under ``cap_bytes`` on disk → `F.broadcast` (the generalized q8
-      fix — r11 flagged one forced customer broadcast; the same class
-      sat at every q3/q5/q7/q9 dim site);
-    - past the broadcast cap but under the per-build-partition bound →
-      SHUFFLE_HASH: the dim becomes the shuffled build side, which
-      skips SORTING the fact. Measured at sf100 q3 (600M-row lineitem,
-      15M-row customer past the broadcast gate): SMJ 18.3–20.0 s vs
-      SHJ 12.1 s steady-state, −35%. The bound scales with the session:
-      64 MB on-disk per shuffle partition (~3× in memory per build
-      task), so bigger clusters admit bigger dims — the per-task build
-      stays constant;
-    - past both → unhinted, AQE/SMJ (sort both sides, never OOM).
-
-    The base-table size upper-bounds any filtered projection of it, so
-    every tier of the gate is conservative — ON BYTES. It is NOT a
-    safety proof for arbitrary frames: parquet under-states the
-    in-memory LongHashedRelation of a narrow long-typed FACT frame by
-    ~an order of magnitude (delta/dict encoding), and offering FULL
-    orders as the build at sf100 (1.78 GB parquet, inside the 2 GB
-    band) died with cannotAcquireMemoryToBuildLongHashedRelationError
-    before one timed rep (r15, plans/r15/ab_q10q12_shj_rejected.json).
-    Callers must offer only dims or genuinely-reduced fact frames
-    (q3's ~20%-of-orders build measured −35% at sf100; q7's ~8% build
-    adopted r15); full facts stay unhinted — SMJ sorts, never OOMs."""
-    nbytes = _dir_bytes(sf_dir, table)
-    if nbytes <= cap_bytes:
-        return F.broadcast(df)
-    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if nbytes <= SHJ_BUILD_CAP_BYTES_PER_PARTITION * parts:
-        return df.hint("SHUFFLE_HASH")
-    return df
-
-
-# 64 MB of parquet per build partition ≈ ~200 MB hashed in a task —
-# bounded regardless of SF because shuffle_partitions scales with the
-# cluster while the per-partition slice stays fixed.
-SHJ_BUILD_CAP_BYTES_PER_PARTITION = 64 << 20
-
-
-def _shj_if_medium(df, sf_dir, table, cap_bytes=BROADCAST_DIM_CAP_BYTES):
-    """Middle-band-ONLY variant of the `_bcast_if_small` ladder for
-    fact-derived frames (r15, VERDICT #6): SHUFFLE_HASH when the
-    bounding table sits between the broadcast cap and the per-build-
-    partition bound; NO hint otherwise. Rationale measured on q7
-    (plans/r15/ab_q7_ladder.json): at sf100 the SHJ build on the
-    reduced-orders frame skips sorting the 120M-row lineitem probe
-    (min 6.04 vs 6.29 s, ahead in all three interleaved captures),
-    but at sf≤0.1 the full ladder's BROADCAST tier fires and the extra
-    broadcast-build job costs ~10–15 ms against a 0.17 s query whose
-    SMJ already rides the pin's orderkey co-partitioning (1/9 pairs,
-    min 0.183 vs 0.168 s) — so below the broadcast cap the frame stays
-    unhinted and the plan is byte-identical to the pre-r15 one."""
-    nbytes = _dir_bytes(sf_dir, table)
-    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if cap_bytes < nbytes <= SHJ_BUILD_CAP_BYTES_PER_PARTITION * parts:
-        return df.hint("SHUFFLE_HASH")
-    return df
 
 
 def _disc_price_fixed():
@@ -224,14 +144,10 @@ def q3_shipping_priority(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp")
     )
-    # Broadcast the segment-filtered customer dim into orders BEFORE the
+    # Join the segment-filtered customer dim into orders BEFORE the
     # orderkey shuffle: the exchange then carries ~1/5 of orders (and
     # only the three columns the agg needs) instead of the whole table.
-    # Size-gated (r13): customer is data-scaled, so past the cap the
-    # hint drops and AQE picks the join strategy.
-    o_f = o.join(
-        _bcast_if_small(c, sf_dir, "customer"), o.o_custkey == c.c_custkey
-    ).select(
+    o_f = o.join(c, o.o_custkey == c.c_custkey).select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
     # Group by l_orderkey ALONE: o_orderdate/o_orderpriority are
@@ -239,11 +155,11 @@ def q3_shipping_priority(spark, sf_dir):
     # cannot prove from a 3-column key — carried via first() instead,
     # the aggregate's required distribution is satisfied by the join's
     # orderkey partitioning and the per-group agg exchange disappears.
-    # The fact-side join rides the same ladder, bounded by the base
-    # `orders` table (o_f ⊆ orders): at sf100 this plans SHUFFLE_HASH
-    # and skips sorting the 600M-row lineitem side (18.3–20.0 s SMJ →
-    # 12.1 s, the helper's measured A/B).
-    o_f = _bcast_if_small(o_f, sf_dir, "orders")
+    # The fact-fact join stays unhinted: it rides the pin's orderkey
+    # co-partitioning as a sort-merge join, one job fewer than
+    # broadcasting the orders subset. A broadcast hint still measured
+    # faster at sf0.1/sf1 on 4 cores (plans/ab_ladder_vs_aqe.json), but
+    # nothing bounds its build at scale; AQE's runtime sizing does.
     return (
         li.join(o_f, li.l_orderkey == o_f.o_orderkey)
         .groupBy("l_orderkey")
@@ -319,24 +235,17 @@ def q5_local_supplier_volume(spark, sf_dir):
     s = load_table(spark, sf_dir, "supplier").filter(
         F.col("s_nationkey").isin(keys)
     )
-    # Same scale lever as q7: broadcast the pruned dims into their facts
+    # Same scale lever as q7: join the pruned dims into their facts
     # FIRST (orders is already date-filtered; the region's customers cut
     # it to a few %, the region's suppliers cut lineitem to ~1/5), THEN
     # shuffle-join the two reduced facts on orderkey with the
     # same-nation predicate riding on the join. Inner equi-joins
     # commute, so the result is unchanged; the orderkey exchange moves
     # ~10x fewer bytes.
-    # Both dims are data-scaled → size-gated hints (r13).
-    li_f = li.join(
-        _bcast_if_small(s, sf_dir, "supplier"), li.l_suppkey == s.s_suppkey
-    ).select(
+    li_f = li.join(s, li.l_suppkey == s.s_suppkey).select(
         "l_orderkey", "l_extendedprice", "l_discount", "s_nationkey"
     )
-    o_f = o.join(
-        _bcast_if_small(c, sf_dir, "customer"), o.o_custkey == c.c_custkey
-    ).select(
-        "o_orderkey", "c_nationkey"
-    )
+    o_f = o.join(c, o.o_custkey == c.c_custkey).select("o_orderkey", "c_nationkey")
     return (
         # Measured-and-rejected alternative (r13): joining on orderkey
         # ALONE with the same-nation equality as a post-join filter —

@@ -18,12 +18,6 @@ PRICE = "decimal(12,2)"
 RATE = "decimal(4,3)"
 
 
-# shared data-scaled broadcast gate (r13: moved to tpch.py so both
-# TPC-H batches and insights use ONE implementation; re-exported here
-# for existing importers)
-from .tpch import _bcast_if_small, _dir_bytes, _shj_if_medium  # noqa: E402,F401
-
-
 def _rev(price, disc):
     return price.cast(PRICE) * (F.lit(1).cast(RATE) - disc.cast(RATE))
 
@@ -52,32 +46,20 @@ def q7_volume_shipping(spark, sf_dir):
     pair = ((F.col("s_nationkey") == k1) & (F.col("c_nationkey") == k2)) | (
         (F.col("s_nationkey") == k2) & (F.col("c_nationkey") == k1)
     )
-    # Join order is the scale lever here: broadcast the nation-pruned
-    # dims into their facts FIRST (each fact drops to ~2/25 of its
+    # Join order is the scale lever here: join the nation-pruned dims
+    # into their facts FIRST (each fact drops to ~2/25 of its
     # rows), THEN shuffle-join the two reduced facts on orderkey —
     # ~12x less shuffle volume than lineitem><orders-first, and the
     # width of the exchange is trimmed to the five columns the agg
     # needs. Inner equi-joins commute, so the result is unchanged.
-    li_f = li.join(
-        _bcast_if_small(s, sf_dir, "supplier"), li.l_suppkey == s.s_suppkey
-    ).select(
+    # Every join is unhinted: Spark broadcasts the dims while they sit
+    # under autoBroadcastJoinThreshold and AQE re-plans the larger ones
+    # from runtime shuffle sizes.
+    li_f = li.join(s, li.l_suppkey == s.s_suppkey).select(
         "l_orderkey", "l_shipdate", "l_extendedprice", "l_discount",
         "s_nationkey",
     )
-    o_f = o.join(
-        _bcast_if_small(c, sf_dir, "customer"), o.o_custkey == c.c_custkey
-    ).select(
-        "o_orderkey", "c_nationkey"
-    )
-    # r15 (VERDICT #6 class): the fact-fact orderkey join rides the
-    # middle-band-only ladder — at sf100 the reduced-orders build
-    # (~8% of orders, 2 columns) plans SHUFFLE_HASH and skips sorting
-    # the 120M-row lineitem side (min 6.04 vs 6.29 s, hinted ahead in
-    # all three interleaved sf100 captures, plans/r15/ab_q7_ladder.json);
-    # at sf≤0.1 the band doesn't fire and the plan is unchanged (the
-    # full ladder's broadcast tier measured WORSE there — one extra
-    # build job against the per-action floor, 1/9 pairs).
-    o_f = _shj_if_medium(o_f, sf_dir, "orders")
+    o_f = o.join(c, o.o_custkey == c.c_custkey).select("o_orderkey", "c_nationkey")
     return (
         li_f.join(o_f, li_f.l_orderkey == o_f.o_orderkey)
         .filter(pair)
@@ -122,15 +104,16 @@ def q8_market_share(spark, sf_dir):
 
     Scale shape (reworked r11 — the naive left-deep chain measured
     17.7 s / 33× DuckDB at sf10 in the AQE-off bench regime): the q5/q7
-    lever applied to a 6-table join. Every selective dim broadcasts
-    into its fact FIRST — the ASIA customers (region's ≤1/5, key column
-    only) prune orders before the big join; the part band (one key
-    column, explicitly broadcast: ~1M keys at sf10 beats a 60M-row
-    partkey exchange) and the supplier→nation literal map (25-entry
-    `element_at`, no nation join at all) prune/annotate lineitem
-    map-side. Only then do the two reduced facts meet on the ONE
-    orderkey shuffle — which the keyed buffer-pool pin already
-    co-partitions, so steady-state reads skip even that exchange.
+    lever applied to a 6-table join. Every selective dim joins into its
+    fact FIRST — the ASIA customers (region's ≤1/5, key column only)
+    prune orders before the big join; the part band (one key column)
+    and the supplier→nation literal map (25-entry `element_at`, no
+    nation join at all) prune/annotate lineitem. The joins carry no
+    hint: Spark broadcasts the dims while they are small and AQE
+    re-plans them from runtime sizes past that. Only then do the two
+    reduced facts meet on the ONE orderkey shuffle — which the keyed
+    buffer-pool pin already co-partitions, so steady-state reads skip
+    even that exchange.
     Inner equi-joins commute; bit-identical to the join-form oracle."""
     from .tpch import _inline_nations
 
@@ -143,15 +126,7 @@ def q8_market_share(spark, sf_dir):
     p = load_table(spark, sf_dir, "part").filter(F.col("p_retailprice") > 950)
 
     c_f = c.filter(F.col("c_nationkey").isin(asia_keys)).select("c_custkey")
-    # The ASIA key set is data-scaled (~30k rows/SF unit), unlike the
-    # bounded nation/region folds — the forced broadcast is only valid
-    # while it fits comfortably under driver/broadcast capacity. Gate
-    # the hint on the customer table's on-disk size (≤512 MB ≈ SF~200,
-    # keyset ≤~6M keys ≈ 50 MB in-memory); past that, leave the join
-    # unhinted so AQE (on in the production session config) can demote
-    # it to a shuffle join instead of blowing the broadcast limit.
-    c_hint = _bcast_if_small(c_f, sf_dir, "customer")
-    o_f = o.join(c_hint, o.o_custkey == c_f.c_custkey).select(
+    o_f = o.join(c_f, o.o_custkey == c_f.c_custkey).select(
         "o_orderkey", F.year("o_orderdate").alias("o_year")
     )
     s_map = s.select(
@@ -167,14 +142,8 @@ def q8_market_share(spark, sf_dir):
     from .tpch import _disc_price_fixed
 
     li_f = (
-        li.join(
-            _bcast_if_small(p.select("p_partkey"), sf_dir, "part"),
-            li.l_partkey == p.p_partkey,
-        )
-        .join(
-            _bcast_if_small(s_map, sf_dir, "supplier"),
-            li.l_suppkey == s_map.s_suppkey,
-        )
+        li.join(p.select("p_partkey"), li.l_partkey == p.p_partkey)
+        .join(s_map, li.l_suppkey == s_map.s_suppkey)
         .select(
             "l_orderkey",
             _disc_price_fixed().alias("volume"),
@@ -330,7 +299,7 @@ def q22_global_sales_opportunity(spark, sf_dir):
     rich = c.join(F.broadcast(avg_bal)).filter(F.col("c_acctbal") > F.col("ab"))
     # r14 optimization pass: both anti-join rewrites MEASURED AND
     # REJECTED at sf10 (interleaved A/B, /tmp→OPTIMIZATION_r14.md):
-    # broadcast of the projected 1997-order keys via the ladder lost
+    # broadcast of the projected 1997-order keys lost
     # 0.774 → 1.166 s min (rebuilding a 2.3M-key broadcast relation per
     # action costs more than the small SMJ it replaces — the
     # cohort_ltv r10 lesson reconfirmed); SHUFFLE_HASH on the key side
@@ -387,8 +356,8 @@ def q9_product_profit(spark, sf_dir):
         "bigint"
     )
     return (
-        li.join(_bcast_if_small(p, sf_dir, "part"), li.l_partkey == p.p_partkey)
-        .join(_bcast_if_small(s, sf_dir, "supplier"), li.l_suppkey == s.s_suppkey)
+        li.join(p, li.l_partkey == p.p_partkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"), F.year("l_shipdate").alias("o_year"))
         .agg(unscale(F.sum(profit_fp), 5).alias("sum_profit"))
@@ -450,11 +419,10 @@ def q19_disjunctive_revenue(spark, sf_dir):
     r14: Catalyst cannot push any part of the OR to either side (every
     disjunct references both tables), so the single-side IMPLIED
     predicates are derived by hand — any surviving row has p_brand IN
-    the three brands (p: ~2% of parts survive → the join rides the
-    broadcast tier of the `_bcast_if_small` ladder instead of an
-    unhinted fact-wide SMJ) and l_quantity BETWEEN the union bounds
-    1..30 (lineitem pre-filtered before the join; both predicates now
-    reach the parquet scans as PushedFilters). The exact OR is still
+    the three brands (p: ~2% of parts survive, small enough for Spark
+    to broadcast instead of a fact-wide SMJ) and l_quantity BETWEEN the
+    union bounds 1..30 (lineitem pre-filtered before the join; both
+    predicates now reach the parquet scans as PushedFilters). The exact OR is still
     applied after the join, so the result set is unchanged — the
     pre-filters are implied by it. Measured sf10 (interleaved min-of-7,
     new ahead in 7/7 adjacent pairs): 5.453 s → 1.348 s (−75%, plan
@@ -466,9 +434,7 @@ def q19_disjunctive_revenue(spark, sf_dir):
     p = load_table(spark, sf_dir, "part").filter(
         F.col("p_brand").isin("Brand#1", "Brand#2", "Brand#3")
     )
-    joined = li.join(
-        _bcast_if_small(p, sf_dir, "part"), li.l_partkey == p.p_partkey
-    )
+    joined = li.join(p, li.l_partkey == p.p_partkey)
     pred = (
         ((F.col("p_brand") == "Brand#1") & (F.col("l_quantity").between(1, 11)))
         | ((F.col("p_brand") == "Brand#2") & (F.col("l_quantity").between(10, 20)))
@@ -520,9 +486,7 @@ def q2_cheapest_supplier(spark, sf_dir):
             F.min("min_price").cast("double").alias("min_price"),
         )
     )
-    return best.join(
-        _bcast_if_small(s, sf_dir, "supplier"), best.l_suppkey == s.s_suppkey
-    ).select(
+    return best.join(s, best.l_suppkey == s.s_suppkey).select(
         F.col("l_partkey").alias("p_partkey"),
         F.col("s_suppkey"),
         "s_name",
@@ -592,9 +556,7 @@ def q20_volume_share_suppliers(spark, sf_dir):
         .filter(F.col("share") > 0.15)
         .withColumn("qty", unscale(F.col("qc"), 2))
     )
-    return big.join(
-        _bcast_if_small(s, sf_dir, "supplier"), big.l_suppkey == s.s_suppkey
-    ).select(
+    return big.join(s, big.l_suppkey == s.s_suppkey).select(
         F.col("l_partkey").alias("p_partkey"),
         "s_suppkey",
         "s_name",
@@ -694,9 +656,7 @@ def q11_important_stock(spark, sf_dir):
     s = load_table(spark, sf_dir, "supplier").filter(
         F.col("s_nationkey").isin(keys)
     )
-    f = li.join(
-        _bcast_if_small(s, sf_dir, "supplier"), li.l_suppkey == s.s_suppkey
-    ).select(
+    f = li.join(s, li.l_suppkey == s.s_suppkey).select(
         "l_partkey", _disc_price_fixed().alias("v")
     )
     per_part = f.groupBy("l_partkey").agg(F.sum("v").alias("val_fp"))
@@ -799,20 +759,9 @@ def q16_supplier_part_counts(spark, sf_dir):
         gk, "p_brand", "p_type", "p_size"
     )
     return (
-        # explicit broadcast: the packed dim is a filtered projection with
-        # no stats, so with AQE off the planner would sort-merge-join the
-        # 60M-row fact on partkey (measured 2.7-4.4 s and box-sensitive;
-        # hinted: ~1.6 s stable)
-        li.join(
-            _bcast_if_small(p_packed, sf_dir, "part"),
-            li.l_partkey == p_packed.p_partkey,
-        )
+        li.join(p_packed, li.l_partkey == p_packed.p_partkey)
         .select("gk", "l_suppkey")
-        .join(
-            _bcast_if_small(bad, sf_dir, "supplier"),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-            "left_anti",
-        )
+        .join(bad, F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
         .groupBy("gk")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
         .join(F.broadcast(gdim), "gk")

@@ -43,10 +43,13 @@ def _shm_local_dir() -> str | None:
 
 
 def _cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` as a core count. Fails closed: unset, empty,
+    malformed or non-positive values fall back to ``os.cpu_count()``."""
     try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+        n = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
     except ValueError:
-        return os.cpu_count() or 4
+        n = 0
+    return n if n >= 1 else (os.cpu_count() or 4)
 
 
 def iceberg_runtime_jar() -> str | None:

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import _cpus
+
 TABLES = (
     "region",
     "nation",
@@ -230,7 +232,7 @@ def pin_balanced(
     import math
 
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+        cpus = _cpus()
 
     def natural_k(raw: DataFrame) -> int:
         return max(1, min(cpus, math.ceil(raw.count() / min_rows_per_slice)))

@@ -236,10 +236,13 @@ class LakeTable:
         #   share one scan (mixed hive depths under one basePath).
         # - deletes (merge-on-read): each group LEFT ANTI joins the
         #   equality-delete sidecars that apply to it (file seq <
-        #   sidecar seq) — the Iceberg v2 read shape (the sidecar side
-        #   is small and broadcasts). Files appended after a delete
-        #   carry a higher seq, so re-inserted keys are never
-        #   suppressed by older deletes.
+        #   sidecar seq) — the Iceberg v2 read shape. The anti-join is
+        #   unhinted: the sidecar is a plain parquet scan Spark sizes
+        #   from its files, so a usual (tiny) one broadcasts and a bulk
+        #   delete/upsert's huge one is planned as a shuffle join
+        #   instead of blowing the broadcast limit. Files appended
+        #   after a delete carry a higher seq, so re-inserted keys are
+        #   never suppressed by older deletes.
         groups: dict[tuple, list[str]] = {}
         for f in files:
             fseq = man.file_seq.get(f, man.version)
@@ -262,26 +265,7 @@ class LakeTable:
                         f"column(s) {missing}; compact() before dropping "
                         "delete-key columns"
                     )
-                # Size-gated hint (r13, q8 fix class): a sidecar is
-                # usually tiny, but a bulk delete/upsert can write a
-                # huge one — past the cap leave the anti-join unhinted
-                # so AQE picks a shuffle join instead of blowing the
-                # broadcast limit. path_bytes fails CLOSED (+inf) on
-                # anything unstatable (r13 review: a hand-rolled walk
-                # here returned 0 for a vanished dir — fail-open).
-                from ..functions.sizing import (
-                    BROADCAST_DIM_CAP_BYTES,
-                    path_bytes,
-                )
-
-                if (
-                    path_bytes(os.path.join(self.root, d))
-                    <= BROADCAST_DIM_CAP_BYTES
-                ):
-                    keys = F.broadcast(keys)
-                df = df.join(
-                    keys, on=list(keys.columns), how="left_anti"
-                )
+                df = df.join(keys, on=list(keys.columns), how="left_anti")
             parts.append(df)
         out = parts[0]
         for p in parts[1:]:

@@ -3,6 +3,8 @@ oracle-checked ones are covered by test_correctness)."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from data_iceberg_sandbox_spark.operators.dedup import (
@@ -644,3 +646,66 @@ def test_ann_recall_oracle_parameterized():
 
     assert "/ 10.0" in ANN_RECALL_ORACLE
     assert "/ 5.0" in _ann_recall_oracle(5)
+
+
+def test_word_shingles_binds_words_once(spark):
+    """word_shingles must not re-evaluate the split expression per
+    shingle index (O(words²) — array HOFs have no CSE across the lambda
+    boundary); it binds the words array as a lambda variable via a
+    one-element-array transform. Guard both
+    the semantics (old-form equivalence incl. short/empty/NULL docs and
+    the full-text-single-shingle case) and the plan shape (one split —
+    the variable binding — instead of one per HOF argument)."""
+    from pyspark.sql import functions as F
+
+    from data_iceberg_sandbox_spark.functions.text import (
+        word_shingles,
+        words,
+    )
+
+    def old_shingles(text, n=5):
+        w = words(text)
+        starts = F.sequence(
+            F.lit(1), F.greatest(F.size(w) - (n - 1), F.lit(1))
+        )
+        return F.transform(
+            starts, lambda i: F.array_join(F.slice(w, i, n), " ")
+        )
+
+    rows = [
+        ("a b c d e f g h",),
+        ("one two",),
+        ("",),
+        (None,),
+        ("exactly five words right here",),
+    ]
+    df = spark.createDataFrame(rows, ["t"])
+    old = df.select(old_shingles(F.col("t")).alias("s")).collect()
+    new = df.select(word_shingles(F.col("t")).alias("s")).collect()
+    assert new == old
+    plan = (
+        df.select(word_shingles(F.col("t")).alias("s"))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("split(") == 1
+
+
+def test_quantize_storage_op_scale_stays_a_materialized_column(spark):
+    """The storage op builds its own quantize lambda and could regress
+    to the inlined-scale O(d²) form without tripping the
+    embedding_quantize_int8_check guard if it ever stopped sharing
+    `_quantize_base`. Same
+    assertions on the storage op's plan: one array_max (the scale
+    subtree evaluated once), and the quantize lambda divides by the
+    materialized `_s` attribute, never by the scale expression tree."""
+    from data_iceberg_sandbox_spark.operators.similarity import (
+        embedding_quantize_int8,
+    )
+
+    df = embedding_quantize_int8(spark, SF_SMOKE)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("array_max") == 1
+    q_lambda = re.search(r"round\(\(lambda [^)]*\)", plan)
+    assert q_lambda and "_s#" in q_lambda.group(0), q_lambda

@@ -1,13 +1,24 @@
-"""Interleaved A/B timing for two plan variants of one query — the
-measurement protocol for a box with episodic multi-second interference
-(ROUND14_NOTES "Benchmarking-protocol findings"): variants alternate
-A,B,A,B,… in ONE session so interference windows hit both arms, and the
-MIN over reps is reported beside the median as the interference-robust
-capability statistic.
+"""Interleaved A/B timing of plan variants — the measurement protocol for
+a box with episodic multi-second interference: variants alternate
+A,B,B,A,… in ONE session so interference windows and position effects
+hit every arm alike, and the MIN over reps is reported beside the
+median as the interference-robust capability statistic.
+
+The session is the engine's shipping one (``get_spark_session()`` with
+its defaults: AQE on, shuffle partitions = cores), the base tables are
+pinned with ``pin_balanced``, and every run is the built plan into the
+``noop`` sink. Per variant the payload carries the run times, their min
+and median, the Spark jobs each run launched, and an order-independent
+result fingerprint (row count, sum and xor of per-row xxhash64); the
+``rows_equal`` flag compares it with the first variant of the same
+query. A host stamp (parallel efficiency, memory bandwidth — bench.py's
+probes) is taken before and after the reps.
 
 Usage: python tools/ab_interleaved.py out.json <variants_module> [reps]
   <variants_module> is a python file defining VARIANTS: dict[str, fn]
-  where fn(spark, sf_dir) -> DataFrame.
+  where fn(spark, sf_dir) -> DataFrame. Names of the form
+  ``query:arm`` group arms of one query; a name without ``:`` belongs
+  to the single unnamed query.
 Env: SF_DIR (default .scratch/sf10), REPS (default 7).
 """
 
@@ -23,6 +34,29 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _fingerprint(df) -> list:
+    from pyspark.sql import functions as F
+
+    h = F.xxhash64(*df.columns)
+    row = df.agg(
+        F.count(F.lit(1)),
+        F.sum(h.cast("decimal(38,0)")).cast("string"),
+        F.bit_xor(h),
+    ).first()
+    return list(row)
+
+
+def _query(name: str) -> str:
+    return name.partition(":")[0] if ":" in name else ""
+
+
+def _host() -> dict:
+    from bench import _host_probes
+
+    par, bw = _host_probes()
+    return {"parallel_efficiency": par, "membw_gbps": bw}
+
+
 def main() -> None:
     out_path, mod_path = sys.argv[1], sys.argv[2]
     reps = int(os.environ.get("REPS", sys.argv[3] if len(sys.argv) > 3 else 7))
@@ -36,38 +70,56 @@ def main() -> None:
     from data_iceberg_sandbox_spark.session import get_spark_session
     from data_iceberg_sandbox_spark.sources.registry import pin_balanced
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
-    spark = get_spark_session(
-        app_name="ab_interleaved",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
+    host_before = _host()
+    spark = get_spark_session(app_name="ab_interleaved")
+    sc = spark.sparkContext
     pin_balanced(spark, sf_dir)
 
     dfs = {name: fn(spark, sf_dir) for name, fn in variants.items()}
-    for name, df in dfs.items():  # warm both plans (JIT/codegen)
-        spark.sparkContext.setJobDescription(f"warm:{name}")
+    for name, df in dfs.items():  # warm every plan (JIT/codegen)
+        sc.setJobDescription(f"warm:{name}")
         df.write.format("noop").mode("overwrite").save()
 
     runs: dict[str, list[float]] = {name: [] for name in dfs}
+    jobs: dict[str, list[int]] = {name: [] for name in dfs}
     for rep in range(reps):
-        for name, df in dfs.items():
-            spark.sparkContext.setJobDescription(f"rep{rep}:{name}")
+        # ABBA: odd reps run the arms in reverse, so no arm always
+        # follows the same neighbour
+        order = list(dfs.items())
+        for name, df in order[::-1] if rep % 2 else order:
+            gid = f"rep{rep}:{name}"
+            sc.setJobGroup(gid, gid)
             t0 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             runs[name].append(round(dt, 3))
-            print(f"rep{rep} {name}: {dt:.3f}", flush=True)
+            jobs[name].append(len(sc.statusTracker().getJobIdsForGroup(gid)))
+            print(f"rep{rep} {name}: {dt:.3f} ({jobs[name][-1]} jobs)", flush=True)
+    sc.setJobGroup("fingerprint", "fingerprint")
+    prints = {name: _fingerprint(df) for name, df in dfs.items()}
+    first_of: dict[str, str] = {}
+    for name in dfs:
+        first_of.setdefault(_query(name), name)
 
     payload = {
         "sf_dir": sf_dir,
         "reps": reps,
         "protocol": "interleaved same-session; min is interference-robust",
+        "session": {
+            "master": sc.master,
+            "default_parallelism": sc.defaultParallelism,
+            "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+            "aqe": spark.conf.get("spark.sql.adaptive.enabled"),
+        },
+        "host": {"before": host_before, "after": _host()},
         "variants": {
             name: {
                 "runs": rs,
                 "min": min(rs),
                 "median": round(statistics.median(rs), 3),
+                "jobs_per_run": jobs[name],
+                "fingerprint": prints[name],
+                "rows_equal": prints[name] == prints[first_of[_query(name)]],
             }
             for name, rs in runs.items()
         },

@@ -7,9 +7,9 @@ so BOTH engines read the same parquet through the OS page cache —
 the cold-ish cluster shape. AQE stays ON (the cluster default; at this
 volume its skew/sizing decisions are part of the system under test),
 maxPartitionBytes=128m so the ~12 GB lineitem scans as ~90 tasks on 32
-cores. The size-gated broadcast class (_bcast_if_small) gets its first
-genuinely-oversized exercise here: sf100 customer/supplier are far past
-the gate, so the hint must vanish and the joins must plan as SMJ.
+cores. The data-scaled dim joins carry no hint, so here sf100
+customer/supplier are far past autoBroadcastJoinThreshold and AQE picks
+their strategy from runtime shuffle sizes.
 
 Each engine: one untimed warm pass (page cache + JIT), then RUNS timed
 runs; medians + full run arrays recorded. DuckDB oracles run under a

@@ -8,13 +8,7 @@ Usage:
 Runs against $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) with the
 same session sizing bench.py uses, so the captured plan is the plan the
 bench times. Plan construction only — nothing is executed beyond the
-small collects some plan builders do (dim folds, size probes).
-
-SPARK_GRAFT_FORCE_DIR_BYTES=<n>: monkeypatch the join ladder's
-`_dir_bytes` probe to report <n> for EVERY data-scaled dim — the
-tier-demo mode used to show the >512 MB SHUFFLE_HASH band (and the
-past-both-caps unhinted band) in a committed plan without generating a
-multi-hundred-GB dataset; the capture header records the override.
+small collects some plan builders do (dim folds).
 """
 
 from __future__ import annotations
@@ -40,11 +34,6 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"not in the registry: {unknown}")
 
-    forced = os.environ.get("SPARK_GRAFT_FORCE_DIR_BYTES")
-    if forced:
-        import data_iceberg_sandbox_spark.operators.tpch as tpch_mod
-
-        tpch_mod._dir_bytes = lambda sf, n, _v=float(forced): _v
     pin = os.environ.get("SPARK_GRAFT_CAPTURE_PIN")
 
     spark = get_spark_session(
@@ -75,8 +64,6 @@ def main() -> None:
         path = os.path.join(out_dir, f"{n}_{suffix}.txt")
         with open(path, "w") as fh:
             hdr = f"== {n} ({suffix}) sf_dir={sf_dir}"
-            if forced:
-                hdr += f" [tier demo: _dir_bytes forced to {forced}]"
             if pin:
                 hdr += " [pinned base tables, the bench session shape]"
             fh.write(hdr + " ==\n")
