@@ -1,16 +1,17 @@
-"""Kafka + Avro streaming connectors (SURVEY §2.1 S8/S10/S13), jar-gated.
+"""Kafka streaming source (SURVEY §2.1 S10), jar-gated.
 
 The reference's transport is a Kafka topic with registry-decoded Avro
 values (src_kafka_credit_card_transactions.sql:1-12; producer
 produce_transactions.py:32-47). In Spark that is a config swap on the
-same pipeline: `readStream.format("kafka")` + `from_avro(value)` in,
-`to_avro(struct(*))` + `format("kafka")` out.
+same pipeline: `readStream.format("kafka")` in; the values decode with
+the pure-Python Confluent-frame codec (`sources/avro_codec.py`).
 
-This image ships neither spark-sql-kafka nor the spark-avro SQL module
-(only Avro core jars), so these factories raise a clear
-ConnectorUnavailable with the exact jars to add; the streaming pipelines
+The default install ships neither spark-sql-kafka nor the spark-avro SQL
+module (only Avro core jars), so `kafka_stream` raises a clear
+ConnectorUnavailable naming the jar to add; the streaming pipelines
 accept any source DataFrame, so swapping the staged file backlog for
 `kafka_stream(...)` is the only change needed on a real cluster.
+`fake_kafka_stream` is its jar-free twin with the same schema.
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ class ConnectorUnavailable(RuntimeError):
 
 
 _KAFKA_JARS = "org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>"
-_AVRO_JARS = "org.apache.spark:spark-avro_2.13:<spark-version>"
 
 
 def _has_class(spark: SparkSession, cls: str) -> bool:
@@ -68,96 +68,6 @@ def kafka_stream(
         .option("subscribe", topic)
         .option("startingOffsets", starting_offsets)
         .load()
-    )
-
-
-def decode_avro_values(
-    df: DataFrame, avro_schema_json: str, confluent_framed: bool = True
-) -> DataFrame:
-    """Registry-style Avro decode of the Kafka `value` column.
-
-    ``confluent_framed`` (the default — the reference producer and this
-    repo's codec both write the Confluent wire format) strips the
-    5-byte header (0x00 magic + big-endian schema id) before
-    ``from_avro``: JVM from_avro consumes the BARE Avro body, and
-    feeding it the framed payload mis-parses every record (the magic
-    byte reads as an empty string, the id bytes as a length varint —
-    r12 review). Null values (compacted-topic tombstones) are dropped,
-    matching the pure-Python decoder."""
-    if not avro_available(df.sparkSession):
-        raise ConnectorUnavailable(
-            f"spark-avro not on classpath; add {_AVRO_JARS}"
-        )
-    from pyspark.sql import functions as F
-    from pyspark.sql.avro.functions import from_avro
-
-    body = F.col("value")
-    if confluent_framed:
-        body = F.expr("substring(value, 6, length(value) - 5)")
-    return (
-        df.filter(F.col("value").isNotNull())
-        .select(
-            df["key"].cast("string").alias("key"),
-            from_avro(body, avro_schema_json).alias("v"),
-        )
-        .select("key", "v.*")
-    )
-
-
-def kafka_sink(
-    df: DataFrame,
-    brokers: str,
-    topic: str,
-    checkpoint: str,
-    avro_schema_json: str | None = None,
-    schema_id: int = 1,
-):
-    """S13 streaming sink → Kafka (optionally Avro-encoded).
-
-    ``schema_id`` is the Confluent-frame id to stamp — a real
-    registry-backed deployment passes the id the registry assigned for
-    this subject/schema (the local default 1 matches the repo's own
-    decoder and broker-free tests)."""
-    spark = df.sparkSession
-    if not kafka_available(spark):
-        raise ConnectorUnavailable(
-            f"spark-sql-kafka not on classpath; add {_KAFKA_JARS}"
-        )
-    out = df
-    if avro_schema_json is not None:
-        if not avro_available(spark):
-            raise ConnectorUnavailable(
-                f"spark-avro not on classpath; add {_AVRO_JARS}"
-            )
-        from pyspark.sql import functions as F
-        from pyspark.sql.avro.functions import to_avro
-
-        # preserve Kafka keying (a `key` column keeps per-key partition
-        # ordering — the reference pipeline partitions by card) and emit
-        # the Confluent frame (magic 0x00 + schema id) so this sink's
-        # payloads round-trip through the repo's own decoder and any
-        # registry-aware consumer (r12 review: the old form dropped the
-        # key and wrote unframed bodies). The DECLARED schema is passed
-        # to to_avro (r13 review): without it Spark infers a writer
-        # schema from the frame — nullable columns become Avro unions
-        # with a branch varint the declared-schema reader misparses as
-        # data, silently corrupting every field after the first
-        # nullable one.
-        payload_cols = [c for c in df.columns if c != "key"]
-        frame_header = bytes([0]) + int(schema_id).to_bytes(4, "big")
-        value = F.concat(
-            F.lit(frame_header),
-            to_avro(F.struct(*payload_cols), avro_schema_json),
-        ).alias("value")
-        if "key" in df.columns:
-            out = df.select(F.col("key").cast("binary").alias("key"), value)
-        else:
-            out = df.select(value)
-    return (
-        out.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
     )
 
 

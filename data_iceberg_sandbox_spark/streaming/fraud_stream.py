@@ -32,8 +32,10 @@ Spark-first mapping:
 
 Scale notes: the windowed agg carries partial aggregation before the
 (user_id, window) shuffle; state is per-group O(1); the MERGE per batch
-shuffles only updated groups (micro-batch-sized, AQE broadcasts it
-against the big target side of the COW join).
+is ONE full outer join of the MV table with the batch's updated groups.
+The batch frame is a plan over the stateful aggregate that re-runs on
+every read, so a single join is what keeps it to one state-store pass
+per trigger.
 """
 
 from __future__ import annotations

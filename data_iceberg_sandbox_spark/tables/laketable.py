@@ -19,9 +19,10 @@ Design — a deliberately small subset of the Iceberg spec:
 A manifest lists the *complete* file set of its snapshot plus schema,
 partition spec, properties, operation and parent version. Readers resolve
 ``_current`` (or an explicit version / timestamp → time travel, D6) and
-hand the file list to one ``spark.read.parquet(*files)`` call — listing
-is O(manifest), not O(directory), and partition values are recovered via
-``basePath`` so Catalyst still prunes hive-style partition directories.
+hand the file list to ``spark.read.parquet(*files)`` — listing is
+O(manifest), not O(directory). Partition values are recovered via
+``basePath`` so Catalyst still prunes hive-style partition directories;
+a partitioned table scans once per commit dir (see ``_scan_base``).
 
 Commits are optimistic: writers stage data files under a fresh uuid dir,
 write manifest v(N+1), then atomically swing ``_current`` from the
@@ -30,17 +31,18 @@ version they read — a concurrent commit in between raises
 REST-catalog CAS).
 
 Scale notes (100 TB): data-file writes are plain distributed parquet
-writes (no driver data path); MERGE is copy-on-write implemented as
-anti/inner/anti joins shuffled on the merge key — the same shape
-Iceberg's COW MERGE produces — with the small source side broadcast by
-AQE when it fits. Manifest JSON on the driver holds file paths only;
-at 100 TB with ~1 GB files that's ~10^5 entries — fine. Compaction
+writes (no driver data path); MERGE is copy-on-write implemented as ONE
+full outer join of target and source shuffled on the merge key — the
+shape Spark's ``RewriteMergeIntoTable`` plans for Iceberg's COW MERGE —
+so the source is read once. Manifest JSON on the driver holds file
+paths only; at 100 TB with ~1 GB files that's ~10^5 entries — fine. Compaction
 (D7) and snapshot expiry (D8) mirror ``rewrite_data_files`` /
 ``expire_snapshots`` procedures.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -82,12 +84,17 @@ class IncrementalReadError(RuntimeError):
     incremental scan has the same appends-only restriction)."""
 
 
-def _hive_layout(f: str) -> tuple:
-    """A file's partition layout = its hive path segment column names.
-    Partition-spec evolution (metadata-only) leaves files of older
-    layouts in place, and Spark needs a consistent directory structure
-    per scan, so mixed-spec file lists scan one group per layout."""
-    return tuple(seg.split("=", 1)[0] for seg in f.split("/") if "=" in seg)
+def _scan_base(f: str) -> str:
+    """The ``basePath`` (relative to the table root) a data file scans
+    under. Unpartitioned files all share ``data``. A partitioned file
+    (hive ``k=v`` dirs below its commit dir ``data/<commit>/``) scans
+    under its commit dir: Spark's partition discovery rejects a
+    non-``k=v`` level between basePath and the partition dirs
+    (CONFLICTING_DIRECTORY_STRUCTURES). One commit writes one partition
+    layout, so grouping by base also keeps the mixed layouts of a
+    partition-spec evolution in separate scans."""
+    parts = f.split("/")
+    return "/".join(parts[:2]) if any("=" in p for p in parts[2:-1]) else parts[0]
 
 
 @dataclass
@@ -216,8 +223,8 @@ class LakeTable:
         man: "Manifest",
         prune: list[tuple[str, str, object]] | None = None,
     ) -> DataFrame:
-        """Shared scan body for read() and read_staged(): file pruning,
-        layout grouping, and merge-on-read delete application."""
+        """Shared scan body for read() and read_staged(): file pruning
+        and merge-on-read delete application."""
         schema = T.StructType.fromJson(json.loads(man.schema_json))
         files = man.files
         if prune:
@@ -226,35 +233,25 @@ class LakeTable:
             ]
         if not files:
             return self.spark.createDataFrame([], schema)
-        cols = [f.name for f in schema.fields]
-        layouts = {_hive_layout(f) for f in files}
-        if not man.delete_files and len(layouts) == 1:
+        if not man.delete_files:
             return self._scan_files(schema, files)
-        # Group data files by (partition layout, applicable delete set)
-        # and scan each group once.
-        # - layout: files written under different partition specs cannot
-        #   share one scan (mixed hive depths under one basePath).
-        # - deletes (merge-on-read): each group LEFT ANTI joins the
-        #   equality-delete sidecars that apply to it (file seq <
-        #   sidecar seq) — the Iceberg v2 read shape. The anti-join is
-        #   unhinted: the sidecar is a plain parquet scan Spark sizes
-        #   from its files, so a usual (tiny) one broadcasts and a bulk
-        #   delete/upsert's huge one is planned as a shuffle join
-        #   instead of blowing the broadcast limit. Files appended
-        #   after a delete carry a higher seq, so re-inserted keys are
-        #   never suppressed by older deletes.
+        cols = [f.name for f in schema.fields]
+        # Merge-on-read: group data files by the equality-delete
+        # sidecars that apply to them (file seq < sidecar seq) and LEFT
+        # ANTI join each group with its sidecars — the Iceberg v2 read
+        # shape. The anti-join is unhinted: the sidecar is a plain
+        # parquet scan Spark sizes from its files, so a usual (tiny) one
+        # broadcasts and a bulk delete/upsert's huge one is planned as a
+        # shuffle join instead of blowing the broadcast limit. Files
+        # appended after a delete carry a higher seq, so re-inserted
+        # keys are never suppressed by older deletes.
         groups: dict[tuple, list[str]] = {}
         for f in files:
             fseq = man.file_seq.get(f, man.version)
-            key = (
-                _hive_layout(f),
-                tuple(
-                    sorted(d for d, ds in man.delete_files.items() if fseq < ds)
-                ),
-            )
-            groups.setdefault(key, []).append(f)
+            dels = tuple(sorted(d for d, ds in man.delete_files.items() if fseq < ds))
+            groups.setdefault(dels, []).append(f)
         parts = []
-        for (_lay, dels), flist in groups.items():
+        for dels, flist in groups.items():
             df = self._scan_files(schema, flist)
             for d in dels:
                 keys = self.spark.read.parquet(os.path.join(self.root, d))
@@ -267,10 +264,7 @@ class LakeTable:
                     )
                 df = df.join(keys, on=list(keys.columns), how="left_anti")
             parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def read_incremental(
         self, from_version: int, to_version: int | None = None
@@ -325,30 +319,28 @@ class LakeTable:
         return self._scan_files(schema, new_files)
 
     def _scan_files(self, schema: T.StructType, flist: list[str]) -> DataFrame:
-        """One distributed scan over a concrete file list (single hive
-        layout); column order pinned to the table schema."""
-        reader = self.spark.read.schema(schema).option(
-            "basePath", os.path.join(self.root, "data")
-        )
-        paths = [os.path.join(self.root, f) for f in flist]
-        return reader.parquet(*paths).select([f.name for f in schema.fields])
+        """Distributed scan over a concrete file list, one parquet scan
+        per :func:`_scan_base` (a single one for an unpartitioned
+        table); column order pinned to the table schema."""
+        groups: dict[str, list[str]] = {}
+        for f in flist:
+            groups.setdefault(_scan_base(f), []).append(f)
+        parts = [
+            self.spark.read.schema(schema)
+            .option("basePath", os.path.join(self.root, base))
+            .parquet(*[os.path.join(self.root, f) for f in fs])
+            .select([f.name for f in schema.fields])
+            for base, fs in groups.items()
+        ]
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def _scan_file_subset(self, man: "Manifest", files: list[str]) -> DataFrame:
-        """One distributed scan over a manifest file subset, grouped by
-        hive partition layout (mixed-spec tables carry files of older
-        layouts; read() handles the delete-sidecar grouping on top of
-        the same helpers)."""
+        """Scan a manifest file subset without applying its delete
+        sidecars (file-delta diffs and COW rewrites of chosen files)."""
         schema = T.StructType.fromJson(json.loads(man.schema_json))
         if not files:
             return self.spark.createDataFrame([], schema)
-        groups: dict[tuple, list[str]] = {}
-        for f in files:
-            groups.setdefault(_hive_layout(f), []).append(f)
-        parts = [self._scan_files(schema, flist) for flist in groups.values()]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self._scan_files(schema, files)
 
     # Commits whose rewrite is row-identical by construction: they
     # re-shape files (clustering, sizing, partition layout) or
@@ -695,16 +687,10 @@ class LakeTable:
         ]
         if not stat_cols:
             return {}
-        paths = [os.path.join(self.root, f) for f in files]
         # explicit schema: files predating an add_column lack the new
         # column (schema-on-read null-fills it; min=NULL → no stat entry),
         # and empty part-files simply produce no stats row (conservative)
-        df = (
-            self.spark.read.schema(schema)
-            .option("basePath", os.path.join(self.root, "data"))
-            .parquet(*paths)
-            .withColumn("_file", F.input_file_name())
-        )
+        df = self._scan_files(schema, files).withColumn("_file", F.input_file_name())
         aggs = []
         for c in stat_cols:
             aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
@@ -968,9 +954,12 @@ class LakeTable:
         defaults to the table's ``identifier.fields`` property (D10,
         count_clients.py:43-44 analog).
 
-        Plan shape: three joins on the merge key (inner for updates,
-        left-anti each way for untouched/inserts) unioned and rewritten —
-        the COW MERGE shuffle; AQE broadcasts the source side when small.
+        Plan shape: ONE full outer join of target and source on the
+        merge keys (a left outer join when ``insert_not_matched=False``)
+        projected into the COW rewrite — the shape Spark's
+        ``RewriteMergeIntoTable`` plans for Iceberg. The source is read
+        once, which matters when it is a ``foreachBatch`` micro-batch:
+        every read of it re-runs the stream's stateful aggregate.
 
         Duplicate merge-key rows in the source raise MergeCardinalityError
         (Iceberg's "multiple matching rows" contract) instead of silently
@@ -989,47 +978,14 @@ class LakeTable:
         ]
         if not keys:
             raise ValueError("merge needs `on` keys or identifier.fields property")
-        target = self.read()
-        source = _align(source, cur.schema_json)
-        cols = target.columns
-
-        dup = (
-            []
-            if assume_unique_source
-            else source.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(1)
-            .collect()
+        return self._cow_merge(
+            cur,
+            source,
+            keys,
+            update_exclude,
+            insert_when=insert_not_matched,
+            check_unique=not assume_unique_source,
         )
-        if dup:
-            key_vals = {k: dup[0][k] for k in keys}
-            raise MergeCardinalityError(
-                f"source has multiple rows for merge key {key_vals}"
-            )
-
-        untouched = target.join(source, keys, "left_anti")
-        updated = target.alias("t").join(source.alias("s"), keys, "inner").select(
-            *[
-                F.col(f"t.{c}") if (c in keys or c in update_exclude) else F.col(f"s.{c}")
-                for c in cols
-            ]
-        )
-        merged = untouched.unionByName(updated)
-        if insert_not_matched:
-            inserted = source.join(target, keys, "left_anti").select(*cols)
-            merged = merged.unionByName(inserted)
-
-        files = self._write_data_files(merged, cur.partition_by, cur.properties)
-        self._commit(
-            "merge",
-            files,
-            cur.schema_json,
-            cur.partition_by,
-            cur.properties,
-            expected_parent=cur.version,
-        )
-        return self
 
     def merge_conditional(
         self,
@@ -1057,31 +1013,81 @@ class LakeTable:
         conditions count as not-matched-by-the-clause (SQL three-valued
         logic), never as TRUE.
 
-        Plan shape: identical to :meth:`merge` — one key-partitioned
-        join pass (anti for untouched, inner for matched, anti for
-        inserts) unioned into the COW rewrite; the clause conditions are
-        row-local projections on the joined frame, adding no extra
-        shuffle. Duplicate source keys raise MergeCardinalityError."""
-        cur = self.manifest()
-        target = self.read()
+        Plan shape: identical to :meth:`merge` — one full outer join on
+        the keys; the clause conditions are row-local projections on
+        the joined frame, adding no extra shuffle. Duplicate source keys
+        raise MergeCardinalityError."""
+        return self._cow_merge(
+            self.manifest(),
+            source,
+            on,
+            update_exclude,
+            delete_when=delete_when,
+            update_when=update_when,
+            insert_when=True if insert_when is None else insert_when,
+        )
+
+    def _cow_merge(
+        self,
+        cur: "Manifest",
+        source: DataFrame,
+        keys: list[str],
+        update_exclude: tuple[str, ...] = (),
+        delete_when=None,
+        update_when=None,
+        insert_when=True,
+        check_unique: bool = True,
+    ) -> "LakeTable":
+        """The copy-on-write MERGE both public forms share: one outer
+        join of target and source on ``keys``, each side tagged with a
+        presence marker, projected column by column into the rewrite.
+
+        - target-only rows are kept as they are;
+        - source-only rows are inserted when ``insert_when`` holds — a
+          Column over the source row, or a bool (False: no inserts, so
+          the join is a left outer join);
+        - matched rows are dropped when ``delete_when`` is TRUE, else
+          take ``s.<col>`` for every non-key, non-``update_exclude``
+          column when ``update_when`` (None → always) is TRUE.
+
+        Keys join with ``=``, so NULL keys never match: a NULL-keyed
+        target row survives untouched and a NULL-keyed source row is an
+        insert."""
+        target = self._scan_manifest(cur)
         source = _align(source, cur.schema_json)
         cols = target.columns
 
-        dup = (
-            source.groupBy(*on)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            key_vals = {k: dup[0][k] for k in on}
-            raise MergeCardinalityError(
-                f"source has multiple rows for merge key {key_vals}"
+        if check_unique:
+            dup = (
+                source.groupBy(*keys)
+                .agg(F.count(F.lit(1)).alias("n"))
+                .filter(F.col("n") > 1)
+                .limit(1)
+                .collect()
             )
+            if dup:
+                key_vals = {k: dup[0][k] for k in keys}
+                raise MergeCardinalityError(
+                    f"source has multiple rows for merge key {key_vals}"
+                )
 
-        untouched = target.join(source, on, "left_anti")
-        joined = target.alias("t").join(source.alias("s"), on, "inner")
+        # markers: non-NULL exactly on the rows the side contributed; the
+        # source's also carries the (non-NULL) insert decision
+        t_mark, s_mark = "__merge_target", "__merge_source"
+        ins = (
+            F.lit(True)
+            if isinstance(insert_when, bool)
+            else insert_when.eqNullSafe(F.lit(True))
+        )
+        joined = target.withColumn(t_mark, F.lit(True)).alias("t").join(
+            source.withColumn(s_mark, ins).alias("s"),
+            functools.reduce(
+                lambda a, b: a & b, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys]
+            ),
+            "left_outer" if insert_when is False else "full_outer",
+        )
+        in_t = F.col(f"t.{t_mark}").isNotNull()
+        matched = in_t & F.col(f"s.{s_mark}").isNotNull()
         is_del = (
             delete_when.eqNullSafe(F.lit(True))
             if delete_when is not None
@@ -1092,22 +1098,22 @@ class LakeTable:
             if update_when is not None
             else F.lit(True)
         )
-        matched_kept = joined.filter(~is_del).select(
+        keep = F.when(matched, ~is_del).when(in_t, F.lit(True)).otherwise(
+            F.col(f"s.{s_mark}")
+        )
+        # a column takes the target value on target-only rows, and on
+        # matched rows unless it is an updated (non-key, non-excluded)
+        # column of a row whose update clause holds
+        fixed = set(keys) | set(update_exclude)
+        updated = matched & is_upd
+        merged = joined.filter(keep).select(
             *[
-                F.when(
-                    is_upd & F.lit(c not in on and c not in update_exclude),
-                    F.col(f"s.{c}"),
-                )
-                .otherwise(F.col(f"t.{c}"))
+                F.when(in_t if c in fixed else in_t & ~updated, F.col(f"t.{c}"))
+                .otherwise(F.col(f"s.{c}"))
                 .alias(c)
                 for c in cols
             ]
         )
-        merged = untouched.unionByName(matched_kept)
-        inserts = source.join(target, on, "left_anti")
-        if insert_when is not None:
-            inserts = inserts.filter(insert_when.eqNullSafe(F.lit(True)))
-        merged = merged.unionByName(inserts.select(*cols))
 
         files = self._write_data_files(merged, cur.partition_by, cur.properties)
         self._commit(

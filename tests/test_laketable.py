@@ -42,6 +42,75 @@ def test_partitioned_create_prunes(spark, scratch, df10):
     assert "p=1" in plan or "PartitionFilters" in plan
 
 
+def _collect_counting_partitions(df) -> tuple[list, int]:
+    """A frame's rows, and the partitions its scans read (summed over
+    scans). Collect once: a re-run resets the scans' static metrics."""
+    rows = df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        m = leaves.apply(i).metrics()
+        if m.contains("numPartitions"):
+            total += m.apply("numPartitions").value()
+    return rows, total
+
+
+def test_partitioned_append_reads_across_commit_dirs(spark, scratch, df10):
+    """A partitioned table whose live files span several commit dirs
+    (create → append, no delete sidecar) scans each commit dir as its
+    own partitioned scan and still prunes partitions."""
+    t = LakeTable(spark, os.path.join(scratch, "t2a"))
+    t.create(df10.withColumn("p", F.col("id") % 2), partition_by=["p"])
+    t.append(
+        df10.withColumn("id", F.col("id") + 10).withColumn("p", F.col("id") % 3)
+    )
+    assert len({f.split("/")[1] for f in t.manifest().files}) == 2
+    rows = sorted((r["id"], r["p"]) for r in t.read().collect())
+    assert rows == sorted(
+        [(i, i % 2) for i in range(10)] + [(i, i % 3) for i in range(10, 20)]
+    )
+    rows, n_parts = _collect_counting_partitions(t.read().filter(F.col("p") == 2))
+    assert sorted(r["id"] for r in rows) == [11, 14, 17]
+    assert n_parts == 1  # p=2 exists only in the append's commit dir
+
+
+def test_partitioned_merge_then_append_reads(spark, scratch):
+    """The lifecycle create → merge → MoR upsert → pruned delete →
+    append on a partitioned table, read back whole and pruned."""
+    t = LakeTable(spark, os.path.join(scratch, "t2m"))
+    base = spark.range(12).select(
+        "id",
+        F.when(F.col("id") % 3 == 0, "a").when(F.col("id") % 3 == 1, "b")
+        .otherwise("c").alias("category"),
+        F.col("id").cast("int").alias("v"),
+    )
+    t.create(base, partition_by=["category"])
+    t.merge(
+        base.filter(F.col("id") < 4).withColumn("v", F.lit(-1)),
+        on=["id"],
+    )
+    t.upsert_keys_mor(
+        base.filter(F.col("id") == 5).withColumn("v", F.lit(50)), ["id"]
+    )
+    t.delete_where(F.col("id") == 11)
+    t.append(
+        spark.createDataFrame([(20, "a", 20), (21, "d", 21)], "id long, category string, v int")
+    )
+    want = {i: (-1 if i < 4 else 50 if i == 5 else i) for i in range(11)}
+    want |= {20: 20, 21: 21}
+    assert {r["id"]: r["v"] for r in t.read().collect()} == want
+    a = t.read().filter(F.col("category") == "a")
+    assert sorted(r["id"] for r in a.collect()) == [0, 3, 6, 9, 20]
+    rows, n_parts = _collect_counting_partitions(
+        t.read().filter(F.col("category") == "d")
+    )
+    assert [r["id"] for r in rows] == [21]
+    assert n_parts == 1
+
+
 def test_merge_insert_and_update(spark, scratch, df10):
     t = LakeTable(spark, os.path.join(scratch, "t3"))
     t.create(df10)

@@ -4,16 +4,20 @@ processing, emit-on-update convergence, backfill repair."""
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
+from data_iceberg_sandbox_spark.operators.fraud import fraud_alerts_oracle_sql
 from data_iceberg_sandbox_spark.sources.registry import load_table
 from data_iceberg_sandbox_spark.streaming.fraud_stream import (
     SCRATCH,
     repair_null_enrichment,
     run_fraud_alerts_stream,
 )
-from tests.conftest import SF_SMOKE
+from data_iceberg_sandbox_spark.tables.laketable import LakeTable
+from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.oracle_harness import compare, duckdb_conn
 
 
 def test_append_stream_epoch_retry_is_idempotent(spark, scratch):
@@ -53,6 +57,31 @@ def test_multi_batch_incremental_merge(spark):
     assert len(t.snapshots()) > 1
     ops = {m.operation for m in t.snapshots()}
     assert "merge" in ops or "create" in ops
+
+
+def test_fraud_mv_merge_reads_each_micro_batch_once(spark, monkeypatch):
+    """Each foreachBatch MERGE of the fraud MV plans one join over the
+    micro-batch. The batch frame is a LogicalRDD over the not yet
+    materialized stateful aggregate, so one scan of it is one state
+    store pass per trigger. The sf0.01 MV still equals the oracle."""
+    plans = []
+    write = LakeTable._write_data_files
+
+    def spy(self, df, *a, **kw):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return write(self, df, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "_write_data_files", spy)
+    t = run_fraud_alerts_stream(
+        spark, SF_ORACLE, os.path.join(SCRATCH, "fraud_one_join")
+    )
+    merges = [p for p in plans if "Join " in p]
+    assert len(plans) == len(t.snapshots()) and len(merges) == len(plans) - 1
+    assert merges, "the drain committed no MERGE"
+    for p in merges:
+        assert re.findall(r"\bJoin \w+", p) == ["Join FullOuter"], p
+        assert p.count("LogicalRDD") == 1, p
+    compare(t.read(), duckdb_conn(SF_ORACLE), fraud_alerts_oracle_sql(), "fraud_mv")
 
 
 def test_emit_on_update_convergence(spark):
