@@ -18,7 +18,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from data_iceberg_sandbox_spark.operators import fraud  # noqa: E402
 from data_iceberg_sandbox_spark.operators.spec import (  # noqa: E402
     QuerySpec,
-    _memoized,
     as_query_dicts,
 )
 
@@ -54,6 +53,13 @@ def _all_specs():
     from data_iceberg_sandbox_spark.streaming import specs as streaming_specs
 
     specs += list(streaming_specs.SPECS)
+    specs.append(
+        QuerySpec(
+            "flagship_fraud_enriched",
+            fraud.fraud_alerts_enriched,
+            fraud.fraud_enriched_oracle_sql(),
+        )
+    )
     return specs
 
 
@@ -157,21 +163,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q, _ = as_query_dicts(_all_specs())
-    # Memoized like every other pure read-only spec: the flagship was the
-    # one unmemoized entry, so each bench run re-ran the plan build
-    # including _inline_nations' collect — one extra job + the py4j
-    # plan-construction round trips per timed run (r10 flagship regression).
-    q["flagship_fraud_enriched"] = _memoized(
-        QuerySpec(
-            name="flagship_fraud_enriched",
-            fn=fraud.fraud_alerts_enriched,
-            oracle=fraud.fraud_enriched_oracle_sql(),
-        )
-    )
     return _unchecked_first(q)
 
 
 def oracle_sql() -> dict[str, str]:
     _, o = as_query_dicts(_all_specs())
-    o["flagship_fraud_enriched"] = fraud.fraud_enriched_oracle_sql()
     return _unchecked_first(o)

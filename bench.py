@@ -247,28 +247,14 @@ def main() -> None:
         # row without a driver transfer or an extra count-agg stage
         df.write.format("noop").mode("overwrite").save()
 
-    # Bench fairness (r15, VERDICT "What's wrong" #1): a query that
-    # registers its OWN cache (the dedup family's multiply-consumed
-    # candidate frames) would otherwise serve run N from run N−1's
-    # materialized blocks — the median then measures cache-hit
-    # re-execution, not the declared plan. Between timed runs, if the
-    # previous run left any persistent RDD beyond the base-table pin,
-    # we clear the SQL CacheManager entirely, drop orphaned blocks, and
-    # re-pin the base tables (all untimed): the next run re-registers
-    # its caches and materializes them INSIDE its own timing window, so
-    # the median measures the declared plan — cache-cold per run with
-    # intra-run DAG reuse intact. Surgically unpersisting just the
-    # query's buffer RDD was probed and REJECTED: CachedRDDBuilder
-    # memoizes the buffer RDD, so an external unpersist leaves it at
-    # StorageLevel NONE forever and every later consumer recomputes —
-    # that times the NO-cache plan, not the declared one (probe: 0
-    # cached partitions after re-consume, steady recompute per action).
-    # The base-table pin stays warm across runs (symmetric across
-    # rounds and with DuckDB's warmed page cache; see the pin comment
-    # above). Leftover locally-checkpointed RDDs are unpersisted too —
-    # a localCheckpoint is per-invocation (no plan-matched reuse across
-    # runs, so the orphaned blocks are pure leak, never a speedup). For
-    # queries that register no cache this is one py4j probe per run.
+    # Between timed runs, a query that registered its own caches or
+    # checkpoints gets them all dropped (clearCache + unpersist, then
+    # the base tables are re-pinned, untimed), so its next fresh build
+    # registers them again inside its own timing window. This clears
+    # everything rather than unpersisting just the query's buffer RDD
+    # because CachedRDDBuilder keeps that RDD: after an external
+    # unpersist the cache entry stays at StorageLevel NONE and every
+    # later consumer recomputes it (the no-cache plan).
     _jpersist = spark.sparkContext._jsc.getPersistentRDDs
 
     def _persistent_ids() -> set[int]:
@@ -354,10 +340,10 @@ def main() -> None:
                 if run == n_runs - 1:
                     # Steady-state job count = jobs of the LAST timed run
                     # only (id-diff). Run 1 can schedule extra one-time
-                    # jobs (memoized plan-build collects, cache misses),
-                    # so dividing the group total by n_runs silently
-                    # floors — and floor_decomposition_sec is a
-                    # load-bearing number in the 2x-gate argument.
+                    # jobs (cache misses), so dividing the group total
+                    # by n_runs silently floors — and
+                    # floor_decomposition_sec is a load-bearing number
+                    # in the 2x-gate argument.
                     jobs_before_last = len(tracker.getJobIdsForGroup(group))
                 t0 = time.perf_counter()
                 materialize(queries[n](spark, sf_dir))
@@ -521,11 +507,12 @@ def main() -> None:
         # Protocol version (r15, VERDICT #9): 1 = sum of best-of-3
         # (BENCH_r01–r13), 2 = sum of per-query medians of 5 with
         # cache-cold timed runs (r14+; r14 lacked this field and the
-        # between-run cache reset — docs/BENCH_NOTES.md maps the
-        # statistics). PERF consumers must not compare `value` across
-        # protocol versions; `value_best_of_runs` is the v1-comparable
-        # statistic.
-        "protocol_version": 2,
+        # between-run cache reset), 3 = as 2, but every timed run builds
+        # the query's plan fresh, so a run is build + execute
+        # (docs/BENCH_NOTES.md maps the statistics). PERF consumers must
+        # not compare `value` across protocol versions;
+        # `value_best_of_runs` is the v1-comparable statistic.
+        "protocol_version": 3,
         # CPU-scaling contract (r15, VERDICT #1): the RESOLVED runtime
         # master and parallelism, so the driver's lower-core-count run
         # can verify $SPARK_GRAFT_CPUS is honored instead of suspecting.

@@ -1376,12 +1376,11 @@ def cms_heavy_hitters(spark, sf_dir, topk: int = 20):
         f"WHEN i = {i} THEN {_cms_bucket_sql('user_id', i)}"
         for i in range(_CMS_D)
     )
-    # localCheckpoint, not cache (r13 review): this spec is memo=False,
-    # so every call re-built and re-pinned a fresh cached copy that
-    # only the context cleaner would eventually release; the eager
-    # checkpoint serves the same three subtree reads (sketch, top,
-    # probes) and its blocks free deterministically when the returned
-    # frame is dropped.
+    # localCheckpoint, not cache (r13 review): a cache would stay
+    # registered after the query finished until an explicit unpersist
+    # or clearCache; the eager checkpoint serves the same three
+    # subtree reads (sketch, top, probes) and its blocks free
+    # deterministically when the returned frame is dropped.
     per_user = (
         ev.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("exact_n"))
@@ -2939,12 +2938,7 @@ SPECS: list[QuerySpec] = [
     QuerySpec("revenue_gini", revenue_gini, REVENUE_GINI_ORACLE),
     QuerySpec("unpivot_lineitem_measures", unpivot_lineitem_measures, UNPIVOT_ORACLE),
     QuerySpec("window_analytics_suite", window_analytics_suite, WINDOW_SUITE_ORACLE),
-    QuerySpec(
-        "histogram_rollup",
-        histogram_rollup,
-        HISTOGRAM_ROLLUP_ORACLE,
-        memo=False,  # runs a driver-side equality assertion per call
-    ),
+    QuerySpec("histogram_rollup", histogram_rollup, HISTOGRAM_ROLLUP_ORACLE),
     QuerySpec("quantile_stats_exact", quantile_stats_exact, QUANTILE_STATS_ORACLE),
     QuerySpec("trend_daily_slope", trend_daily_slope, TREND_SLOPE_ORACLE),
     QuerySpec(
@@ -2960,36 +2954,16 @@ SPECS: list[QuerySpec] = [
         events_transition_matrix,
         TRANSITION_MATRIX_ORACLE,
     ),
-    QuerySpec(
-        "events_markov_stationary",
-        events_markov_stationary,
-        MARKOV_STATIONARY_ORACLE,
-        memo=False,  # driver-side iteration collect at plan-build time
-    ),
-    QuerySpec(
-        "diagnose_join_skew",
-        diagnose_join_skew,
-        DIAGNOSE_SKEW_ORACLE,
-        memo=False,  # runs a count() action at plan-build time
-    ),
+    QuerySpec("events_markov_stationary", events_markov_stationary, MARKOV_STATIONARY_ORACLE),
+    QuerySpec("diagnose_join_skew", diagnose_join_skew, DIAGNOSE_SKEW_ORACLE),
     QuerySpec(
         "events_retention_cohorts",
         events_retention_cohorts,
         RETENTION_COHORTS_ORACLE,
     ),
     QuerySpec("customer_rfm_segments", customer_rfm_segments, RFM_ORACLE),
-    QuerySpec(
-        "cms_heavy_hitters",
-        cms_heavy_hitters,
-        CMS_ORACLE,
-        memo=False,  # runs a driver-side undercount assertion per call
-    ),
-    QuerySpec(
-        "sketch_rollup_distinct_users",
-        sketch_rollup_distinct_users,
-        SKETCH_ROLLUP_ORACLE,
-        memo=False,  # runs a driver-side tolerance assertion per call
-    ),
+    QuerySpec("cms_heavy_hitters", cms_heavy_hitters, CMS_ORACLE),
+    QuerySpec("sketch_rollup_distinct_users", sketch_rollup_distinct_users, SKETCH_ROLLUP_ORACLE),
     QuerySpec("json_extract_props", json_extract_props, JSON_PROPS_ORACLE),
     QuerySpec("sliding_window_agg", sliding_window_agg, SLIDING_ORACLE),
     QuerySpec("multi_distinct_agg", multi_distinct_agg, MULTI_DISTINCT_ORACLE),

@@ -1443,55 +1443,38 @@ FROM events WHERE event_type = 'purchase' AND value > 100.0
 
 
 SPECS: list[QuerySpec] = [
-    QuerySpec("d_pruned_scan", d_pruned_scan, D_PRUNED_ORACLE, memo=False),
-    QuerySpec("s16_jsonl_roundtrip", s16_jsonl_roundtrip, S16_JSONL_ORACLE, memo=False),
-    QuerySpec("s17_orc_roundtrip", s17_orc_roundtrip, S17_ORC_ORACLE, memo=False),
-    QuerySpec(
-        "d_mv_incremental_refresh",
-        d_mv_incremental_refresh,
-        D_MV_REFRESH_ORACLE,
-        memo=False,
-    ),
-    QuerySpec(
-        "d_merge_multi_clause",
-        d_merge_multi_clause,
-        D_MERGE_MULTI_ORACLE,
-        memo=False,
-    ),
-    QuerySpec(
-        "d_snapshot_diff", d_snapshot_diff, D_SNAPSHOT_DIFF_ORACLE, memo=False
-    ),
-    QuerySpec("d_scd2_history", d_scd2_history, D_SCD2_ORACLE, memo=False),
-    QuerySpec(
-        "d_scd2_asof_lookup", d_scd2_asof_lookup, D_SCD2_ASOF_ORACLE,
-        memo=False,
-    ),
-    QuerySpec("d_delete_where", d_delete_where, D_DELETE_ORACLE, memo=False),
-    QuerySpec("d_overwrite", d_overwrite, D_OVERWRITE_ORACLE, memo=False),
-    QuerySpec("s2_create_partitioned", s2_create_partitioned, S2_ORACLE, memo=False),
-    QuerySpec("s3_append", s3_append, S3_ORACLE, memo=False),
-    QuerySpec("s4_merge_upsert", s4_merge_upsert, S4_ORACLE, memo=False),
-    QuerySpec("s5_keyed_upsert", s5_keyed_upsert, S5_ORACLE, memo=False),
-    QuerySpec("d_tag_read", d_tag_read, D_TAG_ORACLE, memo=False),
-    QuerySpec("d_sorted_rewrite_skipping", d_sorted_rewrite_skipping, D_SORTED_ORACLE, memo=False),
-    QuerySpec("d5_schema_evolution", d5_schema_evolution, D5_ORACLE, memo=False),
-    QuerySpec("d6_time_travel", d6_time_travel, D6_ORACLE, memo=False),
-    QuerySpec("d_incremental_read", d_incremental_read, D_INC_ORACLE, memo=False),
-    QuerySpec("d7_compact", d7_compact, D7_ORACLE, memo=False),
-    QuerySpec("d8_expire_snapshots", d8_expire_snapshots, D8_ORACLE, memo=False),
-    QuerySpec("d_sql_ddl_surface", d_sql_ddl_surface, DDL_SURFACE_ORACLE, memo=False),
-    QuerySpec("d_bucketed_colocated_join", d_bucketed_colocated_join, D_BUCKETED_ORACLE, memo=False),
-    QuerySpec("d_zorder_skipping", d_zorder_skipping, D_ZORDER_ORACLE, memo=False),
-    QuerySpec("d_merge_on_read", d_merge_on_read, D_MOR_ORACLE, memo=False),
-    QuerySpec("d_upsert_mor", d_upsert_mor, D_UPSERT_MOR_ORACLE, memo=False),
-    QuerySpec("d_partition_evolution", d_partition_evolution, D_EVOLVE_ORACLE, memo=False),
-    QuerySpec("d_cdc_changelog", d_cdc_changelog, D_CDC_ORACLE, memo=False),
-    QuerySpec("d_bloom_pointlookup", d_bloom_pointlookup, D_BLOOM_ORACLE, memo=False),
-    QuerySpec("d_cdc_replicate", d_cdc_replicate, D_CDC_REP_ORACLE, memo=False),
-    QuerySpec("d_wap_audit_publish", d_wap_audit_publish, D_WAP_ORACLE, memo=False),
-    QuerySpec(
-        "d_branch_fast_forward", d_branch_fast_forward, D_BRANCH_ORACLE, memo=False
-    ),
-    QuerySpec("d_rollback_restore", d_rollback_restore, D_ROLLBACK_ORACLE, memo=False),
-    QuerySpec("d_orphan_cleanup", d_orphan_cleanup, D_ORPHAN_ORACLE, memo=False),
+    QuerySpec("d_pruned_scan", d_pruned_scan, D_PRUNED_ORACLE),
+    QuerySpec("s16_jsonl_roundtrip", s16_jsonl_roundtrip, S16_JSONL_ORACLE),
+    QuerySpec("s17_orc_roundtrip", s17_orc_roundtrip, S17_ORC_ORACLE),
+    QuerySpec("d_mv_incremental_refresh", d_mv_incremental_refresh, D_MV_REFRESH_ORACLE),
+    QuerySpec("d_merge_multi_clause", d_merge_multi_clause, D_MERGE_MULTI_ORACLE),
+    QuerySpec("d_snapshot_diff", d_snapshot_diff, D_SNAPSHOT_DIFF_ORACLE),
+    QuerySpec("d_scd2_history", d_scd2_history, D_SCD2_ORACLE),
+    QuerySpec("d_scd2_asof_lookup", d_scd2_asof_lookup, D_SCD2_ASOF_ORACLE),
+    QuerySpec("d_delete_where", d_delete_where, D_DELETE_ORACLE),
+    QuerySpec("d_overwrite", d_overwrite, D_OVERWRITE_ORACLE),
+    QuerySpec("s2_create_partitioned", s2_create_partitioned, S2_ORACLE),
+    QuerySpec("s3_append", s3_append, S3_ORACLE),
+    QuerySpec("s4_merge_upsert", s4_merge_upsert, S4_ORACLE),
+    QuerySpec("s5_keyed_upsert", s5_keyed_upsert, S5_ORACLE),
+    QuerySpec("d_tag_read", d_tag_read, D_TAG_ORACLE),
+    QuerySpec("d_sorted_rewrite_skipping", d_sorted_rewrite_skipping, D_SORTED_ORACLE),
+    QuerySpec("d5_schema_evolution", d5_schema_evolution, D5_ORACLE),
+    QuerySpec("d6_time_travel", d6_time_travel, D6_ORACLE),
+    QuerySpec("d_incremental_read", d_incremental_read, D_INC_ORACLE),
+    QuerySpec("d7_compact", d7_compact, D7_ORACLE),
+    QuerySpec("d8_expire_snapshots", d8_expire_snapshots, D8_ORACLE),
+    QuerySpec("d_sql_ddl_surface", d_sql_ddl_surface, DDL_SURFACE_ORACLE),
+    QuerySpec("d_bucketed_colocated_join", d_bucketed_colocated_join, D_BUCKETED_ORACLE),
+    QuerySpec("d_zorder_skipping", d_zorder_skipping, D_ZORDER_ORACLE),
+    QuerySpec("d_merge_on_read", d_merge_on_read, D_MOR_ORACLE),
+    QuerySpec("d_upsert_mor", d_upsert_mor, D_UPSERT_MOR_ORACLE),
+    QuerySpec("d_partition_evolution", d_partition_evolution, D_EVOLVE_ORACLE),
+    QuerySpec("d_cdc_changelog", d_cdc_changelog, D_CDC_ORACLE),
+    QuerySpec("d_bloom_pointlookup", d_bloom_pointlookup, D_BLOOM_ORACLE),
+    QuerySpec("d_cdc_replicate", d_cdc_replicate, D_CDC_REP_ORACLE),
+    QuerySpec("d_wap_audit_publish", d_wap_audit_publish, D_WAP_ORACLE),
+    QuerySpec("d_branch_fast_forward", d_branch_fast_forward, D_BRANCH_ORACLE),
+    QuerySpec("d_rollback_restore", d_rollback_restore, D_ROLLBACK_ORACLE),
+    QuerySpec("d_orphan_cleanup", d_orphan_cleanup, D_ORPHAN_ORACLE),
 ]

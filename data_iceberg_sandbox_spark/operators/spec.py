@@ -5,6 +5,11 @@ a named (spark, sf_dir) → DataFrame callable plus (when SQL-expressible)
 the equivalent ANSI-SQL oracle string for DuckDB. ``__spark_entry__``
 assembles ``queries()`` / ``oracle_sql()`` from these.
 
+``queries()`` maps each name to its builder, so every call builds a
+fresh plan. Plan-level reuse goes through Spark's CacheManager only: a
+builder that caches an intermediate registers it again on each build,
+and plan-identical builds share one cache entry.
+
 Oracle-determinism conventions used across all specs:
 - session timezone pinned UTC (session.py) so timestamps align;
 - monetary/float aggregates computed over DECIMAL casts (exact, order-
@@ -18,8 +23,6 @@ Oracle-determinism conventions used across all specs:
 
 from __future__ import annotations
 
-import os
-import weakref
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -32,42 +35,6 @@ class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # None → driver records rows-only check
     doc: str = ""
-    # Pure read-only query over the immutable testdata: the built
-    # DataFrame (logical plan) is reusable per (session, sf_dir), like a
-    # prepared statement. Set False for side-effectful specs (lifecycle
-    # table builds, streaming runs) that must re-execute on every call.
-    memo: bool = True
-
-
-# Prepared-plan cache: weak-keyed on the SparkSession (id()-keyed dicts
-# alias after GC; a dead session must not pin its plans), value maps
-# (query name, normalized sf_dir) → built DataFrame. Re-invoking a pure
-# query skips the py4j DataFrame-construction round trips (~1.5 s across
-# the 16-query headline suite, measured r3) while every action on the
-# returned frame still executes the physical plan normally.
-_PLAN_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
-def _memoized(spec: QuerySpec) -> Callable[[SparkSession, str], DataFrame]:
-    def call(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..sources.registry import evict_stopped_sessions
-
-        evict_stopped_sessions(_PLAN_MEMO)
-        per_session = _PLAN_MEMO.get(spark)
-        if per_session is None:
-            per_session = {}
-            _PLAN_MEMO[spark] = per_session
-        key = (spec.name, os.path.normpath(sf_dir))
-        df = per_session.get(key)
-        if df is None:
-            df = spec.fn(spark, sf_dir)
-            per_session[key] = df
-        return df
-
-    call.__name__ = spec.fn.__name__
-    call.__doc__ = spec.fn.__doc__
-    call.__wrapped__ = spec.fn
-    return call
 
 
 def as_query_dicts(
@@ -80,6 +47,6 @@ def as_query_dicts(
         # name (this bit round 8: two tpch_q4_order_priority variants, one
         # dead and never checked). Fail loudly instead.
         raise ValueError(f"duplicate query names in spec registry: {sorted(dupes)}")
-    queries = {s.name: (_memoized(s) if s.memo else s.fn) for s in specs}
+    queries = {s.name: s.fn for s in specs}
     oracles = {s.name: s.oracle for s in specs if s.oracle is not None}
     return queries, oracles

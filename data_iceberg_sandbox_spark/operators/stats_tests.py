@@ -641,7 +641,7 @@ def lm_kneser_ney_bigrams(spark, sf_dir):
     joined back on w1/w2 at bigram-vocabulary grain."""
     from .tokenbase import token_frame
 
-    # the memoized corpus token frame (tokenbase) — re-running the
+    # the shared corpus token frame (tokenbase) — re-running the
     # tokenizing regex here re-paid the LM family's dominant measured
     # cost per call (r12 review)
     cb = (

@@ -4,11 +4,13 @@ Tokenizing the corpus — ``regexp_extract_all(lower(text), '[a-z]+')``
 over every document — is the single dominant cost that
 ``lm_perplexity_score``, ``lm_bigram_perplexity`` and
 ``corpus_pmi_collocations`` each re-paid from scratch (VERDICT r9 #4:
-10.4 s + 13.8 s at sf10, both mostly tokenization). This module holds
-ONE memoized, persisted (doc_id, source, arr) frame per (session,
-sf_dir); the family builds its explodes/slices off that shared plan, so
+10.4 s + 13.8 s at sf10, both mostly tokenization). ``token_frame``
+returns a persisted (doc_id, source, arr) frame over the same
+``load_table`` scan on every call, so every call builds the identical
+plan and Spark's CacheManager serves all of them from ONE cache entry:
 the regex pass runs once and later queries read the in-memory columnar
-relation.
+relation. After ``spark.catalog.clearCache()`` the next call registers
+the entry again.
 
 Scale note: persistence is MEMORY_AND_DISK — at 100 TB the frame
 spills per-partition rather than failing, and the cluster analog is a
@@ -23,38 +25,20 @@ this frame.
 
 from __future__ import annotations
 
-import os
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.registry import load_table
 
-_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def token_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, arr) with arr = lowercase '[a-z]+' tokens."""
-    from ..sources.registry import evict_stopped_sessions
-
-    evict_stopped_sessions(_MEMO)
-    per_session = _MEMO.setdefault(spark, {})
-    key = os.path.abspath(sf_dir)
-    df = per_session.get(key)
-    if df is None:
-        df = (
-            load_table(spark, sf_dir, "documents")
-            .select(
-                "doc_id",
-                "source",
-                F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)").alias(
-                    "arr"
-                ),
-            )
-            .persist()
+    return (
+        load_table(spark, sf_dir, "documents")
+        .select(
+            "doc_id",
+            "source",
+            F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)").alias("arr"),
         )
-        per_session[key] = df
-    return df
+        .persist()
+    )

@@ -194,9 +194,9 @@ def _inline_nations(spark, sf_dir, region_name: str | None = None):
     """Reference-fixed dims inlined at plan build: ``nation`` (25 rows)
     and ``region`` (5 rows) keep those cardinalities at EVERY scale
     factor (TPC-H spec; the driver's datagen mirrors it), so collecting
-    them once while the plan is constructed — and memoized WITH the plan
-    (spec.py `_memoized`) — and folding them into a literal IN-list plus
-    a literal nationkey→name lookup map is scale-safe by construction.
+    them once per plan build and folding them into a literal IN-list
+    plus a literal nationkey→name lookup map is scale-safe by
+    construction.
     This is the map-side dimension join without its broadcast-build job:
     the bench floor decomposition showed each build is a whole
     per-action floor payment (~40-60 ms local) for a ≤25-row dim.

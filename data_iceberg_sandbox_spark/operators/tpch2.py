@@ -715,8 +715,8 @@ def q16_supplier_part_counts(spark, sf_dir):
     is a broadcast of one bigint column. The (brand, type, size) group
     key is PACKED INTO ONE LONG on the part dim before the join — the
     (brand, type) vocabulary is bounded (TPC-H fixes both), so the codes
-    come from one plan-time distinct collect over the dim, memoized with
-    the plan like `_inline_nations`. The fact-side distinct aggregate
+    come from one plan-time distinct collect over the dim, like
+    `_inline_nations`. The fact-side distinct aggregate
     then hashes (long, long) instead of (string, string, int, long);
     the 885-row decode join back to the labels is a broadcast. Measured
     at sf10 (60M lineitem rows, local[32]): 2.03 s → 1.38 s best-of-3

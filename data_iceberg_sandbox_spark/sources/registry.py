@@ -63,11 +63,12 @@ _LT_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFr
 
 
 def evict_stopped_sessions(memo) -> None:
-    """Drop memo entries whose SparkSession was stopped. The WeakKey
-    memos' DataFrame VALUES strongly reference their session KEY, so
-    weakref alone never collects an entry (the classic value→key cycle,
-    r12 review) — a long-lived process that restarts sessions would
-    leak every dead session's cached plans. SparkContext.stop() sets
+    """Drop memo entries whose SparkSession was stopped. In the
+    weak-keyed ``_LT_CACHE`` the DataFrame VALUES strongly reference
+    their session KEY, so weakref alone never collects an entry (the
+    classic value→key cycle, r12 review) — a long-lived process that
+    restarts sessions would leak every dead session's cached plans.
+    SparkContext.stop() sets
     _jsc to None, which is the liveness probe. Evict ONLY on that
     positive stopped signal (r13 ADVICE): Spark Connect sessions raise
     on .sparkContext, and treating the probe exception as "dead" would

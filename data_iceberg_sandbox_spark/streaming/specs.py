@@ -230,20 +230,21 @@ SPECS: list[QuerySpec] = [
     QuerySpec(
         "avro_roundtrip_transactions",
         avro_roundtrip_transactions,
-        AVRO_ROUNDTRIP_ORACLE, memo=False),
-    QuerySpec("stream_fraud_alerts", stream_fraud_alerts, fraud_alerts_oracle_sql(), memo=False),
+        AVRO_ROUNDTRIP_ORACLE,
+    ),
+    QuerySpec("stream_fraud_alerts", stream_fraud_alerts, fraud_alerts_oracle_sql()),
     QuerySpec(
         "stream_fraud_enriched_backfill",
         stream_fraud_enriched_backfill,
-        fraud_enriched_oracle_sql(), memo=False),
-    QuerySpec("stream_append_raw", stream_append_raw, "SELECT * FROM events", memo=False),
+        fraud_enriched_oracle_sql(),
+    ),
+    QuerySpec("stream_append_raw", stream_append_raw, "SELECT * FROM events"),
     QuerySpec(
         "stream_dedup_exactly_once",
         lambda spark, sf_dir: run_dedup_stream(
             spark, sf_dir, _root("dedup_stream", sf_dir)
         ).read(),
         "SELECT * FROM events",
-        memo=False,
     ),
     QuerySpec(
         "stream_stream_range_join",
@@ -257,7 +258,6 @@ SPECS: list[QuerySpec] = [
           ON a.user_id = b.user_id AND b.ts > a.ts
          AND b.ts <= a.ts + INTERVAL 5 MINUTE
         """,
-        memo=False,
     ),
     QuerySpec(
         "stream_sliding_window_mv",
@@ -265,7 +265,6 @@ SPECS: list[QuerySpec] = [
             spark, sf_dir, _root("sliding_mv", sf_dir)
         ).read(),
         SLIDING_ORACLE,  # converges to the batch sliding-window aggregate
-        memo=False,
     ),
     QuerySpec(
         "stream_mor_upsert_mv",
@@ -279,7 +278,6 @@ SPECS: list[QuerySpec] = [
                max(ts) AS last_ts
         FROM events GROUP BY user_id
         """,
-        memo=False,
     ),
     QuerySpec(
         "stream_session_window_mv",
@@ -287,12 +285,10 @@ SPECS: list[QuerySpec] = [
             spark, sf_dir, _root("session_mv", sf_dir)
         ).read(),
         SESSION_NATIVE_ORACLE,  # converges to the batch session_window agg
-        memo=False,
     ),
     QuerySpec(
         "stream_embedding_ivf_ingest",
         stream_embedding_ivf_ingest,
         _emb_ivf_ingest_oracle(),
-        memo=False,
     ),
 ]

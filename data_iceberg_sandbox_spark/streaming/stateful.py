@@ -147,10 +147,5 @@ FROM events GROUP BY user_id
 
 
 SPECS: list[QuerySpec] = [
-    QuerySpec(
-        "stream_user_profiles_stateful",
-        stream_user_profiles,
-        PROFILE_ORACLE,
-        memo=False,
-    ),
+    QuerySpec("stream_user_profiles_stateful", stream_user_profiles, PROFILE_ORACLE),
 ]

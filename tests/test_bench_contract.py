@@ -62,7 +62,7 @@ def test_bench_emits_full_json_despite_broken_query():
     # lower-core-count run can verify $SPARK_GRAFT_CPUS is honored, and
     # the statistic is versioned so PERF never again compares
     # best-of-3 against median-of-5
-    assert d["protocol_version"] == 2
+    assert d["protocol_version"] == 3
     assert d["master"] == "local[6]"
     assert d["default_parallelism"] == 6
     assert 2 <= d["shuffle_partitions"] <= 6

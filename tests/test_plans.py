@@ -147,18 +147,22 @@ def physical_plan_excerpt(df):
 
 
 def test_no_cartesian_product_in_any_pure_query(spark):
-    """Sweep gate: no pure (memoizable) query may compile to a
+    """Sweep gate: no read-only query may compile to a
     CartesianProduct — the one physical operator that cannot survive a
     100× scale-up. Bounded broadcast nested-loop joins (tiny dim/query
     sets, e.g. IVF centroid argmax) are allowed; an unbounded cartesian
     is a plan bug wherever it appears. Side-effectful specs (lifecycle
-    table builds, streaming runs) are excluded: building their frame
-    executes the side effect."""
+    table builds in operators/lifecycle.py, streaming runs in
+    streaming/) are excluded: building their frame executes the side
+    effect."""
     import __spark_entry__ as entry_mod
+    from data_iceberg_sandbox_spark.operators import lifecycle
+    from data_iceberg_sandbox_spark.streaming import specs as streaming_specs
 
+    side_effectful = {s.name for s in lifecycle.SPECS + streaming_specs.SPECS}
     offenders = []
     for spec in entry_mod._all_specs():
-        if not spec.memo:
+        if spec.name in side_effectful:
             continue
         df = spec.fn(spark, SF_ORACLE)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -249,16 +253,6 @@ def test_ivf_assignment_is_arrow_kernel_not_nested_loop(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan[:2000]
 
 
-def test_flagship_query_plan_is_memoized(spark):
-    """r11 bench fix lock: repeat queries() calls must return the SAME
-    flagship DataFrame object (plan build — including the nation-map
-    collect — happens once, not per run)."""
-    import __spark_entry__ as m
-
-    q = m.queries()["flagship_fraud_enriched"]
-    assert q(spark, SF_ORACLE) is q(spark, SF_ORACLE)
-
-
 def test_partkey_correlates_are_single_exchange(spark):
     """The r11 reworks: q17's correlated avg, q2's per-part argmin and
     q20's per-part share all ride ONE fact exchange on l_partkey — the
@@ -339,9 +333,7 @@ def test_data_scaled_joins_carry_no_hint(spark, qname):
     are not hint nodes; q9's 25-row nation join keeps its hint."""
     import __spark_entry__ as m
 
-    q = m.queries()
-    fn = getattr(q[qname], "__wrapped__", q[qname])  # bypass the plan memo
-    plan = fn(spark, SF_SMOKE)._jdf.queryExecution().analyzed().toString()
+    plan = m.queries()[qname](spark, SF_SMOKE)._jdf.queryExecution().analyzed().toString()
     allowed = 1 if qname == "tpch_q9_product_profit" else 0
     got = plan.count("ResolvedHint")
     assert got <= allowed, f"{qname}: {got} hints in the plan\n{plan}"
