@@ -18,7 +18,19 @@ MEDIANS; the full run arrays (Spark and DuckDB) plus a suite-level
 [sum-of-min, sum-of-max] spread band ship in the payload so a
 round-over-round ratio claim is only meaningful when it exceeds the
 recorded spread. BENCH_r01-r13's ``value`` was sum-of-best-of-3; the
-best-of view is kept under ``value_best_of_runs`` for continuity.
+best-of view is kept under ``value_best_of_runs`` for continuity. Each
+timed run also prints ``[run i] <query>: <sec>`` to stderr.
+
+The timing protocol lives in module-level functions that ``main()``
+composes and tools import (tools/ab_interleaved.py,
+tools/capture_plans.py): ``bench_session`` (SF-sized session),
+``pin_tables`` (the balanced base-table pin), ``reset_caches`` (the
+between-run reset), ``time_run`` (one cache-cold build + execute) and
+``time_duckdb`` (the same-SQL DuckDB timing).
+
+Subset, scale and repeat count: ``SPARK_GRAFT_BENCH_QUERIES=a,b``,
+``SPARK_GRAFT_SF_DIR=<dir>``, ``SPARK_GRAFT_BENCH_RUNS=<n>``. Only a full
+HEADLINE run writes ``BENCH_LOCAL_last.json``.
 """
 
 from __future__ import annotations
@@ -26,6 +38,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -33,6 +46,11 @@ from concurrent.futures import ThreadPoolExecutor
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from data_iceberg_sandbox_spark.session import _cpus, get_spark_session
+from data_iceberg_sandbox_spark.sources.registry import (
+    TABLES,
+    is_pinned,
+    pin_balanced,
+)
 
 HEADLINE = [
     "flagship_fraud_enriched",
@@ -125,12 +143,160 @@ def _host_probes() -> tuple[float | None, float | None]:
     return par, bw
 
 
+def scale_factor(sf_dir: str) -> float:
+    """The SF named by ``sf_dir`` (``.../sf0.1`` -> 0.1; 0.0 if none).
+    Anchored float pattern (r13 review: [0-9.]+ admitted 'sf.cache' /
+    'sf1.0.bak' whose group crashed float() before any timing)."""
+    m = re.search(r"sf([0-9]+(?:\.[0-9]+)?)", sf_dir)
+    return float(m.group(1)) if m else 0.0
+
+
+def bench_session(sf_dir: str):
+    """The bench session, sized by the SF under test — exactly what a
+    cluster deployment does (conf sized by executor count / data volume):
+
+    - sf<=0.1 (17 MB): the cluster default (128 MB splits) serializes
+      every scan onto one core — 4 MB splits give each core work while
+      keeping the pinned cache at a handful of partitions; 4
+      post-shuffle partitions keep stage scheduling overhead ~0.
+    - sf>=1 (175 MB+): wide aggs/joins move real row volume, so the
+      post-shuffle width rises toward the core count and splits grow so
+      the scan task count stays O(cores), not O(hundreds).
+
+    The width is capped by $SPARK_GRAFT_CPUS (r15, VERDICT #1), so a
+    lower-core-count run genuinely sizes down. AQE off: the bench keeps
+    the static-plan regime every BENCH_r* record was taken in, so its
+    headline stays comparable across rounds (at 17 MB AQE's per-stage
+    re-optimization rounds also cost more than they save, measured
+    ~10-15%); the engine's shipping AQE-on session is measured by
+    perfbench/ and tools/ab_interleaved.py. With AQE off an unhinted
+    join is planned once from file statistics: a dim under
+    autoBroadcastJoinThreshold (all of them at sf0.1) broadcasts, a
+    larger one (sf>=10 customer/part) stays a sort-merge join."""
+    sf = scale_factor(sf_dir)
+    if sf >= 10:
+        shuffle, split = 32, "32m"
+    elif sf >= 1:
+        shuffle, split = 8, "8m"
+    else:
+        shuffle, split = 4, "4m"
+    return get_spark_session(
+        app_name="bench",
+        shuffle_partitions=min(shuffle, max(2, _cpus())),
+        extra_conf={
+            "spark.sql.files.maxPartitionBytes": split,
+            "spark.sql.files.openCostInBytes": "262144",
+            "spark.scheduler.mode": "FAIR",
+            "spark.sql.adaptive.enabled": "false",
+        },
+    )
+
+
+def pin_slice_cap() -> int:
+    """Most slices a pinned table gets: 16 is the measured sf0.1 sweet
+    spot on 32 cores (32+ slices re-pay per-task overhead); a smaller
+    box pins fewer slices instead of running the 32-core constant."""
+    return min(_cpus(), 16)
+
+
+def pin_tables(spark, sf_dir: str) -> None:
+    """Buffer pool: pin the base tables in memory — every query's scan
+    subtree is plan-identical to the cached frame, so Spark's
+    CacheManager substitutes the in-memory columnar relation. This is
+    the resident-engine shape (DuckDB equally serves these 17 MB from
+    its buffer manager / OS page cache); at cluster scale the analog is
+    hot-table caching on the executors.
+
+    The pin is BALANCED and keyed (registry.pin_balanced): the testdata
+    parquet is one row group per table, so a cache built straight off
+    the scan holds all of lineitem in one partition and every
+    downstream query runs single-threaded (the r9 suite did exactly
+    that: 600k-row agg 0.158 s skewed vs 0.065 s balanced). Each fact
+    is hash-clustered by its canonical key — the bucketed-table shape —
+    in ~40k-row slices, at most ``pin_slice_cap()`` of them."""
+    pin_balanced(spark, sf_dir, cpus=pin_slice_cap(), min_rows_per_slice=40_000)
+
+
+def reset_caches(spark, sf_dir: str) -> None:
+    """The between-run reset: if the session holds any persistent RDD
+    beyond the base-table pin (one per pinned table), clear the
+    CacheManager, drop every block and re-pin the base tables (if this
+    session pinned them) — all untimed. The next fresh build then
+    registers its caches (and runs its eager checkpoints) again inside
+    its own timing window. This clears everything rather than
+    unpersisting just the query's buffer RDD because CachedRDDBuilder
+    keeps that RDD: after an external unpersist the cache entry stays at
+    StorageLevel NONE and every later consumer recomputes it (the
+    no-cache plan)."""
+    persistent_rdds = spark.sparkContext._jsc.getPersistentRDDs
+    pinned = sum(is_pinned(spark, sf_dir, t) for t in TABLES)
+    if persistent_rdds().size() <= pinned:
+        return
+    spark.catalog.clearCache()
+    jmap = persistent_rdds()
+    for rid in list(jmap.keySet().toArray()):
+        try:
+            jmap.get(rid).unpersist(True)
+        except Exception:  # noqa: BLE001 — best-effort block drop
+            pass
+    if pinned:
+        pin_tables(spark, sf_dir)
+
+
+def materialize(df) -> None:
+    """The timing action: the noop sink executes the full plan and
+    materializes every result row without a driver transfer or the
+    extra count-agg stage ``count()`` would add."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def time_run(spark, build, sf_dir: str, group: str) -> tuple[float, int]:
+    """One protocol-3 timed run: reset (untimed), then ``build(spark,
+    sf_dir)`` + noop write under Spark job group ``group``. Returns
+    (seconds, jobs this run scheduled in ``group``)."""
+    reset_caches(spark, sf_dir)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        jobs_before = len(tracker.getJobIdsForGroup(group))
+        t0 = time.perf_counter()
+        materialize(build(spark, sf_dir))
+        dt = time.perf_counter() - t0
+        return dt, len(tracker.getJobIdsForGroup(group)) - jobs_before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def time_duckdb(
+    sf_dir: str, sqls: dict[str, str], n_runs: int
+) -> dict[str, list[float]]:
+    """DuckDB on the same SQL over the same parquet: one warm execution
+    (page cache/JIT), then ``n_runs`` timed ones per query. A query whose
+    SQL errors is left out, so one broken oracle cannot kill the ratio."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    runs: dict[str, list[float]] = {}
+    for n, sql in sqls.items():
+        try:
+            con.execute(sql).fetchall()
+            samples = []
+            for _ in range(n_runs):
+                t0 = time.perf_counter()
+                con.execute(sql).fetchall()
+                samples.append(time.perf_counter() - t0)
+            runs[n] = samples
+        except Exception:  # noqa: BLE001
+            pass
+    return runs
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # anchored float pattern (r13 review: [0-9.]+ admitted 'sf.cache' /
-    # 'sf1.0.bak' whose group crashed float() before any timing)
-    m = re.search(r"sf([0-9]+(?:\.[0-9]+)?)", sf_dir)
-    sf = float(m.group(1)) if m else 0.0
+    sf = scale_factor(sf_dir)
 
     import __spark_entry__ as entry_mod
 
@@ -156,130 +322,18 @@ def main() -> None:
 
         queries["__broken__"] = _broken
         names.append("__broken__")
+    # only a full headline run is the record (a subset or self-test run
+    # must not replace it)
+    is_record = names == HEADLINE
 
-    # Local-bench sizing scales with the SF under test — exactly what a
-    # cluster deployment does (conf sized by executor count / data
-    # volume, AQE on at real scale):
-    #   sf<=0.1 (17 MB): the cluster default (128 MB splits) serializes
-    #     every scan onto one core — 4 MB splits give each core work
-    #     while keeping the pinned cache at a handful of partitions; 4
-    #     post-shuffle partitions keep stage scheduling overhead ~0. AQE
-    #     off: this harness keeps the static-plan regime every BENCH_r*
-    #     record was taken in, so its headline stays comparable across
-    #     rounds (at 17 MB AQE's per-stage re-optimization rounds also
-    #     cost more than they save, measured ~10-15%). The engine's
-    #     shipping AQE-on session is measured by perfbench/. With AQE
-    #     off, an unhinted join is planned once from file statistics:
-    #     a dim under autoBroadcastJoinThreshold (all of them at sf0.1)
-    #     broadcasts, a larger one (sf>=10 customer/part) stays a
-    #     sort-merge join that no runtime re-plan demotes — likewise
-    #     q17's per-partkey aggregate join, which defers its sizing to
-    #     AQE; q17 is not in HEADLINE.
-    #   sf>=1 (175 MB+): wide aggs/joins move real row volume, so the
-    #     post-shuffle width rises toward the core count and splits grow
-    #     so the scan task count stays O(cores), not O(hundreds).
-    # Both knobs stay env-overridable for tuning sweeps.
-    # r15 (VERDICT #1): the width band is capped by $SPARK_GRAFT_CPUS so
-    # the driver's lower-core-count run genuinely sizes down instead of
-    # running the 32-core constants — at sf0.1 the data-derived band (4)
-    # is already below any plausible core count, so the headline numbers
-    # stay comparable; the scaling probe's ≈1 ratios there are explained
-    # by floor_decomposition_sec, not by core-blind sizing.
-    _cpus_env = _cpus()
-    if sf >= 10:
-        _shuffle, _split = 32, "32m"
-    elif sf >= 1:
-        _shuffle, _split = 8, "8m"
-    else:
-        _shuffle, _split = 4, "4m"
-    _shuffle = min(_shuffle, max(2, _cpus_env))
-    _shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", _shuffle))
-    _split = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", _split)
-    spark = get_spark_session(
-        app_name="bench",
-        shuffle_partitions=_shuffle,
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": _split,
-            "spark.sql.files.openCostInBytes": "262144",
-            "spark.scheduler.mode": "FAIR",
-            "spark.sql.adaptive.enabled": "false",
-        },
-    )
+    spark = bench_session(sf_dir)
     # warmup: run each headline once at the smallest SF to JIT/codegen
     for n in names:
         try:
             queries[n](spark, "/root/testdata/sf0.001").count()
         except Exception:
             pass
-
-    # Buffer pool: pin the base tables in memory once — every query's
-    # scan subtree is plan-identical to the cached frame, so Spark's
-    # CacheManager substitutes the in-memory columnar relation. This is
-    # the resident-engine shape (DuckDB equally serves these 17 MB from
-    # its buffer manager / OS page cache); at cluster scale the analog
-    # is hot-table caching on the executors.
-    #
-    # BALANCE the pin: the testdata parquet is written as a single row
-    # group per table, so byte-range splits collapse onto ONE task — a
-    # cache built straight off the scan holds all of lineitem in one
-    # partition and every downstream query runs single-threaded (we
-    # measured the r9 suite doing exactly that: 600k-row agg 0.158 s
-    # skewed vs 0.065 s balanced). A one-time round-robin repartition at
-    # pin time (~40k rows/partition, capped at 16 — the measured sweet
-    # spot; 32+ partitions re-pay per-task overhead) is the cluster
-    # analog of caching a hot table with sane partitioning.
-    # Keyed layout (registry.pin_balanced): each fact hash-clustered by
-    # its canonical key — the bucketed-table shape — so orderkey joins
-    # and per-user windows start exchange-free. Cap 16 / 40k-row slices:
-    # the measured sf0.1 sweet spot (32+ partitions re-pay per-task
-    # overhead at this scale).
-    from data_iceberg_sandbox_spark.sources.registry import pin_balanced as _pb
-
-    # slice cap scales with the advertised core count (r15, VERDICT #1):
-    # 16 is the measured sf0.1 sweet spot on 32 cores (32+ slices re-pay
-    # per-task overhead); a smaller box pins fewer slices instead of
-    # running the 32-core constant.
-    _pin_slices = min(_cpus_env, 16)
-    _pinned = _pb(spark, sf_dir, cpus=_pin_slices, min_rows_per_slice=40_000)
-
-    def materialize(df) -> None:
-        # noop sink: executes the full plan and materializes every result
-        # row without a driver transfer or an extra count-agg stage
-        df.write.format("noop").mode("overwrite").save()
-
-    # Between timed runs, a query that registered its own caches or
-    # checkpoints gets them all dropped (clearCache + unpersist, then
-    # the base tables are re-pinned, untimed), so its next fresh build
-    # registers them again inside its own timing window. This clears
-    # everything rather than unpersisting just the query's buffer RDD
-    # because CachedRDDBuilder keeps that RDD: after an external
-    # unpersist the cache entry stays at StorageLevel NONE and every
-    # later consumer recomputes it (the no-cache plan).
-    _jpersist = spark.sparkContext._jsc.getPersistentRDDs
-
-    def _persistent_ids() -> set[int]:
-        return {int(i) for i in _jpersist().keySet().toArray()}
-
-    _known_ids = _persistent_ids()
-
-    def reset_nonpinned_caches() -> None:
-        nonlocal _known_ids, _pinned
-        if _persistent_ids() <= _known_ids:
-            return
-        try:
-            spark.catalog.clearCache()
-            jmap = _jpersist()
-            for rid in list(jmap.keySet().toArray()):
-                try:
-                    jmap.get(rid).unpersist(True)
-                except Exception:  # noqa: BLE001 — best-effort block drop
-                    pass
-            _pinned = _pb(
-                spark, sf_dir, cpus=_pin_slices, min_rows_per_slice=40_000
-            )
-            _known_ids = _persistent_ids()
-        except Exception:  # noqa: BLE001 — fairness must not abort timing
-            pass
+    pin_tables(spark, sf_dir)
 
     # Fixed-floor probe: Spark charges a per-action scheduling/driver
     # round-trip cost even for a 1-row noop write. Median of 10 is the
@@ -289,22 +343,18 @@ def main() -> None:
     floor_samples = []
     for _ in range(10):
         t0 = time.perf_counter()
-        spark.range(1).write.format("noop").mode("overwrite").save()
+        materialize(spark.range(1))
         floor_samples.append(time.perf_counter() - t0)
     floor_sec = round(sorted(floor_samples)[len(floor_samples) // 2], 4)
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
 
     # Medians protocol (VERDICT r13 #3): N runs per query (default 5),
     # report the MEDIAN and keep the full run array in the payload so
     # round-over-round ratio claims can be checked against the recorded
-    # spread instead of single-shot noise (r13's four captures of the
-    # same code spanned 1.40-1.66x — unanswerable at the margin). The
-    # min ("best") is still recorded for continuity with BENCH_r01-r13,
-    # whose `value` was sum-of-best-of-3. Per-query try/except: one
-    # broken query must never abort the suite (BENCH_r04 lost ALL
-    # signal to a single erroring query).
+    # spread instead of single-shot noise. The min ("best") is still
+    # recorded for continuity with BENCH_r01-r13, whose `value` was
+    # sum-of-best-of-3. Per-query try/except: one broken query must
+    # never abort the suite (BENCH_r04 lost ALL signal to a single
+    # erroring query).
     n_runs = max(3, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
     times: dict[str, float] = {}
     times_best: dict[str, float] = {}
@@ -312,51 +362,27 @@ def main() -> None:
     errors: dict[str, str] = {}
     jobs_per_query: dict[str, int] = {}
 
-    def _median(xs: list[float]) -> float:
-        s = sorted(xs)
-        m = len(s) // 2
-        return s[m] if len(s) % 2 else (s[m - 1] + s[m]) / 2
-
     for n in names:
         group = f"bench:{n}"
         try:
-            sc.setJobGroup(group, n)
             # warm pass AT THE TARGET SF (r14): the sf0.001 warmup above
             # compiles the small-SF plan, but the first sf0.1 execution
-            # still pays C2-JIT/codegen on the real-volume loops — the
-            # first capture under the medians protocol showed run 0 of
-            # EVERY query 2-20x slower than runs 1-4 (dedup_minhash 3.76s
-            # vs 0.16s steady). One untimed run makes the recorded run
-            # arrays steady-state, same protocol as tools/bench_sf_*.py.
-            materialize(queries[n](spark, sf_dir))
-            jobs_before_last = 0
+            # still pays C2-JIT/codegen on the real-volume loops (run 0
+            # of every query was 2-20x slower than runs 1-4 without it)
+            time_run(spark, queries[n], sf_dir, group)
             samples: list[float] = []
             for run in range(n_runs):
-                # every timed run starts cache-cold for query-registered
-                # caches (see reset_nonpinned_caches above) — including
-                # run 0, whose warm pass would otherwise have pre-built
-                # them
-                reset_nonpinned_caches()
-                if run == n_runs - 1:
-                    # Steady-state job count = jobs of the LAST timed run
-                    # only (id-diff). Run 1 can schedule extra one-time
-                    # jobs (cache misses), so dividing the group total
-                    # by n_runs silently floors — and
-                    # floor_decomposition_sec is a load-bearing number
-                    # in the 2x-gate argument.
-                    jobs_before_last = len(tracker.getJobIdsForGroup(group))
-                t0 = time.perf_counter()
-                materialize(queries[n](spark, sf_dir))
-                dt = time.perf_counter() - t0
-                if os.environ.get("SPARK_GRAFT_BENCH_DEBUG"):
-                    print(f"  [run {run}] {n}: {dt:.3f}", file=sys.stderr)
+                # every timed run is cache-cold: build + execute
+                dt, jobs = time_run(spark, queries[n], sf_dir, group)
+                print(f"  [run {run}] {n}: {dt:.3f}", file=sys.stderr)
                 samples.append(dt)
             runs_per_query[n] = [round(x, 4) for x in samples]
-            times[n] = round(_median(samples), 4)
+            times[n] = round(statistics.median(samples), 4)
             times_best[n] = round(min(samples), 4)
-            jobs_per_query[n] = (
-                len(tracker.getJobIdsForGroup(group)) - jobs_before_last
-            )
+            # steady-state job count = the LAST timed run's (run 1 can
+            # schedule extra one-time jobs); floor_decomposition_sec is
+            # a load-bearing number in the 2x-gate argument
+            jobs_per_query[n] = jobs
         except Exception as e:  # noqa: BLE001 — isolate, report, continue
             errors[n] = f"{type(e).__name__}: {e}"[:300]
     sequential_total = round(sum(times.values()), 4)
@@ -396,53 +422,31 @@ def main() -> None:
     # Transparency: time DuckDB on the IDENTICAL oracle SQL immediately
     # after the Spark batch phase (same process, same box state — NOT
     # after the streaming/load phases have churned all cores), so the
-    # spark/duckdb ratio is same-conditions.
-    duckdb_sequential = None
-    duckdb_suite_min = duckdb_suite_max = None
-    duckdb_queries: dict[str, float] = {}
+    # spark/duckdb ratio is same-conditions. If every oracle errors the
+    # totals stay None rather than publish a 0.0 s "total" that reads as
+    # an infinite Spark slowdown (r14 sweep).
     duckdb_runs: dict[str, list[float]] = {}
     try:
-        import duckdb
-
         oracles = entry_mod.oracle_sql()
-        con = duckdb.connect()
-        for t in (
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        ):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-            )
-        dtot = 0.0
-        for n in names:
-            if n not in oracles:
-                continue
-            try:
-                con.execute(oracles[n]).fetchall()  # warm (page cache/JIT)
-                samples = []
-                for _ in range(n_runs):
-                    t0 = time.perf_counter()
-                    con.execute(oracles[n]).fetchall()
-                    samples.append(time.perf_counter() - t0)
-                duckdb_runs[n] = [round(x, 4) for x in samples]
-                dmed = _median(samples)
-                dtot += dmed
-                duckdb_queries[n] = round(dmed, 4)
-            except Exception:  # one broken oracle must not kill the ratio
-                pass
-        if duckdb_queries:
-            duckdb_sequential = round(dtot, 4)
-            duckdb_suite_min = round(
-                sum(min(r) for r in duckdb_runs.values()), 4
-            )
-            duckdb_suite_max = round(
-                sum(max(r) for r in duckdb_runs.values()), 4
-            )
-        # else: every oracle errored — leave None rather than publish a
-        # 0.0 s "total" that reads as an infinite Spark slowdown
-        # (r14 sweep)
-    except Exception:
+        duckdb_runs = time_duckdb(
+            sf_dir, {n: oracles[n] for n in names if n in oracles}, n_runs
+        )
+    except Exception:  # noqa: BLE001
         pass
+    duckdb_queries = {
+        n: round(statistics.median(r), 4) for n, r in duckdb_runs.items()
+    }
+    duckdb_sequential = (
+        round(sum(statistics.median(r) for r in duckdb_runs.values()), 4)
+        if duckdb_runs
+        else None
+    )
+    duckdb_runs = {n: [round(x, 4) for x in r] for n, r in duckdb_runs.items()}
+    duckdb_spread = (
+        [round(sum(f(r) for r in duckdb_runs.values()), 4) for f in (min, max)]
+        if duckdb_runs
+        else None
+    )
 
     # streaming throughput sanity (reference-derived target: >=10k events/s
     # through the tumble+sum+having MV pipeline, BASELINE.md)
@@ -516,10 +520,10 @@ def main() -> None:
         # CPU-scaling contract (r15, VERDICT #1): the RESOLVED runtime
         # master and parallelism, so the driver's lower-core-count run
         # can verify $SPARK_GRAFT_CPUS is honored instead of suspecting.
-        "master": sc.master,
-        "default_parallelism": sc.defaultParallelism,
-        "shuffle_partitions": _shuffle,
-        "pin_slice_cap": _pin_slices,
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "pin_slice_cap": pin_slice_cap(),
         "queries": times,
         "runs_per_query_count": n_runs,
         "query_runs": runs_per_query,
@@ -541,11 +545,7 @@ def main() -> None:
         "duckdb_sequential_sec_same_sql": duckdb_sequential,
         "duckdb_queries": duckdb_queries or None,
         "duckdb_query_runs": duckdb_runs or None,
-        "duckdb_suite_spread_sec": (
-            [duckdb_suite_min, duckdb_suite_max]
-            if duckdb_suite_min is not None
-            else None
-        ),
+        "duckdb_suite_spread_sec": duckdb_spread,
         # Methodology (timing action, concurrent-wall rationale, floor
         # decomposition, DuckDB comparison protocol): docs/BENCH_NOTES.md.
         "notes": "methodology: docs/BENCH_NOTES.md",
@@ -565,9 +565,7 @@ def main() -> None:
     line = json.dumps(payload)
     # Durable copy: the driver captures stdout and has truncated this line
     # before (BENCH_r06.json parsed:null) — the in-repo file is the record.
-    # Self-test runs (the pytest contract check) are NOT a record and must
-    # not clobber it.
-    if "--self-test-broken" not in sys.argv:
+    if is_record:
         try:
             out = os.path.join(
                 os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL_last.json"

@@ -5,9 +5,15 @@ replaced by the identity while the plan is built, so Spark (AQE on)
 picks each join strategy itself. ``basket_brand_lift:map`` is the
 literal brand→bit lookup that replaced its ``brand_bits`` join.
 
-Targets the tree that still has the ladder (commit b512278):
-    cd <that checkout> && SF_DIR=<sf dir> REPS=10 \\
+Targets the tree that still has the ladder (commit b512278), timed by
+the current harness (tools/ab_interleaved.py and the bench.py whose
+``time_run`` it calls), copied over that tree:
+    git archive b512278 | tar -x -C <dir>
+    cp bench.py <dir>/ && cp tools/ab_interleaved.py <dir>/tools/
+    cd <dir> && SF_DIR=<sf dir> REPS=10 \\
         python tools/ab_interleaved.py out.json <this file>
+plans/ab_ladder_vs_aqe.json predates ``time_run``: its reps reused
+each variant's prebuilt frame.
 """
 
 from __future__ import annotations

@@ -2,7 +2,8 @@
 is one JSON line on stdout — a broken query must degrade to an `errors`
 entry, never abort the suite (round 4 lost its entire bench signal to a
 single erroring query). Runs the real script in a subprocess on a
-two-query subset at the smallest SF."""
+two-query subset at the smallest SF. tools/ab_interleaved.py, which
+times through bench.py's ``time_run``, is run the same way."""
 
 from __future__ import annotations
 
@@ -10,6 +11,9 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
+
+from tests.conftest import SF_SMOKE
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -24,7 +28,8 @@ def test_bench_emits_full_json_despite_broken_query():
         "SPARK_GRAFT_CPUS": "6",
     }
     env.pop("SPARK_GRAFT_MASTER", None)
-    env.pop("SPARK_GRAFT_SHUFFLE_PARTITIONS", None)
+    record = Path(REPO, "BENCH_LOCAL_last.json")
+    record_before = record.read_bytes() if record.exists() else None
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py"), "--self-test-broken"],
         env=env,
@@ -34,6 +39,8 @@ def test_bench_emits_full_json_despite_broken_query():
         cwd=REPO,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
+    # a subset run is not the headline record and must not replace it
+    assert (record.read_bytes() if record.exists() else None) == record_before
     line = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
     d = json.loads(line)
     assert d["errors"] == {
@@ -67,3 +74,48 @@ def test_bench_emits_full_json_despite_broken_query():
     assert d["default_parallelism"] == 6
     assert 2 <= d["shuffle_partitions"] <= 6
     assert d["pin_slice_cap"] == 6
+
+
+def test_ab_interleaved_runs_cache_cold_reps_on_the_core(tmp_path):
+    """Two arms of a self-caching query through tools/ab_interleaved.py:
+    every rep is a cache-cold build + execute, so each arm schedules the
+    same jobs in every rep, and both arms fingerprint the same rows."""
+    variants = tmp_path / "variants.py"
+    variants.write_text(
+        "import __spark_entry__ as entry_mod\n"
+        "build = entry_mod.queries()['dedup_incremental_lsh']\n"
+        "VARIANTS = {'dedup_incremental_lsh:a': build,"
+        " 'dedup_incremental_lsh:b': build}\n"
+    )
+    out = tmp_path / "ab.json"
+    env = {
+        **os.environ,
+        "SF_DIR": SF_SMOKE,
+        "REPS": "2",
+        "SPARK_GRAFT_CPUS": "2",
+    }
+    env.pop("SPARK_GRAFT_MASTER", None)
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "tools", "ab_interleaved.py"),
+            str(out),
+            str(variants),
+        ],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=480,
+        cwd=REPO,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    d = json.loads(out.read_text())
+    arms = d["variants"]
+    assert set(arms) == {"dedup_incremental_lsh:a", "dedup_incremental_lsh:b"}
+    for arm in arms.values():
+        assert arm["rows_equal"] is True
+        assert len(arm["runs"]) == 2
+        assert len(set(arm["jobs_per_run"])) == 1, arm["jobs_per_run"]
+    for stamp in (d["host"]["before"], d["host"]["after"]):
+        assert set(stamp) == {"parallel_efficiency", "membw_gbps"}
+        assert stamp["parallel_efficiency"] is not None

@@ -2,22 +2,16 @@
 spec's builder, every call builds a fresh plan, and the only plan-level
 cache is Spark's CacheManager — so a query run again after bench.py's
 between-run reset (clearCache + unpersist) executes the plan it
-declares, caches included."""
+declares, caches included. The runs below go through bench.py's own
+``time_run`` and ``reset_caches``."""
 
 from __future__ import annotations
 
 import json
 
 import __spark_entry__ as entry_mod
+from bench import reset_caches, time_run
 from tests.conftest import SF_ORACLE
-
-
-def _reset(spark) -> None:
-    """bench.py's between-run reset: drop every cache and checkpoint."""
-    spark.catalog.clearCache()
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(jmap.keySet().toArray()):
-        jmap.get(rid).unpersist(True)
 
 
 def _cached_partitions(spark) -> int:
@@ -26,18 +20,10 @@ def _cached_partitions(spark) -> int:
 
 
 def _run(spark, name: str, group: str) -> tuple[int, int]:
-    """Build ``name`` through queries() and write it to the noop sink,
-    cache-cold; returns (jobs scheduled by build + execute, cached
-    partitions)."""
-    _reset(spark)
-    sc = spark.sparkContext
-    sc.setJobGroup(group, name)
-    try:
-        df = entry_mod.queries()[name](spark, SF_ORACLE)
-        df.write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), _cached_partitions(spark)
+    """One bench timed run of ``name`` (cache-cold build + noop write);
+    returns (jobs scheduled by build + execute, cached partitions)."""
+    _, jobs = time_run(spark, entry_mod.queries()[name], SF_ORACLE, group)
+    return jobs, _cached_partitions(spark)
 
 
 def test_queries_hand_out_each_builder():
@@ -47,10 +33,13 @@ def test_queries_hand_out_each_builder():
 
 
 def test_self_caching_query_registers_its_caches_after_reset(spark):
-    """Run 2 after the reset executes the declared plan: it registers
-    its caches again and schedules the same jobs as run 1."""
+    """The reset drops every cache, and run 2 after it executes the
+    declared plan: it registers its caches again and schedules the same
+    jobs as run 1."""
     _run(spark, "dedup_incremental_lsh", "registry:lsh:warm")
     jobs1, cached1 = _run(spark, "dedup_incremental_lsh", "registry:lsh:1")
+    reset_caches(spark, SF_ORACLE)
+    assert _cached_partitions(spark) == 0
     jobs2, cached2 = _run(spark, "dedup_incremental_lsh", "registry:lsh:2")
     assert cached1 > 0
     assert cached2 > 0
@@ -62,6 +51,8 @@ def test_checkpointing_query_rebuilds_after_reset(spark):
     the reset instead of serving the previous build's blocks."""
     _run(spark, "duplicate_clusters", "registry:clusters:warm")
     jobs1, _ = _run(spark, "duplicate_clusters", "registry:clusters:1")
+    reset_caches(spark, SF_ORACLE)
+    assert _cached_partitions(spark) == 0
     jobs2, _ = _run(spark, "duplicate_clusters", "registry:clusters:2")
     assert jobs1 > 1
     assert jobs2 == jobs1
@@ -72,7 +63,7 @@ def test_token_frame_shares_one_cache_entry_and_reregisters(spark):
 
     from data_iceberg_sandbox_spark.operators.tokenbase import token_frame
 
-    _reset(spark)
+    reset_caches(spark, SF_ORACLE)
     jmap = spark.sparkContext._jsc.getPersistentRDDs
     a = token_frame(spark, SF_ORACLE)
     b = token_frame(spark, SF_ORACLE)
@@ -86,7 +77,7 @@ def test_token_frame_shares_one_cache_entry_and_reregisters(spark):
     assert c.storageLevel != StorageLevel.NONE
     c.count()
     assert _cached_partitions(spark) > 0
-    _reset(spark)
+    reset_caches(spark, SF_ORACLE)
 
 
 def test_driver_history_survives_malformed_correctness_file(monkeypatch, tmp_path):

@@ -6,13 +6,15 @@ median as the interference-robust capability statistic.
 
 The session is the engine's shipping one (``get_spark_session()`` with
 its defaults: AQE on, shuffle partitions = cores), the base tables are
-pinned with ``pin_balanced``, and every run is the built plan into the
-``noop`` sink. Per variant the payload carries the run times, their min
-and median, the Spark jobs each run launched, and an order-independent
-result fingerprint (row count, sum and xor of per-row xxhash64); the
-``rows_equal`` flag compares it with the first variant of the same
-query. A host stamp (parallel efficiency, memory bandwidth — bench.py's
-probes) is taken before and after the reps.
+pinned with bench.py's ``pin_tables``, and every rep is bench.py's
+``time_run`` with the variant's builder: a cache-cold build + execute
+into the ``noop`` sink, the same run the headline times. Per variant the
+payload carries the run times, their min and median, the Spark jobs
+each run launched, and an order-independent result fingerprint (row
+count, sum and xor of per-row xxhash64); the ``rows_equal`` flag
+compares it with the first variant of the same query. A host stamp
+(parallel efficiency, memory bandwidth — bench.py's probes) is taken
+before and after the reps.
 
 Usage: python tools/ab_interleaved.py out.json <variants_module> [reps]
   <variants_module> is a python file defining VARIANTS: dict[str, fn]
@@ -29,9 +31,10 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import _host_probes, pin_tables, time_run  # noqa: E402
 
 
 def _fingerprint(df) -> list:
@@ -51,8 +54,6 @@ def _query(name: str) -> str:
 
 
 def _host() -> dict:
-    from bench import _host_probes
-
     par, bw = _host_probes()
     return {"parallel_efficiency": par, "membw_gbps": bw}
 
@@ -68,43 +69,38 @@ def main() -> None:
     variants = mod.VARIANTS
 
     from data_iceberg_sandbox_spark.session import get_spark_session
-    from data_iceberg_sandbox_spark.sources.registry import pin_balanced
 
     host_before = _host()
     spark = get_spark_session(app_name="ab_interleaved")
     sc = spark.sparkContext
-    pin_balanced(spark, sf_dir)
+    pin_tables(spark, sf_dir)
 
-    dfs = {name: fn(spark, sf_dir) for name, fn in variants.items()}
-    for name, df in dfs.items():  # warm every plan (JIT/codegen)
-        sc.setJobDescription(f"warm:{name}")
-        df.write.format("noop").mode("overwrite").save()
+    for name, build in variants.items():  # warm every plan (JIT/codegen)
+        time_run(spark, build, sf_dir, f"warm:{name}")
 
-    runs: dict[str, list[float]] = {name: [] for name in dfs}
-    jobs: dict[str, list[int]] = {name: [] for name in dfs}
+    runs: dict[str, list[float]] = {name: [] for name in variants}
+    jobs: dict[str, list[int]] = {name: [] for name in variants}
     for rep in range(reps):
         # ABBA: odd reps run the arms in reverse, so no arm always
         # follows the same neighbour
-        order = list(dfs.items())
-        for name, df in order[::-1] if rep % 2 else order:
-            gid = f"rep{rep}:{name}"
-            sc.setJobGroup(gid, gid)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
+        order = list(variants.items())
+        for name, build in order[::-1] if rep % 2 else order:
+            dt, n_jobs = time_run(spark, build, sf_dir, f"rep{rep}:{name}")
             runs[name].append(round(dt, 3))
-            jobs[name].append(len(sc.statusTracker().getJobIdsForGroup(gid)))
-            print(f"rep{rep} {name}: {dt:.3f} ({jobs[name][-1]} jobs)", flush=True)
-    sc.setJobGroup("fingerprint", "fingerprint")
-    prints = {name: _fingerprint(df) for name, df in dfs.items()}
+            jobs[name].append(n_jobs)
+            print(f"rep{rep} {name}: {dt:.3f} ({n_jobs} jobs)", flush=True)
+    prints = {name: _fingerprint(fn(spark, sf_dir)) for name, fn in variants.items()}
     first_of: dict[str, str] = {}
-    for name in dfs:
+    for name in variants:
         first_of.setdefault(_query(name), name)
 
     payload = {
         "sf_dir": sf_dir,
         "reps": reps,
-        "protocol": "interleaved same-session; min is interference-robust",
+        "protocol": (
+            "interleaved same-session, each rep bench.time_run (cache-cold "
+            "build + execute); min is interference-robust"
+        ),
         "session": {
             "master": sc.master,
             "default_parallelism": sc.defaultParallelism,

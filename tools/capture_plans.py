@@ -5,10 +5,12 @@ Usage:
   python tools/capture_plans.py <out_dir> <suffix> <query1> [query2 ...]
   python tools/capture_plans.py plans/r14 after tpch_q3_shipping_priority ...
 
-Runs against $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) with the
-same session sizing bench.py uses, so the captured plan is the plan the
-bench times. Plan construction only — nothing is executed beyond the
-small collects some plan builders do (dim folds).
+Runs against $SPARK_GRAFT_SF_DIR (default: the sf0.1 test data, as in
+bench.py) in bench.py's session with its base-table pin (``bench_session`` +
+``pin_tables``): pinned tables change scan statistics, and with them
+join strategy choices, so the captured plan is the plan the bench
+times. Plan construction only — nothing is executed beyond the pin and
+the small collects some plan builders do (dim folds).
 """
 
 from __future__ import annotations
@@ -18,8 +20,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bench_session, pin_tables  # noqa: E402
 from data_iceberg_sandbox_spark.plans.inspect import formatted_plan  # noqa: E402
-from data_iceberg_sandbox_spark.session import get_spark_session  # noqa: E402
 
 
 def main() -> None:
@@ -34,39 +36,15 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"not in the registry: {unknown}")
 
-    pin = os.environ.get("SPARK_GRAFT_CAPTURE_PIN")
-
-    spark = get_spark_session(
-        app_name="capture_plans",
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
-        ),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": os.environ.get(
-                "SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"
-            ),
-            "spark.sql.adaptive.enabled": os.environ.get(
-                "SPARK_GRAFT_AQE", "false"
-            ),
-        },
-    )
-    if pin:
-        # reproduce the bench/A-B session exactly: pinned base tables
-        # change scan statistics, which changes join strategy choices
-        # (SPARK_GRAFT_CAPTURE_PIN=1)
-        from data_iceberg_sandbox_spark.sources.registry import pin_balanced
-
-        pin_balanced(spark, sf_dir)
+    spark = bench_session(sf_dir)
+    pin_tables(spark, sf_dir)
 
     for n in names:
         df = queries[n](spark, sf_dir)
         text = formatted_plan(df)
         path = os.path.join(out_dir, f"{n}_{suffix}.txt")
         with open(path, "w") as fh:
-            hdr = f"== {n} ({suffix}) sf_dir={sf_dir}"
-            if pin:
-                hdr += " [pinned base tables, the bench session shape]"
-            fh.write(hdr + " ==\n")
+            fh.write(f"== {n} ({suffix}) sf_dir={sf_dir} [bench session, pinned] ==\n")
             fh.write(text)
             if not text.endswith("\n"):
                 fh.write("\n")
