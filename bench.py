@@ -5,6 +5,13 @@ Prints ONE JSON line:
   {"metric": "...", "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": 0.1}
 
+The session is the one the engine ships: ``get_spark_session()`` with
+its defaults (AQE on, shuffle partitions = cores, Spark's FIFO
+scheduler), and the base tables are pinned by ``pin_balanced`` with its
+defaults — the session and pin perfbench/ and the tools time as well.
+bench.py sets no Spark conf of its own (protocol 4; the payload stamps
+the resolved AQE flag and shuffle width).
+
 Each query is timed end-to-end (plan + execute + materialize every
 result row into the ``noop`` sink — the standard Spark benchmark action;
 ``count()`` would add a 2-stage aggregation exchange of its own, ~65 ms
@@ -13,20 +20,20 @@ sf0.001 first touches the JVM/codegen paths so per-query numbers
 reflect steady state.
 
 Medians protocol (r14): each query runs SPARK_GRAFT_BENCH_RUNS times
-(default 5, min 3) and the headline ``value`` is the sum of per-query
-MEDIANS; the full run arrays (Spark and DuckDB) plus a suite-level
-[sum-of-min, sum-of-max] spread band ship in the payload so a
-round-over-round ratio claim is only meaningful when it exceeds the
-recorded spread. BENCH_r01-r13's ``value`` was sum-of-best-of-3; the
-best-of view is kept under ``value_best_of_runs`` for continuity. Each
-timed run also prints ``[run i] <query>: <sec>`` to stderr.
+(default 5, min 3; a malformed value falls back to 5) and the headline
+``value`` is the sum of per-query MEDIANS; the full run arrays (Spark
+and DuckDB) plus a suite-level [sum-of-min, sum-of-max] spread band
+ship in the payload so a round-over-round ratio claim is only
+meaningful when it exceeds the recorded spread. BENCH_r01-r13's
+``value`` was sum-of-best-of-3; the best-of view is kept under
+``value_best_of_runs`` for continuity. Each timed run also prints
+``[run i] <query>: <sec>`` to stderr.
 
 The timing protocol lives in module-level functions that ``main()``
-composes and tools import (tools/ab_interleaved.py,
-tools/capture_plans.py): ``bench_session`` (SF-sized session),
-``pin_tables`` (the balanced base-table pin), ``reset_caches`` (the
-between-run reset), ``time_run`` (one cache-cold build + execute) and
-``time_duckdb`` (the same-SQL DuckDB timing).
+composes and tools/ab_interleaved.py imports: ``reset_caches`` (the
+between-run reset), ``time_run`` (one cache-cold build + execute),
+``time_duckdb`` (the same-SQL DuckDB timing) and ``env_count``
+(fail-closed run counts).
 
 Subset, scale and repeat count: ``SPARK_GRAFT_BENCH_QUERIES=a,b``,
 ``SPARK_GRAFT_SF_DIR=<dir>``, ``SPARK_GRAFT_BENCH_RUNS=<n>``. Only a full
@@ -151,70 +158,15 @@ def scale_factor(sf_dir: str) -> float:
     return float(m.group(1)) if m else 0.0
 
 
-def bench_session(sf_dir: str):
-    """The bench session, sized by the SF under test — exactly what a
-    cluster deployment does (conf sized by executor count / data volume):
-
-    - sf<=0.1 (17 MB): the cluster default (128 MB splits) serializes
-      every scan onto one core — 4 MB splits give each core work while
-      keeping the pinned cache at a handful of partitions; 4
-      post-shuffle partitions keep stage scheduling overhead ~0.
-    - sf>=1 (175 MB+): wide aggs/joins move real row volume, so the
-      post-shuffle width rises toward the core count and splits grow so
-      the scan task count stays O(cores), not O(hundreds).
-
-    The width is capped by $SPARK_GRAFT_CPUS (r15, VERDICT #1), so a
-    lower-core-count run genuinely sizes down. AQE off: the bench keeps
-    the static-plan regime every BENCH_r* record was taken in, so its
-    headline stays comparable across rounds (at 17 MB AQE's per-stage
-    re-optimization rounds also cost more than they save, measured
-    ~10-15%); the engine's shipping AQE-on session is measured by
-    perfbench/ and tools/ab_interleaved.py. With AQE off an unhinted
-    join is planned once from file statistics: a dim under
-    autoBroadcastJoinThreshold (all of them at sf0.1) broadcasts, a
-    larger one (sf>=10 customer/part) stays a sort-merge join."""
-    sf = scale_factor(sf_dir)
-    if sf >= 10:
-        shuffle, split = 32, "32m"
-    elif sf >= 1:
-        shuffle, split = 8, "8m"
-    else:
-        shuffle, split = 4, "4m"
-    return get_spark_session(
-        app_name="bench",
-        shuffle_partitions=min(shuffle, max(2, _cpus())),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": split,
-            "spark.sql.files.openCostInBytes": "262144",
-            "spark.scheduler.mode": "FAIR",
-            "spark.sql.adaptive.enabled": "false",
-        },
-    )
-
-
-def pin_slice_cap() -> int:
-    """Most slices a pinned table gets: 16 is the measured sf0.1 sweet
-    spot on 32 cores (32+ slices re-pay per-task overhead); a smaller
-    box pins fewer slices instead of running the 32-core constant."""
-    return min(_cpus(), 16)
-
-
-def pin_tables(spark, sf_dir: str) -> None:
-    """Buffer pool: pin the base tables in memory — every query's scan
-    subtree is plan-identical to the cached frame, so Spark's
-    CacheManager substitutes the in-memory columnar relation. This is
-    the resident-engine shape (DuckDB equally serves these 17 MB from
-    its buffer manager / OS page cache); at cluster scale the analog is
-    hot-table caching on the executors.
-
-    The pin is BALANCED and keyed (registry.pin_balanced): the testdata
-    parquet is one row group per table, so a cache built straight off
-    the scan holds all of lineitem in one partition and every
-    downstream query runs single-threaded (the r9 suite did exactly
-    that: 600k-row agg 0.158 s skewed vs 0.065 s balanced). Each fact
-    is hash-clustered by its canonical key — the bucketed-table shape —
-    in ~40k-row slices, at most ``pin_slice_cap()`` of them."""
-    pin_balanced(spark, sf_dir, cpus=pin_slice_cap(), min_rows_per_slice=40_000)
+def env_count(name: str, default: int) -> int:
+    """``$name`` as a positive count. Fails closed like
+    ``session._cpus()``: unset, empty, malformed or non-positive values
+    give ``default``."""
+    try:
+        n = int(os.environ.get(name, ""))
+    except ValueError:
+        n = 0
+    return n if n >= 1 else default
 
 
 def reset_caches(spark, sf_dir: str) -> None:
@@ -240,7 +192,7 @@ def reset_caches(spark, sf_dir: str) -> None:
         except Exception:  # noqa: BLE001 — best-effort block drop
             pass
     if pinned:
-        pin_tables(spark, sf_dir)
+        pin_balanced(spark, sf_dir)
 
 
 def materialize(df) -> None:
@@ -297,6 +249,7 @@ def time_duckdb(
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = scale_factor(sf_dir)
+    n_runs = max(3, env_count("SPARK_GRAFT_BENCH_RUNS", 5))
 
     import __spark_entry__ as entry_mod
 
@@ -326,14 +279,17 @@ def main() -> None:
     # must not replace it)
     is_record = names == HEADLINE
 
-    spark = bench_session(sf_dir)
+    spark = get_spark_session(app_name="bench")
     # warmup: run each headline once at the smallest SF to JIT/codegen
     for n in names:
         try:
             queries[n](spark, "/root/testdata/sf0.001").count()
         except Exception:
             pass
-    pin_tables(spark, sf_dir)
+    # Buffer pool: the base tables pinned in memory, balanced and keyed
+    # (registry.pin_balanced) — the resident-engine shape perfbench and
+    # the tools time as well.
+    pin_balanced(spark, sf_dir)
 
     # Fixed-floor probe: Spark charges a per-action scheduling/driver
     # round-trip cost even for a 1-row noop write. Median of 10 is the
@@ -355,7 +311,6 @@ def main() -> None:
     # sum-of-best-of-3. Per-query try/except: one broken query must
     # never abort the suite (BENCH_r04 lost ALL signal to a single
     # erroring query).
-    n_runs = max(3, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
     times: dict[str, float] = {}
     times_best: dict[str, float] = {}
     runs_per_query: dict[str, list[float]] = {}
@@ -395,9 +350,10 @@ def main() -> None:
     floor_total = round(floor_sec * total_jobs, 4)
     names = [n for n in names if n not in errors]
 
-    # Throughput view: the suite issued concurrently (FAIR scheduler, one
-    # SparkSession) — the realistic multi-tenant shape; wall-clock amortizes
-    # Spark's fixed per-query scheduling latency across the fleet of cores.
+    # Throughput view: the suite issued concurrently (one SparkSession,
+    # its default FIFO scheduler) — the realistic multi-tenant shape;
+    # wall-clock amortizes Spark's fixed per-query scheduling latency
+    # across the fleet of cores.
     # Best-of-2: a single concurrent wall on a shared box swings ±50%.
     # Concurrent-phase failures go to their OWN dict: a query that timed
     # fine sequentially but failed under concurrency would otherwise sit
@@ -512,18 +468,19 @@ def main() -> None:
         # (BENCH_r01–r13), 2 = sum of per-query medians of 5 with
         # cache-cold timed runs (r14+; r14 lacked this field and the
         # between-run cache reset), 3 = as 2, but every timed run builds
-        # the query's plan fresh, so a run is build + execute
-        # (docs/BENCH_NOTES.md maps the statistics). PERF consumers must
-        # not compare `value` across protocol versions;
+        # the query's plan fresh, so a run is build + execute, 4 = as 3,
+        # on the engine's shipping session (AQE on) with the default
+        # pin (docs/BENCH_NOTES.md maps the statistics). PERF consumers
+        # must not compare `value` across protocol versions;
         # `value_best_of_runs` is the v1-comparable statistic.
-        "protocol_version": 3,
+        "protocol_version": 4,
         # CPU-scaling contract (r15, VERDICT #1): the RESOLVED runtime
         # master and parallelism, so the driver's lower-core-count run
         # can verify $SPARK_GRAFT_CPUS is honored instead of suspecting.
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
-        "pin_slice_cap": pin_slice_cap(),
+        "aqe": spark.conf.get("spark.sql.adaptive.enabled"),
         "queries": times,
         "runs_per_query_count": n_runs,
         "query_runs": runs_per_query,

@@ -10,7 +10,7 @@ the current harness (tools/ab_interleaved.py and the bench.py whose
 ``time_run`` it calls), copied over that tree:
     git archive b512278 | tar -x -C <dir>
     cp bench.py <dir>/ && cp tools/ab_interleaved.py <dir>/tools/
-    cd <dir> && SF_DIR=<sf dir> REPS=10 \\
+    cd <dir> && SPARK_GRAFT_SF_DIR=<sf dir> REPS=10 \\
         python tools/ab_interleaved.py out.json <this file>
 plans/ab_ladder_vs_aqe.json predates ``time_run``: its reps reused
 each variant's prebuilt frame.

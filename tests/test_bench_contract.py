@@ -3,7 +3,9 @@ is one JSON line on stdout — a broken query must degrade to an `errors`
 entry, never abort the suite (round 4 lost its entire bench signal to a
 single erroring query). Runs the real script in a subprocess on a
 two-query subset at the smallest SF. tools/ab_interleaved.py, which
-times through bench.py's ``time_run``, is run the same way."""
+times through bench.py's ``time_run``, is run the same way; both must
+time the engine's shipping session (AQE on, shuffle partitions =
+cores)."""
 
 from __future__ import annotations
 
@@ -13,6 +15,9 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
+from bench import env_count
 from tests.conftest import SF_SMOKE
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -69,11 +74,12 @@ def test_bench_emits_full_json_despite_broken_query():
     # lower-core-count run can verify $SPARK_GRAFT_CPUS is honored, and
     # the statistic is versioned so PERF never again compares
     # best-of-3 against median-of-5
-    assert d["protocol_version"] == 3
+    assert d["protocol_version"] == 4
     assert d["master"] == "local[6]"
     assert d["default_parallelism"] == 6
-    assert 2 <= d["shuffle_partitions"] <= 6
-    assert d["pin_slice_cap"] == 6
+    # one session: the shipping conf, no bench overrides
+    assert d["aqe"] == "true"
+    assert d["shuffle_partitions"] == 6
 
 
 def test_ab_interleaved_runs_cache_cold_reps_on_the_core(tmp_path):
@@ -90,7 +96,7 @@ def test_ab_interleaved_runs_cache_cold_reps_on_the_core(tmp_path):
     out = tmp_path / "ab.json"
     env = {
         **os.environ,
-        "SF_DIR": SF_SMOKE,
+        "SPARK_GRAFT_SF_DIR": SF_SMOKE,
         "REPS": "2",
         "SPARK_GRAFT_CPUS": "2",
     }
@@ -110,6 +116,9 @@ def test_ab_interleaved_runs_cache_cold_reps_on_the_core(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     d = json.loads(out.read_text())
+    # the same session bench.py times: shipping AQE value and width
+    assert d["session"]["aqe"] == "true"
+    assert int(d["session"]["shuffle_partitions"]) == 2
     arms = d["variants"]
     assert set(arms) == {"dedup_incremental_lsh:a", "dedup_incremental_lsh:b"}
     for arm in arms.values():
@@ -119,3 +128,14 @@ def test_ab_interleaved_runs_cache_cold_reps_on_the_core(tmp_path):
     for stamp in (d["host"]["before"], d["host"]["after"]):
         assert set(stamp) == {"parallel_efficiency", "membw_gbps"}
         assert stamp["parallel_efficiency"] is not None
+
+
+@pytest.mark.parametrize(
+    "raw, want", [("abc", 5), ("", 5), ("0", 5), ("-1", 5), ("7", 7)]
+)
+def test_run_counts_fail_closed(monkeypatch, raw, want):
+    """A malformed, empty or non-positive run count falls back to the
+    default instead of crashing the harness after its warmup and pin
+    (bench.py's SPARK_GRAFT_BENCH_RUNS, ab_interleaved's REPS)."""
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", raw)
+    assert env_count("SPARK_GRAFT_BENCH_RUNS", 5) == want

@@ -1,12 +1,17 @@
 """t2-style correctness: every queries() entry vs its DuckDB oracle at
-sf0.01 (the driver's gate, run locally at the same SF), plus the
-comparison harness's own pairing contract."""
+sf0.01 (the driver's gate, run locally at the same SF), the comparison
+harness's own pairing contract, and the operators rewritten for speed
+(packed keys, bitmap splits, fixed-point sums) against their native or
+decimal form on the edge domains their encodings touch."""
 
 from __future__ import annotations
+
+import os
 
 import duckdb
 import pandas as pd
 import pytest
+from pyspark.sql import Row, functions as F
 
 import __spark_entry__ as entry_mod
 from tests.conftest import SF_ORACLE, SF_SMOKE
@@ -92,3 +97,294 @@ def test_canon_mismatch_still_fails():
             "SELECT k, v FROM t",
             "mismatch",
         )
+
+
+def _native_cube_multiset(li):
+    rows = [
+        (r["l_returnflag"], r["l_linestatus"], r["n"], r["sum_qty"])
+        for r in (
+            li.cube("l_returnflag", "l_linestatus")
+            .agg(
+                F.count("*").alias("n"),
+                F.sum(F.col("l_quantity").cast("decimal(18,4)"))
+                .cast("double")
+                .alias("sum_qty"),
+            )
+            .collect()
+        )
+    ]
+    return sorted(rows, key=str)
+
+
+def test_cube_packed_key_roundtrips_unicode_and_empty(spark, tmp_path):
+    """The r14 packed-codepoint group key must round-trip every
+    SINGLE-codepoint value exactly — including non-ASCII (codepoint >
+    255, where a byte-packed key would collide across column halves)
+    and the empty string (ascii('')==0 would alias chr(0)) — and keep
+    NULL its own group. Multiset equals native .cube on such a domain."""
+    from data_iceberg_sandbox_spark.operators.advanced import cube_counts
+    from data_iceberg_sandbox_spark.sources.registry import pin_table
+
+    sf_fake = str(tmp_path / "sf_cube_uni")
+    os.makedirs(sf_fake, exist_ok=True)
+    li = spark.createDataFrame(
+        [
+            Row(l_returnflag="é", l_linestatus="F", l_quantity=1.0),
+            Row(l_returnflag="€", l_linestatus="", l_quantity=2.0),
+            Row(l_returnflag="", l_linestatus="€", l_quantity=4.0),
+            Row(l_returnflag=None, l_linestatus="é", l_quantity=8.0),
+            Row(l_returnflag="\x00", l_linestatus=None, l_quantity=16.0),
+            Row(l_returnflag="é", l_linestatus="F", l_quantity=32.0),
+        ],
+        "l_returnflag string, l_linestatus string, l_quantity double",
+    )
+    pin_table(spark, sf_fake, "lineitem", li)
+    got = sorted(
+        (
+            (r["l_returnflag"], r["l_linestatus"], r["n"], r["sum_qty"])
+            for r in cube_counts(spark, sf_fake).collect()
+        ),
+        key=str,
+    )
+    assert got == _native_cube_multiset(li)
+
+
+def test_multi_distinct_bitmap_split_matches_expand_form(spark, tmp_path):
+    """The r14 bitmap-split rewrite of multi_distinct_agg must equal
+    the native Expand form on the domains its encoding touches:
+    negative keys, keys straddling the 32768-bucket boundary, NULL keys
+    (COUNT(DISTINCT) excludes them), a NULL flag group (the eqNullSafe
+    rejoin must keep it), and NULL quantities."""
+    from data_iceberg_sandbox_spark.operators.advanced import (
+        multi_distinct_agg,
+    )
+    from data_iceberg_sandbox_spark.sources.registry import pin_table
+
+    sf_fake = str(tmp_path / "sf_mdist")
+    os.makedirs(sf_fake, exist_ok=True)
+    li = spark.createDataFrame(
+        [
+            # flag, partkey, suppkey, orderkey, quantity
+            ("A", -5, 1, 32767, 1.0),
+            ("A", -5, 2, 32768, 2.5),
+            ("A", 32768, None, 32769, None),
+            ("A", 0, 1, None, 4.0),
+            (None, 7, 7, 7, 8.0),
+            (None, 7, 8, 7, 16.0),
+            ("B", None, None, None, 0.0),
+        ],
+        "l_returnflag string, l_partkey long, l_suppkey long,"
+        " l_orderkey long, l_quantity double",
+    )
+    pin_table(spark, sf_fake, "lineitem", li)
+    expand = sorted(
+        (
+            tuple(r)
+            for r in li.groupBy("l_returnflag")
+            .agg(
+                F.countDistinct("l_partkey").alias("n_parts"),
+                F.countDistinct("l_suppkey").alias("n_supps"),
+                F.countDistinct("l_orderkey").alias("n_orders"),
+                F.sum(F.col("l_quantity").cast("decimal(18,4)"))
+                .cast("double")
+                .alias("sum_qty"),
+            )
+            .collect()
+        ),
+        key=str,
+    )
+    got = sorted(
+        (tuple(r) for r in multi_distinct_agg(spark, sf_fake).collect()),
+        key=str,
+    )
+    assert got == expand
+
+
+def test_q20_fixed_point_matches_decimal_form(spark, tmp_path):
+    """q20's r14 fixed-point BIGINT aggregate must reproduce the
+    decimal formulation bit-for-bit on cents-exact quantities,
+    including values whose double representation sits just under the
+    true cent (12.34*100 == 1233.9999...) and shares at the 0.15
+    boundary."""
+    from data_iceberg_sandbox_spark.operators.tpch2 import (
+        q20_volume_share_suppliers,
+    )
+    from data_iceberg_sandbox_spark.sources.registry import pin_table
+    from pyspark.sql import Window as W
+
+    sf_fake = str(tmp_path / "sf_q20")
+    os.makedirs(sf_fake, exist_ok=True)
+    li = spark.createDataFrame(
+        [
+            # part 1: supplier 1 exactly 15% (excluded by >), 2 the rest
+            (1, 1, 1.5),
+            (1, 2, 8.5),
+            # part 2: fractional cents-exact quantities, two rows per
+            # (pk,sk) so the group sum matters
+            (2, 1, 12.34),
+            (2, 1, 0.01),
+            (2, 2, 3.3),
+            (2, 3, 0.05),
+            # part 3: single supplier owns 100%
+            (3, 9, 49.99),
+        ],
+        "l_partkey long, l_suppkey long, l_quantity double",
+    )
+    sup = spark.createDataFrame(
+        [(1, "s1"), (2, "s2"), (3, "s3"), (9, "s9")],
+        "s_suppkey long, s_name string",
+    )
+    pin_table(spark, sf_fake, "lineitem", li)
+    pin_table(spark, sf_fake, "supplier", sup)
+
+    vol = (
+        li.groupBy("l_partkey", "l_suppkey")
+        .agg(F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("qty"))
+    )
+    total = F.sum("qty").over(W.partitionBy("l_partkey"))
+    share = F.col("qty").cast("double") / total.cast("double")
+    big = vol.withColumn("share", F.round(share, 6)).filter(
+        F.col("share") > 0.15
+    )
+    old = big.join(sup, big.l_suppkey == sup.s_suppkey).select(
+        F.col("l_partkey").alias("p_partkey"),
+        "s_suppkey",
+        "s_name",
+        F.col("qty").cast("double").alias("qty"),
+        "share",
+    )
+    expect = sorted((tuple(r) for r in old.collect()), key=str)
+    got = sorted(
+        (
+            tuple(r)
+            for r in q20_volume_share_suppliers(spark, sf_fake).collect()
+        ),
+        key=str,
+    )
+    assert got == expect
+    assert len(got) == 4  # 15%-boundary supplier excluded, others in
+
+
+def test_weighted_median_packed_key_roundtrips_flag_domain(spark, tmp_path):
+    """The r14 packed-key weighted median must equal the ORACLE's
+    window-only formulation on the flag domains the packing encodes:
+    non-ASCII codepoints, the empty string, \\x00 and NULL flags
+    (NULL-price rows are the documented sentinel bet and excluded
+    here, as in percentile_prices). The reference below mirrors the
+    DuckDB oracle (cum and tot both as windows, NO join) — the packing
+    rework also FIXED a latent NULL-flag drop: the previous two-column
+    form attached totals with a USING join on l_returnflag, which
+    silently dropped a NULL-flag group the oracle keeps (never fired
+    on TPC-H data; the packed _fk join key has no NULLs by
+    construction)."""
+    from data_iceberg_sandbox_spark.operators.advanced import (
+        weighted_median_price,
+    )
+    from data_iceberg_sandbox_spark.sources.registry import pin_table
+    from data_iceberg_sandbox_spark.functions.money import fixed
+    from pyspark.sql import Window as W
+
+    sf_fake = str(tmp_path / "sf_wmed")
+    os.makedirs(sf_fake, exist_ok=True)
+    li = spark.createDataFrame(
+        [
+            ("é", 10.00, 3.0),
+            ("é", 20.00, 1.0),
+            ("€", 5.50, 2.0),
+            ("", 7.25, 4.0),
+            (None, 1.00, 1.0),
+            ("\x00", 2.00, 5.0),
+            ("é", 10.00, 2.0),
+        ],
+        "l_returnflag string, l_extendedprice double, l_quantity double",
+    )
+    pin_table(spark, sf_fake, "lineitem", li)
+
+    hist = (
+        li.select(
+            "l_returnflag",
+            fixed("l_extendedprice").alias("pfp"),
+            fixed("l_quantity", 0).alias("qty"),
+        )
+        .groupBy("l_returnflag", "pfp")
+        .agg(F.sum("qty").alias("w"))
+    )
+    win = W.partitionBy("l_returnflag").orderBy("pfp")
+    cum = hist.withColumn("cum", F.sum("w").over(win)).withColumn(
+        "tot", F.sum("w").over(W.partitionBy("l_returnflag"))
+    )
+    twocol = (
+        cum.groupBy("l_returnflag")
+        .agg(
+            F.max("tot").alias("total_weight"),
+            (
+                F.min(
+                    F.when(F.col("cum") * 2 >= F.col("tot"), F.col("pfp"))
+                ).cast("double")
+                / F.lit(100.0)
+            ).alias("wmedian_price"),
+        )
+        .orderBy("l_returnflag")
+    )
+    expect = sorted((tuple(r) for r in twocol.collect()), key=str)
+    got = sorted(
+        (tuple(r) for r in weighted_median_price(spark, sf_fake).collect()),
+        key=str,
+    )
+    assert got == expect
+
+
+def test_q17_fixed_point_window_matches_decimal_form(spark, tmp_path):
+    """q17's r14 fixed-point window sums must reproduce the decimal
+    formulation bit-for-bit on cents-exact quantities/prices, including
+    rows exactly AT the 0.5*avg boundary (excluded by <) and doubles
+    whose cents product sits just under the true integer."""
+    from data_iceberg_sandbox_spark.operators.tpch2 import (
+        q17_small_quantity,
+    )
+    from data_iceberg_sandbox_spark.sources.registry import pin_table
+    from pyspark.sql import Window as W
+
+    sf_fake = str(tmp_path / "sf_q17")
+    os.makedirs(sf_fake, exist_ok=True)
+    li = spark.createDataFrame(
+        [
+            # part 1: avg qty = 2.0 -> boundary row qty=1.0 == 0.5*avg
+            # is EXCLUDED by the strict <; qty=0.99 is included
+            (1, 1.00, 100.10),
+            (1, 3.00, 200.20),
+            (1, 0.99, 12.34),
+            (1, 3.01, 5.00),
+            # part 2: fractional quantities whose double*100 sits just
+            # under the integer (12.34*100 = 1233.9999...)
+            (2, 12.34, 999.99),
+            (2, 0.01, 0.01),
+        ],
+        "l_partkey long, l_quantity double, l_extendedprice double",
+    )
+    pin_table(spark, sf_fake, "lineitem", li)
+
+    w = W.partitionBy("l_partkey")
+    avg_qty = F.sum(F.col("l_quantity").cast("decimal(12,2)")).over(w).cast(
+        "double"
+    ) / F.count(F.lit(1)).over(w)
+    old = (
+        li.select("l_quantity", "l_extendedprice", avg_qty.alias("avg_qty"))
+        .filter(F.col("l_quantity") < 0.5 * F.col("avg_qty"))
+        .agg(
+            F.round(
+                F.sum(F.col("l_extendedprice").cast("decimal(12,2)")).cast(
+                    "double"
+                )
+                / 7.0,
+                4,
+            ).alias("avg_yearly")
+        )
+    )
+    expect = [tuple(r) for r in old.collect()]
+    got = [tuple(r) for r in q17_small_quantity(spark, sf_fake).collect()]
+    assert got == expect
+    # the boundary row must have been excluded: surviving revenue is
+    # part 1's qty=0.99 row (price 12.34) + part 2's qty=0.01 row
+    # (price 0.01)
+    assert got[0][0] == round((12.34 + 0.01) / 7.0, 4)

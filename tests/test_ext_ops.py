@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_iceberg_sandbox_spark.operators.dedup import (
@@ -692,20 +693,41 @@ def test_word_shingles_binds_words_once(spark):
     assert plan.count("split(") == 1
 
 
-def test_quantize_storage_op_scale_stays_a_materialized_column(spark):
-    """The storage op builds its own quantize lambda and could regress
-    to the inlined-scale O(d²) form without tripping the
-    embedding_quantize_int8_check guard if it ever stopped sharing
-    `_quantize_base`. Same
-    assertions on the storage op's plan: one array_max (the scale
-    subtree evaluated once), and the quantize lambda divides by the
-    materialized `_s` attribute, never by the scale expression tree."""
-    from data_iceberg_sandbox_spark.operators.similarity import (
-        embedding_quantize_int8,
-    )
+@pytest.mark.parametrize(
+    "op", ["embedding_quantize_int8_check", "embedding_quantize_int8"]
+)
+def test_quantize_scale_stays_a_materialized_column(spark, op):
+    """The quantize ops stage the per-vector scale as its own
+    projection: array HOFs are interpreted (CodegenFallback) with no CSE
+    across the lambda boundary, so inlining the array_max-based scale
+    tree into the quantize lambda re-evaluates it PER ELEMENT (O(d²) per
+    row — measured 5× slower at sf10, plans/r14/ab_quant_scalecol.json).
+    The storage op builds its own lambda, so it is guarded on its own.
+    Plan shape: the scale subtree (its array_max) appears exactly once,
+    and the quantize lambda divides by the materialized `_s` attribute,
+    never by a greatest(array_max(...)) tree (CollapseProject would
+    reintroduce the regression silently if `_s` ever became
+    collapse-eligible)."""
+    from data_iceberg_sandbox_spark.operators import similarity
 
-    df = embedding_quantize_int8(spark, SF_SMOKE)
+    df = getattr(similarity, op)(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("array_max") == 1
     q_lambda = re.search(r"round\(\(lambda [^)]*\)", plan)
     assert q_lambda and "_s#" in q_lambda.group(0), q_lambda
+
+
+def test_repetition_score_splits_text_once(spark):
+    """text_repetition_score's r14 rework materializes the word array:
+    the plan must contain exactly one split of the text column (the six
+    HOF-argument re-splits were ~1.4× the row's whole cost — measured
+    −28% at sf10, plans/r14/ab_rep_wcol.json). CollapseProject would
+    silently reintroduce the re-splits if `w` ever became
+    collapse-eligible."""
+    from data_iceberg_sandbox_spark.operators.textstats import (
+        text_repetition_score,
+    )
+
+    df = text_repetition_score(spark, "/root/testdata/sf0.001")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("split(text") == 1, plan.count("split(text")

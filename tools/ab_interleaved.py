@@ -4,9 +4,9 @@ A,B,B,A,… in ONE session so interference windows and position effects
 hit every arm alike, and the MIN over reps is reported beside the
 median as the interference-robust capability statistic.
 
-The session is the engine's shipping one (``get_spark_session()`` with
-its defaults: AQE on, shuffle partitions = cores), the base tables are
-pinned with bench.py's ``pin_tables``, and every rep is bench.py's
+The session and pin are bench.py's: the engine's shipping session
+(``get_spark_session()`` with its defaults: AQE on, shuffle partitions =
+cores) and ``pin_balanced`` with its defaults. Every rep is bench.py's
 ``time_run`` with the variant's builder: a cache-cold build + execute
 into the ``noop`` sink, the same run the headline times. Per variant the
 payload carries the run times, their min and median, the Spark jobs
@@ -16,12 +16,15 @@ compares it with the first variant of the same query. A host stamp
 (parallel efficiency, memory bandwidth — bench.py's probes) is taken
 before and after the reps.
 
-Usage: python tools/ab_interleaved.py out.json <variants_module> [reps]
+Usage: python tools/ab_interleaved.py out.json <variants_module>
   <variants_module> is a python file defining VARIANTS: dict[str, fn]
   where fn(spark, sf_dir) -> DataFrame. Names of the form
   ``query:arm`` group arms of one query; a name without ``:`` belongs
-  to the single unnamed query.
-Env: SF_DIR (default .scratch/sf10), REPS (default 7).
+  to the single unnamed query. A variant that changes a runtime SQL
+  conf sets every conf it depends on when it builds: the session is
+  shared, so a conf one arm sets is still set when the next arm runs.
+Env: SPARK_GRAFT_SF_DIR (default: bench.py's sf0.1 test data), REPS
+(default 7; a malformed or non-positive value falls back to 7).
 """
 
 from __future__ import annotations
@@ -34,7 +37,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _host_probes, pin_tables, time_run  # noqa: E402
+from bench import _host_probes, env_count, time_run  # noqa: E402
+from data_iceberg_sandbox_spark.session import get_spark_session  # noqa: E402
+from data_iceberg_sandbox_spark.sources.registry import pin_balanced  # noqa: E402
 
 
 def _fingerprint(df) -> list:
@@ -60,20 +65,18 @@ def _host() -> dict:
 
 def main() -> None:
     out_path, mod_path = sys.argv[1], sys.argv[2]
-    reps = int(os.environ.get("REPS", sys.argv[3] if len(sys.argv) > 3 else 7))
-    sf_dir = os.environ.get("SF_DIR", ".scratch/sf10")
+    reps = env_count("REPS", 7)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     spec = importlib.util.spec_from_file_location("ab_variants", mod_path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     variants = mod.VARIANTS
 
-    from data_iceberg_sandbox_spark.session import get_spark_session
-
     host_before = _host()
     spark = get_spark_session(app_name="ab_interleaved")
     sc = spark.sparkContext
-    pin_tables(spark, sf_dir)
+    pin_balanced(spark, sf_dir)
 
     for name, build in variants.items():  # warm every plan (JIT/codegen)
         time_run(spark, build, sf_dir, f"warm:{name}")

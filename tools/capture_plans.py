@@ -6,11 +6,16 @@ Usage:
   python tools/capture_plans.py plans/r14 after tpch_q3_shipping_priority ...
 
 Runs against $SPARK_GRAFT_SF_DIR (default: the sf0.1 test data, as in
-bench.py) in bench.py's session with its base-table pin (``bench_session`` +
-``pin_tables``): pinned tables change scan statistics, and with them
+bench.py) in bench.py's session with its base-table pin: the engine's
+shipping session (``get_spark_session()``) and ``pin_balanced`` with
+their defaults. Pinned tables change scan statistics, and with them
 join strategy choices, so the captured plan is the plan the bench
 times. Plan construction only — nothing is executed beyond the pin and
-the small collects some plan builders do (dim folds).
+the small collects some plan builders do (dim folds). Under AQE (on in
+the shipping session) the captured plan is the INITIAL adaptive plan
+(``AdaptiveSparkPlan isFinalPlan=false``): the join strategies and
+partition counts AQE picks at run time from stage statistics are not
+in it.
 """
 
 from __future__ import annotations
@@ -20,8 +25,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import bench_session, pin_tables  # noqa: E402
 from data_iceberg_sandbox_spark.plans.inspect import formatted_plan  # noqa: E402
+from data_iceberg_sandbox_spark.session import get_spark_session  # noqa: E402
+from data_iceberg_sandbox_spark.sources.registry import pin_balanced  # noqa: E402
 
 
 def main() -> None:
@@ -36,8 +42,8 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"not in the registry: {unknown}")
 
-    spark = bench_session(sf_dir)
-    pin_tables(spark, sf_dir)
+    spark = get_spark_session(app_name="capture_plans")
+    pin_balanced(spark, sf_dir)
 
     for n in names:
         df = queries[n](spark, sf_dir)
