@@ -447,9 +447,6 @@ def main() -> None:
         LakeTable(spark, root).create(
             generate_clients(spark, 0, 200_000),
             partition_by=["category"],
-            # ingest-optimized: skip the per-file stats job (file skipping
-            # is for scan-heavy tables; a raw load lane opts out)
-            properties={"stats.enabled": "false"},
         )
         load_rows_per_sec = round(200_000 / (time.perf_counter() - t0), 1)
     except Exception:

@@ -77,7 +77,7 @@ def build_session_conf(
     get_spark_session r13 so the iceberg-jar branch is testable:
     getOrCreate on a live session silently ignores new confs, so the
     branch could never be asserted through a built session; see
-    tests/test_advice_r13.py). ``jar`` is the detected
+    tests/test_session.py). ``jar`` is the detected
     iceberg-spark-runtime jar path (None → laketable serves the
     lifecycle)."""
     cpus = _cpus()

@@ -102,24 +102,17 @@ def bounded_shuffle(spark: SparkSession, n: int = 8):
             spark.conf.unset(key)
 
 
-def epoch_guarded_write(
-    table: LakeTable, df: DataFrame, epoch: int, stats_off: bool = True
-) -> None:
+def epoch_guarded_write(table: LakeTable, df: DataFrame, epoch: int) -> None:
     """Exactly-once foreachBatch append: the epoch id commits atomically
     WITH the data (a table property on the same manifest), so a
     micro-batch retried after a successful commit — the failure window
     between table commit and checkpoint write — is detected
     (epoch <= last applied) and skipped instead of double-applied.
     ONE implementation for every streaming sink (r12 review: the guard
-    was copy-pasted in three runners and had already drifted).
-
-    ``stats_off`` keeps the ingest lane free of the per-commit stats
-    re-scan (a continuously-appended sink rewrites files every batch;
-    file skipping buys nothing until a terminal compaction)."""
+    was copy-pasted in three runners and had already drifted)."""
     marker = {"streaming.last_epoch": str(epoch)}
     if not table.exists():
-        props = {**marker, "stats.enabled": "false"} if stats_off else marker
-        table.create(df, properties=props)
+        table.create(df, properties=marker)
         return
     last = table.manifest().properties.get("streaming.last_epoch")
     if last is not None and epoch <= int(last):
@@ -296,10 +289,7 @@ def run_fraud_alerts_stream(
                 )
             )
         if not result.exists():
-            # stats off: a continuously-merged MV rewrites files every
-            # micro-batch — the per-commit stats job (one extra Spark
-            # pass per batch) buys nothing until a terminal compaction
-            result.create(out, properties={"stats.enabled": "false"})
+            result.create(out)
         else:
             # the plain aggregate is unique-keyed by construction; the
             # enriched form joins CALLER-SUPPLIED dims (customer_df /
@@ -731,9 +721,6 @@ def _run_stream_stream_join(
     ).select("event_a", "event_b", F.col("user_a").alias("user_id"), "ts_a", "ts_b")
 
     def append_batch(batch_df: DataFrame, epoch: int) -> None:
-        # stats off inside the helper: the per-commit stats pass
-        # re-scans the freshly written files — measured ~25% of each
-        # batch's sink cost here
         epoch_guarded_write(result, batch_df, epoch)
 
     ckpt = table_root + "_ckpt"

@@ -104,12 +104,10 @@ def run_user_profile_stream(
     )
 
     def upsert(batch_df: DataFrame, _epoch: int) -> None:
-        # sink convention (r13 review — drifted from fraud_stream):
-        # stats off for a continuously-rewritten MV, and the stateful
-        # operator emits exactly one row per user_id so the merge's
-        # uniqueness pre-check job is skippable
+        # the stateful operator emits exactly one row per user_id, so
+        # the merge's uniqueness pre-check job is skippable
         if not result.exists():
-            result.create(batch_df, properties={"stats.enabled": "false"})
+            result.create(batch_df)
         else:
             result.merge(
                 batch_df, on=["user_id"], assume_unique_source=True

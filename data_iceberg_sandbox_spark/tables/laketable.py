@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import functools
 import json
+import math
 import os
 import shutil
 import time
@@ -51,6 +52,7 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field, replace as _dc_replace
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -619,7 +621,8 @@ class LakeTable:
         parquet defaults to 1M / ~1% FPR when absent). Bloom bytes live
         in the parquet footers, NOT the JSON manifest — manifests stay
         O(files), and readers that ignore blooms still read the files
-        normally."""
+        normally. The footers' min/max, by contrast, are copied into the
+        manifest by ``_collect_file_stats``."""
         commit_dir = f"data/{uuid.uuid4().hex[:12]}"
         out = os.path.join(self.root, commit_dir)
         writer = df.write.mode("overwrite")
@@ -671,49 +674,23 @@ class LakeTable:
     def _collect_file_stats(
         self, files: list[str], schema_json: str, partition_by: list[str]
     ) -> dict[str, dict[str, list]]:
-        """Per-file min/max for numeric and string columns, one Spark job
-        (input_file_name groupBy) — written into the manifest, Iceberg-
-        manifest-stats style. Partition columns are skipped (directory
-        pruning already covers them)."""
-        if not files:
-            return {}
+        """Per-file min/max for numeric and string columns, read on the
+        driver from the footers the parquet writer produced (as Iceberg
+        takes its manifest metrics from the writer): no Spark job.
+        Partition columns are skipped (directory pruning covers them).
+        Every file gets an entry, ``{}`` when nothing is bounded."""
         schema = T.StructType.fromJson(json.loads(schema_json))
-        stat_cols = [
+        stat_cols = {
             f.name
             for f in schema.fields
             if f.name not in partition_by
             and f.dataType.typeName()
             in ("integer", "long", "short", "byte", "float", "double", "string")
-        ]
-        if not stat_cols:
-            return {}
-        # explicit schema: files predating an add_column lack the new
-        # column (schema-on-read null-fills it; min=NULL → no stat entry),
-        # and empty part-files simply produce no stats row (conservative)
-        df = self._scan_files(schema, files).withColumn("_file", F.input_file_name())
-        aggs = []
-        for c in stat_cols:
-            aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-        rows = df.groupBy("_file").agg(*aggs).collect()
-        # O(1) uri→relpath: part filenames embed a per-task UUID and are
-        # unique, so a basename lookup (endswith-verified) replaces the
-        # old per-row linear suffix scan (r12 review: O(rows×files)
-        # driver work on large manifests)
-        by_name = {os.path.basename(f): f for f in files}
-        out: dict[str, dict[str, list]] = {}
-        for r in rows:
-            uri = r["_file"]
-            rel = by_name.get(os.path.basename(uri))
-            if rel is not None and not uri.endswith(rel):
-                rel = next((f for f in files if uri.endswith(f)), None)
-            if rel is None:
-                continue
-            out[rel] = {
-                c: [r[f"min_{c}"], r[f"max_{c}"]]
-                for c in stat_cols
-                if r[f"min_{c}"] is not None
-            }
-        return out
+        }
+        return {
+            f: _footer_ranges(os.path.join(self.root, f), stat_cols)
+            for f in files
+        }
 
     def _commit(
         self,
@@ -728,10 +705,8 @@ class LakeTable:
     ) -> Manifest:
         os.makedirs(self._manifest_dir, exist_ok=True)
         new_version = (expected_parent or 0) + 1
-        # carry forward stats for retained files; stat only the new ones.
-        # `stats.enabled=false` table property skips the per-commit stats
-        # job (one extra Spark pass, ~30% on raw-load throughput) for
-        # ingest-heavy tables that never benefit from file skipping.
+        # carry forward stats for retained files; read the footers of the
+        # rest (new files, and files of manifests written without stats)
         inherited: dict[str, dict[str, list]] = {}
         parent_man: Manifest | None = None
         if expected_parent is not None:
@@ -740,12 +715,13 @@ class LakeTable:
                 inherited = parent_man.file_stats
             except NoSuchTable:
                 inherited = {}
-        stats = {f: s for f, s in inherited.items() if f in set(files)}
-        if properties.get("stats.enabled", "true") != "false":
-            new_files = [f for f in files if f not in inherited]
-            stats.update(
-                self._collect_file_stats(new_files, schema_json, partition_by)
+        fset = set(files)
+        stats = {f: s for f, s in inherited.items() if f in fset}
+        stats.update(
+            self._collect_file_stats(
+                [f for f in files if f not in inherited], schema_json, partition_by
             )
+        )
         # Sequence threading (Iceberg v2): retained files keep the seq of
         # the commit that added them; new files get this commit's. A
         # delete sidecar is inherited only while at least one data file
@@ -756,16 +732,14 @@ class LakeTable:
         if file_seq is None:
             parent_seq = (parent_man.file_seq if parent_man else {}) or {}
             pv = parent_man.version if parent_man else new_version
+            parent_files = set(parent_man.files) if parent_man else set()
             file_seq = {
-                f: parent_seq.get(f, pv)
-                if parent_man and f in set(parent_man.files)
-                else new_version
+                f: parent_seq.get(f, pv) if f in parent_files else new_version
                 for f in files
             }
         if delete_files is None:
             delete_files = {}
             if parent_man and parent_man.delete_files:
-                fset = set(files)
                 delete_files = {
                     d: seq
                     for d, seq in parent_man.delete_files.items()
@@ -1159,16 +1133,14 @@ class LakeTable:
                 .distinct()
                 .collect()  # bounded by the file count (manifest-grade)
             ]
-            # basename index (unique per-task UUID filenames) instead of
-            # the O(files×hits) suffix scan — same fix as
-            # _collect_file_stats (r12 review)
-            hit_by_name = {os.path.basename(u): u for u in hit_uris}
-            matched = [
-                f
-                for f in cur.files
-                if hit_by_name.get(os.path.basename(f), "").endswith(f)
-            ]
-            kept = [f for f in cur.files if f not in set(matched)]
+            # index each hit by its trailing path components, one key per
+            # file depth: a basename alone repeats across the partition
+            # dirs of one write (every task names its file part-NNNNN in
+            # each dir), and a suffix scan is O(files×hits)
+            depths = {f.count("/") + 1 for f in cur.files}
+            hits = {"/".join(u.split("/")[-d:]) for u in hit_uris for d in depths}
+            matched = [f for f in cur.files if f in hits]
+            kept = [f for f in cur.files if f not in hits]
             if matched:
                 remaining = self._scan_file_subset(cur, matched).filter(~cond_true)
                 new_files = self._write_data_files(
@@ -1988,11 +1960,44 @@ class LakeTable:
         )
 
 
+def _is_nan(v: object) -> bool:
+    return isinstance(v, float) and math.isnan(v)
+
+
+def _footer_ranges(path: str, stat_cols: set[str]) -> dict[str, list]:
+    """[min, max] per ``stat_cols`` column from one parquet footer. A
+    column gets no range when a row group holding values has no min/max
+    (parquet drops large binary bounds) or a NaN bound (Spark orders NaN
+    above every number, so it bounds nothing), nor when the file has no
+    such column (it predates ``add_column``)."""
+    md = pq.read_metadata(path)
+    ranges: dict[str, list] = {}
+    for i in range(md.num_columns):
+        col = md.schema.column(i)
+        if col.path not in stat_cols:
+            continue
+        bounds = []
+        for g in range(md.num_row_groups):
+            chunk = md.row_group(g).column(i)
+            st = chunk.statistics
+            if st is not None and st.null_count == chunk.num_values:
+                continue  # all-null row group: nothing to bound
+            if st is None or not st.has_min_max or _is_nan(st.min) or _is_nan(st.max):
+                break
+            bounds += [st.min, st.max]
+        else:
+            if bounds:
+                ranges[col.path] = [min(bounds), max(bounds)]
+    return ranges
+
+
 def _file_may_match(
     stats: dict[str, list] | None, prune: list[tuple[str, str, object]]
 ) -> bool:
     """Range-intersection check: can a file with these column ranges hold
-    a row satisfying ALL predicates? Missing stats → conservatively yes."""
+    a row satisfying ALL predicates? Missing stats → conservatively yes;
+    so is a NaN bound, which manifests written by the per-commit Spark
+    stats job still hold (``max()`` of a column with NaN is NaN)."""
     if not stats:
         return True
     for col, op, value in prune:
@@ -2000,7 +2005,7 @@ def _file_may_match(
         if not rng:
             continue
         lo, hi = rng
-        if lo is None or hi is None:
+        if lo is None or hi is None or _is_nan(lo) or _is_nan(hi):
             continue
         if op == "=" and not (lo <= value <= hi):
             return False

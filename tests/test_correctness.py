@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 import __spark_entry__ as entry_mod
+from data_iceberg_sandbox_spark.sources.registry import pin_table
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_harness import compare, duckdb_conn
 
@@ -99,21 +100,23 @@ def test_canon_mismatch_still_fails():
         )
 
 
-def _native_cube_multiset(li):
+def _cube_multiset(df):
     rows = [
         (r["l_returnflag"], r["l_linestatus"], r["n"], r["sum_qty"])
-        for r in (
-            li.cube("l_returnflag", "l_linestatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("l_quantity").cast("decimal(18,4)"))
-                .cast("double")
-                .alias("sum_qty"),
-            )
-            .collect()
-        )
+        for r in df.collect()
     ]
     return sorted(rows, key=str)
+
+
+def _native_cube_multiset(li):
+    return _cube_multiset(
+        li.cube("l_returnflag", "l_linestatus").agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("l_quantity").cast("decimal(18,4)"))
+            .cast("double")
+            .alias("sum_qty"),
+        )
+    )
 
 
 def test_cube_packed_key_roundtrips_unicode_and_empty(spark, tmp_path):
@@ -123,7 +126,6 @@ def test_cube_packed_key_roundtrips_unicode_and_empty(spark, tmp_path):
     and the empty string (ascii('')==0 would alias chr(0)) — and keep
     NULL its own group. Multiset equals native .cube on such a domain."""
     from data_iceberg_sandbox_spark.operators.advanced import cube_counts
-    from data_iceberg_sandbox_spark.sources.registry import pin_table
 
     sf_fake = str(tmp_path / "sf_cube_uni")
     os.makedirs(sf_fake, exist_ok=True)
@@ -139,14 +141,53 @@ def test_cube_packed_key_roundtrips_unicode_and_empty(spark, tmp_path):
         "l_returnflag string, l_linestatus string, l_quantity double",
     )
     pin_table(spark, sf_fake, "lineitem", li)
-    got = sorted(
-        (
-            (r["l_returnflag"], r["l_linestatus"], r["n"], r["sum_qty"])
-            for r in cube_counts(spark, sf_fake).collect()
-        ),
-        key=str,
+    assert _cube_multiset(cube_counts(spark, sf_fake)) == _native_cube_multiset(li)
+
+
+def test_cube_counts_null_domain_matches_native(spark, tmp_path):
+    """Genuine NULL grouping values must survive the one-shuffle rewrite
+    as their own groups — output multiset equals native .cube."""
+    from data_iceberg_sandbox_spark.operators.advanced import cube_counts
+
+    sf_fake = str(tmp_path / "sf_cube_null")
+    os.makedirs(sf_fake, exist_ok=True)
+    li = spark.createDataFrame(
+        [
+            Row(l_returnflag="A", l_linestatus="F", l_quantity=1.0),
+            Row(l_returnflag="A", l_linestatus=None, l_quantity=2.0),
+            Row(l_returnflag=None, l_linestatus="F", l_quantity=4.0),
+            Row(l_returnflag=None, l_linestatus=None, l_quantity=8.0),
+            Row(l_returnflag="R", l_linestatus="O", l_quantity=16.0),
+        ],
+        "l_returnflag string, l_linestatus string, l_quantity double",
     )
-    assert got == _native_cube_multiset(li)
+    pin_table(spark, sf_fake, "lineitem", li)
+    assert _cube_multiset(cube_counts(spark, sf_fake)) == _native_cube_multiset(li)
+
+
+def test_cube_counts_empty_input_matches_native(spark, tmp_path):
+    """Empty input → one grand-total row with n=0, the SQL-standard /
+    DuckDB-oracle shape, not (NULL, NULL, NULL, NULL). (Spark's native
+    .cube returns ZERO rows on empty input — a known divergence from
+    the standard; the oracle is the gate, so we match DuckDB.)"""
+    from data_iceberg_sandbox_spark.operators.advanced import cube_counts
+
+    sf_fake = str(tmp_path / "sf_cube_empty")
+    os.makedirs(sf_fake, exist_ok=True)
+    li = spark.createDataFrame(
+        [], "l_returnflag string, l_linestatus string, l_quantity double"
+    )
+    pin_table(spark, sf_fake, "lineitem", li)
+    got = cube_counts(spark, sf_fake).collect()
+    assert len(got) == 1
+    r = got[0]
+    assert (
+        r["l_returnflag"] is None
+        and r["l_linestatus"] is None
+        and r["n"] == 0
+        and r["sum_qty"] is None
+    )
+
 
 
 def test_multi_distinct_bitmap_split_matches_expand_form(spark, tmp_path):
@@ -158,7 +199,6 @@ def test_multi_distinct_bitmap_split_matches_expand_form(spark, tmp_path):
     from data_iceberg_sandbox_spark.operators.advanced import (
         multi_distinct_agg,
     )
-    from data_iceberg_sandbox_spark.sources.registry import pin_table
 
     sf_fake = str(tmp_path / "sf_mdist")
     os.makedirs(sf_fake, exist_ok=True)
@@ -209,7 +249,6 @@ def test_q20_fixed_point_matches_decimal_form(spark, tmp_path):
     from data_iceberg_sandbox_spark.operators.tpch2 import (
         q20_volume_share_suppliers,
     )
-    from data_iceberg_sandbox_spark.sources.registry import pin_table
     from pyspark.sql import Window as W
 
     sf_fake = str(tmp_path / "sf_q20")
@@ -280,7 +319,6 @@ def test_weighted_median_packed_key_roundtrips_flag_domain(spark, tmp_path):
     from data_iceberg_sandbox_spark.operators.advanced import (
         weighted_median_price,
     )
-    from data_iceberg_sandbox_spark.sources.registry import pin_table
     from data_iceberg_sandbox_spark.functions.money import fixed
     from pyspark.sql import Window as W
 
@@ -342,7 +380,6 @@ def test_q17_fixed_point_window_matches_decimal_form(spark, tmp_path):
     from data_iceberg_sandbox_spark.operators.tpch2 import (
         q17_small_quantity,
     )
-    from data_iceberg_sandbox_spark.sources.registry import pin_table
     from pyspark.sql import Window as W
 
     sf_fake = str(tmp_path / "sf_q17")
@@ -388,3 +425,144 @@ def test_q17_fixed_point_window_matches_decimal_form(spark, tmp_path):
     # part 1's qty=0.99 row (price 12.34) + part 2's qty=0.01 row
     # (price 0.01)
     assert got[0][0] == round((12.34 + 0.01) / 7.0, 4)
+
+
+def test_fraud_threshold_grid_aligned_decimal(spark, tmp_path):
+    """thr quantization must floor the DECIMAL rendering, not the float
+    product: at threshold=0.0003 (float*1e4 = 2.9999…) a group summing
+    exactly 0.0003 must be EXCLUDED (strict >), matching the oracle's
+    `> 0.0003` decimal literal; 0.0004 must be included."""
+    from datetime import datetime
+
+    from data_iceberg_sandbox_spark.operators.fraud import fraud_alerts
+
+    sf_fake = str(tmp_path / "sf_fraud_grid")
+    os.makedirs(sf_fake, exist_ok=True)
+    ts = datetime(2026, 1, 1, 0, 0, 30)
+    ev = spark.createDataFrame(
+        [
+            Row(ts=ts, user_id=1, value=0.0003),  # == threshold: excluded
+            Row(ts=ts, user_id=2, value=0.0004),  # > threshold: included
+        ],
+        "ts timestamp, user_id bigint, value double",
+    )
+    pin_table(spark, sf_fake, "events", ev)
+    got = {r["user_id"] for r in fraud_alerts(spark, sf_fake, 0.0003).collect()}
+    assert got == {2}
+    # off-grid threshold still floors down (r12 behavior preserved)
+    got = {r["user_id"] for r in fraud_alerts(spark, sf_fake, 0.00025).collect()}
+    assert got == {1, 2}
+
+
+def test_per_flag_distinct_bitmap_exact(spark):
+    """The bitmap form of the shared exact-distinct helper: exact on
+    negative/boundary keys, and an unexpected flag value shows up as
+    its own row (loud) instead of requiring a closed domain."""
+    from data_iceberg_sandbox_spark.functions.distinct import (
+        per_flag_distinct,
+    )
+
+    rows = [
+        ("A", -70000), ("A", -32769), ("A", -32768), ("A", -1), ("A", -1),
+        ("A", 0), ("A", 32768), ("N", 0), ("N", 0), ("N", 7),
+        ("ZZ", 1), ("ZZ", 1), ("ZZ", 2),
+    ]
+    df = spark.createDataFrame(rows, "flag string, k long")
+    got = {
+        r["flag"]: r["n"]
+        for r in per_flag_distinct(df, "flag", "k", ("A", "N"), out="n").collect()
+    }
+    want = {
+        r["flag"]: r["n"]
+        for r in df.groupBy("flag")
+        .agg(F.countDistinct("k").alias("n"))
+        .collect()
+    }
+    assert got == want == {"A": 6, "N": 2, "ZZ": 2}
+
+
+def test_agg_approx_band_is_a_real_instrument(spark):
+    """The mean±sd band that grades the median sketch must actually be able to FAIL — a garbage 'median' value
+    outside the band yields False (the replaced same-sketch IQR check
+    was monotone-by-construction and could never fire)."""
+    from data_iceberg_sandbox_spark.sources.registry import load_table
+
+    li = load_table(spark, SF_SMOKE, "lineitem")
+    pd_ = F.col("l_extendedprice").cast("double")
+    m = li.groupBy("l_returnflag").agg(
+        (F.sum(pd_) / F.count(pd_)).alias("mean_p"),
+        F.sqrt(
+            F.greatest(
+                F.sum(pd_ * pd_) / F.count(pd_)
+                - (F.sum(pd_) / F.count(pd_)) * (F.sum(pd_) / F.count(pd_)),
+                F.lit(0.0),
+            )
+        ).alias("sd_p"),
+        F.percentile_approx("l_extendedprice", 0.5, 1000).alias("ap50"),
+    )
+    rows = m.collect()
+    assert rows
+    for r in rows:
+        lo, hi = r["mean_p"] - r["sd_p"], r["mean_p"] + r["sd_p"]
+        assert lo <= r["ap50"] <= hi  # real sketch passes
+        assert not (lo <= 0.0 <= hi)  # garbage value fails
+        assert not (lo <= 10 * r["mean_p"] <= hi)
+
+
+def test_pca_degenerate_corpora(spark, tmp_path):
+    """Empty corpus → zero rows (oracle parity); all-zero
+    corpus → 64 NULL loadings (the oracle's 0/0 normalization is NULL),
+    not ZeroDivisionError."""
+    from data_iceberg_sandbox_spark.operators.similarity import (
+        DIM,
+        embedding_pca_power_iteration,
+    )
+
+    sf_a = str(tmp_path / "pca_empty")
+    os.makedirs(sf_a, exist_ok=True)
+    pin_table(
+        spark, sf_a, "embeddings",
+        spark.createDataFrame([], "vec_id bigint, embedding array<float>"),
+    )
+    assert embedding_pca_power_iteration(spark, sf_a).count() == 0
+
+    sf_b = str(tmp_path / "pca_zero")
+    os.makedirs(sf_b, exist_ok=True)
+    pin_table(
+        spark, sf_b, "embeddings",
+        spark.createDataFrame(
+            [Row(vec_id=i, embedding=[0.0] * DIM) for i in range(3)],
+            "vec_id bigint, embedding array<float>",
+        ),
+    )
+    rows = embedding_pca_power_iteration(spark, sf_b).collect()
+    assert len(rows) == DIM
+    assert all(r["loading"] is None for r in rows)
+
+
+def test_interval_tiers_cover_values_past_old_cap(spark, tmp_path):
+    """Values >= 500 (real data reaches 560.21) were
+    silently dropped from every tier on BOTH engines; the top tier is
+    now open-ended and the fact bucket clamps into it."""
+    from datetime import datetime
+
+    from data_iceberg_sandbox_spark.operators.timeseries import (
+        interval_join_value_tiers,
+    )
+
+    sf_fake = str(tmp_path / "tiers_sf")
+    os.makedirs(sf_fake, exist_ok=True)
+    ts = datetime(2026, 1, 1)
+    ev = spark.createDataFrame(
+        [
+            Row(event_id=1, ts=ts, user_id=1, event_type="click", value=10.0, props="{}"),
+            Row(event_id=2, ts=ts, user_id=2, event_type="click", value=499.99, props="{}"),
+            Row(event_id=3, ts=ts, user_id=3, event_type="click", value=560.21, props="{}"),
+            Row(event_id=4, ts=ts, user_id=4, event_type="click", value=1e6, props="{}"),
+        ]
+    )
+    pin_table(spark, sf_fake, "events", ev)
+    got = {r["tier"]: r["n_events"] for r in interval_join_value_tiers(spark, sf_fake).collect()}
+    assert got.get("whale") == 3  # 499.99, 560.21, 1e6 all counted
+    assert got.get("micro") == 1
+    assert sum(got.values()) == 4  # exhaustive: nothing silently dropped

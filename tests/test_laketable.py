@@ -400,6 +400,20 @@ def test_delete_where_rewrites_only_matched_files(spark, scratch, df10):
     assert sorted(r["id"] for r in t.read().collect()) == [2, 3, 4, 5, 6, 7, 8, 9]
 
 
+def test_delete_where_partitioned_matches_files_sharing_a_basename(spark, scratch):
+    """One write names its files part-NNNNN-<uuid> in every partition
+    dir, so a file is matched by its path, not its basename: hits in
+    both partitions delete rows in both."""
+    t = LakeTable(spark, os.path.join(scratch, "t8pp"))
+    df = spark.range(0, 100, 1, 2).withColumn("cat", (F.col("id") % 2).cast("string"))
+    t.create(df, partition_by=["cat"])
+    names = [os.path.basename(f) for f in t.manifest().files]
+    assert len(set(names)) < len(names)
+    t.delete_where(F.col("id") % 5 == 0)
+    assert t.read().count() == 80
+    assert t.read().filter(F.col("id") % 5 == 0).count() == 0
+
+
 def test_delete_where_no_match_is_metadata_only(spark, scratch, df10):
     """A DELETE matching nothing must not rewrite a single file."""
     t = LakeTable(spark, os.path.join(scratch, "t8z"))

@@ -1,5 +1,6 @@
-"""Session factory contract: core-count resolution from the environment
-and the master string a new session would use."""
+"""Session factory contract: core-count resolution from the environment,
+the master string a new session would use, and the Iceberg catalog
+wiring when an iceberg-spark-runtime jar is present."""
 
 from __future__ import annotations
 
@@ -44,3 +45,37 @@ def test_resolve_master_honors_cpus_env(monkeypatch):
     # explicit master env wins over the cpus-derived default
     monkeypatch.setenv("SPARK_GRAFT_MASTER", "local[3]")
     assert resolve_master() == "local[3]"
+
+
+def test_iceberg_jar_branch_selected_when_jar_present(tmp_path, monkeypatch):
+    """The real-Iceberg session branch has no jar in this image, so
+    assert it at the conf layer — a detected
+    iceberg-spark-runtime jar must wire SparkCatalog + extensions, and
+    its absence must leave the conf clean (laketable serves the
+    lifecycle)."""
+    import glob as glob_mod
+
+    from data_iceberg_sandbox_spark import session as sess
+
+    with_jar = sess.build_session_conf(jar="/x/iceberg-spark-runtime-3.5_2.12.jar")
+    assert (
+        with_jar["spark.sql.catalog.lake"]
+        == "org.apache.iceberg.spark.SparkCatalog"
+    )
+    assert "IcebergSparkSessionExtensions" in with_jar["spark.sql.extensions"]
+    assert with_jar["spark.sql.catalog.lake.type"] == "hadoop"
+    assert with_jar["spark.sql.catalog.lake.warehouse"]
+
+    without = sess.build_session_conf(jar=None)
+    assert not any(k.startswith("spark.sql.catalog.") for k in without)
+    assert "spark.sql.extensions" not in without
+
+    # detector: picks up an iceberg-spark-runtime*.jar on the pyspark
+    # jars path (glob mocked — no jar ships in this image)
+    fake = str(tmp_path / "iceberg-spark-runtime-3.5_2.12-1.6.0.jar")
+    monkeypatch.setattr(
+        glob_mod, "glob", lambda pat: [fake] if "iceberg-spark-runtime" in pat else []
+    )
+    assert sess.iceberg_runtime_jar() == fake
+    monkeypatch.setattr(glob_mod, "glob", lambda pat: [])
+    assert sess.iceberg_runtime_jar() is None

@@ -3,15 +3,24 @@ spec's builder, every call builds a fresh plan, and the only plan-level
 cache is Spark's CacheManager — so a query run again after bench.py's
 between-run reset (clearCache + unpersist) executes the plan it
 declares, caches included. The runs below go through bench.py's own
-``time_run`` and ``reset_caches``."""
+``time_run`` and ``reset_caches``. The scan layer's per-session table
+memo keeps entries of sessions it cannot prove stopped, and flags
+``pin_table`` overlays."""
 
 from __future__ import annotations
 
 import json
+import os
 
 import __spark_entry__ as entry_mod
 from bench import reset_caches, time_run
-from tests.conftest import SF_ORACLE
+from data_iceberg_sandbox_spark.sources.registry import (
+    evict_stopped_sessions,
+    is_pinned,
+    load_table,
+    pin_table,
+)
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def _cached_partitions(spark) -> int:
@@ -101,3 +110,39 @@ def test_driver_history_survives_malformed_correctness_file(monkeypatch, tmp_pat
     last_green, seen = entry_mod._driver_history()
     assert last_green == {"q_ok": 1}
     assert seen == {"q_ok"}
+
+
+def test_evict_keeps_entries_with_unknowable_liveness():
+    """A key whose .sparkContext RAISES (Spark Connect) must be kept;
+    only a positive stopped signal (_jsc is None) evicts."""
+
+    class _Ctx:
+        def __init__(self, jsc):
+            self._jsc = jsc
+
+    class _Classic:
+        def __init__(self, jsc):
+            self.sparkContext = _Ctx(jsc)
+
+    class _Connect:
+        @property
+        def sparkContext(self):
+            raise RuntimeError("sparkContext is not supported in Connect")
+
+    live, stopped, connect = _Classic(object()), _Classic(None), _Connect()
+    memo = {live: {"a": 1}, stopped: {"b": 2}, connect: {"c": 3}}
+    evict_stopped_sessions(memo)
+    assert live in memo and connect in memo
+    assert stopped not in memo
+
+
+def test_is_pinned_flags_overlays(spark, tmp_path):
+    """Consumers that fingerprint the on-disk file must be able to
+    detect pin_table overlays."""
+    load_table(spark, SF_SMOKE, "region")
+    assert not is_pinned(spark, SF_SMOKE, "region")
+    sf_fake = str(tmp_path / "pin_sf")
+    os.makedirs(sf_fake, exist_ok=True)
+    pin_table(spark, sf_fake, "events", spark.range(3).withColumnRenamed("id", "x"))
+    assert is_pinned(spark, sf_fake, "events")
+    assert not is_pinned(spark, sf_fake, "lineitem")
