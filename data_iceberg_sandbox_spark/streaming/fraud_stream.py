@@ -40,14 +40,16 @@ per trigger.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.registry import load_table
+from ..sources.registry import is_pinned, load_table
 from ..tables.laketable import LakeTable
 from ..operators.fraud import FRAUD_THRESHOLD
 
@@ -55,51 +57,56 @@ _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__f
 SCRATCH = os.path.join(_REPO_ROOT, ".scratch", "streaming")
 
 
-import functools
-from contextlib import contextmanager
+def fresh_table(spark: SparkSession, table_root: str) -> LakeTable:
+    """Empty result table for a full drain: removes ``table_root`` and
+    its ``_ckpt`` checkpoint dir, so the stream replays the backlog from
+    the start into a table that does not exist yet."""
+    for d in (table_root, table_root + "_ckpt"):
+        if os.path.isdir(d):
+            shutil.rmtree(d)
+    return LakeTable(spark, table_root)
 
 
-def with_bounded_shuffle(fn):
-    """Decorator form of bounded_shuffle for the stream runners (all
-    take `spark` first)."""
+def drain(
+    frame: DataFrame,
+    mode: str,
+    sink: Callable[[DataFrame, int], None],
+    table: LakeTable,
+    partitions: int = 8,
+) -> LakeTable:
+    """The one stream lifecycle: run ``frame`` in output ``mode`` through
+    ``foreachBatch(sink)`` until the backlog is drained (trigger
+    availableNow), checkpointing beside ``table``; returns ``table``.
 
-    @functools.wraps(fn)
-    def wrapper(spark, *args, **kwargs):
-        with bounded_shuffle(spark):
-            return fn(spark, *args, **kwargs)
-
-    return wrapper
-
-
-@contextmanager
-def bounded_shuffle(spark: SparkSession, n: int = 8):
-    """Cap shuffle/state partitioning for a streaming run, then restore.
-
-    A state-store stage materializes `shuffle.partitions` state files
-    PER micro-batch; at test/driver scale a default-200 session turns a
-    2 s pipeline into minutes of file churn. Production jobs set this
-    per workload — these runners do the same, scoped, so they behave
-    under any caller's session.
-
-    `n` is a CAP, not a pin: a caller that explicitly sized the session
-    smaller (bench runs 4 for a 17 MB workload) knows its box better
-    than this default — honoring it is worth ~1.5× stream throughput
-    (measured r3: 8 partitions 14.6k ev/s vs 4 partitions 22.2k on the
-    bench stream; unconditionally pinning 8 caused the r2 regression
-    15.8k → 11.8k flagged in VERDICT)."""
+    Shuffle partitions are capped at ``partitions`` for the drain and
+    restored afterwards, even when the sink raises: a state-store stage
+    writes ``shuffle.partitions`` state files per micro-batch, so an
+    uncapped default-200 session turns a seconds-long drain into minutes
+    of file churn. ``partitions`` caps the session value, it never pins
+    it: a session sized smaller keeps its own value, so the cap changes
+    nothing where shuffle partitions are already <= 8. Every runner,
+    the IVF embedding ingest included, drains under the cap."""
+    conf = frame.sparkSession.conf
     key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key, None)  # None = never explicitly set
-    eff = min(n, int(old)) if old is not None else n
-    spark.conf.set(key, str(eff))
+    old = conf.get(key, None)  # None = never explicitly set
+    conf.set(key, str(min(partitions, int(old)) if old is not None else partitions))
     try:
-        yield
+        (
+            frame.writeStream.outputMode(mode)
+            .foreachBatch(sink)
+            .option("checkpointLocation", table.root + "_ckpt")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
     finally:
         if old is not None:
-            spark.conf.set(key, old)
+            conf.set(key, old)
         else:
-            # restore "unset" — leaving 8 pinned would silently cap the
+            # restore "unset" — leaving the cap would silently limit the
             # caller's batch parallelism for the session's lifetime
-            spark.conf.unset(key)
+            conf.unset(key)
+    return table
 
 
 def epoch_guarded_write(table: LakeTable, df: DataFrame, epoch: int) -> None:
@@ -108,8 +115,7 @@ def epoch_guarded_write(table: LakeTable, df: DataFrame, epoch: int) -> None:
     micro-batch retried after a successful commit — the failure window
     between table commit and checkpoint write — is detected
     (epoch <= last applied) and skipped instead of double-applied.
-    ONE implementation for every streaming sink (r12 review: the guard
-    was copy-pasted in three runners and had already drifted)."""
+    ONE implementation for every appending streaming sink."""
     marker = {"streaming.last_epoch": str(epoch)}
     if not table.exists():
         table.create(df, properties=marker)
@@ -120,28 +126,53 @@ def epoch_guarded_write(table: LakeTable, df: DataFrame, epoch: int) -> None:
     table.append(df, extra_properties=marker)
 
 
-def staging_sig(
-    spark: SparkSession, sf_dir: str, table: str, extra: str
-) -> str | None:
-    """Reuse signature for a staged copy of ``table``: the source
-    parquet's (size, mtime_ns) plus caller params. None DISABLES the
-    memo — when the source can't be statted, or when the registry
-    entry is a pin_table overlay (r13 review: a pinned frame serves
-    data the disk fingerprint does not describe, so a re-pin with an
-    unchanged disk file would otherwise match a stale staging). The
-    (size, mtime) term — not a row count — is what protects against
-    driver testdata regeneration at the same SF (same count, different
-    content)."""
-    from ..sources.registry import is_pinned
+def stage_once(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    out: str,
+    params: str,
+    write: Callable[[str], None],
+) -> str:
+    """Stage a copy of source ``table`` at ``out`` by calling
+    ``write(out)``, unless the copy already there was staged from the
+    same source with the same ``params``; returns ``out``.
 
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if is_pinned(spark, sf_dir, table):
-            return None
-        st = os.stat(src)
-    except OSError:
-        return None
-    return f"{extra}:{st.st_size}:{st.st_mtime_ns}"
+    A staged backlog is the analog of a Kafka topic that already HOLDS
+    its data — re-producing it on every run is not part of the
+    consumer's work (~15 s of a ~60 s sf10 drain). The ``<out>.staged``
+    marker records ``params`` plus the source parquet's (size,
+    mtime_ns); the (size, mtime) term — not a row count — is what
+    protects against testdata regenerated at the same SF (same count,
+    different content). The memo is OFF, and every call restages, when
+    the source cannot be statted or the registry entry is a pin_table
+    overlay: a pinned frame serves data the disk fingerprint does not
+    describe, so a re-pin over an unchanged disk file would otherwise
+    match a stale staging."""
+    marker = out + ".staged"
+    sig = None
+    if not is_pinned(spark, sf_dir, table):
+        try:
+            st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+            sig = f"{params}:{st.st_size}:{st.st_mtime_ns}"
+        except OSError:
+            pass
+    if sig is not None and os.path.isdir(out):
+        try:
+            with open(marker, encoding="utf-8") as mf:
+                if mf.read() == sig:
+                    return out
+        except OSError:
+            pass
+    if os.path.exists(marker):
+        os.remove(marker)
+    if os.path.isdir(out):
+        shutil.rmtree(out)
+    write(out)
+    if sig is not None:
+        with open(marker, "w", encoding="utf-8") as mf:
+            mf.write(sig)
+    return out
 
 
 def stage_event_files(
@@ -159,55 +190,35 @@ def stage_event_files(
     a BOUNDED watermark lossless for stateful consumers. The default
     (one shuffled write) replays in effectively random time order, the
     worst-case backlog."""
+    # loaded on a memo hit too: load_table pins the session's UTC time
+    # zone, which the drained tables' timestamps are read under
+    events = load_table(spark, sf_dir, "events")
+
+    def write(out: str) -> None:
+        if not time_ordered:
+            events.repartition(n_files).write.parquet(out)
+            return
+        os.makedirs(out, exist_ok=True)
+        tmp = out + ".tmp"
+        if os.path.isdir(tmp):  # debris of an interrupted prior staging run
+            shutil.rmtree(tmp)
+        events.repartitionByRange(n_files, F.col("ts")).write.parquet(tmp)
+        # re-commit each range slice as one sequentially-named file so the
+        # file source's (mtime, path) ordering equals event-time ordering
+        parts = sorted(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+        now = time.time()
+        for i, f in enumerate(parts):
+            dst = os.path.join(out, f"{i:05d}.parquet")
+            os.replace(os.path.join(tmp, f), dst)
+            os.utime(dst, (now + i, now + i))  # strictly increasing mtime
+        shutil.rmtree(tmp)
+
     out = os.path.join(
         SCRATCH, f"staged_{name}_{os.path.basename(os.path.normpath(sf_dir))}"
     )
-    events = load_table(spark, sf_dir, "events")
-    # Staging memo (r13): the backlog is the analog of a Kafka topic
-    # that already HOLDS its data — re-producing it on every run is
-    # not part of the consumer's work (~15 s of a ~60 s sf10 drain).
-    marker = out + ".staged"
-    sig = staging_sig(
-        spark, sf_dir, "events", f"{n_files}:{int(time_ordered)}"
+    return stage_once(
+        spark, sf_dir, "events", out, f"{n_files}:{int(time_ordered)}", write
     )
-    if sig is not None:
-        try:
-            with open(marker, encoding="utf-8") as mf:
-                if mf.read() == sig and os.path.isdir(out):
-                    return out
-        except OSError:
-            pass
-    if os.path.exists(marker):
-        os.remove(marker)
-    if os.path.isdir(out):
-        shutil.rmtree(out)
-    if not time_ordered:
-        events.repartition(n_files).write.parquet(out)
-        if sig is not None:
-            with open(marker, "w", encoding="utf-8") as mf:
-                mf.write(sig)
-        return out
-    os.makedirs(out, exist_ok=True)
-    sliced = events.repartitionByRange(n_files, F.col("ts"))
-    tmp = out + ".tmp"
-    if os.path.isdir(tmp):  # debris of an interrupted prior staging run
-        shutil.rmtree(tmp)
-    sliced.write.parquet(tmp)
-    # re-commit each range slice as one sequentially-named file so the
-    # file source's (mtime, path) ordering equals event-time ordering
-    parts = sorted(
-        f for f in os.listdir(tmp) if f.endswith(".parquet")
-    )
-    now = time.time()
-    for i, f in enumerate(parts):
-        dst = os.path.join(out, f"{i:05d}.parquet")
-        os.replace(os.path.join(tmp, f), dst)
-        os.utime(dst, (now + i, now + i))  # strictly increasing mtime
-    shutil.rmtree(tmp)
-    if sig is not None:
-        with open(marker, "w", encoding="utf-8") as mf:
-            mf.write(sig)
-    return out
 
 
 def events_stream(spark: SparkSession, staged_dir: str, files_per_trigger: int = 2):
@@ -236,7 +247,6 @@ def windowed_alerts(stream: DataFrame, threshold: float, watermark: str | None =
     )
 
 
-@with_bounded_shuffle
 def run_fraud_alerts_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -261,9 +271,7 @@ def run_fraud_alerts_stream(
     staged = stage_event_files(
         spark, sf_dir, os.path.basename(os.path.normpath(table_root)), n_files
     )
-    if os.path.isdir(table_root):
-        shutil.rmtree(table_root)
-    result = LakeTable(spark, table_root)
+    result = fresh_table(spark, table_root)
 
     customer = customer_df if customer_df is not None else load_table(spark, sf_dir, "customer")
     nation = nation_df if nation_df is not None else load_table(spark, sf_dir, "nation")
@@ -302,17 +310,7 @@ def run_fraud_alerts_stream(
             )
 
     alerts = windowed_alerts(events_stream(spark, staged, files_per_trigger), threshold)
-    ckpt = table_root + "_ckpt"
-    if os.path.isdir(ckpt):
-        shutil.rmtree(ckpt)
-    q = (
-        alerts.writeStream.outputMode("update")
-        .foreachBatch(upsert_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(alerts, "update", upsert_batch, result)
     if not result.exists():  # no alert crossed the threshold
         # the empty table must carry the SINK schema: with enrich=True
         # that is the 7-column enriched shape, not alerts' 4 columns —
@@ -339,40 +337,19 @@ def run_fraud_alerts_stream(
     return result
 
 
-@with_bounded_shuffle
 def run_append_stream(spark: SparkSession, sf_dir: str, table_root: str) -> LakeTable:
     """S14 stream→table continuous insert / S12 append-only sink: the raw
-    stream appended to a lakehouse table via foreachBatch.
-
-    Exactly-once: the epoch id commits atomically WITH the data (a table
-    property on the same manifest), so a micro-batch retried after a
-    successful commit — failure window between table commit and
-    checkpoint write — is detected (epoch <= last applied) and skipped
-    instead of double-appended."""
+    stream appended exactly once to a lakehouse table via foreachBatch."""
     staged = stage_event_files(spark, sf_dir, "append", n_files=8)
-    if os.path.isdir(table_root):
-        shutil.rmtree(table_root)
-    result = LakeTable(spark, table_root)
-
-    def append_batch(batch_df: DataFrame, epoch: int) -> None:
-        epoch_guarded_write(result, batch_df, epoch)
-
-    ckpt = table_root + "_ckpt"
-    if os.path.isdir(ckpt):
-        shutil.rmtree(ckpt)
-    q = (
-        events_stream(spark, staged, files_per_trigger=2)
-        .writeStream.outputMode("append")
-        .foreachBatch(append_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    result = fresh_table(spark, table_root)
+    return drain(
+        events_stream(spark, staged, files_per_trigger=2),
+        "append",
+        functools.partial(epoch_guarded_write, result),
+        result,
     )
-    q.awaitTermination()
-    return result
 
 
-@with_bounded_shuffle
 def run_mor_profile_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -393,9 +370,7 @@ def run_mor_profile_stream(
     to the one-shot batch groupBy — the same incremental-MV contract as
     the COW-merge runners."""
     staged = stage_event_files(spark, sf_dir, "morprof", n_files=8)
-    if os.path.isdir(table_root):
-        shutil.rmtree(table_root)
-    result = LakeTable(spark, table_root)
+    result = fresh_table(spark, table_root)
 
     prof = (
         events_stream(spark, staged, files_per_trigger)
@@ -415,21 +390,9 @@ def run_mor_profile_stream(
         elif batch_df.take(1):
             result.upsert_keys_mor(batch_df, ["user_id"])
 
-    ckpt = table_root + "_ckpt"
-    if os.path.isdir(ckpt):
-        shutil.rmtree(ckpt)
-    q = (
-        prof.writeStream.outputMode("update")
-        .foreachBatch(upsert_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return result
+    return drain(prof, "update", upsert_batch, result)
 
 
-@with_bounded_shuffle
 def run_dedup_stream(spark: SparkSession, sf_dir: str, table_root: str) -> LakeTable:
     """Streaming deduplication: the backlog is staged TWICE (every event
     duplicated across different micro-batches), and
@@ -440,44 +403,33 @@ def run_dedup_stream(spark: SparkSession, sf_dir: str, table_root: str) -> LakeT
     State note: unbounded key state here (matches the finite backlog);
     production pairs it with ``withWatermark`` so delivered keys age out.
     """
-    staged = os.path.join(
-        SCRATCH, f"staged_dup_{os.path.basename(os.path.normpath(sf_dir))}"
-    )
-    if os.path.isdir(staged):
-        shutil.rmtree(staged)
     ev = load_table(spark, sf_dir, "events")
-    ev.repartition(4).write.parquet(staged)
-    ev.repartition(3).write.mode("append").parquet(staged)  # duplicate delivery
 
-    if os.path.isdir(table_root):
-        shutil.rmtree(table_root)
-    result = LakeTable(spark, table_root)
+    def write(out: str) -> None:
+        ev.repartition(4).write.parquet(out)
+        ev.repartition(3).write.mode("append").parquet(out)  # duplicate delivery
 
-    deduped = events_stream(spark, staged, files_per_trigger=2).dropDuplicates(
-        ["event_id"]
+    staged = stage_once(
+        spark,
+        sf_dir,
+        "events",
+        os.path.join(
+            SCRATCH, f"staged_dup_{os.path.basename(os.path.normpath(sf_dir))}"
+        ),
+        "4+3",
+        write,
+    )
+    result = fresh_table(spark, table_root)
+    # dropDuplicates replays deterministically on restart, so a
+    # post-commit retry would double-append without the epoch guard
+    return drain(
+        events_stream(spark, staged, files_per_trigger=2).dropDuplicates(["event_id"]),
+        "append",
+        functools.partial(epoch_guarded_write, result),
+        result,
     )
 
-    def append_batch(batch_df: DataFrame, epoch: int) -> None:
-        # dropDuplicates replays deterministically on restart, so a
-        # post-commit retry would double-append without the shared
-        # exactly-once guard (r12 review)
-        epoch_guarded_write(result, batch_df, epoch)
 
-    ckpt = table_root + "_ckpt"
-    if os.path.isdir(ckpt):
-        shutil.rmtree(ckpt)
-    q = (
-        deduped.writeStream.outputMode("append")
-        .foreachBatch(append_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return result
-
-
-@with_bounded_shuffle
 def run_session_window_stream(
     spark: SparkSession, sf_dir: str, table_root: str, gap: str = "1 hour"
 ) -> LakeTable:
@@ -493,9 +445,7 @@ def run_session_window_stream(
     O(open sessions); at unbounded scale add a watermark and demote to
     append-mode emission of *closed* sessions — trade-off documented."""
     staged = stage_event_files(spark, sf_dir, "sessmv", n_files=8)
-    if os.path.isdir(table_root):
-        shutil.rmtree(table_root)
-    result = LakeTable(spark, table_root)
+    result = fresh_table(spark, table_root)
 
     agg = (
         events_stream(spark, staged, files_per_trigger=2)
@@ -515,21 +465,9 @@ def run_session_window_stream(
         else:
             result.overwrite(batch_df)
 
-    ckpt = table_root + "_ckpt"
-    if os.path.isdir(ckpt):
-        shutil.rmtree(ckpt)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(overwrite)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return result
+    return drain(agg, "complete", overwrite, result)
 
 
-@with_bounded_shuffle
 def run_sliding_window_stream(
     spark: SparkSession, sf_dir: str, table_root: str
 ) -> LakeTable:
@@ -537,9 +475,7 @@ def run_sliding_window_stream(
     foreachBatch MERGE keyed (window_start, event_type) — same
     maintenance loop as the tumbling MV, overlapping windows included."""
     staged = stage_event_files(spark, sf_dir, "sliding", n_files=8)
-    if os.path.isdir(table_root):
-        shutil.rmtree(table_root)
-    result = LakeTable(spark, table_root)
+    result = fresh_table(spark, table_root)
 
     agg = (
         events_stream(spark, staged, files_per_trigger=2)
@@ -565,18 +501,7 @@ def run_sliding_window_stream(
         else:
             result.merge(batch_df, on=["window_start", "event_type"], assume_unique_source=True)
 
-    ckpt = table_root + "_ckpt"
-    if os.path.isdir(ckpt):
-        shutil.rmtree(ckpt)
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return result
+    return drain(agg, "update", upsert, result)
 
 
 def run_stream_stream_join(
@@ -626,7 +551,7 @@ def run_stream_stream_join(
     r13, the structural fix — coarse time-bucket state keys: state is
     keyed on (user, floor(ts / range)) with the right side replicated
     into its own and the PREVIOUS bucket (a pair's buckets differ by
-    at most 1, see _run_stream_stream_join), so a probe touches only
+    at most 1, see the join below), so a probe touches only
     the two buckets that can satisfy the range instead of the user's
     entire resident state. That removes the quadratic term entirely —
     and flips the r11 slice economics: fat batches are now CHEAPER
@@ -645,30 +570,10 @@ def run_stream_stream_join(
     # 6-file floor keeps the small-SF bench stream genuinely
     # multi-batch at 2 batches (fpt=3), its measured sweet spot
     fpt = 3 if n_files == 6 else max(1, n_files // 8)
-    # backlog-scaled state parallelism: ~300k events per state
-    # partition, floor 8 (the bench-stream sweet spot), capped by the
-    # session value inside bounded_shuffle
-    parts = max(8, n_events // 300_000)
-    with bounded_shuffle(spark, n=parts):
-        return _run_stream_stream_join(
-            spark, sf_dir, table_root, minutes, n_files, fpt
-        )
-
-
-def _run_stream_stream_join(
-    spark: SparkSession,
-    sf_dir: str,
-    table_root: str,
-    minutes: int,
-    n_files: int,
-    fpt: int,
-) -> LakeTable:
     staged = stage_event_files(
         spark, sf_dir, "ssj", n_files=n_files, time_ordered=True
     )
-    if os.path.isdir(table_root):
-        shutil.rmtree(table_root)
-    result = LakeTable(spark, table_root)
+    result = fresh_table(spark, table_root)
 
     # Coarse time-bucket join key (r13 — the batch range-join
     # bucketization applied to the STATE key): with equality on
@@ -720,20 +625,17 @@ def _run_stream_stream_join(
         "inner",
     ).select("event_a", "event_b", F.col("user_a").alias("user_id"), "ts_a", "ts_b")
 
-    def append_batch(batch_df: DataFrame, epoch: int) -> None:
-        epoch_guarded_write(result, batch_df, epoch)
-
-    ckpt = table_root + "_ckpt"
-    if os.path.isdir(ckpt):
-        shutil.rmtree(ckpt)
-    q = (
-        pairs.writeStream.outputMode("append")
-        .foreachBatch(append_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    # backlog-scaled state parallelism: ~300k events per state
+    # partition, floor 8 (the bench-stream sweet spot), capped by the
+    # session value inside drain
+    parts = max(8, n_events // 300_000)
+    drain(
+        pairs,
+        "append",
+        functools.partial(epoch_guarded_write, result),
+        result,
+        partitions=parts,
     )
-    q.awaitTermination()
     if not result.exists():
         result.create(spark.createDataFrame([], pairs.schema))
     return result

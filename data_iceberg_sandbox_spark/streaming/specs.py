@@ -23,7 +23,10 @@ from ..operators.spec import QuerySpec
 from ..sources.registry import load_table
 from .fraud_stream import (
     SCRATCH,
+    drain,
     epoch_guarded_write,
+    events_stream,
+    fresh_table,
     repair_null_enrichment,
     run_append_stream,
     run_dedup_stream,
@@ -32,6 +35,7 @@ from .fraud_stream import (
     run_session_window_stream,
     run_sliding_window_stream,
     run_stream_stream_join,
+    stage_once,
 )
 
 
@@ -129,51 +133,21 @@ def stream_embedding_ivf_ingest(spark, sf_dir):
     batch the kernel is one streamed scan (no shuffle) and the
     changelog append is ≤|cells| rows; nothing driver-side except the
     ≤2 MB centroid matrix each batch's plan build collects."""
-    import shutil
-
     from ..functions.vector import as_double
     from ..operators.similarity import _assign_cells, ivf_centroids
-    from ..tables.laketable import LakeTable
 
-    emb = load_table(spark, sf_dir, "embeddings")
     cents = ivf_centroids(spark, sf_dir).cache()
-
-    # staged-backlog memo (r13, same discipline as stage_event_files:
-    # the embedding log is the immutable topic; signature = source
-    # size+mtime, disabled for pin_table overlays)
-    from .fraud_stream import staging_sig
-
-    staged = _root("staged_emb_ivf", sf_dir)
-    marker = staged + ".staged"
-    sig = staging_sig(spark, sf_dir, "embeddings", "6")
-    fresh = True
-    if sig is not None:
-        try:
-            with open(marker, encoding="utf-8") as mf:
-                fresh = not (mf.read() == sig and os.path.isdir(staged))
-        except OSError:
-            pass
-    if fresh:
-        if os.path.exists(marker):
-            os.remove(marker)
-        if os.path.isdir(staged):
-            shutil.rmtree(staged)
-        emb.repartition(6, F.col("vec_id")).write.parquet(staged)
-        if sig is not None:
-            with open(marker, "w", encoding="utf-8") as mf:
-                mf.write(sig)
-
-    table_root = _root("emb_ivf_mv", sf_dir)
-    if os.path.isdir(table_root):
-        shutil.rmtree(table_root)
-    ckpt = table_root + "_ckpt"
-    if os.path.isdir(ckpt):
-        shutil.rmtree(ckpt)
-    mv = LakeTable(spark, table_root)
-
-    from .fraud_stream import events_stream
-
-    stream = events_stream(spark, staged, files_per_trigger=2)
+    staged = stage_once(
+        spark,
+        sf_dir,
+        "embeddings",
+        _root("staged_emb_ivf", sf_dir),
+        "6",
+        lambda out: load_table(spark, sf_dir, "embeddings")
+        .repartition(6, F.col("vec_id"))
+        .write.parquet(out),
+    )
+    mv = fresh_table(spark, _root("emb_ivf_mv", sf_dir))
 
     def ingest(batch_df, epoch):
         # a 2-file micro-batch arrives with 2 input partitions, which
@@ -194,20 +168,9 @@ def stream_embedding_ivf_ingest(spark, sf_dir):
         counts = assigned.groupBy("cent_id").agg(
             F.count(F.lit(1)).alias("n_vecs")
         )
-        # Exactly-once: shared epoch-marker guard — a micro-batch
-        # retried after a successful append (failure window between
-        # table commit and checkpoint write) is skipped, not
-        # double-counted.
         epoch_guarded_write(mv, counts, epoch)
 
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(ingest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(events_stream(spark, staged, files_per_trigger=2), "append", ingest, mv)
     return (
         mv.read()
         .groupBy("cent_id")

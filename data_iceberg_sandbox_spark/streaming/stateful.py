@@ -18,7 +18,6 @@ forever semantics (streaming-usecase.md windows never expire).
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Iterator
 from typing import Any
 
@@ -29,7 +28,13 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.spec import QuerySpec
 from ..tables.laketable import LakeTable
-from .fraud_stream import SCRATCH, events_stream, stage_event_files
+from .fraud_stream import (
+    SCRATCH,
+    drain,
+    events_stream,
+    fresh_table,
+    stage_event_files,
+)
 
 STATE_SCHEMA = "n long, total_cents long, last_ts long"  # cents = value*10^4
 OUTPUT_SCHEMA = (
@@ -76,19 +81,13 @@ def _update_profile(
     )
 
 
-from .fraud_stream import with_bounded_shuffle
-
-
-@with_bounded_shuffle
 def run_user_profile_stream(
     spark: SparkSession, sf_dir: str, table_root: str
 ) -> LakeTable:
     """Drain the staged events backlog through the stateful operator,
     merging each micro-batch's updated profiles by user_id."""
     staged = stage_event_files(spark, sf_dir, "profile", n_files=8)
-    if os.path.isdir(table_root):
-        shutil.rmtree(table_root)
-    result = LakeTable(spark, table_root)
+    result = fresh_table(spark, table_root)
 
     stream = events_stream(spark, staged, files_per_trigger=2)
     profiles = (
@@ -113,18 +112,7 @@ def run_user_profile_stream(
                 batch_df, on=["user_id"], assume_unique_source=True
             )
 
-    ckpt = table_root + "_ckpt"
-    if os.path.isdir(ckpt):
-        shutil.rmtree(ckpt)
-    q = (
-        profiles.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return result
+    return drain(profiles, "update", upsert, result)
 
 
 def stream_user_profiles(spark, sf_dir):

@@ -6,14 +6,21 @@ from __future__ import annotations
 import os
 import re
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from data_iceberg_sandbox_spark.operators.fraud import fraud_alerts_oracle_sql
-from data_iceberg_sandbox_spark.sources.registry import load_table
+from data_iceberg_sandbox_spark.sources.registry import load_table, pin_table
 from data_iceberg_sandbox_spark.streaming.fraud_stream import (
     SCRATCH,
+    drain,
+    epoch_guarded_write,
+    events_stream,
+    fresh_table,
     repair_null_enrichment,
     run_fraud_alerts_stream,
+    stage_event_files,
 )
 from data_iceberg_sandbox_spark.tables.laketable import LakeTable
 from tests.conftest import SF_ORACLE, SF_SMOKE
@@ -24,28 +31,97 @@ def test_append_stream_epoch_retry_is_idempotent(spark, scratch):
     """A micro-batch retried after a successful table commit (failure
     between commit and checkpoint write) must be skipped: the epoch
     marker commits atomically with the data."""
-    from data_iceberg_sandbox_spark.tables.laketable import LakeTable
-
-    root = os.path.join(scratch, "append_epoch")
-    t = LakeTable(spark, root)
+    t = LakeTable(spark, os.path.join(scratch, "append_epoch"))
     batch = spark.range(5).withColumn("v", F.col("id") * 2)
 
-    def append_batch(batch_df, epoch):  # mirrors run_append_stream's sink
-        marker = {"streaming.last_epoch": str(epoch)}
-        if not t.exists():
-            t.create(batch_df, properties=marker)
-        else:
-            last = t.manifest().properties.get("streaming.last_epoch")
-            if last is not None and epoch <= int(last):
-                return
-            t.append(batch_df, extra_properties=marker)
-
-    append_batch(batch, 0)
-    append_batch(batch, 1)
-    append_batch(batch, 1)  # retry of an already-committed epoch
+    epoch_guarded_write(t, batch, 0)
+    epoch_guarded_write(t, batch, 1)
+    epoch_guarded_write(t, batch, 1)  # retry of an already-committed epoch
     assert t.read().count() == 10  # not 15
-    append_batch(batch, 2)
+    epoch_guarded_write(t, batch, 2)
     assert t.read().count() == 15
+
+
+def _listing(d):
+    return {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)}
+
+
+@pytest.mark.parametrize("time_ordered", [False, True])
+def test_stage_event_files_memo(spark, time_ordered):
+    """An unchanged source is staged once: a second call rewrites no
+    file and runs no Spark job. A different file count restages."""
+    name = f"memo_{int(time_ordered)}"
+    out = stage_event_files(spark, SF_SMOKE, name, 4, time_ordered)
+    before = _listing(out)
+    sc = spark.sparkContext
+    sc.setJobGroup("stage_memo", "stage_memo")
+    try:
+        assert stage_event_files(spark, SF_SMOKE, name, 4, time_ordered) == out
+        jobs = sc.statusTracker().getJobIdsForGroup("stage_memo")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    assert _listing(out) == before
+
+    stage_event_files(spark, SF_SMOKE, name, 3, time_ordered)
+    parts = [f for f in os.listdir(out) if f.endswith(".parquet")]
+    assert len(parts) == 3
+    with open(out + ".staged", encoding="utf-8") as mf:
+        assert mf.read().startswith(f"3:{int(time_ordered)}:")
+
+
+def test_stage_event_files_restages_pinned_overlay(spark, scratch):
+    """A pin_table overlay serves data the on-disk file does not
+    describe, so its staging writes no marker and restages per call."""
+    sf = os.path.join(scratch, "memo_pinned")
+    events = load_table(spark, SF_SMOKE, "events")
+    events.write.parquet(os.path.join(sf, "events.parquet"))
+    pin_table(spark, sf, "events", events.limit(50))
+
+    out = stage_event_files(spark, sf, "memo_pin", n_files=2)
+    first = _listing(out)
+    assert stage_event_files(spark, sf, "memo_pin", n_files=2) == out
+    assert not os.path.exists(out + ".staged")
+    assert not {f for f in _listing(out) if f.startswith("part-")} & set(first)
+    assert spark.read.parquet(out).count() == 50  # the overlay, not disk
+
+
+@pytest.mark.parametrize("session, partitions", [("6", 4), ("3", 8), (None, 5)])
+def test_drain_caps_and_restores_shuffle_partitions(
+    spark, scratch, session, partitions
+):
+    """drain runs the sink under min(partitions, session value) shuffle
+    partitions and hands the caller's value back, also when the sink
+    raises."""
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    want = str(partitions if session is None else min(partitions, int(session)))
+    seen = []
+
+    def sink(batch_df, _epoch):
+        seen.append(batch_df.sparkSession.conf.get(key))
+
+    def failing_sink(batch_df, _epoch):
+        raise RuntimeError("sink failed")
+
+    try:
+        if session is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, session)
+        staged = stage_event_files(spark, SF_SMOKE, "drain_cap", n_files=2)
+        frame = events_stream(spark, staged, files_per_trigger=1)
+        t = fresh_table(spark, os.path.join(scratch, f"drain_cap_{session}"))
+        assert drain(frame, "append", sink, t, partitions) is t
+        assert len(seen) == 2 and set(seen) == {want}
+        assert spark.conf.get(key, None) == session
+
+        t = fresh_table(spark, os.path.join(scratch, f"drain_fail_{session}"))
+        with pytest.raises(StreamingQueryException, match="sink failed"):
+            drain(frame, "append", failing_sink, t, partitions)
+        assert spark.conf.get(key, None) == session
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_multi_batch_incremental_merge(spark):
@@ -124,12 +200,6 @@ def test_streaming_ingest_into_branch_then_fast_forward(spark, scratch):
     `spark.wap.branch` streaming-ingest pattern. Multi-batch is real
     (maxFilesPerTrigger=2 over an 8-file backlog); main must still be
     at the fork while every batch accumulates on the branch."""
-    from data_iceberg_sandbox_spark.streaming.fraud_stream import (
-        events_stream,
-        stage_event_files,
-    )
-    from data_iceberg_sandbox_spark.tables.laketable import LakeTable
-
     staged = stage_event_files(spark, SF_SMOKE, "branch_ingest")
     batch_events = spark.read.parquet(staged)
     seed = batch_events.limit(0)
@@ -176,7 +246,6 @@ def test_stream_stream_join_bucket_boundaries(spark, scratch):
 
     from pyspark.sql import Row
 
-    from data_iceberg_sandbox_spark.sources.registry import pin_table
     from data_iceberg_sandbox_spark.streaming.fraud_stream import (
         run_stream_stream_join,
     )
