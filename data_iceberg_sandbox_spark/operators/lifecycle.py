@@ -209,17 +209,18 @@ D_INC_ORACLE = "SELECT * FROM orders WHERE o_orderkey % 3 <> 0"
 
 def d_wap_audit_publish(spark, sf_dir):
     """Write-audit-publish: the Iceberg branch-based ingestion gate
-    (public `spark.wap.branch` / stage-commit workflow) as a staged-
-    snapshot protocol. A batch is written to a STAGED snapshot that
-    readers cannot see, audited there, and only promoted to the table
-    head if the audit passes:
+    (public `spark.wap.branch` / stage-commit workflow). `stage_append`
+    writes a batch to a one-batch branch that main readers cannot see;
+    it is audited there and only lands on the table head if the audit
+    passes:
 
     - batch 1 (clean) stages, audits green (no NULL keys, no
-      non-positive totals), publishes — a CAS against the parent it
-      was staged from, so a concurrent writer cannot be overwritten;
+      non-positive totals) and lands with `fast_forward` — a CAS
+      against the snapshot the branch forked from, so a concurrent
+      writer cannot be overwritten;
     - batch 2 arrives corrupted (negated totals); the audit counts
-      violations on `read_staged` — executor-side scan, one count row
-      to the driver — and the token is abandoned: nothing it wrote is
+      violations on `read_branch` — executor-side scan, one count row
+      to the driver — and the stage is dropped: nothing it wrote is
       visible, and `remove_orphan_files` would GC its data files.
 
     Final state (create + published batch, none of the poisoned one)
@@ -236,18 +237,18 @@ def d_wap_audit_publish(spark, sf_dir):
         ).count()
 
     good = t.stage_append(orders.filter(F.col("o_orderkey") % 3 == 1))
-    if audit_violations(t.read_staged(good)) != 0:
+    if audit_violations(t.read_branch(good)) != 0:
         raise AssertionError("good-batch WAP audit found violations")
-    t.publish(good)
+    t.fast_forward(good)
 
     poisoned = orders.filter(F.col("o_orderkey") % 3 == 2).withColumn(
         "o_totalprice", -F.col("o_totalprice")
     )
     bad = t.stage_append(poisoned)
-    n_bad = audit_violations(t.read_staged(bad))
+    n_bad = audit_violations(t.read_branch(bad))
     if n_bad == 0:  # poisoned batch must trip the audit — else fail loud
         raise AssertionError("WAP audit failed to catch poisoned batch")
-    # abandoned: token never published; staged files are orphans
+    t.drop_branch(bad)  # abandoned: its data files are orphans
     return t.read()
 
 
@@ -431,17 +432,17 @@ D_ROLLBACK_ORACLE = "SELECT * FROM orders WHERE o_orderkey % 3 <> 2"
 def d_orphan_cleanup(spark, sf_dir):
     """``remove_orphan_files``: orphan GC deletes exactly the data files
     no referenced metadata points at, and table content is untouched.
-    Three guards exercised: (1) a LIVE staged WAP append is referenced
-    metadata — its files survive GC even with a far-future cutoff
-    (Iceberg treats wap/branch snapshots as live refs); (2) abandoning
-    the stage via ``expire_staged`` makes those files orphans, but the
-    default cutoff (newest snapshot ts) still keeps them as
-    possibly-in-flight; (3) an explicit far-future cutoff collects
-    them."""
+    Three guards exercised: (1) a LIVE write-audit-publish stage (a
+    one-batch branch) is referenced metadata — its files survive GC
+    even with a far-future cutoff (Iceberg treats wap/branch snapshots
+    as live refs); (2) abandoning the stage via ``drop_branch`` makes
+    those files orphans, but the default cutoff (newest snapshot ts)
+    still keeps them as possibly-in-flight; (3) an explicit far-future
+    cutoff collects them."""
     orders = load_table(spark, sf_dir, "orders")
     t = _fresh_table(spark, "dorph_orders", sf_dir)
     t.create(orders.filter(F.col("o_orderkey") % 2 == 0))
-    # staged append: data files land under data/, manifest stays staged
+    # stage: data files land under data/, only the branch ref lists them
     token = t.stage_append(orders.filter(F.col("o_orderkey") % 2 == 1))
     # (1) live stage = referenced → never an orphan, any cutoff
     # (fixed far-future epoch: 2100-01-01, deterministic)
@@ -449,9 +450,9 @@ def d_orphan_cleanup(spark, sf_dir):
     # skip the side-effectful GC calls under test entirely (r12 review;
     # the d_branch_fast_forward convention)
     if t.remove_orphan_files(older_than_ms=4102444800000) != []:
-        raise AssertionError("GC collected files of a LIVE staged append")
+        raise AssertionError("GC collected files of a LIVE WAP stage")
     # (2) abandon the stage (crash/lost-CAS case modeled explicitly)
-    t.expire_staged(token)
+    t.drop_branch(token)
     # default cutoff = newest snapshot's ts → the younger orphaned files
     # must be treated as possibly-in-flight and kept
     if t.remove_orphan_files() != []:

@@ -225,7 +225,7 @@ class LakeTable:
         man: "Manifest",
         prune: list[tuple[str, str, object]] | None = None,
     ) -> DataFrame:
-        """Shared scan body for read() and read_staged(): file pruning
+        """Shared scan body for read() and read_branch(): file pruning
         and merge-on-read delete application."""
         schema = T.StructType.fromJson(json.loads(man.schema_json))
         files = man.files
@@ -279,46 +279,32 @@ class LakeTable:
         Scans ONLY each snapshot's newly-added files (set difference vs
         its parent manifest), never the table history — at 100 TB a
         catch-up of 3 appends reads 3 appends' worth of data, not the
-        table. Raises :class:`IncrementalReadError` if the range holds a
-        non-append commit with a file delta (merge/overwrite/delete/
-        compact rewrite rows in place; their delta is not an append
-        changelog — Iceberg's incremental scan has the same
-        restriction). Metadata-only commits (schema evolution, property
-        changes) add no files and pass through. Raises
-        :class:`NoSuchTable` if a manifest in the range was expired."""
+        table. A commit counts as an append by what it did, not by its
+        name (:func:`_only_adds`): appends, branch fast-forwards and
+        WAP publishes, and metadata-only commits (schema evolution,
+        property changes), which add no files and pass through. Raises
+        :class:`IncrementalReadError` if the range holds any other
+        commit: one that drops files (merge/overwrite/delete/compact
+        rewrite rows in place) or changes the delete sidecars (a
+        merge-on-read delete or upsert suppresses existing rows) — its
+        delta is not an append changelog, and Iceberg's incremental
+        scan has the same restriction. Raises :class:`NoSuchTable` if a
+        manifest in the range was expired."""
         to_v = self.current_version() if to_version is None else to_version
         if to_v < from_version:
             raise ValueError(f"to_version {to_v} < from_version {from_version}")
-        prev = set(self.manifest(from_version).files)
+        prev = self.manifest(from_version)
         new_files: list[str] = []
         for v in range(from_version + 1, to_v + 1):
             man = self.manifest(v)
-            delta = [f for f in man.files if f not in prev]
-            if man.operation == "delete-mor":
-                # metadata-only commit, but it REMOVES rows: an
-                # appends-only changelog cannot represent it
-                raise IncrementalReadError(
-                    f"snapshot v{v} is a merge-on-read delete; "
-                    "incremental read supports appends only"
-                )
-            # publish_staged_append is an append by construction (the
-            # WAP publish promotes staged new files; changes_between
-            # already classifies it as insert-kind) — r12 review
-            if delta and man.operation not in (
-                "create", "append", "publish_staged_append"
-            ):
+            if not _only_adds(man, prev):
                 raise IncrementalReadError(
                     f"snapshot v{v} is a '{man.operation}' commit; "
                     "incremental read supports appends only"
                 )
-            new_files.extend(delta)
-            prev = set(man.files)
-        schema = T.StructType.fromJson(
-            json.loads(self.manifest(to_v).schema_json)
-        )
-        if not new_files:
-            return self.spark.createDataFrame([], schema)
-        return self._scan_files(schema, new_files)
+            new_files.extend(_added_files(man, prev))
+            prev = man
+        return self._scan_file_subset(prev, new_files)
 
     def _scan_files(self, schema: T.StructType, flist: list[str]) -> DataFrame:
         """Distributed scan over a concrete file list, one parquet scan
@@ -362,20 +348,24 @@ class LakeTable:
         pair) and ``_commit_version``. Unlike :meth:`read_incremental`
         (appends only), this replays EVERY commit kind.
 
-        Cost model, per commit in the range — sized for 100 TB tables:
-        - create/append/staged publish: scans ONLY the appended files
-          (an append never suppresses or rewrites existing rows).
-        - copy-on-write merge/delete/overwrite with no live equality
-          sidecars: net multiset diff (``exceptAll``) of the commit's
-          FILE DELTA — unchanged files are never read, and rewritten-
-          but-identical rows cancel out of the changelog.
-        - merge-on-read commits, rollbacks, and COW under live
-          sidecars: multiset diff of the two adjacent snapshot reads.
-          Equality sidecars store KEYS, not rows — recovering deleted
-          row content inherently re-reads the rows they erased
-          (Iceberg's changelog for equality deletes pays the same).
-        - compact / clustering rewrites / partition-spec evolution:
-          row-identical by construction — skipped, no scan at all.
+        Cost model, per commit in the range — sized for 100 TB tables.
+        A commit is classified by its file delta, not its name:
+        - compact / clustering rewrites / partition-spec evolution
+          (``_REWRITE_OPS``): row-identical by construction — skipped,
+          no scan at all.
+        - commits that only add files (:func:`_only_adds`: create,
+          append, branch fast-forward, WAP publish; metadata-only
+          commits add nothing): scans ONLY the added files.
+        - any other commit with no live equality sidecars on either
+          side (copy-on-write merge/delete/overwrite, rollback): net
+          multiset diff (``exceptAll``) of the commit's FILE DELTA —
+          unchanged files are never read, and rewritten-but-identical
+          rows cancel out of the changelog.
+        - the rest (merge-on-read commits, COW under live sidecars):
+          multiset diff of the two adjacent snapshot reads. Equality
+          sidecars store KEYS, not rows — recovering deleted row
+          content inherently re-reads the rows they erased (Iceberg's
+          changelog for equality deletes pays the same).
 
         Raises :class:`IncrementalReadError` if the range crosses a
         schema change (one frame cannot carry two schemas — split the
@@ -434,33 +424,24 @@ class LakeTable:
                     "schema; a changelog across schema versions is not "
                     f"representable as one frame — split the range at v{v}"
                 )
-            op = man.operation
-            prev_files = set(prev_man.files)
-            cur_files = set(man.files)
-            adds = [f for f in man.files if f not in prev_files]
-            drops = [f for f in prev_man.files if f not in cur_files]
-            if op in self._REWRITE_OPS or (
-                not adds
-                and not drops
-                and man.delete_files == prev_man.delete_files
-            ):
-                prev_man = man
-                continue
-            if op in ("create", "append", "publish_staged_append"):
+            if man.operation in self._REWRITE_OPS:
+                pass  # row-identical: no changelog rows, no scan
+            elif _only_adds(man, prev_man):
+                adds = _added_files(man, prev_man)
                 if adds:
                     parts.append(
                         _tag(self._scan_file_subset(man, adds), "insert", v)
                     )
-            elif op in ("overwrite", "merge", "delete") and not (
-                man.delete_files or prev_man.delete_files
-            ):
-                a = self._scan_file_subset(man, adds)
-                d = self._scan_file_subset(prev_man, drops)
+            elif not (man.delete_files or prev_man.delete_files):
+                # the file delta: man's added files against the dropped
+                # ones (the files prev_man "adds" over man)
+                a = self._scan_file_subset(man, _added_files(man, prev_man))
+                d = self._scan_file_subset(prev_man, _added_files(prev_man, man))
                 parts.append(_tag(a.exceptAll(d), "insert", v))
                 parts.append(_tag(d.exceptAll(a), "delete", v))
             else:
-                cur_df = self.read(version=v)
-                old_df = self.read(version=v - 1)
+                cur_df = self._scan_manifest(man)
+                old_df = self._scan_manifest(prev_man)
                 parts.append(_tag(cur_df.exceptAll(old_df), "insert", v))
                 parts.append(_tag(old_df.exceptAll(cur_df), "delete", v))
             prev_man = man
@@ -481,8 +462,10 @@ class LakeTable:
         two table snapshots. Callers net by key (Σ_src = 0 drops) or by
         whole row. Falls back to two full version reads only under live
         equality-delete sidecars (suppression is version-dependent
-        per-row, not per-file). Raises IncrementalReadError across a
-        schema change, like :meth:`changes_between`."""
+        per-row, not per-file), unless the to-version only adds files
+        to the from-version (:func:`_only_adds`). Raises
+        IncrementalReadError across a schema change, like
+        :meth:`changes_between`."""
         to_v = self.current_version() if to_version is None else to_version
         m_from, m_to = self.manifest(from_version), self.manifest(to_v)
         if m_from.schema_json != m_to.schema_json:
@@ -490,17 +473,14 @@ class LakeTable:
                 f"snapshot v{from_version}→v{to_v} crosses a schema "
                 "change; diff each schema era separately"
             )
-        if m_from.delete_files or m_to.delete_files:
-            plus = self.read(version=to_v)
-            minus = self.read(version=from_version)
+        if _only_adds(m_to, m_from) or not (
+            m_from.delete_files or m_to.delete_files
+        ):
+            plus = self._scan_file_subset(m_to, _added_files(m_to, m_from))
+            minus = self._scan_file_subset(m_from, _added_files(m_from, m_to))
         else:
-            from_set, to_set = set(m_from.files), set(m_to.files)
-            plus = self._scan_file_subset(
-                m_to, [f for f in m_to.files if f not in from_set]
-            )
-            minus = self._scan_file_subset(
-                m_from, [f for f in m_from.files if f not in to_set]
-            )
+            plus = self._scan_manifest(m_to)
+            minus = self._scan_manifest(m_from)
         return plus.withColumn("_src", F.lit(1)).unionByName(
             minus.withColumn("_src", F.lit(-1))
         )
@@ -517,18 +497,18 @@ class LakeTable:
         ``older_than`` has the same role; default keeps only files older
         than the newest live snapshot's timestamp).
 
-        Live set = committed snapshots ∪ staged WAP manifests ∪ branch
-        refs: a staged-but-unpublished append and an unlanded branch are
+        Live set = committed snapshots ∪ branch refs: an unlanded branch
+        (a write-audit-publish stage is a one-batch branch) is
         referenced metadata (Iceberg treats wap/branch snapshots the
-        same way), so their data files are NOT orphans regardless of
-        cutoff. To GC an abandoned stage, drop its token first via
-        ``expire_staged``; branches via ``drop_branch``."""
+        same way), so its data files are NOT orphans regardless of
+        cutoff. To GC an abandoned branch or stage, drop it first via
+        ``drop_branch``."""
         mans = self.snapshots()
         if not mans:
             return []
         if older_than_ms is None:
             older_than_ms = mans[-1].timestamp_ms
-        live = self._referenced_files(mans)
+        live = self._referenced_files(mans + self._branches())
         removed: list[str] = []
         data_dir = os.path.join(self.root, "data")
         if not os.path.isdir(data_dir):
@@ -551,15 +531,13 @@ class LakeTable:
         return sorted(removed)
 
     def _referenced_files(self, mans: list["Manifest"]) -> set:
-        """Every file any referenced metadata points at: committed
-        snapshots' data files AND merge-on-read delete sidecars, plus
-        the same for staged WAP manifests and branch refs (r12 review:
-        the first cut omitted delete sidecars, so GC could delete a
-        live MoR sidecar and every later read would crash — or, worse,
-        resurrect the deleted rows)."""
+        """Every file the given snapshots and branch refs point at: data
+        files AND merge-on-read delete sidecars (r12 review: the first
+        cut omitted delete sidecars, so GC could delete a live MoR
+        sidecar and every later read would crash — or, worse, resurrect
+        the deleted rows)."""
         live: set = set()
-
-        def add(m: "Manifest") -> None:
+        for m in mans:
             live.update(m.files)
             for d in m.delete_files:
                 # an equality-delete sidecar is a parquet DIRECTORY —
@@ -572,26 +550,6 @@ class LakeTable:
                                 os.path.relpath(os.path.join(dp, fn), self.root)
                             )
                 live.add(d)
-
-        for m in mans:
-            add(m)
-        for fn in os.listdir(self._manifest_dir):
-            if fn.startswith(("staged_", "branch_")) and fn.endswith(".json"):
-                try:
-                    with open(
-                        os.path.join(self._manifest_dir, fn), encoding="utf-8"
-                    ) as fh:
-                        add(Manifest.from_json(fh.read()))
-                except (ValueError, OSError):
-                    # truncated/corrupt ref = crash debris from a writer
-                    # that never returned a token (stage/branch writes
-                    # are tmp+rename, so this file was not produced by
-                    # this code path completing). Its files can't be
-                    # enumerated and were never referenced by a
-                    # completed operation — skip it so GC keeps working;
-                    # the age cutoff still protects anything genuinely
-                    # in flight.
-                    continue
         return live
 
     def files_scanned(self, prune: list[tuple[str, str, object]]) -> int:
@@ -696,25 +654,28 @@ class LakeTable:
         self,
         operation: str,
         files: list[str],
-        schema_json: str,
-        partition_by: list[str],
-        properties: dict[str, str],
-        expected_parent: int | None,
+        parent_man: Manifest | None,
+        schema_json: str | None = None,
+        partition_by: list[str] | None = None,
+        properties: dict[str, str] | None = None,
         delete_files: dict[str, int] | None = None,
         file_seq: dict[str, int] | None = None,
     ) -> Manifest:
+        """Commit ``files`` as the snapshot after ``parent_man`` (the
+        manifest the caller read; None only for create). Schema,
+        partition spec and properties default to the parent's."""
+        if parent_man is not None:
+            schema_json = schema_json or parent_man.schema_json
+            if partition_by is None:
+                partition_by = parent_man.partition_by
+            if properties is None:
+                properties = parent_man.properties
+        expected_parent = parent_man.version if parent_man else None
         os.makedirs(self._manifest_dir, exist_ok=True)
         new_version = (expected_parent or 0) + 1
         # carry forward stats for retained files; read the footers of the
         # rest (new files, and files of manifests written without stats)
-        inherited: dict[str, dict[str, list]] = {}
-        parent_man: Manifest | None = None
-        if expected_parent is not None:
-            try:
-                parent_man = self.manifest(expected_parent)
-                inherited = parent_man.file_stats
-            except NoSuchTable:
-                inherited = {}
+        inherited = parent_man.file_stats if parent_man else {}
         fset = set(files)
         stats = {f: s for f, s in inherited.items() if f in fset}
         stats.update(
@@ -864,10 +825,10 @@ class LakeTable:
         self._commit(
             "create",
             files,
+            None,
             json.dumps(df.schema.jsonValue()),
             partition_by,
             properties or {},
-            expected_parent=None,
         )
         return self
 
@@ -883,16 +844,11 @@ class LakeTable:
         new_files = self._write_data_files(
             _align(df, cur.schema_json), cur.partition_by, cur.properties
         )
-        props = dict(cur.properties)
-        if extra_properties:
-            props.update(extra_properties)
         self._commit(
             "append",
             sorted(cur.files + new_files),
-            cur.schema_json,
-            cur.partition_by,
-            props,
-            expected_parent=cur.version,
+            cur,
+            properties={**cur.properties, **(extra_properties or {})},
         )
         return self
 
@@ -901,14 +857,7 @@ class LakeTable:
         files = self._write_data_files(
             _align(df, cur.schema_json), cur.partition_by, cur.properties
         )
-        self._commit(
-            "overwrite",
-            files,
-            cur.schema_json,
-            cur.partition_by,
-            cur.properties,
-            expected_parent=cur.version,
-        )
+        self._commit("overwrite", files, cur)
         return self
 
     def merge(
@@ -1090,14 +1039,7 @@ class LakeTable:
         )
 
         files = self._write_data_files(merged, cur.partition_by, cur.properties)
-        self._commit(
-            "merge",
-            files,
-            cur.schema_json,
-            cur.partition_by,
-            cur.properties,
-            expected_parent=cur.version,
-        )
+        self._commit("merge", files, cur)
         return self
 
     def delete_where(self, condition) -> "LakeTable":
@@ -1149,14 +1091,7 @@ class LakeTable:
             else:  # nothing matched: metadata-only commit, zero rewrites
                 new_files = []
             files = sorted(kept + new_files)
-        self._commit(
-            "delete",
-            files,
-            cur.schema_json,
-            cur.partition_by,
-            cur.properties,
-            expected_parent=cur.version,
-        )
+        self._commit("delete", files, cur)
         return self
 
     def delete_keys_mor(self, keys: DataFrame) -> "LakeTable":
@@ -1192,10 +1127,7 @@ class LakeTable:
         self._commit(
             "delete-mor",
             cur.files,
-            cur.schema_json,
-            cur.partition_by,
-            cur.properties,
-            expected_parent=cur.version,
+            cur,
             delete_files={**cur.delete_files, rel: new_seq},
         )
         return self
@@ -1219,12 +1151,7 @@ class LakeTable:
         if bad:
             raise ValueError(f"partition columns {bad} not in table schema")
         self._commit(
-            "evolve-partition",
-            cur.files,
-            cur.schema_json,
-            new_partition_by,
-            cur.properties,
-            expected_parent=cur.version,
+            "evolve-partition", cur.files, cur, partition_by=new_partition_by
         )
         return self
 
@@ -1267,39 +1194,46 @@ class LakeTable:
         self._commit(
             "upsert-mor",
             sorted(cur.files + new_files),
-            cur.schema_json,
-            cur.partition_by,
-            cur.properties,
-            expected_parent=cur.version,
+            cur,
             delete_files={**cur.delete_files, rel: new_seq},
         )
         return self
 
     # ---- maintenance (D7, D8) -------------------------------------------
-    def compact(self, target_file_size_bytes: int = 128 * 1024 * 1024) -> "LakeTable":
-        """D7 small-files compaction (`rewrite_data_files`; reference sink
-        compaction cadence sink_iceberg_fraud_alerts_client.sql:23-24).
-        Content-preserving: coalesces to ceil(bytes/target) files."""
+    def _rewrite(
+        self,
+        operation: str,
+        target_file_size_bytes: int,
+        reshape,
+        sort_order: str | None = None,
+    ) -> "LakeTable":
+        """The content-preserving rewrite compact() and the clustering
+        rewrites share: scan the current snapshot (delete sidecars
+        applied), ``reshape(df, n, partition_by)`` it into n =
+        ceil(bytes/target) output partitions, write, and commit — with
+        ``sort.order`` set when the layout has one."""
         cur = self.manifest()
         total = sum(
             os.path.getsize(os.path.join(self.root, f)) for f in cur.files
         )
-        n = max(1, -(-total // target_file_size_bytes))
-        df = self.read()
-        if cur.partition_by:
-            df = df.repartition(int(n), *cur.partition_by)
-        else:
-            df = df.repartition(int(n))
+        n = int(max(1, -(-total // target_file_size_bytes)))
+        df = reshape(self._scan_manifest(cur), n, cur.partition_by)
         files = self._write_data_files(df, cur.partition_by, cur.properties)
-        self._commit(
-            "compact",
-            files,
-            cur.schema_json,
-            cur.partition_by,
-            cur.properties,
-            expected_parent=cur.version,
-        )
+        props = dict(cur.properties)
+        if sort_order is not None:
+            props["sort.order"] = sort_order
+        self._commit(operation, files, cur, properties=props)
         return self
+
+    def compact(self, target_file_size_bytes: int = 128 * 1024 * 1024) -> "LakeTable":
+        """D7 small-files compaction (`rewrite_data_files`; reference sink
+        compaction cadence sink_iceberg_fraud_alerts_client.sql:23-24).
+        Content-preserving: coalesces to ceil(bytes/target) files."""
+        return self._rewrite(
+            "compact",
+            target_file_size_bytes,
+            lambda df, n, partition_by: df.repartition(n, *partition_by),
+        )
 
     def rewrite_sorted(
         self, by: list[str], target_file_size_bytes: int = 128 * 1024 * 1024
@@ -1311,28 +1245,14 @@ class LakeTable:
         can drop most files for a selective predicate. Content-preserving
         like compact(); at scale this is the scan-amplification fix for
         point/range-heavy tables."""
-        cur = self.manifest()
-        total = sum(
-            os.path.getsize(os.path.join(self.root, f)) for f in cur.files
-        )
-        n = int(max(1, -(-total // target_file_size_bytes)))
-        df = (
-            self.read()
-            .repartitionByRange(n, *[F.col(c) for c in by])
-            .sortWithinPartitions(*by)
-        )
-        files = self._write_data_files(df, cur.partition_by, cur.properties)
-        props = dict(cur.properties)
-        props["sort.order"] = ",".join(by)
-        self._commit(
+        return self._rewrite(
             "rewrite-sorted",
-            files,
-            cur.schema_json,
-            cur.partition_by,
-            props,
-            expected_parent=cur.version,
+            target_file_size_bytes,
+            lambda df, n, _: df.repartitionByRange(
+                n, *[F.col(c) for c in by]
+            ).sortWithinPartitions(*by),
+            sort_order=",".join(by),
         )
-        return self
 
     def rewrite_zorder(
         self,
@@ -1353,59 +1273,50 @@ class LakeTable:
         min/max normalization bounds come from one aggregate job
         (2k scalars to the driver — bounded by construction).
         Content-preserving like compact()/rewrite_sorted()."""
-        cur = self.manifest()
-        total = sum(
-            os.path.getsize(os.path.join(self.root, f)) for f in cur.files
-        )
-        n = int(max(1, -(-total // target_file_size_bytes)))
-        df = self.read()
-        bounds = df.agg(
-            *[F.min(F.col(c).cast("double")).alias(f"mn_{c}") for c in by],
-            *[F.max(F.col(c).cast("double")).alias(f"mx_{c}") for c in by],
-        ).collect()[0]
-        top = (1 << bits) - 1
-        scaled = []
-        for c in by:
-            mn, mx = bounds[f"mn_{c}"], bounds[f"mx_{c}"]
-            rng = (mx - mn) if (mx is not None and mn is not None and mx > mn) else 1.0
-            scaled.append(
-                F.least(
-                    F.lit(top).cast("bigint"),
-                    F.greatest(
-                        F.lit(0).cast("bigint"),
-                        (
-                            (F.col(c).cast("double") - F.lit(mn or 0.0))
-                            / F.lit(rng)
-                            * F.lit(float(top))
-                        ).cast("bigint"),
-                    ),
+
+        def zorder(df: DataFrame, n: int, _) -> DataFrame:
+            bounds = df.agg(
+                *[F.min(F.col(c).cast("double")).alias(f"mn_{c}") for c in by],
+                *[F.max(F.col(c).cast("double")).alias(f"mx_{c}") for c in by],
+            ).collect()[0]
+            top = (1 << bits) - 1
+            scaled = []
+            for c in by:
+                mn, mx = bounds[f"mn_{c}"], bounds[f"mx_{c}"]
+                rng = mx - mn if mx is not None and mn is not None and mx > mn else 1.0
+                scaled.append(
+                    F.least(
+                        F.lit(top).cast("bigint"),
+                        F.greatest(
+                            F.lit(0).cast("bigint"),
+                            (
+                                (F.col(c).cast("double") - F.lit(mn or 0.0))
+                                / F.lit(rng)
+                                * F.lit(float(top))
+                            ).cast("bigint"),
+                        ),
+                    )
                 )
+            k = len(by)
+            z = F.lit(0).cast("bigint")
+            for b in range(bits):
+                for j, s in enumerate(scaled):
+                    z = z.bitwiseOR(
+                        F.shiftleft(F.shiftright(s, b).bitwiseAND(F.lit(1)), b * k + j)
+                    )
+            return (
+                df.withColumn("__z", z)
+                .repartitionByRange(n, F.col("__z"))
+                .sortWithinPartitions("__z")
+                .drop("__z")
             )
-        k = len(by)
-        z = F.lit(0).cast("bigint")
-        for b in range(bits):
-            for j, s in enumerate(scaled):
-                z = z.bitwiseOR(
-                    F.shiftleft(F.shiftright(s, b).bitwiseAND(F.lit(1)), b * k + j)
-                )
-        dfz = (
-            df.withColumn("__z", z)
-            .repartitionByRange(n, F.col("__z"))
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-        files = self._write_data_files(dfz, cur.partition_by, cur.properties)
-        props = dict(cur.properties)
-        props["sort.order"] = f"zorder({','.join(by)})"
-        self._commit(
+
+        return self._rewrite(
             "rewrite-zorder",
-            files,
-            cur.schema_json,
-            cur.partition_by,
-            props,
-            expected_parent=cur.version,
+            target_file_size_bytes,
+            zorder,
+            sort_order=f"zorder({','.join(by)})",
         )
-        return self
 
     # ---- tags (Iceberg refs analog) --------------------------------------
     @property
@@ -1544,10 +1455,11 @@ class LakeTable:
             # would un-pin every tagged snapshot and delete it — r12
             # review), unlike read paths where {} is a fine degrade
             tagged = set(self.tags(strict=True).values())
-            # staged WAP / branch refs pin their PARENT manifests too:
-            # read_staged/read_branch need the fork point's manifest
-            # (delete sidecars, stats) until the ref lands or is dropped
-            pinned = self._ref_parent_versions()
+            # branch refs (WAP stages included) pin their PARENT
+            # manifests too: read_branch and fast_forward need the fork
+            # point's manifest until the ref lands or is dropped
+            refs = self._branches()
+            pinned = {b.parent for b in refs}
             keep = mans[-retain_last:] + [
                 m
                 for m in mans[:-retain_last]
@@ -1558,9 +1470,9 @@ class LakeTable:
                 for m in mans[:-retain_last]
                 if m.version not in tagged and m.version not in pinned
             ]
-            # referenced set includes staged/branch files + delete
-            # sidecars — same rule as remove_orphan_files
-            live = self._referenced_files(keep)
+            # referenced set includes branch files + delete sidecars —
+            # same rule as remove_orphan_files
+            live = self._referenced_files(keep + refs)
             for m in drop:
                 for f in list(m.files) + list(m.delete_files):
                     if f not in live:
@@ -1576,22 +1488,6 @@ class LakeTable:
         # whose first part file hasn't landed yet — r12 review)
         self._prune_empty_commit_dirs(mans[-1].timestamp_ms)
         return removed
-
-    def _ref_parent_versions(self) -> set:
-        """Versions that staged WAP tokens / branch refs fork from."""
-        pinned: set = set()
-        for fn in os.listdir(self._manifest_dir):
-            if fn.startswith(("staged_", "branch_")) and fn.endswith(".json"):
-                try:
-                    with open(
-                        os.path.join(self._manifest_dir, fn), encoding="utf-8"
-                    ) as fh:
-                        m = Manifest.from_json(fh.read())
-                except (ValueError, OSError):
-                    continue
-                if m.parent is not None:
-                    pinned.add(m.parent)
-        return pinned
 
     def _prune_empty_commit_dirs(self, older_than_ms: int) -> None:
         """Remove commit dirs holding zero parquet files — write debris
@@ -1642,7 +1538,7 @@ class LakeTable:
         ]
         return self.spark.createDataFrame(rows, "path: string, size_bytes: long")
 
-    # ---- rollback / write-audit-publish ---------------------------------
+    # ---- rollback --------------------------------------------------------
     def rollback(self, version: int) -> "LakeTable":
         """Restore a past snapshot as the new current version (history is
         retained — the rollback is itself a new commit, Iceberg
@@ -1652,113 +1548,15 @@ class LakeTable:
         self._commit(
             f"rollback_to_v{version}",
             past.files,
+            cur,
             past.schema_json,
             past.partition_by,
             past.properties,
-            expected_parent=cur.version,
             # restore the past snapshot's MoR state verbatim — content
             # fidelity requires its sidecars and sequences, not cur's
             delete_files=dict(past.delete_files),
             file_seq=dict(past.file_seq) or {f: past.version for f in past.files},
         )
-        return self
-
-    def _staged_path(self, token: str) -> str:
-        return os.path.join(self._manifest_dir, f"staged_{token}.json")
-
-    def stage_append(self, df: DataFrame) -> str:
-        """Write-audit-publish step 1: write data files + a manifest in
-        the staging namespace WITHOUT touching the pointer or the version
-        sequence (other writers commit freely meanwhile). Returns the
-        stage token; audit via ``read_staged(token)``."""
-        cur = self.manifest()
-        new_files = self._write_data_files(
-            _align(df, cur.schema_json), cur.partition_by, cur.properties
-        )
-        token = uuid.uuid4().hex[:12]
-        staged = Manifest(
-            version=-1,  # assigned at publish
-            parent=cur.version,
-            operation="staged_append",
-            timestamp_ms=int(time.time() * 1000),
-            schema_json=cur.schema_json,
-            partition_by=cur.partition_by,
-            files=sorted(cur.files + new_files),
-            properties=cur.properties,
-        )
-        # Atomic token write (same discipline as branch refs / the main
-        # pointer): a crash mid-write must never leave a truncated
-        # staged manifest for GC or publish to choke on.
-        path = self._staged_path(token)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(staged.to_json())
-        os.replace(tmp, path)
-        return token
-
-    def _staged_manifest(self, token: str) -> Manifest:
-        path = self._staged_path(token)
-        if not os.path.exists(path):
-            raise NoSuchTable(f"no staged snapshot {token} in {self.root}")
-        with open(path, encoding="utf-8") as f:
-            return Manifest.from_json(f.read())
-
-    def read_staged(self, token: str) -> DataFrame:
-        """Audit view of a staged (unpublished) snapshot.
-
-        Applies the parent snapshot's merge-on-read delete sidecars the
-        same way read() does (Iceberg wap.branch reads see deletes):
-        retained files keep the parent's sequence so older sidecars
-        still suppress their rows; the staged new files get a sequence
-        above every sidecar, so the fresh append is never filtered."""
-        staged = self._staged_manifest(token)
-        parent = self.manifest(staged.parent)
-        staged_seq = parent.version + 1
-        parent_set = set(parent.files)
-        file_seq = {
-            f: parent.file_seq.get(f, parent.version)
-            if f in parent_set
-            else staged_seq
-            for f in staged.files
-        }
-        view = _dc_replace(
-            staged,
-            version=staged_seq,
-            delete_files=dict(parent.delete_files),
-            file_seq=file_seq,
-            file_stats=dict(parent.file_stats),
-        )
-        return self._scan_manifest(view)
-
-    def expire_staged(self, token: str) -> "LakeTable":
-        """Abandon a staged (unpublished) snapshot: drop the stage token
-        so the stage's data files become unreferenced and eligible for
-        ``remove_orphan_files`` (the crash/lost-CAS debris case is
-        modeled as stage → expire → GC; a live stage is never GC'd)."""
-        path = self._staged_path(token)
-        if not os.path.exists(path):
-            raise NoSuchTable(f"no staged snapshot {token} in {self.root}")
-        os.remove(path)
-        return self
-
-    def publish(self, token: str) -> "LakeTable":
-        """Write-audit-publish step 2: promote the staged snapshot to the
-        next version (CAS against the parent it was staged from)."""
-        staged = self._staged_manifest(token)
-        if self.current_version() != staged.parent:
-            raise CommitConflict(
-                f"{self.root}: staged {token} parented at v{staged.parent}, "
-                f"current is v{self.current_version()}"
-            )
-        self._commit(
-            "publish_staged_append",
-            staged.files,
-            staged.schema_json,
-            staged.partition_by,
-            staged.properties,
-            expected_parent=staged.parent,
-        )
-        os.remove(self._staged_path(token))
         return self
 
     # ---- branches (Iceberg branch-ref analog) -----------------------------
@@ -1770,6 +1568,8 @@ class LakeTable:
     # rebases by hand). Single-writer per branch (the branch pointer file
     # is overwritten, not CAS'd) — the documented contract, matching
     # Iceberg where concurrent commits to ONE branch also serialize.
+    # Write-audit-publish is the one-batch case (`stage_append`), as
+    # Iceberg's `spark.wap.branch` is.
 
     def _branch_path(self, name: str) -> str:
         if not name or not all(c.isalnum() or c in "_-" for c in name):
@@ -1782,6 +1582,25 @@ class LakeTable:
             raise NoSuchTable(f"no branch {name!r} on {self.root}")
         with open(path, encoding="utf-8") as f:
             return Manifest.from_json(f.read())
+
+    def _branches(self) -> list[Manifest]:
+        """Every branch ref's manifest. A truncated or corrupt ref is
+        crash debris from a writer that never returned (branch updates
+        are tmp+rename, so no completed operation produced it): its
+        files cannot be enumerated and were never referenced by a
+        completed operation, so it is skipped and GC keeps working —
+        the age cutoff still protects anything genuinely in flight."""
+        refs = []
+        for fn in sorted(os.listdir(self._manifest_dir)):
+            if fn.startswith("branch_") and fn.endswith(".json"):
+                try:
+                    with open(
+                        os.path.join(self._manifest_dir, fn), encoding="utf-8"
+                    ) as fh:
+                        refs.append(Manifest.from_json(fh.read()))
+                except (ValueError, OSError):
+                    continue
+        return refs
 
     def create_branch(self, name: str) -> "LakeTable":
         """Fork a branch from the CURRENT snapshot. O_EXCL creation —
@@ -1860,18 +1679,16 @@ class LakeTable:
         fast_forward procedure. The branch's commits land as ONE main
         snapshot (squash); the branch ref is deleted on success."""
         bm = self._branch_manifest(name)
-        if self.current_version() != bm.parent:
+        cur = self.manifest()
+        if cur.version != bm.parent:
             raise CommitConflict(
                 f"{self.root}: branch {name!r} forked at v{bm.parent}, "
-                f"main is at v{self.current_version()} — cannot fast-forward"
+                f"main is at v{cur.version} — cannot fast-forward"
             )
         self._commit(
             f"fast_forward_branch:{name}",
             bm.files,
-            bm.schema_json,
-            bm.partition_by,
-            bm.properties,
-            expected_parent=bm.parent,
+            cur,
             delete_files=dict(bm.delete_files),
         )
         os.remove(self._branch_path(name))
@@ -1879,9 +1696,29 @@ class LakeTable:
 
     def drop_branch(self, name: str) -> "LakeTable":
         """Abandon a branch; its unpublished data files become orphans
-        (collected by remove_orphan_files)."""
-        os.remove(self._branch_path(name))
+        (collected by remove_orphan_files). Raises NoSuchTable for an
+        unknown name, like read_branch."""
+        try:
+            os.remove(self._branch_path(name))
+        except FileNotFoundError:
+            raise NoSuchTable(f"no branch {name!r} on {self.root}") from None
         return self
+
+    def stage_append(self, df: DataFrame) -> str:
+        """Write-audit-publish step 1: write ``df`` to a fresh one-batch
+        branch, invisible to main readers while other writers commit
+        freely, and return its name (the stage token). Audit with
+        ``read_branch(token)``; publish with ``fast_forward(token)``, a
+        CAS against the snapshot the branch forked from; abandon with
+        ``drop_branch(token)``."""
+        token = uuid.uuid4().hex[:12]
+        self.create_branch(token)
+        try:
+            self.branch_append(token, df)
+        except BaseException:
+            self.drop_branch(token)  # no token escapes: leave no ref
+            raise
+        return token
 
     # ---- schema evolution (D5) ------------------------------------------
     def add_column(self, name: str, dtype: str) -> "LakeTable":
@@ -1892,7 +1729,8 @@ class LakeTable:
         new = T.StructType(
             schema.fields + [T.StructField(name, _parse_type(dtype), True)]
         )
-        self._commit_schema(cur, new, f"add_column:{name}")
+        # metadata-only commit: rewrite no data, reads project/null-fill
+        self._commit(f"add_column:{name}", cur.files, cur, json.dumps(new.jsonValue()))
         return self
 
     def drop_column(self, name: str) -> "LakeTable":
@@ -1901,7 +1739,7 @@ class LakeTable:
         new = T.StructType([f for f in schema.fields if f.name != name])
         if len(new.fields) == len(schema.fields):
             raise ValueError(f"no such column: {name}")
-        self._commit_schema(cur, new, f"drop_column:{name}")
+        self._commit(f"drop_column:{name}", cur.files, cur, json.dumps(new.jsonValue()))
         return self
 
     def alter_column_type(self, name: str, dtype: str) -> "LakeTable":
@@ -1941,23 +1779,25 @@ class LakeTable:
         self._commit(
             f"alter_column:{name}:{dtype}",
             files,
+            cur,
             json.dumps(new_schema.jsonValue()),
-            cur.partition_by,
-            cur.properties,
-            expected_parent=cur.version,
         )
         return self
 
-    def _commit_schema(self, cur: Manifest, new_schema: T.StructType, op: str):
-        # metadata-only commit: rewrite no data, reads project/null-fill
-        self._commit(
-            op,
-            cur.files,
-            json.dumps(new_schema.jsonValue()),
-            cur.partition_by,
-            cur.properties,
-            expected_parent=cur.version,
-        )
+
+def _added_files(man: Manifest, parent: Manifest) -> list[str]:
+    """The data files ``man`` lists that ``parent`` does not."""
+    prev = set(parent.files)
+    return [f for f in man.files if f not in prev]
+
+
+def _only_adds(man: Manifest, parent: Manifest) -> bool:
+    """Whether ``man`` keeps every data file and exactly the delete
+    sidecars of ``parent``, so its rows are the parent's plus those of
+    its added files: an append, a branch fast-forward or WAP publish, or
+    a metadata-only commit — whatever the operation is named."""
+    keeps_files = set(parent.files) <= set(man.files)
+    return keeps_files and man.delete_files == parent.delete_files
 
 
 def _is_nan(v: object) -> bool:

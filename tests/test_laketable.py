@@ -164,9 +164,7 @@ def test_commit_conflict(spark, scratch, df10):
     # simulate a racing writer committing first
     LakeTable(spark, root).append(df10)
     with pytest.raises(CommitConflict):
-        t1._commit(
-            "append", man.files, man.schema_json, [], {}, expected_parent=man.version
-        )
+        t1._commit("append", man.files, man)
 
 
 def test_delete_where(spark, scratch, df10):
@@ -215,9 +213,7 @@ def test_commit_manifest_race_is_atomic(spark, scratch, df10):
     with open(winner, "w", encoding="utf-8") as f:
         f.write(man.to_json())
     with pytest.raises(CommitConflict):
-        t1._commit(
-            "append", man.files, man.schema_json, [], {}, expected_parent=man.version
-        )
+        t1._commit("append", man.files, man)
     # the winner's manifest was not clobbered
     with open(winner, encoding="utf-8") as f:
         assert f.read() == man.to_json()

@@ -50,14 +50,14 @@ def test_write_audit_publish(spark, t):
     token = t.stage_append(bad_batch)
     # readers see nothing until publish
     assert t.read().count() == 10
-    # audit the staged snapshot
-    audit = t.read_staged(token)
+    # audit the stage: a one-batch branch
+    audit = t.read_branch(token)
     assert audit.count() == 20
     n_bad = audit.filter(F.col("v") < 0).count()
     assert n_bad == 10  # audit catches them; choose to publish anyway
-    t.publish(token)
+    t.fast_forward(token)
     assert t.read().count() == 20
-    assert [m.operation for m in t.snapshots()][-1] == "publish_staged_append"
+    assert [m.operation for m in t.snapshots()][-1] == f"fast_forward_branch:{token}"
 
 
 def test_publish_conflicts_against_moved_pointer(spark, t):
@@ -66,7 +66,17 @@ def test_publish_conflicts_against_moved_pointer(spark, t):
     )
     t.append(spark.range(200, 205).withColumn("v", F.lit(1).cast("long")))
     with pytest.raises(CommitConflict):
-        t.publish(token)
+        t.fast_forward(token)
+
+
+def test_failed_stage_leaves_no_branch_ref(spark, t):
+    """A stage whose write fails returns no token, so it must leave no
+    branch ref behind (one would pin its fork snapshot against expiry
+    with nobody able to drop it)."""
+    with pytest.raises(Exception, match="boom"):
+        t.stage_append(spark.range(3).withColumn("v", F.raise_error("boom")))
+    assert t._branches() == []
+    assert t.read().count() == 10
 
 
 def test_alter_column_type_widens(spark, scratch):
@@ -277,7 +287,7 @@ def test_merge_conditional_update_exclude(spark, scratch):
     assert row.created_by == "orig"  # excluded column keeps target value
 
 
-def test_read_staged_applies_mor_deletes(spark, t):
+def test_wap_stage_applies_mor_deletes(spark, t):
     """A WAP audit on a table with merge-on-read deletes must see the
     parent's delete sidecars applied (Iceberg wap.branch semantics):
     old-file rows stay suppressed, while the staged batch — including a
@@ -288,12 +298,12 @@ def test_read_staged_applies_mor_deletes(spark, t):
     token = t.stage_append(
         spark.createDataFrame([(7, -7), (100, 200)], "id long, v long")
     )
-    audit = t.read_staged(token)
+    audit = t.read_branch(token)
     ids = sorted(r["id"] for r in audit.collect())
     # 10 originals − {3,7} deleted + staged {7, 100}
     assert ids == [0, 1, 2, 4, 5, 6, 7, 8, 9, 100]
     assert audit.filter(F.col("id") == 7).collect()[0]["v"] == -7
-    t.publish(token)
+    t.fast_forward(token)
     assert sorted(r["id"] for r in t.read().collect()) == ids
 
 
@@ -327,7 +337,7 @@ def test_branch_fast_forward_conflicts_when_main_moves(spark, t):
 def test_branch_sees_fork_mor_deletes(spark, t):
     """A branch forked after MoR deletes must read with the fork's
     sidecars applied; a branch re-insert of a deleted key is visible
-    (its sequence postdates the sidecar) — read_staged semantics."""
+    (its sequence postdates the sidecar)."""
     t.delete_keys_mor(spark.createDataFrame([(4,)], "id long"))
     t.create_branch("fix")
     t.branch_append("fix", spark.createDataFrame([(4, -4)], "id long, v long"))
@@ -362,10 +372,10 @@ def test_two_branches_first_ff_wins(spark, t):
 
 
 def test_orphan_gc_protects_staged_and_branch_refs(spark, scratch):
-    """ADVICE r11: staged WAP manifests and branch refs are referenced
-    metadata — their data files must survive GC at any cutoff; only an
-    explicitly expired stage becomes collectable; publish-after-GC of a
-    live stage reads back intact."""
+    """ADVICE r11: WAP stages and branch refs are referenced metadata —
+    their data files must survive GC at any cutoff; only an explicitly
+    dropped stage becomes collectable; publish-after-GC of a live stage
+    reads back intact."""
     import time as _time
 
     far = int(_time.time() * 1000) + 3_600_000
@@ -376,24 +386,19 @@ def test_orphan_gc_protects_staged_and_branch_refs(spark, scratch):
     t.branch_append("wip", spark.range(60, 70).withColumnRenamed("id", "k"))
     # live stage + live branch: nothing collectable even far-future
     assert t.remove_orphan_files(older_than_ms=far) == []
-    # the staged snapshot still publishes cleanly after the GC pass
-    t.publish(token)
+    # the stage still publishes cleanly after the GC pass
+    t.fast_forward(token)
     assert t.read().count() == 60
     assert t.read_branch("wip").count() == 50
-    # an abandoned stage becomes collectable only after expire_staged
+    # an abandoned stage becomes collectable only after drop_branch
     tok2 = t.stage_append(spark.range(70, 90).withColumnRenamed("id", "k"))
     assert t.remove_orphan_files(older_than_ms=far) == []
-    t.expire_staged(tok2)
+    t.drop_branch(tok2)
     removed = t.remove_orphan_files(older_than_ms=far)
-    assert removed, "expired stage's files were not collected"
+    assert removed, "dropped stage's files were not collected"
     assert t.read().count() == 60  # committed data untouched
-    from data_iceberg_sandbox_spark.tables.laketable import NoSuchTable
-
-    try:
-        t.expire_staged("nosuchtoken")
-        raise AssertionError("expire_staged of unknown token must raise")
-    except NoSuchTable:
-        pass
+    with pytest.raises(NoSuchTable):
+        t.drop_branch("nosuchtoken")
 
 
 def test_orphan_gc_protects_mor_delete_sidecars(spark, scratch):
@@ -461,15 +466,29 @@ def test_drop_table_refuses_namespace(spark, scratch):
 
 
 def test_read_incremental_accepts_wap_publish(spark, scratch):
-    """r12 review: publish_staged_append is appends-only by
-    construction and must flow through the incremental changelog."""
+    """r12 review: a WAP publish only adds files and must flow through
+    the incremental changelog."""
     t = LakeTable(spark, os.path.join(scratch, "inc_wap"))
     t.create(spark.range(0, 10).withColumnRenamed("id", "k"))
     tok = t.stage_append(spark.range(10, 25).withColumnRenamed("id", "k"))
-    t.publish(tok)
+    t.fast_forward(tok)
     inc = t.read_incremental(1)
     assert inc.count() == 15
     assert {r["k"] for r in inc.collect()} == set(range(10, 25))
+
+
+def test_read_incremental_across_branch_fast_forward(spark, scratch):
+    """A branch fast-forward only adds files, so an incremental read
+    across it returns exactly the branch's rows: commits are classified
+    by their file delta, not by their operation name."""
+    t = LakeTable(spark, os.path.join(scratch, "inc_ff"))
+    t.create(spark.range(0, 10).withColumnRenamed("id", "k"))
+    t.create_branch("b")
+    t.branch_append("b", spark.range(10, 15).withColumnRenamed("id", "k"))
+    t.branch_append("b", spark.range(15, 18).withColumnRenamed("id", "k"))
+    t.fast_forward("b")
+    got = sorted(r["k"] for r in t.read_incremental(1).collect())
+    assert got == list(range(10, 18))
 
 
 def test_reclaimed_slot_fence_competitor_swung(spark, scratch):
