@@ -325,9 +325,9 @@ def dedup_incremental_lsh(spark, sf_dir, threshold: float = 0.5, mod: int = 10):
     # Both probe sides slice this frame, and the candidate verification
     # re-reads it through the lineage — uncached, the signature
     # projection ran ~4× and the probe join twice (measured 29.6 s vs
-    # 2.4 s at sf10, BENCH_SCAN_SF10_R14.json). At 100 TB the cache is
-    # moot: the index side is a persisted table (see above) and only
-    # the batch side is computed fresh.
+    # 2.4 s at sf10, docs/archive/BENCH_SCAN_SF10_R14.json). At 100 TB
+    # the cache is moot: the index side is a persisted table (see
+    # above) and only the batch side is computed fresh.
     bk = _band_keys(sigs).cache()
     cands = (
         bk.filter(is_batch)

@@ -14,7 +14,9 @@ Design — a deliberately small subset of the Iceberg spec:
     <warehouse>/<namespace>/<table>/
         data/<commit-uuid>/...parquet      immutable data files
         _manifests/v<N>.json               immutable snapshot manifests
+        _manifests/.lock                   the table lock (flock)
         _current                           pointer file, atomic os.replace
+        tags.json                          tag refs
 
 A manifest lists the *complete* file set of its snapshot plus schema,
 partition spec, properties, operation and parent version. Readers resolve
@@ -24,11 +26,16 @@ O(manifest), not O(directory). Partition values are recovered via
 ``basePath`` so Catalyst still prunes hive-style partition directories;
 a partitioned table scans once per commit dir (see ``_scan_base``).
 
-Commits are optimistic: writers stage data files under a fresh uuid dir,
-write manifest v(N+1), then atomically swing ``_current`` from the
-version they read — a concurrent commit in between raises
+Commits are optimistic: writers stage data files under a fresh uuid
+dir, in parallel and unlocked. Then, holding the table lock (``_lock``,
+an ``flock`` on ``_manifests/.lock``), a commit checks that ``_current``
+still names the version it read, writes manifest v(N+1) and swings
+``_current`` to it. A commit whose parent moved raises
 ``CommitConflict`` (retry at the caller, same contract as Iceberg's
-REST-catalog CAS).
+catalog swap). The lock covers metadata steps only, never a Spark job,
+and the kernel releases a dead holder's lock at once. So a v(N+1).json
+ahead of the pointer is a dead writer's debris: readers never see it
+and the next commit overwrites it.
 
 Scale notes (100 TB): data-file writes are plain distributed parquet
 writes (no driver data path); MERGE is copy-on-write implemented as ONE
@@ -42,6 +49,7 @@ paths only; at 100 TB with ~1 GB files that's ~10^5 entries — fine. Compaction
 
 from __future__ import annotations
 
+import fcntl
 import functools
 import json
 import math
@@ -58,12 +66,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-# How long a tag writer waits for the tags lock before declaring a
-# conflict (module-level so tests can shrink it).
-TAGS_LOCK_TIMEOUT_SEC = 10.0
-# a manifest slot ahead of the pointer, untouched this long, is a dead
-# writer's debris and may be reclaimed by the next committer
-STALE_MANIFEST_GRACE_SEC = 60.0
+# How long a writer waits for the table lock before raising
+# CommitConflict (module-level so tests can shrink it).
+LOCK_WAIT_SEC = 10.0
 
 
 class CommitConflict(RuntimeError):
@@ -121,20 +126,15 @@ class Manifest:
     # data file → sequence (the version that first added it); files from
     # manifests predating this field default to their manifest's version
     file_seq: dict[str, int] = field(default_factory=dict)
-    # per-commit writer fence (r13): a uuid stamped by the committing
-    # writer, making every manifest payload unique. The stale-slot
-    # reclaim in `_commit` is a LEASE, and leases need fencing — a
-    # slow-but-alive writer whose slot was reclaimed must not delete
-    # the competitor's committed manifest nor swing the pointer onto
-    # it. Old manifests (pre-field) parse with the "" default.
-    writer: str = ""
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, sort_keys=True)
 
     @staticmethod
     def from_json(s: str) -> "Manifest":
-        return Manifest(**json.loads(s))
+        d = json.loads(s)
+        d.pop("writer", None)  # per-commit fence of older manifests
+        return Manifest(**d)
 
 
 class LakeTable:
@@ -165,9 +165,13 @@ class LakeTable:
             return int(f.read().strip())
 
     def manifest(self, version: int | None = None) -> Manifest:
-        v = self.current_version() if version is None else version
+        """The manifest of snapshot ``version`` (default: current). A
+        version above the pointer was never committed (see
+        :meth:`snapshots`) and raises NoSuchTable like an expired one."""
+        cur = self.current_version()
+        v = cur if version is None else version
         path = self._manifest_path(v)
-        if not os.path.exists(path):
+        if v > cur or not os.path.exists(path):
             raise NoSuchTable(f"snapshot v{v} of {self.root} (expired or absent)")
         with open(path, encoding="utf-8") as f:
             return Manifest.from_json(f.read())
@@ -177,20 +181,18 @@ class LakeTable:
 
         Only versions at or below the current pointer are snapshots: a
         v(N+1).json with the pointer still at N is the debris of a
-        writer that crashed between the manifest write and the pointer
-        swing — it was never committed, must not be time-travel-visible,
-        and must not count toward expire_snapshots' retain window (r12
-        review; _commit reclaims the slot after a staleness grace)."""
-        if not os.path.isdir(self._manifest_dir):
+        writer that died between the manifest write and the pointer
+        swing. It was never committed, so it is not time-travel-visible
+        and does not count toward expire_snapshots' retain window; the
+        next commit overwrites it."""
+        if not self.exists():
             return []
-        cur = self.current_version() if self.exists() else -1
+        cur = self.current_version()
         out = []
-        for fn in sorted(os.listdir(self._manifest_dir)):
-            if fn.startswith("v") and fn.endswith(".json"):
+        for fn in os.listdir(self._manifest_dir):
+            if fn.startswith("v") and fn.endswith(".json") and int(fn[1:-5]) <= cur:
                 with open(os.path.join(self._manifest_dir, fn), encoding="utf-8") as f:
-                    m = Manifest.from_json(f.read())
-                if cur < 0 or m.version <= cur:
-                    out.append(m)
+                    out.append(Manifest.from_json(f.read()))
         return sorted(out, key=lambda m: m.version)
 
     def version_as_of_timestamp(self, ts_ms: int) -> int:
@@ -488,7 +490,7 @@ class LakeTable:
     def remove_orphan_files(self, older_than_ms: int | None = None) -> list[str]:
         """Iceberg ``remove_orphan_files`` analog: delete data files on
         disk that no live snapshot references — the debris of writes
-        whose commit lost a CAS race or crashed between the data write
+        whose commit lost a race or crashed between the data write
         and the manifest commit.
 
         ``older_than_ms`` (epoch millis) protects in-flight writers: a
@@ -650,6 +652,30 @@ class LakeTable:
             for f in files
         }
 
+    @contextmanager
+    def _lock(self):
+        """The table lock: an exclusive ``flock`` on ``_manifests/.lock``,
+        polled for at most ``LOCK_WAIT_SEC`` before raising
+        CommitConflict. It serializes every metadata read-modify-write
+        (commit, tag, expiry) and is never held across a Spark job. Each
+        call opens its own file, so threads of one process exclude each
+        other too; the kernel drops the lock when its holder dies."""
+        os.makedirs(self._manifest_dir, exist_ok=True)
+        fd = os.open(os.path.join(self._manifest_dir, ".lock"), os.O_RDWR | os.O_CREAT)
+        try:
+            deadline = time.monotonic() + LOCK_WAIT_SEC
+            while True:
+                try:
+                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    break
+                except BlockingIOError:
+                    if time.monotonic() > deadline:
+                        raise CommitConflict(f"{self.root}: table lock held") from None
+                    time.sleep(0.005)
+            yield
+        finally:
+            os.close(fd)  # releases the flock
+
     def _commit(
         self,
         operation: str,
@@ -671,7 +697,6 @@ class LakeTable:
             if properties is None:
                 properties = parent_man.properties
         expected_parent = parent_man.version if parent_man else None
-        os.makedirs(self._manifest_dir, exist_ok=True)
         new_version = (expected_parent or 0) + 1
         # carry forward stats for retained files; read the footers of the
         # rest (new files, and files of manifests written without stats)
@@ -721,89 +746,17 @@ class LakeTable:
             file_stats=stats,
             delete_files=delete_files,
             file_seq=file_seq,
-            writer=uuid.uuid4().hex,
         )
-        payload = man.to_json()
-        mpath = self._manifest_path(new_version)
-
-        def _owns_slot() -> bool:
-            # Fence check: the slot is ours only if it still holds the
-            # exact bytes we wrote (writer uuid makes them unique).
-            try:
-                with open(mpath, encoding="utf-8") as f:
-                    return f.read() == payload
-            except OSError:
-                return False
-        # O_EXCL create: two racing writers with the same expected_parent
-        # both want v(N+1); exactly one wins the manifest slot, the loser
-        # gets FileExistsError → CommitConflict (true CAS, not
-        # check-then-write). One exception: if the occupying manifest's
-        # version is AHEAD of the pointer and stale (older than the
-        # grace window), it is the debris of a writer that died between
-        # manifest write and pointer swing — without reclaim the table
-        # is wedged forever (every retry conflicts on the same slot,
-        # r12 review). A LIVE racer is inside a milliseconds-wide window
-        # and younger than the grace; it is never reclaimed.
-        try:
-            fd = os.open(mpath, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-        except FileExistsError:
-            try:
-                stale = (
-                    time.time() - os.path.getmtime(mpath)
-                    > STALE_MANIFEST_GRACE_SEC
-                )
-                ahead = (
-                    expected_parent is not None
-                    and self.current_version() == expected_parent
-                )
-            except OSError:
-                stale = ahead = False
-            if not (stale and ahead):
-                raise CommitConflict(f"{mpath} already exists") from None
-            # reclaim the dead writer's slot — two reclaimers can race
-            # here (r13 review): the loser's remove must surface as
-            # CommitConflict, not FileNotFoundError, and a re-check of
-            # staleness right before the remove keeps a racer from
-            # deleting the winner's FRESH manifest (the residual µs
-            # TOCTOU window is made safe — conflict, never corruption —
-            # by the writer fence below).
-            try:
-                if (
-                    time.time() - os.path.getmtime(mpath)
-                    <= STALE_MANIFEST_GRACE_SEC
-                ):
-                    raise CommitConflict(f"{mpath} already exists")
-                os.remove(mpath)
-            except FileNotFoundError:
-                raise CommitConflict(f"{mpath} already exists") from None
-            try:
-                fd = os.open(mpath, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-            except FileExistsError:
-                raise CommitConflict(f"{mpath} already exists") from None
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write(payload)
-        # CAS on the pointer: re-check parent then atomic replace.
-        # Both the cleanup delete and the swing are FENCED on slot
-        # ownership (r13, ADVICE): if this writer stalled past the
-        # grace window its slot may have been reclaimed by a competitor
-        # — deleting then would destroy the competitor's committed
-        # manifest, and swinging would acknowledge a commit whose files
-        # the slot's manifest does not reference (lost commit).
-        if expected_parent is not None:
-            if self.current_version() != expected_parent:
-                if _owns_slot():
-                    os.remove(mpath)
+        # Under the lock the pointer cannot move, so a v(N+1).json already
+        # there is a dead writer's debris and is overwritten.
+        with self._lock():
+            cur = self.current_version() if self.exists() else None
+            if cur != expected_parent:
                 raise CommitConflict(
-                    f"{self.root}: expected parent v{expected_parent}"
+                    f"{self.root}: expected parent v{expected_parent}, found v{cur}"
                 )
-        if not _owns_slot():
-            raise CommitConflict(
-                f"{mpath}: slot reclaimed by a competing writer"
-            )
-        tmp = self._current_path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(str(new_version))
-        os.replace(tmp, self._current_path)
+            _atomic_write(self._manifest_path(new_version), man.to_json())
+            _atomic_write(self._current_path, str(new_version))
         return man
 
     # ---- write operations ------------------------------------------------
@@ -1123,7 +1076,7 @@ class LakeTable:
         keys.filter(cond).distinct().write.mode("overwrite").parquet(
             os.path.join(self.root, rel)
         )
-        new_seq = cur.version + 1  # CAS in _commit guarantees this slot
+        new_seq = cur.version + 1  # _commit's parent check guarantees it
         self._commit(
             "delete-mor",
             cur.files,
@@ -1190,7 +1143,7 @@ class LakeTable:
         new_files = self._write_data_files(
             _align(df, cur.schema_json), cur.partition_by, cur.properties
         )
-        new_seq = cur.version + 1  # CAS in _commit guarantees this slot
+        new_seq = cur.version + 1  # _commit's parent check guarantees it
         self._commit(
             "upsert-mor",
             sorted(cur.files + new_files),
@@ -1212,6 +1165,10 @@ class LakeTable:
         applied), ``reshape(df, n, partition_by)`` it into n =
         ceil(bytes/target) output partitions, write, and commit — with
         ``sort.order`` set when the layout has one."""
+        if target_file_size_bytes < 1:
+            raise ValueError(
+                f"target_file_size_bytes must be >= 1, got {target_file_size_bytes}"
+            )
         cur = self.manifest()
         total = sum(
             os.path.getsize(os.path.join(self.root, f)) for f in cur.files
@@ -1338,94 +1295,21 @@ class LakeTable:
                 raise
             return {}
 
-    @contextmanager
-    def _tags_lock(self):
-        """O_EXCL lock file serializing tag read-modify-write AND the
-        expire_snapshots critical section (same CAS discipline as
-        `_commit`): two concurrent tag writers can no longer silently
-        lose an update, and a tag() racing expire_snapshots() can no
-        longer pin a just-deleted manifest."""
-        lock = self._tags_path + ".lock"
-        token = uuid.uuid4().hex  # fence: only the owner removes (r13)
-        deadline = time.time() + TAGS_LOCK_TIMEOUT_SEC
-        while True:
-            try:
-                fd = os.open(lock, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-                os.write(fd, token.encode())
-                break
-            except FileExistsError:
-                # stale-lock takeover: a holder killed between os.open
-                # and the finally-removal would otherwise disable
-                # tag()/expire_snapshots forever (r12 review). The
-                # critical sections are sub-second; a lock older than
-                # the grace window belongs to a dead process. The
-                # takeover itself is serialized by an flock'd guard
-                # file (r13 review): two waiters that both observed a
-                # stale lock could otherwise both remove-and-acquire —
-                # the second remove deleting the first's FRESH lock and
-                # putting two holders inside the critical section. The
-                # guard file is never removed, so there is no race on
-                # the guard itself; flock is process-scoped and the
-                # table layer is local-FS by design.
-                try:
-                    if (
-                        time.time() - os.path.getmtime(lock)
-                        > STALE_MANIFEST_GRACE_SEC
-                    ):
-                        import fcntl
-
-                        gfd = os.open(lock + ".guard", os.O_CREAT | os.O_RDWR)
-                        try:
-                            fcntl.flock(gfd, fcntl.LOCK_EX)
-                            # re-check under the guard: only the first
-                            # waiter sees it still stale
-                            if (
-                                time.time() - os.path.getmtime(lock)
-                                > STALE_MANIFEST_GRACE_SEC
-                            ):
-                                os.remove(lock)
-                        finally:
-                            os.close(gfd)  # releases the flock
-                        continue
-                except OSError:
-                    continue  # holder just released/raced — retry
-                if time.time() > deadline:
-                    raise CommitConflict(f"tag lock held: {lock}") from None
-                time.sleep(0.01)
-        try:
-            yield
-        finally:
-            os.close(fd)
-            # Fenced release: if we stalled past the grace window the
-            # lock may have been taken over — removing it then would
-            # free a lock a competitor is still holding (r13, same
-            # lease-fencing discipline as `_commit`).
-            try:
-                with open(lock, encoding="utf-8") as lf:
-                    if lf.read() == token:
-                        os.remove(lock)
-            except OSError:
-                pass
-
     def _write_tags(self, t: dict[str, int]) -> None:
-        tmp = self._tags_path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(t, f, sort_keys=True)
-        os.replace(tmp, self._tags_path)
+        _atomic_write(self._tags_path, json.dumps(t, sort_keys=True))
 
     def tag(self, name: str, version: int | None = None) -> "LakeTable":
         """Pin a named, immutable ref to a snapshot (Iceberg tag analog).
         Tagged snapshots survive expire_snapshots."""
-        v = self.current_version() if version is None else version
-        with self._tags_lock():
-            self.manifest(v)  # raises NoSuchTable if absent (or expired)
+        with self._lock():
+            v = self.manifest(version).version  # NoSuchTable if absent
             t = self.tags()
             t[name] = v
             self._write_tags(t)
         return self
 
     def drop_tag(self, name: str) -> "LakeTable":
-        with self._tags_lock():
+        with self._lock():
             t = self.tags()
             t.pop(name, None)
             self._write_tags(t)
@@ -1443,14 +1327,16 @@ class LakeTable:
         reference sink options :25-26). Deletes expired manifests and any
         data file referenced only by them. Tagged snapshots (refs) are
         always retained, as in Iceberg."""
-        mans = self.snapshots()
-        if len(mans) <= retain_last:
-            return []
-        removed = []
-        # tags lock: the tagged-set read and the deletes form one
-        # critical section, so a concurrent tag() cannot pin a manifest
-        # this call is about to delete (ADVICE r2).
-        with self._tags_lock():
+        if retain_last < 1:
+            raise ValueError(f"retain_last must be >= 1, got {retain_last}")
+        # Under the lock the pin reads and the manifest removals are one
+        # step, so a concurrent tag() cannot pin a manifest this call is
+        # about to delete. The dead data files are deleted after the
+        # lock is released, once no manifest names them.
+        with self._lock():
+            mans = self.snapshots()
+            if len(mans) <= retain_last:
+                return []
             # strict: a corrupt tags.json must abort expiry (fail-open
             # would un-pin every tagged snapshot and delete it — r12
             # review), unlike read paths where {} is a fine degrade
@@ -1474,20 +1360,19 @@ class LakeTable:
             # same rule as remove_orphan_files
             live = self._referenced_files(keep + refs)
             for m in drop:
-                for f in list(m.files) + list(m.delete_files):
-                    if f not in live:
-                        p = os.path.join(self.root, f)
-                        if os.path.isdir(p):  # equality-delete sidecar dir
-                            shutil.rmtree(p)
-                        elif os.path.exists(p):
-                            os.remove(p)
                 os.remove(self._manifest_path(m.version))
-                removed.append(m.version)
+        dead = {f for m in drop for f in [*m.files, *m.delete_files]} - live
+        for f in dead:
+            p = os.path.join(self.root, f)
+            if os.path.isdir(p):  # equality-delete sidecar dir
+                shutil.rmtree(p)
+            elif os.path.exists(p):
+                os.remove(p)
         # prune empty commit dirs (age-guarded: a dir newer than the
         # newest kept snapshot may be another writer's in-flight output
         # whose first part file hasn't landed yet — r12 review)
         self._prune_empty_commit_dirs(mans[-1].timestamp_ms)
-        return removed
+        return [m.version for m in drop]
 
     def _prune_empty_commit_dirs(self, older_than_ms: int) -> None:
         """Remove commit dirs holding zero parquet files — write debris
@@ -1640,14 +1525,8 @@ class LakeTable:
             timestamp_ms=int(time.time() * 1000),
             files=sorted(bm.files + new_files),
         )
-        # Atomic pointer update: write a temp file then os.replace(), so a
-        # crash mid-write never leaves a truncated branch ref (same
-        # discipline as _commit's atomic pointer replace for main).
-        path = self._branch_path(name)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(updated.to_json())
-        os.replace(tmp, path)
+        # atomic, so a crash mid-write never leaves a truncated branch ref
+        _atomic_write(self._branch_path(name), updated.to_json())
         return self
 
     def read_branch(self, name: str) -> DataFrame:
@@ -1783,6 +1662,15 @@ class LakeTable:
             json.dumps(new_schema.jsonValue()),
         )
         return self
+
+
+def _atomic_write(path: str, text: str) -> None:
+    """Write ``text`` to a tmp file and ``os.replace`` it onto ``path``:
+    readers and crashes see the old file or the new one, never a part."""
+    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w", encoding="utf-8") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 def _added_files(man: Manifest, parent: Manifest) -> list[str]:

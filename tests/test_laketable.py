@@ -202,21 +202,45 @@ def test_merge_rejects_duplicate_source_keys(spark, scratch, df10):
 
 
 def test_commit_manifest_race_is_atomic(spark, scratch, df10):
-    """Two writers racing for the same manifest slot: O_EXCL guarantees
-    exactly one wins even when both pass the version pre-check."""
+    """Two writers racing from the same parent: the loser waits on the
+    table lock while the winner commits, then finds its parent moved and
+    raises CommitConflict without touching the winner's manifest."""
+    import fcntl
+    import threading
+    import time
+
     root = os.path.join(scratch, "t_race")
     t1 = LakeTable(spark, root)
     t1.create(df10)
     man = t1.manifest()
-    # pre-create the v2 manifest slot, as a racing winner would
-    winner = t1._manifest_path(man.version + 1)
-    with open(winner, "w", encoding="utf-8") as f:
-        f.write(man.to_json())
-    with pytest.raises(CommitConflict):
-        t1._commit("append", man.files, man)
-    # the winner's manifest was not clobbered
-    with open(winner, encoding="utf-8") as f:
-        assert f.read() == man.to_json()
+    outcome: list[Exception] = []
+
+    def loser() -> None:
+        try:
+            t1._commit("append", man.files, man)
+        except Exception as e:  # noqa: BLE001 - surface to main thread
+            outcome.append(e)
+
+    fd = os.open(os.path.join(t1._manifest_dir, ".lock"), os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)  # the winner enters first
+        th = threading.Thread(target=loser)
+        th.start()
+        time.sleep(0.2)  # the loser is now polling the lock
+        winner = LakeTable(spark, root)
+        won = man.to_json().replace('"version": 1', '"version": 2')
+        with open(winner._manifest_path(2), "w", encoding="utf-8") as f:
+            f.write(won)
+        with open(winner._current_path, "w", encoding="utf-8") as f:
+            f.write("2")
+    finally:
+        os.close(fd)
+    th.join(timeout=60)
+    assert not th.is_alive()
+    assert len(outcome) == 1 and isinstance(outcome[0], CommitConflict)
+    with open(t1._manifest_path(2), encoding="utf-8") as f:
+        assert f.read() == won
+    assert t1.current_version() == 2
 
 
 def test_salted_join_rejects_right_outer():
@@ -256,7 +280,7 @@ def test_schema_evolution_roundtrip(spark, scratch, df10):
 
 def test_two_writer_race_one_winner_then_retry(spark, scratch, df10):
     """Two threads append from the same parent version simultaneously
-    (barrier-released): the O_EXCL manifest CAS must admit exactly one,
+    (barrier-released): the parent check under the table lock admits one,
     the loser surfaces CommitConflict, a retry from the fresh parent
     succeeds, and remove_orphan_files GCs the loser's first-attempt data
     without touching live files (Iceberg optimistic-concurrency contract,

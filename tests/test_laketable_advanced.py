@@ -131,12 +131,11 @@ def test_tags_pin_snapshots_through_expiry(spark, scratch):
         t.read_tag("baseline")
 
 
-def test_tag_lock_serializes_writers(spark, scratch, monkeypatch):
-    """Two concurrent tag writers must both land (no lost update), and a
-    held lock must surface as CommitConflict, not a silent overwrite."""
+def test_tag_lock_serializes_writers(spark, scratch):
+    """Concurrent tag writers must all land (no lost update); a held
+    lock is covered by test_held_table_lock_conflicts_and_writes_nothing."""
+    import sys
     import threading
-
-    from data_iceberg_sandbox_spark.tables import laketable as lt_mod
 
     t = LakeTable(spark, os.path.join(scratch, "tag_lock"))
     t.create(spark.range(3).withColumn("v", F.col("id")))
@@ -145,24 +144,17 @@ def test_tag_lock_serializes_writers(spark, scratch, monkeypatch):
     threads = [
         threading.Thread(target=t.tag, args=(f"tag{i}", 1)) for i in range(8)
     ]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert {f"tag{i}" for i in range(8)} <= set(t.tags())
-
-    # a held lock times out as CommitConflict (shrunk deadline)
-    monkeypatch.setattr(lt_mod, "TAGS_LOCK_TIMEOUT_SEC", 0.1)
-    lock = t._tags_path + ".lock"
-    fd = os.open(lock, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
     try:
-        with pytest.raises(CommitConflict):
-            t.tag("blocked", 1)
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
     finally:
-        os.close(fd)
-        os.remove(lock)
-    t.tag("after", 1)  # lock released -> works again
-    assert t.tags()["after"] == 1
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert {f"tag{i}" for i in range(8)} <= set(t.tags())
 
 
 def test_incremental_read_appends_only(spark, scratch):
@@ -419,34 +411,205 @@ def test_orphan_gc_protects_mor_delete_sidecars(spark, scratch):
     assert t.read().count() == 97  # sidecar intact, rows stay deleted
 
 
+def _leave_debris(t: LakeTable, df) -> None:
+    """Commit ``df`` as v(N+1), then move the pointer back to N: the
+    state a writer leaves that died between manifest write and pointer
+    swing. The debris manifest references real, uncommitted rows."""
+    v = t.current_version()
+    t.append(df)
+    with open(t._current_path, "w", encoding="utf-8") as f:
+        f.write(str(v))
+
+
 def test_commit_reclaims_dead_writer_manifest_slot(spark, scratch):
-    """r12 review: a v(N+1).json left by a writer that died between the
-    manifest write and the pointer swing must not wedge the table —
-    after the staleness grace it is reclaimed; meanwhile snapshots()
-    never lists the uncommitted debris."""
-    import data_iceberg_sandbox_spark.tables.laketable as lt
+    """A v(N+1).json left by a writer that died between the manifest
+    write and the pointer swing is invisible, and the next commit lands
+    at once over it: directly, and through the streaming epoch guard."""
+    from data_iceberg_sandbox_spark.streaming.fraud_stream import (
+        epoch_guarded_write,
+    )
 
     t = LakeTable(spark, os.path.join(scratch, "wedge"))
     t.create(spark.range(0, 10).withColumnRenamed("id", "k"))
-    # simulate the dead writer: manifest slot v2 taken, pointer still v1
-    debris = t._manifest_path(2)
-    with open(t._manifest_path(1), encoding="utf-8") as f:
-        body = f.read()
-    with open(debris, "w", encoding="utf-8") as f:
-        f.write(body.replace('"version": 1', '"version": 2'))
+    _leave_debris(t, spark.range(100, 103).withColumnRenamed("id", "k"))
     assert [m.version for m in t.snapshots()] == [1]  # debris invisible
-    # young debris = possibly a live racer -> still conflicts
-    try:
-        t.append(spark.range(10, 20).withColumnRenamed("id", "k"))
-        raise AssertionError("young debris slot must conflict")
-    except CommitConflict:
-        pass
-    # age it past the grace window -> next commit reclaims the slot
-    old = __import__("time").time() - lt.STALE_MANIFEST_GRACE_SEC - 5
-    os.utime(debris, (old, old))
     t.append(spark.range(10, 20).withColumnRenamed("id", "k"))
     assert t.current_version() == 2
-    assert t.read().count() == 20
+    assert sorted(r["k"] for r in t.read().collect()) == list(range(20))
+
+    s = LakeTable(spark, os.path.join(scratch, "wedge_epoch"))
+    batch = spark.range(0, 5).withColumnRenamed("id", "k")
+    epoch_guarded_write(s, batch, 0)
+    _leave_debris(s, batch)  # epoch 1's commit died before the swing
+    epoch_guarded_write(s, batch, 1)  # the retried epoch 1
+    assert s.current_version() == 2
+    assert s.manifest().properties["streaming.last_epoch"] == "1"
+    assert s.read().count() == 10
+
+
+def test_uncommitted_manifest_is_not_a_snapshot(spark, scratch):
+    """Every versioned read resolves through manifest(v), which refuses
+    a version above the pointer: the debris rows never surface, and no
+    tag or rollback can pin or commit them."""
+    t = LakeTable(spark, os.path.join(scratch, "ghost"))
+    t.create(spark.range(0, 5).withColumnRenamed("id", "k"))
+    _leave_debris(t, spark.range(100, 103).withColumnRenamed("id", "k"))
+    for read in (
+        lambda: t.read(version=2),
+        lambda: t.tag("ghost", 2),
+        lambda: t.rollback(2),
+        lambda: t.read_incremental(1, 2),
+        lambda: t.changes_between(1, 2),
+        lambda: t.snapshot_diff(1, 2),
+    ):
+        with pytest.raises(NoSuchTable):
+            read()
+    assert t.tags() == {} and t.current_version() == 1
+    assert t.read().count() == 5
+
+
+@pytest.mark.parametrize("op", ["append", "tag", "expire_snapshots"])
+def test_held_table_lock_conflicts_and_writes_nothing(spark, scratch, monkeypatch, op):
+    """While another open file holds the table lock, a commit, a tag and
+    an expiry each raise CommitConflict after the lock wait and change
+    no manifest, pointer or tag."""
+    import fcntl
+    import time
+
+    from data_iceberg_sandbox_spark.tables import laketable as lt_mod
+
+    t = LakeTable(spark, os.path.join(scratch, f"held_{op}"))
+    t.create(spark.range(0, 5).withColumnRenamed("id", "k"))
+    t.overwrite(spark.range(0, 6).withColumnRenamed("id", "k"))
+    t.overwrite(spark.range(0, 7).withColumnRenamed("id", "k"))
+    t.tag("base", 1)
+    call = {
+        "append": lambda: t.append(spark.range(10, 12).withColumnRenamed("id", "k")),
+        "tag": lambda: t.tag("blocked", 1),
+        "expire_snapshots": lambda: t.expire_snapshots(retain_last=1),
+    }[op]
+
+    def metadata() -> dict[str, bytes]:
+        out = {}
+        for d in (t.root, t._manifest_dir):
+            for fn in os.listdir(d):
+                p = os.path.join(d, fn)
+                if os.path.isfile(p):
+                    with open(p, "rb") as f:
+                        out[p] = f.read()
+        return out
+
+    monkeypatch.setattr(lt_mod, "LOCK_WAIT_SEC", 0.2)
+    before = metadata()
+    fd = os.open(os.path.join(t._manifest_dir, ".lock"), os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        t0 = time.monotonic()
+        with pytest.raises(CommitConflict):
+            call()
+        if op != "append":  # an append's data write runs before the lock
+            assert time.monotonic() - t0 < 5
+        assert metadata() == before
+    finally:
+        os.close(fd)
+    call()  # the lock is free again
+    assert metadata() != before
+
+
+def test_killed_lock_holder_does_not_block_commits(spark, scratch, monkeypatch):
+    """A process SIGKILLed inside the table lock leaves nothing to
+    reclaim: the kernel releases its flock, and the next commit lands
+    within the lock wait."""
+    import signal
+    import subprocess
+    import sys
+
+    from data_iceberg_sandbox_spark.tables import laketable as lt_mod
+
+    t = LakeTable(spark, os.path.join(scratch, "killed_holder"))
+    t.create(spark.range(0, 5).withColumnRenamed("id", "k"))
+    holder = subprocess.Popen(
+        [
+            sys.executable,
+            "-c",
+            "import sys, time\n"
+            "from data_iceberg_sandbox_spark.tables.laketable import LakeTable\n"
+            "held = LakeTable(None, sys.argv[1])._lock()\n"
+            "held.__enter__()\n"
+            "print('held', flush=True)\n"
+            "time.sleep(600)\n",
+            t.root,
+        ],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        assert holder.stdout.readline().strip() == "held"
+        monkeypatch.setattr(lt_mod, "LOCK_WAIT_SEC", 0.2)
+        with pytest.raises(CommitConflict):
+            t.tag("blocked")
+        holder.send_signal(signal.SIGKILL)
+        holder.wait(timeout=30)
+    finally:
+        holder.kill()
+        holder.wait(timeout=30)
+        holder.stdout.close()
+    t.append(spark.range(5, 8).withColumnRenamed("id", "k"))
+    t.tag("after")
+    assert t.current_version() == 2 and t.tags() == {"after": 2}
+    assert t.read().count() == 8
+
+
+def test_table_from_before_the_lock_still_works(spark, scratch):
+    """Tables written before the table lock carry a per-commit ``writer``
+    key in each manifest and may hold a leftover ``tags.json.lock``:
+    they still read, tag and commit."""
+    import json
+
+    t = LakeTable(spark, os.path.join(scratch, "pre_lock"))
+    t.create(spark.range(0, 5).withColumnRenamed("id", "k"))
+    t.append(spark.range(5, 8).withColumnRenamed("id", "k"))
+    for v in (1, 2):
+        with open(t._manifest_path(v), encoding="utf-8") as f:
+            d = json.load(f)
+        d["writer"] = f"w{v}"
+        with open(t._manifest_path(v), "w", encoding="utf-8") as f:
+            json.dump(d, f)
+    with open(t._tags_path + ".lock", "w", encoding="utf-8") as f:
+        f.write("dead-holder-token")
+    assert t.read(version=1).count() == 5 and t.read().count() == 8
+    t.tag("old", 1)
+    t.append(spark.range(8, 10).withColumnRenamed("id", "k"))
+    assert t.tags() == {"old": 1} and t.read().count() == 10
+    assert [m.version for m in t.snapshots()] == [1, 2, 3]
+
+
+def test_expire_snapshots_rejects_retain_last_below_one(spark, t):
+    t.append(spark.range(10, 12).withColumn("v", F.col("id")))
+    for bad in (0, -2):
+        with pytest.raises(ValueError):
+            t.expire_snapshots(retain_last=bad)
+    assert [m.version for m in t.snapshots()] == [1, 2]
+    assert t.read().count() == 12
+
+
+@pytest.mark.parametrize("method", ["compact", "rewrite_sorted", "rewrite_zorder"])
+@pytest.mark.parametrize("size", [0, -1])
+def test_rewrite_rejects_target_file_size_below_one(spark, scratch, method, size):
+    """A non-positive target is refused before any scan (0 divided by
+    zero; a negative target silently wrote one file)."""
+    t = LakeTable(spark, os.path.join(scratch, f"rewrite_size_{method}_{-size}"))
+    t.create(spark.range(10).withColumn("v", F.col("id") * 2))
+
+    def no_scan(*_a, **_k):
+        raise AssertionError("scanned before validating the target size")
+
+    t._scan_manifest = no_scan
+    args = [] if method == "compact" else [["id"]]
+    with pytest.raises(ValueError):
+        getattr(t, method)(*args, target_file_size_bytes=size)
+    assert [m.version for m in t.snapshots()] == [1]
 
 
 def test_drop_table_refuses_namespace(spark, scratch):
@@ -489,116 +652,6 @@ def test_read_incremental_across_branch_fast_forward(spark, scratch):
     t.fast_forward("b")
     got = sorted(r["k"] for r in t.read_incremental(1).collect())
     assert got == list(range(10, 18))
-
-
-def test_reclaimed_slot_fence_competitor_swung(spark, scratch):
-    """r13 ADVICE (high): a slow writer whose v(N+1) slot was reclaimed
-    by a competitor must NOT delete the competitor's committed manifest
-    on CAS failure — the old unfenced cleanup corrupted the table."""
-    import json as _json
-
-    from data_iceberg_sandbox_spark.tables.laketable import Manifest
-
-    t = LakeTable(spark, os.path.join(scratch, "fence_a"))
-    t.create(spark.range(0, 5).withColumnRenamed("id", "k"))
-    cur = t.manifest()
-    mpath = t._manifest_path(2)
-    competitor = Manifest(
-        version=2,
-        parent=1,
-        operation="append",
-        timestamp_ms=cur.timestamp_ms + 1,
-        schema_json=cur.schema_json,
-        partition_by=cur.partition_by,
-        files=cur.files,
-        properties=cur.properties,
-        file_stats=cur.file_stats,
-        delete_files={},
-        file_seq={f: 1 for f in cur.files},
-        writer="competitor",
-    ).to_json()
-
-    real_cv = LakeTable.current_version
-
-    def hijack(self):
-        # simulate the competitor reclaiming our slot and swinging
-        # the pointer, exactly between our manifest write and CAS
-        if os.path.exists(mpath):
-            with open(mpath, "w", encoding="utf-8") as f:
-                f.write(competitor)
-            with open(self._current_path, "w", encoding="utf-8") as f:
-                f.write("2")
-            t.current_version = real_cv.__get__(t)
-        return real_cv(self)
-
-    t.current_version = hijack.__get__(t)
-    with pytest.raises(CommitConflict):
-        t.append(spark.range(5, 9).withColumnRenamed("id", "k"))
-    # competitor's committed manifest survives; table reads fine
-    assert os.path.exists(mpath)
-    with open(mpath, encoding="utf-8") as f:
-        assert _json.loads(f.read())["writer"] == "competitor"
-    assert t.current_version() == 2
-    assert t.read().count() == 5
-
-
-def test_reclaimed_slot_fence_competitor_not_swung(spark, scratch):
-    """r13 ADVICE (high), lost-commit half: if the competitor reclaimed
-    the slot but has not swung yet, the slow writer must raise instead
-    of acknowledging a commit whose files the slot does not reference."""
-    from data_iceberg_sandbox_spark.tables.laketable import Manifest
-
-    t = LakeTable(spark, os.path.join(scratch, "fence_b"))
-    t.create(spark.range(0, 5).withColumnRenamed("id", "k"))
-    cur = t.manifest()
-    mpath = t._manifest_path(2)
-    competitor = Manifest(
-        version=2,
-        parent=1,
-        operation="append",
-        timestamp_ms=cur.timestamp_ms + 1,
-        schema_json=cur.schema_json,
-        partition_by=cur.partition_by,
-        files=cur.files,
-        properties=cur.properties,
-        file_stats=cur.file_stats,
-        delete_files={},
-        file_seq={f: 1 for f in cur.files},
-        writer="competitor",
-    ).to_json()
-
-    real_cv = LakeTable.current_version
-
-    def hijack(self):
-        if os.path.exists(mpath):
-            with open(mpath, "w", encoding="utf-8") as f:
-                f.write(competitor)  # slot reclaimed, pointer NOT swung
-            t.current_version = real_cv.__get__(t)
-        return real_cv(self)
-
-    t.current_version = hijack.__get__(t)
-    with pytest.raises(CommitConflict):
-        t.append(spark.range(5, 9).withColumnRenamed("id", "k"))
-    # pointer untouched — the slow writer did not swing onto the
-    # competitor's manifest
-    assert t.current_version() == 1
-    assert t.read().count() == 5
-
-
-def test_tags_lock_fenced_release(spark, scratch):
-    """r13: a lock taken over mid-hold must not be removed by the
-    original (stalled) holder's release."""
-    t = LakeTable(spark, os.path.join(scratch, "fence_lock"))
-    t.create(spark.range(0, 3).withColumnRenamed("id", "k"))
-    lock = t._tags_path + ".lock"
-    with t._tags_lock():
-        with open(lock, "w", encoding="utf-8") as f:
-            f.write("foreign-holder")  # competitor took the lock over
-    assert os.path.exists(lock)  # fenced release left it alone
-    os.remove(lock)
-    with t._tags_lock():  # lock still usable afterwards
-        pass
-    assert not os.path.exists(lock)
 
 
 def test_concurrent_appends_lose_nothing(spark, scratch):
