@@ -247,6 +247,25 @@ def windowed_alerts(stream: DataFrame, threshold: float, watermark: str | None =
     )
 
 
+def enrich_alerts(alerts: DataFrame, customer: DataFrame, nation: DataFrame) -> DataFrame:
+    """The W5 enrichment of fraud alerts (mv_fraud_alerts_client.sql:
+    11-17): two LEFT joins, alert → customer → nation, projected to the
+    enriched sink schema."""
+    return (
+        alerts.join(customer, alerts.user_id == customer.c_custkey, "left")
+        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey, "left")
+        .select(
+            F.col("c_custkey").alias("client_id"),
+            F.col("c_name").alias("client_name"),
+            F.col("n_name").alias("client_nation"),
+            "user_id",
+            "window_start",
+            "window_end",
+            "total_amount",
+        )
+    )
+
+
 def run_fraud_alerts_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -277,25 +296,7 @@ def run_fraud_alerts_stream(
     nation = nation_df if nation_df is not None else load_table(spark, sf_dir, "nation")
 
     def upsert_batch(batch_df: DataFrame, _epoch: int) -> None:
-        out = batch_df
-        if enrich:
-            out = (
-                batch_df.join(customer, batch_df.user_id == customer.c_custkey, "left")
-                .join(
-                    F.broadcast(nation),
-                    customer.c_nationkey == nation.n_nationkey,
-                    "left",
-                )
-                .select(
-                    F.col("c_custkey").alias("client_id"),
-                    F.col("c_name").alias("client_name"),
-                    F.col("n_name").alias("client_nation"),
-                    "user_id",
-                    "window_start",
-                    "window_end",
-                    "total_amount",
-                )
-            )
+        out = enrich_alerts(batch_df, customer, nation) if enrich else batch_df
         if not result.exists():
             result.create(out)
         else:
@@ -315,25 +316,12 @@ def run_fraud_alerts_stream(
         # the empty table must carry the SINK schema: with enrich=True
         # that is the 7-column enriched shape, not alerts' 4 columns —
         # otherwise repair_null_enrichment and the oracle comparison
-        # crash on the missing enrichment columns (r12 review)
-        schema = alerts.schema
+        # crash on the missing enrichment columns. Analysis alone gives
+        # the enriched schema: no job runs.
+        empty = spark.createDataFrame([], alerts.schema)
         if enrich:
-            schema = (
-                spark.createDataFrame([], alerts.schema)
-                .join(customer.limit(0), F.lit(False), "left")
-                .join(F.broadcast(nation.limit(0)), F.lit(False), "left")
-                .select(
-                    F.col("c_custkey").alias("client_id"),
-                    F.col("c_name").alias("client_name"),
-                    F.col("n_name").alias("client_nation"),
-                    "user_id",
-                    "window_start",
-                    "window_end",
-                    "total_amount",
-                )
-                .schema
-            )
-        result.create(spark.createDataFrame([], schema))
+            empty = spark.createDataFrame([], enrich_alerts(empty, customer, nation).schema)
+        result.create(empty)
     return result
 
 
@@ -359,13 +347,16 @@ def run_mor_profile_stream(
     """Streaming keyed MV maintained by MERGE-ON-READ upserts: an
     update-mode per-user aggregate (count / exact decimal sum / max ts)
     where each micro-batch's changed rows land via
-    ``LakeTable.upsert_keys_mor`` — one equality-delete sidecar + one
-    data-file set per batch, ZERO rewrites of prior MV files. This is
+    ``LakeTable.upsert_keys_mor`` — one data-file set plus one
+    equality-delete sidecar taken from those files, ZERO rewrites of
+    prior MV files. The sink evaluates the micro-batch (a plan over the
+    stateful aggregate) once, by the data write: it does not probe the
+    batch for rows, since an empty batch commits nothing. This is
     the CDC-style sink shape for high-churn keyed MVs at 100 TB: commit
     cost tracks the batch's changed-key count, not the MV size, and the
-    read side resolves sidecars with sequence-scoped broadcast
-    anti-joins. The table is returned UNMATERIALIZED (sidecars intact),
-    so the oracle comparison exercises the MoR read path end to end;
+    read side resolves sidecars with sequence-scoped anti-joins. The
+    table is returned UNMATERIALIZED (sidecars intact), so the oracle
+    comparison exercises the MoR read path end to end;
     `compact()` is the maintenance hook that folds it flat. Converges
     to the one-shot batch groupBy — the same incremental-MV contract as
     the COW-merge runners."""
@@ -387,7 +378,7 @@ def run_mor_profile_stream(
     def upsert_batch(batch_df: DataFrame, _epoch: int) -> None:
         if not result.exists():
             result.create(batch_df)
-        elif batch_df.take(1):
+        else:  # an empty batch commits nothing
             result.upsert_keys_mor(batch_df, ["user_id"])
 
     return drain(prof, "update", upsert_batch, result)
@@ -652,23 +643,14 @@ def repair_null_enrichment(
     orphans = cur.filter(F.col("client_id").isNull()).select(
         "user_id", "window_start", "window_end", "total_amount"
     )
-    if not orphans.take(1):
+    if orphans.isEmpty():
         # nothing to repair: skip the O(MV size) copy-on-write MERGE
         # rewrite and the spurious snapshot most scheduled repair
         # cycles would otherwise commit (r12 review)
         return result
-    repaired = (
-        orphans.join(customer, orphans.user_id == customer.c_custkey, "left")
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey, "left")
-        .select(
-            F.col("c_custkey").alias("client_id"),
-            F.col("c_name").alias("client_name"),
-            F.col("n_name").alias("client_nation"),
-            "user_id",
-            "window_start",
-            "window_end",
-            "total_amount",
-        )
+    result.merge(
+        enrich_alerts(orphans, customer, nation),
+        on=["user_id", "window_start"],
+        assume_unique_source=True,
     )
-    result.merge(repaired, on=["user_id", "window_start"], assume_unique_source=True)
     return result

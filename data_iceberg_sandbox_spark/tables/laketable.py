@@ -512,25 +512,16 @@ class LakeTable:
             older_than_ms = mans[-1].timestamp_ms
         live = self._referenced_files(mans + self._branches())
         removed: list[str] = []
-        data_dir = os.path.join(self.root, "data")
-        if not os.path.isdir(data_dir):
-            return []
-        for dirpath, _dirnames, filenames in os.walk(data_dir):
-            for fn in filenames:
-                if not fn.endswith(".parquet"):
-                    continue
-                full = os.path.join(dirpath, fn)
-                rel = os.path.relpath(full, self.root)
-                if rel in live:
-                    continue
-                if os.path.getmtime(full) * 1000 >= older_than_ms:
-                    continue  # possibly an in-flight commit's data
-                os.remove(full)
-                removed.append(rel)
+        for rel in _parquet_files(self.root, "data"):
+            full = os.path.join(self.root, rel)
+            if rel in live or os.path.getmtime(full) * 1000 >= older_than_ms:
+                continue  # live, or possibly an in-flight commit's data
+            os.remove(full)
+            removed.append(rel)
         # a commit dir with no parquet left holds only write sidecars
         # (_SUCCESS, .crc) — debris; age-guarded like the files above
         self._prune_empty_commit_dirs(older_than_ms)
-        return sorted(removed)
+        return removed
 
     def _referenced_files(self, mans: list["Manifest"]) -> set:
         """Every file the given snapshots and branch refs point at: data
@@ -544,13 +535,7 @@ class LakeTable:
             for d in m.delete_files:
                 # an equality-delete sidecar is a parquet DIRECTORY —
                 # expand it so the per-file GC walk sees its parts
-                full = os.path.join(self.root, d)
-                if os.path.isdir(full):
-                    for dp, _dn, fns in os.walk(full):
-                        for fn in fns:
-                            live.add(
-                                os.path.relpath(os.path.join(dp, fn), self.root)
-                            )
+                live.update(_parquet_files(self.root, d))
                 live.add(d)
         return live
 
@@ -623,13 +608,10 @@ class LakeTable:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(out)
-        files = []
-        for dirpath, _dirnames, filenames in os.walk(out):
-            for fn in filenames:
-                if fn.endswith(".parquet"):
-                    rel = os.path.relpath(os.path.join(dirpath, fn), self.root)
-                    files.append(rel)
-        return sorted(files)
+        files = _parquet_files(self.root, commit_dir)
+        if not files:  # zero rows into a partitioned layout: no debris dir
+            shutil.rmtree(out)
+        return files
 
     def _collect_file_stats(
         self, files: list[str], schema_json: str, partition_by: list[str]
@@ -852,8 +834,6 @@ class LakeTable:
             for k in cur.properties.get("identifier.fields", "").split(",")
             if k.strip()
         ]
-        if not keys:
-            raise ValueError("merge needs `on` keys or identifier.fields property")
         return self._cow_merge(
             cur,
             source,
@@ -903,6 +883,22 @@ class LakeTable:
             insert_when=True if insert_when is None else insert_when,
         )
 
+    def _check_keys(self, cur: "Manifest", keys: list[str], source: DataFrame) -> None:
+        """The key check of every keyed DML, before any job: each key is a
+        table and ``source`` column (``_align`` null-fills a missing one)."""
+        if not keys:
+            raise ValueError("no merge keys: pass them or set identifier.fields")
+        table_cols = {f["name"] for f in json.loads(cur.schema_json)["fields"]}
+        bad = [k for k in keys if k not in table_cols or k not in source.columns]
+        if bad:
+            raise ValueError(f"key columns {bad} must be in the table and the source")
+
+    def _write_eq_delete(self, keys: DataFrame) -> str:
+        """Write ``keys``' distinct rows as an equality-delete sidecar dir."""
+        rel = f"data/{uuid.uuid4().hex[:12]}-eqdelete"
+        keys.distinct().write.mode("overwrite").parquet(os.path.join(self.root, rel))
+        return rel
+
     def _cow_merge(
         self,
         cur: "Manifest",
@@ -929,23 +925,13 @@ class LakeTable:
         Keys join with ``=``, so NULL keys never match: a NULL-keyed
         target row survives untouched and a NULL-keyed source row is an
         insert."""
+        self._check_keys(cur, keys, source)
         target = self._scan_manifest(cur)
         source = _align(source, cur.schema_json)
         cols = target.columns
 
-        if check_unique:
-            dup = (
-                source.groupBy(*keys)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > 1)
-                .limit(1)
-                .collect()
-            )
-            if dup:
-                key_vals = {k: dup[0][k] for k in keys}
-                raise MergeCardinalityError(
-                    f"source has multiple rows for merge key {key_vals}"
-                )
+        if check_unique and (dup := _duplicate_key(source, keys)):
+            raise MergeCardinalityError(f"source has multiple rows for merge key {dup}")
 
         # markers: non-NULL exactly on the rows the side contributed; the
         # source's also carries the (non-NULL) insert decision
@@ -1054,28 +1040,16 @@ class LakeTable:
         so a delete of k keys costs O(k) regardless of table size (the
         CDC/GDPR-erasure shape at 100 TB). ``read()`` suppresses
         matching rows in every data file whose sequence predates the
-        sidecar's via a broadcast anti-join; rows appended AFTER the
+        sidecar's via an anti-join; rows appended AFTER the
         delete carry a higher sequence and are never suppressed.
         ``compact()`` (or any full rewrite) materializes the deletes and
-        drops the sidecar. The key columns must be a subset of the table
-        schema; NULL key values are ignored (SQL equality never matches
+        drops the sidecar. The sidecar is the distinct rows of ``keys``,
+        whose columns must be table columns (``ValueError`` before any
+        job); NULL key values match nothing (SQL equality never matches
         NULL — use delete_where for predicate deletes)."""
         cur = self.manifest()
-        schema = T.StructType.fromJson(json.loads(cur.schema_json))
-        table_cols = {f.name for f in schema.fields}
-        bad = [c for c in keys.columns if c not in table_cols]
-        if bad:
-            raise ValueError(
-                f"equality-delete key columns {bad} not in table schema"
-            )
-        rel = f"data/{uuid.uuid4().hex[:12]}-eqdelete"
-        cond = None
-        for c in keys.columns:
-            cn = F.col(c).isNotNull()
-            cond = cn if cond is None else (cond & cn)
-        keys.filter(cond).distinct().write.mode("overwrite").parquet(
-            os.path.join(self.root, rel)
-        )
+        self._check_keys(cur, keys.columns, keys)
+        rel = self._write_eq_delete(keys)
         new_seq = cur.version + 1  # _commit's parent check guarantees it
         self._commit(
             "delete-mor",
@@ -1112,37 +1086,37 @@ class LakeTable:
         self, df: DataFrame, key_cols: list[str]
     ) -> "LakeTable":
         """Merge-on-read UPSERT (Iceberg v2 CDC write shape): ONE commit
-        carrying both an equality-delete sidecar for the source keys and
-        the source rows as new data files. Existing rows with matching
-        keys are suppressed at read (the sidecar applies to every data
-        file with a lower sequence), while the commit's own data files
-        share the sidecar's sequence and are exempt — so the new
-        versions win without rewriting a single existing file. This is
-        the O(batch) streaming-CDC ingest path; `merge()` is the
-        copy-on-write equivalent. Enforces the MERGE cardinality
-        contract (distinct source keys)."""
+        of the source rows as new data files plus an equality-delete
+        sidecar of their keys. The sidecar hides older rows with those
+        keys at read (files of a lower sequence); this commit's files
+        share its sequence and are exempt, so no existing file is
+        rewritten. The O(batch) streaming-CDC ingest path; `merge()` is
+        the copy-on-write form.
+
+        The source is read once, by the data write. The sidecar is the
+        distinct key tuples of the new files (read by key column, so
+        partition keys come from the paths). Footer row counts decide
+        the rest: an empty source commits nothing; fewer keys than rows
+        is a duplicate key (NULLs included, as in GROUP BY), so both new
+        dirs are removed and MergeCardinalityError is raised."""
         cur = self.manifest()
-        schema = T.StructType.fromJson(json.loads(cur.schema_json))
-        table_cols = {f.name for f in schema.fields}
-        bad = [c for c in key_cols if c not in table_cols or c not in df.columns]
-        if bad:
-            raise ValueError(
-                f"upsert key columns {bad} must exist in table and source"
-            )
-        dup = (
-            df.groupBy(*key_cols).count().filter(F.col("count") > 1).limit(1)
-        ).collect()
-        if dup:
-            raise MergeCardinalityError(
-                f"duplicate source key {tuple(dup[0][c] for c in key_cols)}"
-            )
-        rel = f"data/{uuid.uuid4().hex[:12]}-eqdelete"
-        df.select(*key_cols).distinct().write.mode("overwrite").parquet(
-            os.path.join(self.root, rel)
-        )
+        self._check_keys(cur, key_cols, df)
         new_files = self._write_data_files(
             _align(df, cur.schema_json), cur.partition_by, cur.properties
         )
+        new_dirs = {"/".join(f.split("/")[:2]) for f in new_files}  # data/<commit>
+        n_rows = _footer_rows(self.root, new_files)
+        if not n_rows:
+            for d in new_dirs:
+                shutil.rmtree(os.path.join(self.root, d))
+            return self
+        keys = self._scan_file_subset(cur, new_files).select(*key_cols)
+        rel = self._write_eq_delete(keys)
+        if _footer_rows(self.root, _parquet_files(self.root, rel)) < n_rows:
+            dup = _duplicate_key(keys, key_cols)
+            for d in new_dirs | {rel}:
+                shutil.rmtree(os.path.join(self.root, d))
+            raise MergeCardinalityError(f"source has multiple rows for merge key {dup}")
         new_seq = cur.version + 1  # _commit's parent check guarantees it
         self._commit(
             "upsert-mor",
@@ -1281,10 +1255,10 @@ class LakeTable:
         return os.path.join(self.root, "tags.json")
 
     def tags(self, strict: bool = False) -> dict[str, int]:
-        """Tag refs. ``strict=True`` (the expire_snapshots path) raises
-        on a corrupt/unreadable tags.json instead of returning {} —
-        failing open there would un-pin every tagged snapshot and let
-        expiry delete them (r12 review)."""
+        """Tag refs. ``strict=True`` (tag, drop_tag, expire_snapshots)
+        raises on a corrupt/unreadable tags.json instead of returning
+        {}: failing open there would write {} back or let expiry delete
+        every tagged snapshot."""
         if not os.path.exists(self._tags_path):
             return {}
         try:
@@ -1303,14 +1277,14 @@ class LakeTable:
         Tagged snapshots survive expire_snapshots."""
         with self._lock():
             v = self.manifest(version).version  # NoSuchTable if absent
-            t = self.tags()
+            t = self.tags(strict=True)
             t[name] = v
             self._write_tags(t)
         return self
 
     def drop_tag(self, name: str) -> "LakeTable":
         with self._lock():
-            t = self.tags()
+            t = self.tags(strict=True)
             t.pop(name, None)
             self._write_tags(t)
         return self
@@ -1387,11 +1361,7 @@ class LakeTable:
                 continue
             if os.path.getmtime(full) * 1000 >= older_than_ms:
                 continue
-            if not any(
-                fn.endswith(".parquet")
-                for _, _, fns in os.walk(full)
-                for fn in fns
-            ):
+            if not _parquet_files(data_dir, d):
                 shutil.rmtree(full)
 
     # ---- metadata tables (D6: `t.snapshots` / `t.files` analogs) --------
@@ -1462,11 +1432,13 @@ class LakeTable:
         return os.path.join(self._manifest_dir, f"branch_{name}.json")
 
     def _branch_manifest(self, name: str) -> Manifest:
+        """Branch ``name``'s ref; NoSuchTable if absent or crash debris."""
         path = self._branch_path(name)
-        if not os.path.exists(path):
-            raise NoSuchTable(f"no branch {name!r} on {self.root}")
-        with open(path, encoding="utf-8") as f:
-            return Manifest.from_json(f.read())
+        try:
+            with open(path, encoding="utf-8") as f:
+                return Manifest.from_json(f.read())
+        except (OSError, ValueError):
+            raise NoSuchTable(f"no branch {name!r} on {self.root}") from None
 
     def _branches(self) -> list[Manifest]:
         """Every branch ref's manifest. A truncated or corrupt ref is
@@ -1479,17 +1451,14 @@ class LakeTable:
         for fn in sorted(os.listdir(self._manifest_dir)):
             if fn.startswith("branch_") and fn.endswith(".json"):
                 try:
-                    with open(
-                        os.path.join(self._manifest_dir, fn), encoding="utf-8"
-                    ) as fh:
-                        refs.append(Manifest.from_json(fh.read()))
-                except (ValueError, OSError):
+                    refs.append(self._branch_manifest(fn[len("branch_") : -len(".json")]))
+                except NoSuchTable:
                     continue
         return refs
 
     def create_branch(self, name: str) -> "LakeTable":
-        """Fork a branch from the CURRENT snapshot. O_EXCL creation —
-        a concurrent create of the same name raises CommitConflict."""
+        """Fork a branch from the CURRENT snapshot. An existing ref of
+        that name raises CommitConflict; the ref is written atomically."""
         cur = self.manifest()
         bm = Manifest(
             version=-1,  # assigned at fast_forward
@@ -1503,12 +1472,11 @@ class LakeTable:
             delete_files=dict(cur.delete_files),
             file_seq=dict(cur.file_seq) or {f: cur.version for f in cur.files},
         )
-        os.makedirs(self._manifest_dir, exist_ok=True)
-        try:
-            with open(self._branch_path(name), "x", encoding="utf-8") as f:
-                f.write(bm.to_json())
-        except FileExistsError:
-            raise CommitConflict(f"branch {name!r} already exists on {self.root}")
+        path = self._branch_path(name)
+        with self._lock():
+            if os.path.exists(path):
+                raise CommitConflict(f"branch {name!r} already exists on {self.root}")
+            _atomic_write(path, bm.to_json())
         return self
 
     def branch_append(self, name: str, df: DataFrame) -> "LakeTable":
@@ -1671,6 +1639,27 @@ def _atomic_write(path: str, text: str) -> None:
     with open(tmp, "w", encoding="utf-8") as f:
         f.write(text)
     os.replace(tmp, path)
+
+
+def _parquet_files(root: str, rel: str) -> list[str]:
+    """The parquet files under ``root/rel``, sorted, relative to ``root``."""
+    return sorted(
+        os.path.relpath(os.path.join(dirpath, fn), root)
+        for dirpath, _, fns in os.walk(os.path.join(root, rel))
+        for fn in fns
+        if fn.endswith(".parquet")
+    )
+
+
+def _duplicate_key(df: DataFrame, keys: list[str]) -> dict | None:
+    """A key tuple ``df`` holds more than once (NULLs group, as in GROUP BY)."""
+    dup = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__rows")).filter("__rows > 1").first()
+    return dict(zip(keys, dup)) if dup else None
+
+
+def _footer_rows(root: str, files: list[str]) -> int:
+    """The row count of ``files`` from their footers: no Spark job."""
+    return sum(pq.read_metadata(os.path.join(root, f)).num_rows for f in files)
 
 
 def _added_files(man: Manifest, parent: Manifest) -> list[str]:

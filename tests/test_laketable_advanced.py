@@ -157,6 +157,20 @@ def test_tag_lock_serializes_writers(spark, scratch):
     assert {f"tag{i}" for i in range(8)} <= set(t.tags())
 
 
+def test_tag_refuses_a_damaged_tags_file(spark, t):
+    """tag/drop_tag read tags.json strictly: a damaged file raises and is
+    left as it is, instead of being read as {} and written back."""
+    t.tag("a", 1)
+    t.tag("b", 1)
+    with open(t._tags_path, "w", encoding="utf-8") as f:
+        f.write('{"a": 1, "b": ')
+    for op in (lambda: t.tag("c", 1), lambda: t.drop_tag("a")):
+        with pytest.raises(ValueError):
+            op()
+        with open(t._tags_path, encoding="utf-8") as f:
+            assert f.read() == '{"a": 1, "b": '
+
+
 def test_incremental_read_appends_only(spark, scratch):
     from data_iceberg_sandbox_spark.tables.laketable import (
         IncrementalReadError,
@@ -344,6 +358,23 @@ def test_branch_duplicate_create_conflicts(spark, t):
     t.create_branch("dup")
     with pytest.raises(CommitConflict):
         t.create_branch("dup")
+
+
+def test_truncated_branch_ref_is_no_branch(spark, t):
+    """A truncated ref left by a crashed writer reads as no branch, not
+    as a JSONDecodeError; create keeps refusing the name until it is
+    dropped."""
+    with open(t._branch_path("cut"), "w", encoding="utf-8") as f:
+        f.write('{"version": -1, "par')
+    with pytest.raises(NoSuchTable):
+        t.read_branch("cut")
+    with pytest.raises(NoSuchTable):
+        t.fast_forward("cut")
+    with pytest.raises(CommitConflict):
+        t.create_branch("cut")
+    t.drop_branch("cut")
+    t.create_branch("cut")
+    assert t.read_branch("cut").count() == 10
 
 
 def test_two_branches_first_ff_wins(spark, t):

@@ -67,6 +67,22 @@ def test_merge_plans_one_join_and_scans_source_once(spark, scratch, monkeypatch,
     assert {r.k: r.v for r in t.read().collect()} == want
 
 
+@pytest.mark.parametrize("form", ["merge", "merge_conditional"])
+@pytest.mark.parametrize("missing_from", ["source", "table"])
+def test_merge_key_missing_raises_before_any_commit(spark, scratch, form, missing_from):
+    """A key the source lacks is not null-filled into a NULL-key insert,
+    and a key the table lacks fails on the driver: ValueError, no commit."""
+    t = _table(spark, scratch, f"m_badkey_{form}_{missing_from}", [(1, "a", 1)])
+    v0 = t.current_version()
+    src = _src(spark, [(1, "x", 10)])
+    src = src.drop("k") if missing_from == "source" else src.withColumnRenamed("k", "kk")
+    key = "k" if missing_from == "source" else "kk"
+    with pytest.raises(ValueError, match="key columns"):
+        getattr(t, form)(src, on=[key])
+    assert t.current_version() == v0
+    assert _rows(t) == Counter([(1, "a", 1)])
+
+
 def test_merge_without_inserts_is_a_left_outer_join(spark, scratch, monkeypatch):
     t = _table(spark, scratch, "plan_no_insert", [(1, "a", 1)])
     seen = _capture_merged(monkeypatch)

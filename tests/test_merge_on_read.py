@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from data_iceberg_sandbox_spark.tables.laketable import (
     IncrementalReadError,
     LakeTable,
+    MergeCardinalityError,
 )
 
 
@@ -98,10 +99,17 @@ def test_mor_incremental_read_rejects_delete_commits(spark, scratch):
 
 def test_mor_rejects_unknown_key_columns_and_guards_drops(spark, scratch):
     t = _mk(spark, scratch, "mor7")
+    v0 = t.current_version()
     with pytest.raises(ValueError):
         t.delete_keys_mor(
             spark.createDataFrame([(1,)], "nope: long")
         )
+    src = spark.createDataFrame([(1, 1)], "id: long, v: long")
+    with pytest.raises(ValueError):  # key not in the table
+        t.upsert_keys_mor(src.withColumnRenamed("v", "nope"), ["nope"])
+    with pytest.raises(ValueError):  # key not in the source
+        t.upsert_keys_mor(src.select("v"), ["id"])
+    assert t.current_version() == v0
 
 
 def test_mor_upsert_one_commit_updates_and_inserts(spark, scratch):
@@ -129,3 +137,69 @@ def test_mor_upsert_one_commit_updates_and_inserts(spark, scratch):
     # a later MoR delete removes the upserted version too
     t.delete_keys_mor(_keys(spark, [5]))
     assert t.read().filter(F.col("id") == 5).count() == 0
+
+
+def _data_dirs(t):
+    return set(os.listdir(os.path.join(t.root, "data")))
+
+
+def test_mor_upsert_evaluates_source_once(spark, scratch):
+    """The source is read by the data write alone: the sidecar and the
+    cardinality check come from the written files."""
+    t = _mk(spark, scratch, "mor_once")
+    acc = spark.sparkContext.accumulator(0)
+
+    def counted(i):
+        acc.add(1)
+        return i
+
+    udf = F.udf(counted, "long")
+    src = spark.range(90, 120).select(udf("id").alias("id"), F.lit(7).cast("long").alias("v"))
+    t.upsert_keys_mor(src, ["id"])
+    assert acc.value == 30
+    got = {r["id"]: r["v"] for r in t.read().collect()}
+    assert len(got) == 120 and got[95] == 7 and got[89] == 9
+
+
+def test_mor_upsert_cardinality_errors_leave_nothing(spark, scratch):
+    t = _mk(spark, scratch, "mor_card", n=10)
+    v0, dirs = t.current_version(), _data_dirs(t)
+    for rows in ([(1, 1), (1, 2)], [(None, 1), (None, 2)]):
+        with pytest.raises(MergeCardinalityError):
+            t.upsert_keys_mor(spark.createDataFrame(rows, "id: long, v: long"), ["id"])
+        assert t.current_version() == v0
+        assert _data_dirs(t) == dirs
+    t.upsert_keys_mor(spark.createDataFrame([(None, 5), (3, 33)], "id: long, v: long"), ["id"])
+    # one NULL-keyed row is accepted: it is an insert that matches nothing
+    got = {(r["id"], r["v"]) for r in t.read().collect() if r["id"] in (None, 3)}
+    assert got == {(None, 5), (3, 33)}
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_mor_upsert_empty_source_commits_nothing(spark, scratch, partitioned):
+    t = LakeTable(spark, os.path.join(scratch, f"mor_empty_{partitioned}"))
+    t.create(
+        spark.range(10).withColumn("v", F.col("id") % 3),
+        partition_by=["v"] if partitioned else None,
+    )
+    v0, dirs = t.current_version(), _data_dirs(t)
+    t.upsert_keys_mor(spark.createDataFrame([], "id: long, v: long"), ["id"])
+    assert t.current_version() == v0
+    assert _data_dirs(t) == dirs
+
+
+def test_mor_upsert_keyed_on_partition_column(spark, scratch):
+    """Partition values live in the paths, not in the data files: the
+    sidecar must still carry them."""
+    t = LakeTable(spark, os.path.join(scratch, "mor_part_key"))
+    t.create(
+        spark.range(12).select(
+            (F.col("id") % 4).alias("p"), F.col("id").alias("k"), F.lit(0).cast("long").alias("v")
+        ),
+        partition_by=["p"],
+    )
+    src = spark.createDataFrame([(1, 5, 50), (3, 100, 1)], "p: long, k: long, v: long")
+    t.upsert_keys_mor(src, ["p", "k"])
+    got = {(r["p"], r["k"]): r["v"] for r in t.read().collect()}
+    want = {(i % 4, i): 0 for i in range(12)} | {(1, 5): 50, (3, 100): 1}
+    assert got == want
