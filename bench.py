@@ -52,7 +52,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from data_iceberg_sandbox_spark.session import _cpus, get_spark_session
+from data_iceberg_sandbox_spark.session import _cpus, codegen_compiles, get_spark_session
 from data_iceberg_sandbox_spark.sources.registry import (
     TABLES,
     is_pinned,
@@ -202,20 +202,23 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def time_run(spark, build, sf_dir: str, group: str) -> tuple[float, int]:
+def time_run(spark, build, sf_dir: str, group: str) -> tuple[float, int, int]:
     """One protocol-3 timed run: reset (untimed), then ``build(spark,
     sf_dir)`` + noop write under Spark job group ``group``. Returns
-    (seconds, jobs this run scheduled in ``group``)."""
+    (seconds, jobs this run scheduled in ``group``, codegen compiles it
+    paid)."""
     reset_caches(spark, sf_dir)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     sc.setJobGroup(group, group)
     try:
         jobs_before = len(tracker.getJobIdsForGroup(group))
+        compiles_before = codegen_compiles(spark)
         t0 = time.perf_counter()
         materialize(build(spark, sf_dir))
         dt = time.perf_counter() - t0
-        return dt, len(tracker.getJobIdsForGroup(group)) - jobs_before
+        jobs = len(tracker.getJobIdsForGroup(group)) - jobs_before
+        return dt, jobs, codegen_compiles(spark) - compiles_before
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
 
@@ -316,6 +319,7 @@ def main() -> None:
     runs_per_query: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
     jobs_per_query: dict[str, int] = {}
+    compiles_per_query: dict[str, list[int]] = {}
 
     for n in names:
         group = f"bench:{n}"
@@ -326,11 +330,13 @@ def main() -> None:
             # of every query was 2-20x slower than runs 1-4 without it)
             time_run(spark, queries[n], sf_dir, group)
             samples: list[float] = []
+            compiles_per_query[n] = []
             for run in range(n_runs):
                 # every timed run is cache-cold: build + execute
-                dt, jobs = time_run(spark, queries[n], sf_dir, group)
+                dt, jobs, compiles = time_run(spark, queries[n], sf_dir, group)
                 print(f"  [run {run}] {n}: {dt:.3f}", file=sys.stderr)
                 samples.append(dt)
+                compiles_per_query[n].append(compiles)
             runs_per_query[n] = [round(x, 4) for x in samples]
             times[n] = round(statistics.median(samples), 4)
             times_best[n] = round(min(samples), 4)
@@ -492,6 +498,8 @@ def main() -> None:
         "concurrent_errors": concurrent_errors or None,
         "floor_sec_per_action": floor_sec,
         "jobs_per_query": jobs_per_query,
+        # Janino compiles each timed run paid (codegen cache misses)
+        "codegen_compiles": compiles_per_query,
         "total_jobs": total_jobs,
         "floor_decomposition_sec": floor_total,
         "streaming_events_per_sec": stream_eps,

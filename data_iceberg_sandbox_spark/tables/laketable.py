@@ -1046,10 +1046,14 @@ class LakeTable:
         drops the sidecar. The sidecar is the distinct rows of ``keys``,
         whose columns must be table columns (``ValueError`` before any
         job); NULL key values match nothing (SQL equality never matches
-        NULL — use delete_where for predicate deletes)."""
+        NULL — use delete_where for predicate deletes). An empty key
+        frame commits nothing: its sidecar's footers hold no rows."""
         cur = self.manifest()
         self._check_keys(cur, keys.columns, keys)
         rel = self._write_eq_delete(keys)
+        if not _footer_rows(self.root, _parquet_files(self.root, rel)):
+            shutil.rmtree(os.path.join(self.root, rel))
+            return self
         new_seq = cur.version + 1  # _commit's parent check guarantees it
         self._commit(
             "delete-mor",

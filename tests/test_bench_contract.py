@@ -66,6 +66,9 @@ def test_bench_emits_full_json_despite_broken_query():
         med = s[n_runs // 2] if n_runs % 2 else (s[n_runs // 2 - 1] + s[n_runs // 2]) / 2
         assert abs(d["queries"][q] - med) < 1e-3
         assert d["queries_best"][q] == min(runs)
+        # the Janino compiles each timed run paid
+        assert len(d["codegen_compiles"][q]) == n_runs
+        assert all(c >= 0 for c in d["codegen_compiles"][q])
     lo, hi = d["suite_spread_sec"]
     assert lo <= d["value"] <= hi + 1e-6
     assert abs(d["value_best_of_runs"] - lo) < 1e-3

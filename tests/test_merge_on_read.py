@@ -188,6 +188,20 @@ def test_mor_upsert_empty_source_commits_nothing(spark, scratch, partitioned):
     assert _data_dirs(t) == dirs
 
 
+def test_mor_delete_empty_keys_commits_nothing(spark, scratch):
+    """An empty key frame deletes nothing, so it leaves no snapshot and
+    no sidecar: reads keep the plain scan and an incremental read over
+    the range still serves the later append."""
+    t = _mk(spark, scratch, "mor_del_empty", n=10)
+    v0, dirs = t.current_version(), _data_dirs(t)
+    t.delete_keys_mor(spark.createDataFrame([], "id: long"))
+    assert t.current_version() == v0
+    assert _data_dirs(t) == dirs
+    assert not t.manifest().delete_files
+    t.append(spark.range(10, 12).withColumn("v", F.lit(0).cast("long")))
+    assert {r["id"] for r in t.read_incremental(v0).collect()} == {10, 11}
+
+
 def test_mor_upsert_keyed_on_partition_column(spark, scratch):
     """Partition values live in the paths, not in the data files: the
     sidecar must still carry them."""

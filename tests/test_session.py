@@ -1,6 +1,7 @@
 """Session factory contract: core-count resolution from the environment,
-the master string a new session would use, and the Iceberg catalog
-wiring when an iceberg-spark-runtime jar is present."""
+the master string a new session would use, the Iceberg catalog wiring
+when an iceberg-spark-runtime jar is present, and a codegen cache that
+keeps a rotation of compiled plans resident."""
 
 from __future__ import annotations
 
@@ -8,9 +9,12 @@ import os
 
 import pytest
 
+from bench import materialize
 from data_iceberg_sandbox_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
     _cpus,
     build_session_conf,
+    codegen_compiles,
     resolve_master,
 )
 
@@ -79,3 +83,25 @@ def test_iceberg_jar_branch_selected_when_jar_present(tmp_path, monkeypatch):
     assert sess.iceberg_runtime_jar() == fake
     monkeypatch.setattr(glob_mod, "glob", lambda pat: [])
     assert sess.iceberg_runtime_jar() is None
+
+
+def test_codegen_cache_keeps_a_plan_rotation_compiled(spark):
+    """A second rotation of freshly built plans compiles nothing: each
+    plan inlines its own literals, so it makes its own classes, and 120
+    plans make more classes than Spark's default cache (100 entries)
+    holds. With that default every rotation recompiled them all."""
+    assert build_session_conf()["spark.sql.codegen.cache.maxEntries"] == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+
+    def rotation() -> int:
+        before = codegen_compiles(spark)
+        for k in range(1, 121):
+            materialize(spark.range(8).selectExpr(f"id * {k} + {k} AS v"))
+        return codegen_compiles(spark) - before
+
+    assert rotation() > 100
+    assert rotation() == 0

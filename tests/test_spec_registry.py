@@ -31,7 +31,7 @@ def _cached_partitions(spark) -> int:
 def _run(spark, name: str, group: str) -> tuple[int, int]:
     """One bench timed run of ``name`` (cache-cold build + noop write);
     returns (jobs scheduled by build + execute, cached partitions)."""
-    _, jobs = time_run(spark, entry_mod.queries()[name], SF_ORACLE, group)
+    _, jobs, _ = time_run(spark, entry_mod.queries()[name], SF_ORACLE, group)
     return jobs, _cached_partitions(spark)
 
 

@@ -88,7 +88,7 @@ def main() -> None:
         # follows the same neighbour
         order = list(variants.items())
         for name, build in order[::-1] if rep % 2 else order:
-            dt, n_jobs = time_run(spark, build, sf_dir, f"rep{rep}:{name}")
+            dt, n_jobs, _ = time_run(spark, build, sf_dir, f"rep{rep}:{name}")
             runs[name].append(round(dt, 3))
             jobs[name].append(n_jobs)
             print(f"rep{rep} {name}: {dt:.3f} ({n_jobs} jobs)", flush=True)
