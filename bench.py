@@ -330,14 +330,15 @@ def main() -> None:
             # of every query was 2-20x slower than runs 1-4 without it)
             time_run(spark, queries[n], sf_dir, group)
             samples: list[float] = []
-            compiles_per_query[n] = []
+            compiles: list[int] = []
             for run in range(n_runs):
                 # every timed run is cache-cold: build + execute
-                dt, jobs, compiles = time_run(spark, queries[n], sf_dir, group)
+                dt, jobs, n_compiles = time_run(spark, queries[n], sf_dir, group)
                 print(f"  [run {run}] {n}: {dt:.3f}", file=sys.stderr)
                 samples.append(dt)
-                compiles_per_query[n].append(compiles)
+                compiles.append(n_compiles)
             runs_per_query[n] = [round(x, 4) for x in samples]
+            compiles_per_query[n] = compiles
             times[n] = round(statistics.median(samples), 4)
             times_best[n] = round(min(samples), 4)
             # steady-state job count = the LAST timed run's (run 1 can
