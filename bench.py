@@ -7,8 +7,8 @@ Prints ONE JSON line:
 
 The session is the one the engine ships: ``get_spark_session()`` with
 its defaults (AQE on, shuffle partitions = cores, Spark's FIFO
-scheduler), and the base tables are pinned by ``pin_balanced`` with its
-defaults — the session and pin perfbench/ and the tools time as well.
+scheduler), and the base tables are pinned by ``pin_balanced`` — the
+session and pin perfbench/ and the tools time as well.
 bench.py sets no Spark conf of its own (protocol 4; the payload stamps
 the resolved AQE flag and shuffle width).
 
@@ -30,10 +30,10 @@ meaningful when it exceeds the recorded spread. BENCH_r01-r13's
 ``[run i] <query>: <sec>`` to stderr.
 
 The timing protocol lives in module-level functions that ``main()``
-composes and tools/ab_interleaved.py imports: ``reset_caches`` (the
-between-run reset), ``time_run`` (one cache-cold build + execute),
-``time_duckdb`` (the same-SQL DuckDB timing) and ``env_count``
-(fail-closed run counts).
+composes and tools/ab_interleaved.py imports: ``time_run`` (the
+registry's between-run reset ``reset_caches``, then one cache-cold
+build + execute), ``time_duckdb`` (the same-SQL DuckDB timing) and
+``env_count`` (fail-closed run counts).
 
 Subset, scale and repeat count: ``SPARK_GRAFT_BENCH_QUERIES=a,b``,
 ``SPARK_GRAFT_SF_DIR=<dir>``, ``SPARK_GRAFT_BENCH_RUNS=<n>``. Only a full
@@ -53,11 +53,7 @@ from concurrent.futures import ThreadPoolExecutor
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from data_iceberg_sandbox_spark.session import _cpus, codegen_compiles, get_spark_session
-from data_iceberg_sandbox_spark.sources.registry import (
-    TABLES,
-    is_pinned,
-    pin_balanced,
-)
+from data_iceberg_sandbox_spark.sources.registry import TABLES, pin_balanced, reset_caches
 
 HEADLINE = [
     "flagship_fraud_enriched",
@@ -169,32 +165,6 @@ def env_count(name: str, default: int) -> int:
     return n if n >= 1 else default
 
 
-def reset_caches(spark, sf_dir: str) -> None:
-    """The between-run reset: if the session holds any persistent RDD
-    beyond the base-table pin (one per pinned table), clear the
-    CacheManager, drop every block and re-pin the base tables (if this
-    session pinned them) — all untimed. The next fresh build then
-    registers its caches (and runs its eager checkpoints) again inside
-    its own timing window. This clears everything rather than
-    unpersisting just the query's buffer RDD because CachedRDDBuilder
-    keeps that RDD: after an external unpersist the cache entry stays at
-    StorageLevel NONE and every later consumer recomputes it (the
-    no-cache plan)."""
-    persistent_rdds = spark.sparkContext._jsc.getPersistentRDDs
-    pinned = sum(is_pinned(spark, sf_dir, t) for t in TABLES)
-    if persistent_rdds().size() <= pinned:
-        return
-    spark.catalog.clearCache()
-    jmap = persistent_rdds()
-    for rid in list(jmap.keySet().toArray()):
-        try:
-            jmap.get(rid).unpersist(True)
-        except Exception:  # noqa: BLE001 — best-effort block drop
-            pass
-    if pinned:
-        pin_balanced(spark, sf_dir)
-
-
 def materialize(df) -> None:
     """The timing action: the noop sink executes the full plan and
     materializes every result row without a driver transfer or the
@@ -203,10 +173,11 @@ def materialize(df) -> None:
 
 
 def time_run(spark, build, sf_dir: str, group: str) -> tuple[float, int, int]:
-    """One protocol-3 timed run: reset (untimed), then ``build(spark,
+    """One timed run: ``reset_caches`` (untimed), then ``build(spark,
     sf_dir)`` + noop write under Spark job group ``group``. Returns
     (seconds, jobs this run scheduled in ``group``, codegen compiles it
-    paid)."""
+    paid). The group and its description are cleared afterwards, so
+    later untimed jobs are not labelled with this run."""
     reset_caches(spark, sf_dir)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -221,6 +192,7 @@ def time_run(spark, build, sf_dir: str, group: str) -> tuple[float, int, int]:
         return dt, jobs, codegen_compiles(spark) - compiles_before
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def time_duckdb(

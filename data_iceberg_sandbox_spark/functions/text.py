@@ -1,6 +1,7 @@
 """Text column expressions (all JVM-side built-ins — no Python UDFs in
 the hot path; SNIPPETS.md public pandas_udf patterns are reserved for the
-genuinely non-expressible ops in operators/)."""
+genuinely non-expressible ops in operators/). Word shingles have one
+definition, ``operators.dedup._shingle_arr_sql``, over ``words(text)``."""
 
 from __future__ import annotations
 
@@ -19,39 +20,6 @@ def words(text: Column) -> Column:
     does not ) and diverge; normalize with regexp_replace(text,
     '\\\\s+', ' ') upstream before trusting cross-engine hashes."""
     return F.split(text, r"\s+")
-
-
-def word_shingles(text: Column, n: int = 5) -> Column:
-    """Overlapping word n-gram shingles as an array<string>.
-
-    Pure built-ins: split → transform(sequence) → slice/array_join.
-    Docs shorter than n words yield their full text as the single
-    shingle.
-
-    The split result is BOUND as a lambda variable, not referenced as
-    an expression: array HOFs are interpreted with no CSE across the
-    lambda boundary, so the r14 form (lambda body referencing the
-    `split` tree) re-ran the split per shingle index — O(words²) per
-    doc (OPTIMIZATION_r14.md "Pattern sweep"; documented then, fixed
-    r15 per VERDICT). A Column-level helper cannot materialize a
-    column, but wrapping the words array in a one-element array and
-    transforming over THAT binds it as a NamedLambdaVariable — a
-    per-row VALUE the inner lambdas reference without re-evaluation,
-    same trick budget as staging a column, usable from expression
-    context. Hot paths with a DataFrame in hand may still prefer the
-    dedup convention (stage `words(text)` as a column +
-    `operators.dedup._shingle_arr_sql`).
-    """
-
-    def shingle(w: Column) -> Column:
-        starts = F.sequence(
-            F.lit(1), F.greatest(F.size(w) - (n - 1), F.lit(1))
-        )
-        return F.transform(
-            starts, lambda i: F.array_join(F.slice(w, i, n), " ")
-        )
-
-    return F.transform(F.array(words(text)), shingle)[0]
 
 
 def normalized(text: Column) -> Column:

@@ -53,7 +53,7 @@ def _shingle_arr_sql(n: int, words_col: str = "w") -> str:
     column — the single source of truth shared by `_shingles_of` (via
     F.expr) and `minhash_signatures` (inline selectExpr): word n-grams
     joined with ' '; docs shorter than n words contribute their whole
-    text as one shingle (matches functions.text.word_shingles)."""
+    text as one shingle. Every shingling operator uses it."""
     return (
         f"CASE WHEN size({words_col}) >= {n} THEN "
         f"transform(sequence(0, size({words_col}) - {n}), "

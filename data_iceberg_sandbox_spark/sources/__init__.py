@@ -1,2 +1,2 @@
-from .registry import TABLES, load_table, load_tables, register_views  # noqa: F401
+from .registry import TABLES, load_table, register_views  # noqa: F401
 from .seeds import credit_card_ownership, seed_csv_path  # noqa: F401

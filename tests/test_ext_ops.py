@@ -649,50 +649,6 @@ def test_ann_recall_oracle_parameterized():
     assert "/ 5.0" in _ann_recall_oracle(5)
 
 
-def test_word_shingles_binds_words_once(spark):
-    """word_shingles must not re-evaluate the split expression per
-    shingle index (O(words²) — array HOFs have no CSE across the lambda
-    boundary); it binds the words array as a lambda variable via a
-    one-element-array transform. Guard both
-    the semantics (old-form equivalence incl. short/empty/NULL docs and
-    the full-text-single-shingle case) and the plan shape (one split —
-    the variable binding — instead of one per HOF argument)."""
-    from pyspark.sql import functions as F
-
-    from data_iceberg_sandbox_spark.functions.text import (
-        word_shingles,
-        words,
-    )
-
-    def old_shingles(text, n=5):
-        w = words(text)
-        starts = F.sequence(
-            F.lit(1), F.greatest(F.size(w) - (n - 1), F.lit(1))
-        )
-        return F.transform(
-            starts, lambda i: F.array_join(F.slice(w, i, n), " ")
-        )
-
-    rows = [
-        ("a b c d e f g h",),
-        ("one two",),
-        ("",),
-        (None,),
-        ("exactly five words right here",),
-    ]
-    df = spark.createDataFrame(rows, ["t"])
-    old = df.select(old_shingles(F.col("t")).alias("s")).collect()
-    new = df.select(word_shingles(F.col("t")).alias("s")).collect()
-    assert new == old
-    plan = (
-        df.select(word_shingles(F.col("t")).alias("s"))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("split(") == 1
-
-
 @pytest.mark.parametrize(
     "op", ["embedding_quantize_int8_check", "embedding_quantize_int8"]
 )

@@ -1,10 +1,11 @@
 """The query registry (``__spark_entry__``): ``queries()`` hands out each
 spec's builder, every call builds a fresh plan, and the only plan-level
-cache is Spark's CacheManager — so a query run again after bench.py's
-between-run reset (clearCache + unpersist) executes the plan it
-declares, caches included. The runs below go through bench.py's own
-``time_run`` and ``reset_caches``. The scan layer's per-session table
-memo keeps entries of sessions it cannot prove stopped, and flags
+cache is Spark's CacheManager — so a query run again after the scan
+layer's between-run reset (``registry.reset_caches``: clearCache +
+unpersist) executes the plan it declares, caches included. The runs
+below go through bench.py's ``time_run``, which calls that reset and
+leaves no job label behind. The scan layer's per-session table memo
+keeps entries of sessions it cannot prove stopped, and flags
 ``pin_table`` overlays."""
 
 from __future__ import annotations
@@ -13,12 +14,13 @@ import json
 import os
 
 import __spark_entry__ as entry_mod
-from bench import reset_caches, time_run
+from bench import time_run
 from data_iceberg_sandbox_spark.sources.registry import (
     evict_stopped_sessions,
     is_pinned,
     load_table,
     pin_table,
+    reset_caches,
 )
 from tests.conftest import SF_ORACLE, SF_SMOKE
 
@@ -65,6 +67,16 @@ def test_checkpointing_query_rebuilds_after_reset(spark):
     jobs2, _ = _run(spark, "duplicate_clusters", "registry:clusters:2")
     assert jobs1 > 1
     assert jobs2 == jobs1
+
+
+def test_time_run_leaves_no_job_label(spark):
+    """After a timed run, neither its job group nor its description is
+    left on the thread: the next untimed jobs (a re-pin, the concurrent
+    phase, the stream probe) must not be labelled as the last query."""
+    sc = spark.sparkContext
+    time_run(spark, lambda s, _: s.range(3), SF_ORACLE, "registry:labels")
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    assert sc.getLocalProperty("spark.job.description") is None
 
 
 def test_token_frame_shares_one_cache_entry_and_reregisters(spark):

@@ -6,7 +6,7 @@ median as the interference-robust capability statistic.
 
 The session and pin are bench.py's: the engine's shipping session
 (``get_spark_session()`` with its defaults: AQE on, shuffle partitions =
-cores) and ``pin_balanced`` with its defaults. Every rep is bench.py's
+cores) and ``pin_balanced``. Every rep is bench.py's
 ``time_run`` with the variant's builder: a cache-cold build + execute
 into the ``noop`` sink, the same run the headline times. Per variant the
 payload carries the run times, their min and median, the Spark jobs

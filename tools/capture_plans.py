@@ -7,8 +7,8 @@ Usage:
 
 Runs against $SPARK_GRAFT_SF_DIR (default: the sf0.1 test data, as in
 bench.py) in bench.py's session with its base-table pin: the engine's
-shipping session (``get_spark_session()``) and ``pin_balanced`` with
-their defaults. Pinned tables change scan statistics, and with them
+shipping session (``get_spark_session()``, with its defaults) and
+``pin_balanced``. Pinned tables change scan statistics, and with them
 join strategy choices, so the captured plan is the plan the bench
 times. Plan construction only — nothing is executed beyond the pin and
 the small collects some plan builders do (dim folds). Under AQE (on in
