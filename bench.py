@@ -221,6 +221,33 @@ def time_duckdb(
     return runs
 
 
+def stream_throughput(spark, sf_dir: str) -> tuple[float | None, str | None]:
+    """Streaming throughput sanity (reference-derived target: >=10k
+    events/s through the tumble+sum+having MV pipeline, BASELINE.md):
+    ``(events/s, None)``, or ``(None, "<type>: <message>")`` when the
+    drain raises, so a broken stream reports why it has no number."""
+    try:
+        from data_iceberg_sandbox_spark.sources.registry import load_table
+        from data_iceberg_sandbox_spark.streaming.fraud_stream import (
+            SCRATCH,
+            run_fraud_alerts_stream,
+        )
+
+        n_events = load_table(spark, sf_dir, "events").count()
+        # best-of-2 like the batch timings: a single stream run on a
+        # shared box swings ±30% (micro-batch scheduling vs GC pauses)
+        best = float("inf")
+        for i in range(2):
+            t0 = time.perf_counter()
+            run_fraud_alerts_stream(
+                spark, sf_dir, os.path.join(SCRATCH, f"bench_mv{i}"), 100.0, 8, 2
+            )
+            best = min(best, time.perf_counter() - t0)
+        return round(n_events / best, 1), None
+    except Exception as e:
+        return None, f"{type(e).__name__}: {e}"
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = scale_factor(sf_dir)
@@ -383,29 +410,7 @@ def main() -> None:
         else None
     )
 
-    # streaming throughput sanity (reference-derived target: >=10k events/s
-    # through the tumble+sum+having MV pipeline, BASELINE.md)
-    stream_eps = None
-    try:
-        from data_iceberg_sandbox_spark.sources.registry import load_table
-        from data_iceberg_sandbox_spark.streaming.fraud_stream import (
-            SCRATCH,
-            run_fraud_alerts_stream,
-        )
-
-        n_events = load_table(spark, sf_dir, "events").count()
-        # best-of-2 like the batch timings: a single stream run on a
-        # shared box swings ±30% (micro-batch scheduling vs GC pauses)
-        best = float("inf")
-        for i in range(2):
-            t0 = time.perf_counter()
-            run_fraud_alerts_stream(
-                spark, sf_dir, os.path.join(SCRATCH, f"bench_mv{i}"), 100.0, 8, 2
-            )
-            best = min(best, time.perf_counter() - t0)
-        stream_eps = round(n_events / best, 1)
-    except Exception:
-        pass
+    stream_eps, stream_error = stream_throughput(spark, sf_dir)
 
     # batch-load throughput: the reference's 200k-row ETL load
     # (create_table.py + infra/README.md:81-82) as generate → partitioned
@@ -476,6 +481,7 @@ def main() -> None:
         "total_jobs": total_jobs,
         "floor_decomposition_sec": floor_total,
         "streaming_events_per_sec": stream_eps,
+        "streaming_error": stream_error,
         "batch_load_rows_per_sec": load_rows_per_sec,
         "duckdb_sequential_sec_same_sql": duckdb_sequential,
         "duckdb_queries": duckdb_queries or None,

@@ -94,7 +94,15 @@ def ann_cosine_topk(spark, sf_dir, k: int = 10):
     post-rounding, hence never in the global top-k regardless of the
     vec_id tie-break. Extra emitted rows are always safe (the window
     ranks them out); only under-emission would be a correctness bug.
-    The window input shrinks from n_candidates × n_q to ~batches×n_q×k."""
+    The window input shrinks from n_candidates × n_q to ~batches×n_q×k.
+
+    The candidates are coalesced to one partition before the kernel, so
+    the scan, the kernel and the top-k window run as one task over one
+    Python stream: the window's per-query clustering is already met, no
+    exchange is planned, and the query runs one job instead of a
+    shuffle-map job plus a result job. On a pinned 4-slice corpus the
+    exchange cost more than the parallel scoring saved (BENCH_NOTES
+    "ann_cosine_topk on one partition")."""
     import numpy as np
     import pyarrow as pa
 
@@ -179,7 +187,7 @@ def ann_cosine_topk(spark, sf_dir, k: int = 10):
                 ["vec_id", "query_id", "dotv", "nrm", "qnrm"],
             )
 
-    scored = emb.mapInArrow(
+    scored = emb.coalesce(1).mapInArrow(
         score_batches,
         "vec_id bigint, query_id bigint, dotv double, nrm double, qnrm double",
     ).withColumn(

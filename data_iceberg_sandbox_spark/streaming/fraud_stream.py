@@ -55,6 +55,11 @@ from ..operators.fraud import FRAUD_THRESHOLD
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SCRATCH = os.path.join(_REPO_ROOT, ".scratch", "streaming")
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def fresh_table(spark: SparkSession, table_root: str) -> LakeTable:
@@ -85,11 +90,24 @@ def drain(
     of file churn. ``partitions`` caps the session value, it never pins
     it: a session sized smaller keeps its own value, so the cap changes
     nothing where shuffle partitions are already <= 8. Every runner,
-    the IVF embedding ingest included, drains under the cap."""
+    the IVF embedding ingest included, drains under the cap.
+
+    The checkpoint (offsets, commits, source log, state) is written
+    through Hadoop's FileSystem API for the drain, set and restored like
+    the cap. Spark's default FileContext manager looks up the link
+    status of every file it checks or renames, and without native
+    Hadoop libraries each lookup spawns a ``readlink`` process. The
+    checkpoint sits beside a LakeTable, which is local-only, so it is
+    always on ``file:``, where both managers end in the same checked
+    ``RawLocalFileSystem.rename`` and ``LocalFileSystem`` still writes
+    and verifies ``.crc`` files. The stream clones the session at
+    ``start()``, so the value holds for its whole run."""
     conf = frame.sparkSession.conf
-    key = "spark.sql.shuffle.partitions"
-    old = conf.get(key, None)  # None = never explicitly set
-    conf.set(key, str(min(partitions, int(old)) if old is not None else partitions))
+    shuffle = "spark.sql.shuffle.partitions"
+    old = {k: conf.get(k, None) for k in (shuffle, _CKPT_MANAGER_KEY)}  # None = unset
+    cap = old[shuffle]
+    conf.set(shuffle, str(min(partitions, int(cap)) if cap is not None else partitions))
+    conf.set(_CKPT_MANAGER_KEY, _CKPT_MANAGER)
     try:
         (
             frame.writeStream.outputMode(mode)
@@ -100,12 +118,13 @@ def drain(
             .awaitTermination()
         )
     finally:
-        if old is not None:
-            conf.set(key, old)
-        else:
-            # restore "unset" — leaving the cap would silently limit the
-            # caller's batch parallelism for the session's lifetime
-            conf.unset(key)
+        for k, v in old.items():
+            if v is not None:
+                conf.set(k, v)
+            else:
+                # restore "unset": leaving the drain's value would
+                # silently change the caller's session for its lifetime
+                conf.unset(k)
     return table
 
 

@@ -17,7 +17,7 @@ from pathlib import Path
 
 import pytest
 
-from bench import env_count
+from bench import env_count, stream_throughput
 from tests.conftest import SF_SMOKE
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -55,6 +55,7 @@ def test_bench_emits_full_json_despite_broken_query():
     assert all(v > 0 for v in d["queries"].values())
     assert d["value"] > 0 and d["unit"] == "sec"
     assert d["floor_sec_per_action"] > 0
+    assert d["streaming_error"] is None and d["streaming_events_per_sec"] > 0
     assert d["total_jobs"] >= 2
     # medians protocol (VERDICT r13 #3): run arrays recorded, headline
     # value = sum of per-query medians, spread band brackets it
@@ -142,3 +143,15 @@ def test_run_counts_fail_closed(monkeypatch, raw, want):
     (bench.py's SPARK_GRAFT_BENCH_RUNS, ab_interleaved's REPS)."""
     monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", raw)
     assert env_count("SPARK_GRAFT_BENCH_RUNS", 5) == want
+
+
+def test_broken_stream_reports_its_error(spark, monkeypatch):
+    """A drain that raises leaves no throughput number, and the payload
+    says why (type and message) instead of a bare null."""
+    from data_iceberg_sandbox_spark.streaming import fraud_stream
+
+    def broken(*_a, **_kw):
+        raise RuntimeError("drain broke")
+
+    monkeypatch.setattr(fraud_stream, "run_fraud_alerts_stream", broken)
+    assert stream_throughput(spark, SF_SMOKE) == (None, "RuntimeError: drain broke")

@@ -130,15 +130,16 @@ def test_repetition_score_zero_shuffle(spark):
 def test_ann_bruteforce_single_scan_no_shuffle_before_topk(spark):
     """Brute-force ANN: candidates stream once; query vectors AND their
     norms ride inside the kernel (no broadcast join, no broadcast-build
-    job since r5), and per-batch pruning means the only exchange is the
-    final per-query top-k window over ~batches × n_q × k rows."""
+    job since r5), and the per-query top-k window ranks the pruned
+    ~batches × n_q × k rows on the one coalesced partition, so the query
+    plans no exchange at all."""
     from data_iceberg_sandbox_spark.operators.similarity import (
         ann_cosine_topk,
     )
 
     df = ann_cosine_topk(spark, SF_ORACLE)
     assert not has_broadcast_join(df), physical_plan_excerpt(df)
-    assert exchange_count(df) <= 1, physical_plan_excerpt(df)
+    assert exchange_count(df) == 0, physical_plan_excerpt(df)
 
 
 def physical_plan_excerpt(df):

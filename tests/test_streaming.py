@@ -86,12 +86,25 @@ def test_stage_event_files_restages_pinned_overlay(spark, scratch):
     assert spark.read.parquet(out).count() == 50  # the overlay, not disk
 
 
-@pytest.mark.parametrize("session, partitions", [("6", 4), ("3", 8), (None, 5)])
+_CKPT_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_CKPT_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+@pytest.mark.parametrize(
+    "session, partitions, manager",
+    [
+        ("6", 4, None),
+        ("3", 8, _CKPT_PKG + "FileContextBasedCheckpointFileManager"),
+        (None, 5, None),
+    ],
+    ids=["6-4", "3-8", "None-5"],
+)
 def test_drain_caps_and_restores_shuffle_partitions(
-    spark, scratch, session, partitions
+    spark, scratch, session, partitions, manager
 ):
     """drain runs the sink under min(partitions, session value) shuffle
-    partitions and hands the caller's value back, also when the sink
+    partitions and the FileSystem-based checkpoint manager, and hands
+    the caller's values (or their unset state) back, also when the sink
     raises."""
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
@@ -99,29 +112,70 @@ def test_drain_caps_and_restores_shuffle_partitions(
     seen = []
 
     def sink(batch_df, _epoch):
-        seen.append(batch_df.sparkSession.conf.get(key))
+        conf = batch_df.sparkSession.conf
+        seen.append((conf.get(key), conf.get(_CKPT_KEY, None)))
 
     def failing_sink(batch_df, _epoch):
         raise RuntimeError("sink failed")
 
+    def caller_state():
+        return spark.conf.get(key, None), spark.conf.get(_CKPT_KEY, None)
+
     try:
-        if session is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, session)
+        for k, v in ((key, session), (_CKPT_KEY, manager)):
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
         staged = stage_event_files(spark, SF_SMOKE, "drain_cap", n_files=2)
         frame = events_stream(spark, staged, files_per_trigger=1)
         t = fresh_table(spark, os.path.join(scratch, f"drain_cap_{session}"))
         assert drain(frame, "append", sink, t, partitions) is t
-        assert len(seen) == 2 and set(seen) == {want}
-        assert spark.conf.get(key, None) == session
+        assert seen == [(want, _CKPT_PKG + "FileSystemBasedCheckpointFileManager")] * 2
+        assert caller_state() == (session, manager)
 
         t = fresh_table(spark, os.path.join(scratch, f"drain_fail_{session}"))
         with pytest.raises(StreamingQueryException, match="sink failed"):
             drain(frame, "append", failing_sink, t, partitions)
-        assert spark.conf.get(key, None) == session
+        assert caller_state() == (session, manager)
     finally:
         spark.conf.set(key, saved)
+        spark.conf.unset(_CKPT_KEY)
+
+
+def test_drain_resumes_from_its_checkpoint(spark, scratch):
+    """A second drain over an unchanged staged dir commits nothing; one
+    new staged file commits exactly one more batch; every staged row is
+    in the table once. The checkpoint logs keep their .crc checksums."""
+    events = load_table(spark, SF_SMOKE, "events")
+    staged = os.path.join(scratch, "resume_staged")
+    events.filter(F.col("event_id") % 3 != 2).repartition(2).write.parquet(staged)
+    root = os.path.join(scratch, "resume_mv")
+    fresh_table(spark, root)
+
+    def run():
+        t = LakeTable(spark, root)
+        frame = events_stream(spark, staged, files_per_trigger=1)
+        drain(frame, "append", lambda df, e: epoch_guarded_write(t, df, e), t)
+        return len(t.snapshots())
+
+    assert run() == 2
+    assert run() == 2
+
+    extra = os.path.join(scratch, "resume_extra")
+    events.filter(F.col("event_id") % 3 == 2).coalesce(1).write.parquet(extra)
+    (part,) = [f for f in os.listdir(extra) if f.endswith(".parquet")]
+    os.replace(os.path.join(extra, part), os.path.join(staged, "part-extra.parquet"))
+    assert run() == 3
+
+    got = LakeTable(spark, root).read()
+    assert got.count() == events.count()
+    assert got.exceptAll(events).count() == 0 and events.exceptAll(got).count() == 0
+    for log in ("offsets", "commits"):
+        names = os.listdir(os.path.join(root + "_ckpt", log))
+        batches = [f for f in names if f.isdigit()]
+        assert sorted(batches) == ["0", "1", "2"]
+        assert {f".{b}.crc" for b in batches} <= set(names), names
 
 
 def test_multi_batch_incremental_merge(spark):
