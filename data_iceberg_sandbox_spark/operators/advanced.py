@@ -1025,13 +1025,13 @@ SELECT s_nationkey AS nationkey FROM supplier
 # --- sliding window / multi-distinct / native session window --------------
 
 
-def sliding_window_agg(spark, sf_dir):
-    """Sliding event-time windows (10 min width, 5 min slide): each event
-    lands in exactly width/slide windows; Spark's window() generates the
-    assignment inline — no self-join."""
-    ev = load_table(spark, sf_dir, "events")
+def sliding_windows(events):
+    """Sliding event-time windows (10 min width, 5 min slide) over an
+    events frame, batch or streaming: each event lands in exactly
+    width/slide windows; Spark's window() generates the assignment
+    inline — no self-join."""
     return (
-        ev.groupBy(
+        events.groupBy(
             F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type"
         )
         .agg(
@@ -1046,6 +1046,11 @@ def sliding_window_agg(spark, sf_dir):
             "total_value",
         )
     )
+
+
+def sliding_window_agg(spark, sf_dir):
+    """``sliding_windows`` over the ``events`` table."""
+    return sliding_windows(load_table(spark, sf_dir, "events"))
 
 
 SLIDING_ORACLE = """
@@ -1124,17 +1129,17 @@ FROM lineitem GROUP BY l_returnflag
 """
 
 
-def session_window_native(spark, sf_dir):
-    """Spark's native session_window (gap-merged sessions) in batch.
+def session_windows(events):
+    """Spark's native session_window (1-hour gap-merged sessions) per user
+    over an events frame, batch or streaming.
 
     Oracle-checked: Spark merges an event into the current session iff
     its ts is *strictly* before session_end (= last ts + gap), i.e. a
     new session starts exactly when gap >= 1 h — so the lag-islands
     DuckDB twin uses `>= 3600` (vs the `> 3600` of sessionize_events,
     whose semantics are merge-on-equal); session_end = max(ts) + gap."""
-    ev = load_table(spark, sf_dir, "events")
     return (
-        ev.groupBy(F.session_window("ts", "1 hour").alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "1 hour").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -1143,6 +1148,11 @@ def session_window_native(spark, sf_dir):
             "n_events",
         )
     )
+
+
+def session_window_native(spark, sf_dir):
+    """``session_windows`` over the ``events`` table."""
+    return session_windows(load_table(spark, sf_dir, "events"))
 
 
 SESSION_NATIVE_ORACLE = """

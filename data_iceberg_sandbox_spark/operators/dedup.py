@@ -10,8 +10,6 @@ for 100 TB:
   self-join on shingle → per-pair intersection counts → Jaccard. The
   join shuffles (shingle) keys; candidate pairs only materialize for
   docs that *share* a shingle (sparse by construction for natural text).
-  `max_shingle_df` drops stopword-shingles (posting-list cap) at scale —
-  off by default to stay bit-exact with the oracle.
 - MinHash + LSH: 64 permutations → 32 bands × r=2 → banded bucket join
   generates candidates in O(n·bands) — the 100 TB path (no quadratic
   blowup); candidates are then *verified* with exact Jaccard, so the
@@ -150,19 +148,10 @@ def jaccard_pairs(
     sf_dir: str,
     threshold: float = 0.5,
     n: int = 5,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """All doc pairs with word-n-gram-shingle Jaccard >= threshold, via
     inverted-index self-join (never a doc×doc cross join)."""
     ds = _doc_shingles(spark, sf_dir, n)
-    if max_shingle_df is not None:
-        hot = (
-            ds.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("shingle")
-        )
-        ds = ds.join(hot, "shingle", "left_anti")
     # the shingle set feeds three consumers (sizes + both join sides);
     # cache it instead of recomputing the scan→window lineage three times.
     # (At 100 TB the corpus shingle set exceeds cluster memory — there,
@@ -245,8 +234,8 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = _BANDS) -> DataFrame:
     sorted list — identical pair set to a bucket self-join, minus one
     join shuffle and with per-bucket work explicit). O(n·bands) rows
     shuffle; a pathological hot bucket (huge near-dup cluster) is the
-    same quadratic risk either way — cap bucket width upstream via
-    `max_shingle_df`-style guards if a corpus needs it."""
+    same quadratic risk either way — a corpus that needs it caps bucket
+    width upstream."""
     buckets = _band_keys(sigs, bands)
     grouped = (
         buckets.groupBy("bk")

@@ -1,4 +1,4 @@
-"""Flagship pipeline: fraud alerts + client enrichment (batch form).
+"""Flagship pipeline: fraud alerts + client enrichment, one view each.
 
 Re-expresses the reference's streaming MV chain on the driver testdata:
 
@@ -16,45 +16,53 @@ reference's decimal(28,4) amounts, transaction.avsc:10-18; the DuckDB
 oracle keeps the ``DECIMAL(18,4)`` formulation) and the final column is
 emitted as DOUBLE so Spark and DuckDB produce bit-identical values.
 
+Each MV is defined once, as a frame-level view: ``window_alerts(events,
+threshold)`` and ``enrich_alerts(alerts, customer, nation)``. The batch
+specs apply them to ``load_table`` frames; the streaming runners
+(streaming/fraud_stream.py) apply the same views to the event stream and
+to each micro-batch, so a drained MV converges to the batch answer by
+construction.
+
 Scale notes (100 TB): the tumble+sum is a single hash aggregation,
 map-side partial combine included, keyed on (user_id, window) — high
-cardinality, no skew hot-spot. ``nation`` is broadcast explicitly (25
-rows at every SF); ``customer`` joins post-aggregation, i.e. against the
-*alert* rows (HAVING-filtered, orders of magnitude smaller than events),
-so AQE picks broadcast vs shuffle join from runtime stats.
+cardinality, no skew hot-spot. ``nation`` (25 rows at every SF) folds
+into a literal map; ``customer`` joins post-aggregation, i.e. against
+the *alert* rows (HAVING-filtered, orders of magnitude smaller than
+events), so AQE picks broadcast vs shuffle join from runtime stats.
 """
 
 from __future__ import annotations
+
+from decimal import ROUND_FLOOR, Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import fixed, unscale
 from ..sources.registry import load_table
+from .tpch import fold_nations
 
 FRAUD_THRESHOLD = 100.0  # analog of the reference's `> 5000` at its amounts
 
 
-def fraud_alerts(
-    spark: SparkSession, sf_dir: str, threshold: float = FRAUD_THRESHOLD
-) -> DataFrame:
-    """Windowed aggregation + HAVING (A1, A3, A4/W1)."""
-    events = load_table(spark, sf_dir, "events")
-    # exact scale-4 fixed-point sum (functions/money.py): bit-equal to
-    # the DECIMAL(18,4) formulation the oracle runs, on the codegen long
-    # fast path. The threshold comparison happens at the same scale-4
-    # quantization as the decimal domain.
-    # floor, not round (r12 review): group sums land exactly on the
-    # 1e-4 grid, so `sum > t` ⟺ `sum_4 > floor(t·10^4)`. Floor of the
-    # DECIMAL rendering, not of the float product (r13 ADVICE): the
-    # oracle embeds str(threshold) as a decimal literal, and for
-    # grid-aligned thresholds whose float product lands just below the
-    # integer (0.0003 * 1e4 = 2.9999…) float-floor would include a
-    # group whose sum equals the threshold while the oracle's
-    # `> threshold` excludes it. Decimal(str(t)) quantizes on exactly
-    # the grid the oracle compares against.
-    from decimal import ROUND_FLOOR, Decimal
+def window_alerts(events: DataFrame, threshold: float = FRAUD_THRESHOLD) -> DataFrame:
+    """The ``mv_fraud_alerts`` view over an events frame, batch or
+    streaming: 1-minute tumble + SUM + HAVING (A1, A3, A4/W1).
 
+    The sum is exact scale-4 fixed-point BIGINT (functions/money.py):
+    bit-equal to the DECIMAL(18,4) formulation the oracle runs, on the
+    codegen long fast path, and in a stream the state it keeps per
+    (window, user) group. The threshold compares at the same scale-4
+    quantization. Floor, not round: group sums land exactly on the 1e-4
+    grid, so `sum > t` ⟺ `sum_4 > floor(t·10^4)`. Floor of the DECIMAL
+    rendering, not of the float product: the oracle embeds
+    str(threshold) as a decimal literal, and for grid-aligned
+    thresholds whose float product lands just below the integer
+    (0.0003 * 1e4 = 2.9999…) float-floor would include a group whose
+    sum equals the threshold while the oracle's `> threshold` excludes
+    it. Decimal(str(t)) quantizes on exactly the grid the oracle
+    compares against. A stream bounds its state by composing
+    ``.withWatermark("ts", …)`` on ``events``."""
     thr4 = int(
         (Decimal(str(threshold)) * 10_000).to_integral_value(
             rounding=ROUND_FLOOR
@@ -73,21 +81,18 @@ def fraud_alerts(
     )
 
 
-def fraud_alerts_enriched(
-    spark: SparkSession, sf_dir: str, threshold: float = FRAUD_THRESHOLD
-) -> DataFrame:
-    """Alerts enriched via 2-hop left outer joins (J1, J2, P1).
+def enrich_alerts(alerts: DataFrame, customer: DataFrame, nation: DataFrame) -> DataFrame:
+    """The ``mv_fraud_alerts_client`` enrichment (J1, J2, P1): alerts ⟕
+    customer, projected to the enriched sink schema.
 
     The second hop (nation, reference-fixed 25 rows at every SF) folds
-    into a literal lookup map (tpch._inline_nations): ``element_at``
+    into a literal lookup map (``tpch.fold_nations``): ``element_at``
     returns NULL for a missing or NULL key, which is exactly the LEFT
-    JOIN semantics for a unique-key dim — one fewer broadcast-build job
-    per run, bit-exact vs the join-form oracle."""
-    from .tpch import _inline_nations
-
-    alerts = fraud_alerts(spark, sf_dir, threshold)
-    customer = load_table(spark, sf_dir, "customer")
-    _, _, nmap = _inline_nations(spark, sf_dir)
+    JOIN semantics for a unique-key dim — one collect at plan build in
+    place of a broadcast-build job, bit-exact vs the join-form oracle.
+    Applied to a micro-batch, the fold re-reads ``nation`` per batch,
+    so dim changes reach future batches as a stream-static join's do."""
+    _, _, nmap = fold_nations(nation)
     return (
         alerts.join(customer, alerts.user_id == customer.c_custkey, "left")
         .select(
@@ -99,6 +104,24 @@ def fraud_alerts_enriched(
             "window_end",
             "total_amount",
         )
+    )
+
+
+def fraud_alerts(
+    spark: SparkSession, sf_dir: str, threshold: float = FRAUD_THRESHOLD
+) -> DataFrame:
+    """``window_alerts`` over the ``events`` table."""
+    return window_alerts(load_table(spark, sf_dir, "events"), threshold)
+
+
+def fraud_alerts_enriched(
+    spark: SparkSession, sf_dir: str, threshold: float = FRAUD_THRESHOLD
+) -> DataFrame:
+    """``enrich_alerts`` over the batch alerts and the dim tables."""
+    return enrich_alerts(
+        fraud_alerts(spark, sf_dir, threshold),
+        load_table(spark, sf_dir, "customer"),
+        load_table(spark, sf_dir, "nation"),
     )
 
 

@@ -200,13 +200,19 @@ def _inline_nations(spark, sf_dir, region_name: str | None = None):
     This is the map-side dimension join without its broadcast-build job:
     the bench floor decomposition showed each build is a whole
     per-action floor payment (~40-60 ms local) for a ≤25-row dim.
-    Returns (sorted nationkeys, name dict, map column)."""
+    Returns ``fold_nations`` of the (region-filtered) nation table."""
     n = load_table(spark, sf_dir, "nation")
     if region_name is not None:
         r = load_table(spark, sf_dir, "region").filter(
             F.col("r_name") == region_name
         )
         n = n.join(r, n.n_regionkey == r.r_regionkey)
+    return fold_nations(n)
+
+
+def fold_nations(n):
+    """Collect the ``nation`` frame ``n`` (at most 25 rows) and fold it:
+    (sorted nationkeys, name dict, literal nationkey→name map column)."""
     rows = sorted(
         n.select("n_nationkey", "n_name").collect(),
         key=lambda row: row["n_nationkey"],

@@ -19,8 +19,9 @@ Spark-first mapping:
   cumulative sums, exactly RisingWave's emit-on-update observable
   behavior. The HAVING filter applies per emission; once a group
   crosses the threshold it appears and later updates revise it.
-- enrichment (W5/S11): stream-static join — the static side is re-read
-  per micro-batch, so dim changes apply to *future* batches;
+- enrichment (W5/S11): each micro-batch's alerts go through the batch
+  ``enrich_alerts``, whose nation fold re-reads the static side per
+  micro-batch, so dim changes apply to *future* batches;
 - retroactive backfill (streaming-usecase.md:278-291, the card_999
   scenario): RisingWave revises *past* join results when dim rows
   arrive. Stream-static joins cannot; `repair_null_enrichment` runs the
@@ -28,10 +29,19 @@ Spark-first mapping:
   NULL (P8 predicate) — divergence documented in SURVEY §7.
 - watermark: the reference keeps window state forever (no watermark);
   update-mode without watermark matches that. At 100 TB/unbounded
-  streams, pass `watermark=` to bound state — a stated trade-off.
+  streams, compose ``.withWatermark("ts", …)`` on the events frame to
+  bound state — a stated trade-off.
+
+One definition per MV: what each MV computes is the frame-level view in
+``operators/`` (``fraud.window_alerts``, ``fraud.enrich_alerts``,
+``advanced.sliding_windows``, ``advanced.session_windows``), applied
+here to ``events_stream`` exactly as the batch spec applies it to
+``load_table``. This module holds only the stream plumbing: staging,
+the drain and the sinks.
 
 Scale notes: the windowed agg carries partial aggregation before the
-(user_id, window) shuffle; state is per-group O(1); the MERGE per batch
+(user_id, window) shuffle; state is one BIGINT sum per (user_id, window)
+group (the fixed-point sum of ``window_alerts``); the MERGE per batch
 is ONE full outer join of the MV table with the batch's updated groups.
 The batch frame is a plan over the stateful aggregate that re-runs on
 every read, so a single join is what keeps it to one state-store pass
@@ -49,9 +59,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.advanced import session_windows, sliding_windows
+from ..operators.fraud import FRAUD_THRESHOLD, enrich_alerts, window_alerts
 from ..sources.registry import is_pinned, load_table
 from ..tables.laketable import LakeTable
-from ..operators.fraud import FRAUD_THRESHOLD
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SCRATCH = os.path.join(_REPO_ROOT, ".scratch", "streaming")
@@ -126,6 +137,23 @@ def drain(
                 # silently change the caller's session for its lifetime
                 conf.unset(k)
     return table
+
+
+def create_then(
+    result: LakeTable, write: Callable[[DataFrame], None]
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch sink that creates ``result`` from the first
+    micro-batch and hands every later one to ``write`` (a keyed merge,
+    ``upsert_keys_mor`` or ``overwrite`` of ``result``). The existence
+    check reads the table's manifest pointer; it runs no Spark job."""
+
+    def sink(batch_df: DataFrame, _epoch: int) -> None:
+        if not result.exists():
+            result.create(batch_df)
+        else:
+            write(batch_df)
+
+    return sink
 
 
 def epoch_guarded_write(table: LakeTable, df: DataFrame, epoch: int) -> None:
@@ -249,42 +277,6 @@ def events_stream(spark: SparkSession, staged_dir: str, files_per_trigger: int =
     )
 
 
-def windowed_alerts(stream: DataFrame, threshold: float, watermark: str | None = None):
-    """W1 tumble + A1 sum + A3 having on the stream."""
-    if watermark:
-        stream = stream.withWatermark("ts", watermark)
-    return (
-        stream.groupBy(F.window("ts", "1 minute").alias("w"), "user_id")
-        .agg(F.sum(F.col("value").cast("decimal(18,4)")).alias("_total"))
-        .filter(F.col("_total") > F.lit(threshold))
-        .select(
-            "user_id",
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            F.col("_total").cast("double").alias("total_amount"),
-        )
-    )
-
-
-def enrich_alerts(alerts: DataFrame, customer: DataFrame, nation: DataFrame) -> DataFrame:
-    """The W5 enrichment of fraud alerts (mv_fraud_alerts_client.sql:
-    11-17): two LEFT joins, alert → customer → nation, projected to the
-    enriched sink schema."""
-    return (
-        alerts.join(customer, alerts.user_id == customer.c_custkey, "left")
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey, "left")
-        .select(
-            F.col("c_custkey").alias("client_id"),
-            F.col("c_name").alias("client_name"),
-            F.col("n_name").alias("client_nation"),
-            "user_id",
-            "window_start",
-            "window_end",
-            "total_amount",
-        )
-    )
-
-
 def run_fraud_alerts_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -299,10 +291,10 @@ def run_fraud_alerts_stream(
     """Run the MV-maintenance pipeline to completion over the staged
     backlog; returns the result LakeTable (the 'materialized view').
 
-    update-mode + foreachBatch MERGE keyed (user_id, window_start):
-    emit-on-update semantics (W2). With `enrich`, each batch's updated
-    alerts are stream-static joined (W5) before the upsert, mirroring
-    mv_fraud_alerts_client.
+    ``window_alerts`` in update mode + foreachBatch MERGE keyed
+    (user_id, window_start): emit-on-update semantics (W2). With
+    `enrich`, each batch's updated alerts go through ``enrich_alerts``
+    (W5) before the upsert, mirroring mv_fraud_alerts_client.
     """
     # staging dir keyed by the result table so concurrent pipelines
     # (plain vs enriched, different callers) never clobber each other
@@ -311,36 +303,31 @@ def run_fraud_alerts_stream(
     )
     result = fresh_table(spark, table_root)
 
-    customer = customer_df if customer_df is not None else load_table(spark, sf_dir, "customer")
-    nation = nation_df if nation_df is not None else load_table(spark, sf_dir, "nation")
+    # the plain aggregate is unique-keyed by construction; the enriched
+    # form joins a CALLER-SUPPLIED customer_df whose key uniqueness we
+    # cannot assume — keep the cardinality check there
+    upsert = create_then(
+        result,
+        functools.partial(
+            result.merge, on=["user_id", "window_start"], assume_unique_source=not enrich
+        ),
+    )
+    if enrich:
+        customer = customer_df if customer_df is not None else load_table(spark, sf_dir, "customer")
+        nation = nation_df if nation_df is not None else load_table(spark, sf_dir, "nation")
 
-    def upsert_batch(batch_df: DataFrame, _epoch: int) -> None:
-        out = enrich_alerts(batch_df, customer, nation) if enrich else batch_df
-        if not result.exists():
-            result.create(out)
-        else:
-            # the plain aggregate is unique-keyed by construction; the
-            # enriched form joins CALLER-SUPPLIED dims (customer_df /
-            # nation_df) whose key uniqueness we cannot assume — keep
-            # the cardinality check there
-            result.merge(
-                out,
-                on=["user_id", "window_start"],
-                assume_unique_source=not enrich,
-            )
+    def shape(alerts: DataFrame) -> DataFrame:
+        return enrich_alerts(alerts, customer, nation) if enrich else alerts
 
-    alerts = windowed_alerts(events_stream(spark, staged, files_per_trigger), threshold)
-    drain(alerts, "update", upsert_batch, result)
+    alerts = window_alerts(events_stream(spark, staged, files_per_trigger), threshold)
+    drain(alerts, "update", lambda df, epoch: upsert(shape(df), epoch), result)
     if not result.exists():  # no alert crossed the threshold
         # the empty table must carry the SINK schema: with enrich=True
         # that is the 7-column enriched shape, not alerts' 4 columns —
         # otherwise repair_null_enrichment and the oracle comparison
-        # crash on the missing enrichment columns. Analysis alone gives
-        # the enriched schema: no job runs.
-        empty = spark.createDataFrame([], alerts.schema)
-        if enrich:
-            empty = spark.createDataFrame([], enrich_alerts(empty, customer, nation).schema)
-        result.create(empty)
+        # crash on the missing enrichment columns. Analysis gives the
+        # enriched schema; the only job is the nation fold's collect.
+        result.create(shape(spark.createDataFrame([], alerts.schema)))
     return result
 
 
@@ -394,13 +381,9 @@ def run_mor_profile_stream(
         )
     )
 
-    def upsert_batch(batch_df: DataFrame, _epoch: int) -> None:
-        if not result.exists():
-            result.create(batch_df)
-        else:  # an empty batch commits nothing
-            result.upsert_keys_mor(batch_df, ["user_id"])
-
-    return drain(prof, "update", upsert_batch, result)
+    # an empty batch commits nothing
+    upsert = create_then(result, lambda df: result.upsert_keys_mor(df, ["user_id"]))
+    return drain(prof, "update", upsert, result)
 
 
 def run_dedup_stream(spark: SparkSession, sf_dir: str, table_root: str) -> LakeTable:
@@ -441,9 +424,9 @@ def run_dedup_stream(spark: SparkSession, sf_dir: str, table_root: str) -> LakeT
 
 
 def run_session_window_stream(
-    spark: SparkSession, sf_dir: str, table_root: str, gap: str = "1 hour"
+    spark: SparkSession, sf_dir: str, table_root: str
 ) -> LakeTable:
-    """Streaming session-window MV: native `session_window` aggregation
+    """Streaming session-window MV: ``advanced.session_windows``
     maintained incrementally over the staged backlog.
 
     Session windows MERGE as late events bridge gaps, so the session's
@@ -457,60 +440,27 @@ def run_session_window_stream(
     staged = stage_event_files(spark, sf_dir, "sessmv", n_files=8)
     result = fresh_table(spark, table_root)
 
-    agg = (
-        events_stream(spark, staged, files_per_trigger=2)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-    def overwrite(batch_df: DataFrame, _epoch: int) -> None:
-        if not result.exists():
-            result.create(batch_df)
-        else:
-            result.overwrite(batch_df)
-
-    return drain(agg, "complete", overwrite, result)
+    agg = session_windows(events_stream(spark, staged, files_per_trigger=2))
+    return drain(agg, "complete", create_then(result, result.overwrite), result)
 
 
 def run_sliding_window_stream(
     spark: SparkSession, sf_dir: str, table_root: str
 ) -> LakeTable:
-    """Incremental sliding-window MV (10 min / 5 min): update-mode +
-    foreachBatch MERGE keyed (window_start, event_type) — same
-    maintenance loop as the tumbling MV, overlapping windows included."""
+    """Incremental sliding-window MV (``advanced.sliding_windows``, 10 min
+    / 5 min): update-mode + foreachBatch MERGE keyed (window_start,
+    event_type) — same maintenance loop as the tumbling MV, overlapping
+    windows included."""
     staged = stage_event_files(spark, sf_dir, "sliding", n_files=8)
     result = fresh_table(spark, table_root)
 
-    agg = (
-        events_stream(spark, staged, files_per_trigger=2)
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias(
-                "total_value"
-            ),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    agg = sliding_windows(events_stream(spark, staged, files_per_trigger=2))
+    upsert = create_then(
+        result,
+        functools.partial(
+            result.merge, on=["window_start", "event_type"], assume_unique_source=True
+        ),
     )
-
-    def upsert(batch_df: DataFrame, _epoch: int) -> None:
-        if not result.exists():
-            result.create(batch_df)
-        else:
-            result.merge(batch_df, on=["window_start", "event_type"], assume_unique_source=True)
-
     return drain(agg, "update", upsert, result)
 
 

@@ -17,19 +17,21 @@ forever semantics (streaming-usecase.md windows never expire).
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.spec import QuerySpec
 from ..tables.laketable import LakeTable
 from .fraud_stream import (
     SCRATCH,
+    create_then,
     drain,
     events_stream,
     fresh_table,
@@ -102,16 +104,12 @@ def run_user_profile_stream(
         )
     )
 
-    def upsert(batch_df: DataFrame, _epoch: int) -> None:
-        # the stateful operator emits exactly one row per user_id, so
-        # the merge's uniqueness pre-check job is skippable
-        if not result.exists():
-            result.create(batch_df)
-        else:
-            result.merge(
-                batch_df, on=["user_id"], assume_unique_source=True
-            )
-
+    # the stateful operator emits exactly one row per user_id, so the
+    # merge's uniqueness pre-check job is skippable
+    upsert = create_then(
+        result,
+        functools.partial(result.merge, on=["user_id"], assume_unique_source=True),
+    )
     return drain(profiles, "update", upsert, result)
 
 

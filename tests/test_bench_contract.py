@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 from pathlib import Path
@@ -56,6 +57,10 @@ def test_bench_emits_full_json_despite_broken_query():
     assert d["value"] > 0 and d["unit"] == "sec"
     assert d["floor_sec_per_action"] > 0
     assert d["streaming_error"] is None and d["streaming_events_per_sec"] > 0
+    # streaming is measured before the pin: only an unpinned staging
+    # leaves its memo marker (a pinned one removes it)
+    staged = Path(REPO, ".scratch", "streaming", "staged_bench_mv_sf0.001.staged")
+    assert staged.exists()
     assert d["total_jobs"] >= 2
     # medians protocol (VERDICT r13 #3): run arrays recorded, headline
     # value = sum of per-query medians, spread band brackets it
@@ -155,3 +160,35 @@ def test_broken_stream_reports_its_error(spark, monkeypatch):
 
     monkeypatch.setattr(fraud_stream, "run_fraud_alerts_stream", broken)
     assert stream_throughput(spark, SF_SMOKE) == (None, "RuntimeError: drain broke")
+
+
+def test_stream_throughput_stages_outside_timed_reps(spark, tmp_path, monkeypatch):
+    """The events backlog is staged once, before the timed drains: no
+    staging write happens inside a timed rep."""
+    from data_iceberg_sandbox_spark.streaming import fraud_stream
+
+    # a fresh copy of the source (new mtime), so no staging memo matches
+    shutil.copy(os.path.join(SF_SMOKE, "events.parquet"), tmp_path)
+    writes, in_rep = [], [False]
+    stage_once = fraud_stream.stage_once
+    run = fraud_stream.run_fraud_alerts_stream
+
+    def spy_stage_once(spark, sf_dir, table, out, params, write):
+        def spied(path):
+            writes.append(in_rep[0])
+            write(path)
+
+        return stage_once(spark, sf_dir, table, out, params, spied)
+
+    def timed_rep(*a, **kw):
+        in_rep[0] = True
+        try:
+            return run(*a, **kw)
+        finally:
+            in_rep[0] = False
+
+    monkeypatch.setattr(fraud_stream, "stage_once", spy_stage_once)
+    monkeypatch.setattr(fraud_stream, "run_fraud_alerts_stream", timed_rep)
+    eps, err = stream_throughput(spark, str(tmp_path))
+    assert err is None and eps > 0
+    assert writes == [False]

@@ -431,10 +431,15 @@ def test_fraud_threshold_grid_aligned_decimal(spark, tmp_path):
     """thr quantization must floor the DECIMAL rendering, not the float
     product: at threshold=0.0003 (float*1e4 = 2.9999…) a group summing
     exactly 0.0003 must be EXCLUDED (strict >), matching the oracle's
-    `> 0.0003` decimal literal; 0.0004 must be included."""
+    `> 0.0003` decimal literal; 0.0004 must be included. The streaming
+    MV drained from the same pinned events agrees with the batch at
+    both thresholds."""
     from datetime import datetime
 
     from data_iceberg_sandbox_spark.operators.fraud import fraud_alerts
+    from data_iceberg_sandbox_spark.streaming.fraud_stream import (
+        run_fraud_alerts_stream,
+    )
 
     sf_fake = str(tmp_path / "sf_fraud_grid")
     os.makedirs(sf_fake, exist_ok=True)
@@ -447,11 +452,14 @@ def test_fraud_threshold_grid_aligned_decimal(spark, tmp_path):
         "ts timestamp, user_id bigint, value double",
     )
     pin_table(spark, sf_fake, "events", ev)
-    got = {r["user_id"] for r in fraud_alerts(spark, sf_fake, 0.0003).collect()}
-    assert got == {2}
-    # off-grid threshold still floors down (r12 behavior preserved)
-    got = {r["user_id"] for r in fraud_alerts(spark, sf_fake, 0.00025).collect()}
-    assert got == {1, 2}
+    # off-grid 0.00025 still floors down (r12 behavior preserved)
+    for thr, want in ((0.0003, {2}), (0.00025, {1, 2})):
+        got = {r["user_id"] for r in fraud_alerts(spark, sf_fake, thr).collect()}
+        assert got == want
+        mv = run_fraud_alerts_stream(
+            spark, sf_fake, str(tmp_path / f"mv_{thr}"), thr, n_files=2
+        )
+        assert {r["user_id"] for r in mv.read().collect()} == want
 
 
 def test_per_flag_distinct_bitmap_exact(spark):

@@ -7,7 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_iceberg_sandbox_spark.operators import relational, tpch
-from data_iceberg_sandbox_spark.operators.fraud import fraud_alerts_enriched
+from data_iceberg_sandbox_spark.operators.fraud import (
+    enrich_alerts,
+    fraud_alerts,
+    fraud_alerts_enriched,
+)
 from data_iceberg_sandbox_spark.plans.inspect import (
     codegen_stage_count,
     exchange_count,
@@ -45,6 +49,20 @@ def test_q6_filters_pushed_and_single_stage(spark):
 def test_flagship_broadcasts_small_dims(spark):
     df = fraud_alerts_enriched(spark, SF_ORACLE)
     assert has_broadcast_join(df)
+
+
+def test_enriched_micro_batch_folds_nation(spark):
+    """The enrichment the stream sink applies to each micro-batch (a
+    LogicalRDD, as a foreachBatch frame is) reads no nation table at run
+    time: nation is a literal map, not a broadcast join side."""
+    batch = fraud_alerts(spark, SF_ORACLE).localCheckpoint()
+    df = enrich_alerts(
+        batch,
+        load_table(spark, SF_ORACLE, "customer"),
+        load_table(spark, SF_ORACLE, "nation"),
+    )
+    schemas = " ".join(read_schemas(df))
+    assert "c_nationkey" in schemas and "n_name:" not in schemas, schemas
 
 
 def test_q3_topk_is_take_ordered(spark):

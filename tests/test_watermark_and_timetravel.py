@@ -8,11 +8,11 @@ import time
 
 from pyspark.sql import functions as F
 
+from data_iceberg_sandbox_spark.operators.fraud import window_alerts
 from data_iceberg_sandbox_spark.streaming.fraud_stream import (
     SCRATCH,
     events_stream,
     stage_event_files,
-    windowed_alerts,
 )
 from data_iceberg_sandbox_spark.sources.registry import load_table
 from data_iceberg_sandbox_spark.tables.laketable import LakeTable
@@ -26,10 +26,11 @@ def test_append_mode_with_watermark_finalizes_windows(spark):
     the watermark (here: every window, since the backlog is finite and
     processed fully)."""
     staged = stage_event_files(spark, SF_SMOKE, "wm", n_files=4)
-    alerts = windowed_alerts(
-        events_stream(spark, staged, files_per_trigger=4),
+    alerts = window_alerts(
+        events_stream(spark, staged, files_per_trigger=4).withWatermark(
+            "ts", "1 minute"
+        ),
         threshold=100.0,
-        watermark="1 minute",
     )
     q = (
         alerts.writeStream.outputMode("append")
